@@ -276,6 +276,8 @@ def main() -> None:
     load_end = os.getloadavg()
 
     total = round(sum(timings.values()), 3)
+    # the session's real core count (local[N] → N), not an assumed 32
+    cpus = spark.sparkContext.defaultParallelism
     summary = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -330,7 +332,9 @@ def main() -> None:
         "calib_sentinels": sentinels,
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in load_end],
-        "detail_file": "bench_detail.json",
+        # the per-core-count copy: a later run at another core count
+        # overwrites the canonical bench_detail.json, never this one
+        "detail_file": f"bench_detail_c{cpus}.json",
     }
     # full per-query map goes to a FILE, not stdout: the driver captures
     # only the tail of stdout, and a queries-map line already overflowed
@@ -341,7 +345,6 @@ def main() -> None:
     # c{cpus} copies keep every run's map addressable (round-11 verdict
     # item 2; additions-only, the canonical file and stdout contract are
     # unchanged).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     here = os.path.dirname(os.path.abspath(__file__))
     detail = {
         **summary,

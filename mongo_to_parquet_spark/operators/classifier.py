@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mongo_to_parquet_spark.operators.scope import scope
+
 #: fixed-point scale — every feature, weight, margin, sigmoid value and
 #: residual is an integer multiple of 1/S
 S = 1_000_000
@@ -224,6 +226,52 @@ def train_logreg(feats: DataFrame, labels: DataFrame) -> list[int]:
     return train_logreg_dense(dense)
 
 
+def gradient_sql(w: list[int], view: str) -> str:
+    """One iteration's ONE statement over the dense relation bound to
+    ``view``, kept SMALL: the margin is one zip_with/aggregate fold over
+    (xa, weight-array literal) and the gradient vector comes back as 34
+    (j, g) rows from a posexplode + GROUP BY j — ~15 expression nodes
+    instead of the 34-column wide-aggregate form (~300 nodes), whose
+    per-iteration parse/analyze cost dominated the loop (measured 5.3s vs
+    2.2s warm for the 16 iterations at sf0.1; weights bit-identical). The
+    shuffle is ≤ N_W partial sums per map partition."""
+    sig = f"{S} div 2 + (m * {S}) div (2 * ({S} + abs(m)))"
+    arr = ", ".join(f"CAST({int(wi)} AS BIGINT)" for wi in w)
+    return (
+        f"SELECT j, CAST(SUM((xj * r) div {S}) AS BIGINT) AS g FROM ("
+        f"  SELECT posexplode(xa) AS (j, xj),"
+        f"         CAST(y AS BIGINT) * {S} - ({sig}) AS r FROM ("
+        f"    SELECT xa, y, aggregate(zip_with(xa, array({arr}),"
+        f"      (a, b) -> (a * b) div {S}), CAST(0 AS BIGINT),"
+        f"      (acc, t) -> acc + t) AS m FROM {view}))"
+        f" GROUP BY j"
+    )
+
+
+def open_dense(sc, dense: DataFrame) -> tuple[int, str]:
+    """Loop setup in scope ``sc`` → (n_rows, view): persist and count the
+    dense relation, lay it out, bind its view, pin AQE off."""
+    dense = sc.persist(dense)
+    n_rows = dense.count()
+    if n_rows == 0:
+        raise ValueError("empty training split for quality_lr")
+    # iteration-relation layout is DATA-derived, not a local[32]
+    # constant: ~100k one-row-per-doc rows (≈30 MB of dense arrays) per
+    # partition. At fixture scale that collapses the 32 near-empty
+    # cached partitions (AQE's parallelismFirst floors post-shuffle
+    # coalescing at the default parallelism) into 1, so each of the 16
+    # iteration jobs schedules 2 tasks instead of 33; at corpus scale
+    # the same rule leaves thousands of partitions.
+    parts = max(1, min(dense.rdd.getNumPartitions(), 1 + n_rows // 100_000))
+    it_rel = dense.coalesce(parts) if parts < dense.rdd.getNumPartitions() else dense
+    view = sc.view(it_rel, "qlr_dense")
+    # AQE off, width untouched: every iteration's shuffle is D+2 longs
+    # per map partition into a single final reduce — nothing for AQE to
+    # re-optimize at ANY scale, pure overhead on a 16-statement loop
+    sc.pin()
+    return n_rows, view
+
+
 def train_logreg_dense(dense: DataFrame) -> list[int]:
     """The training loop proper, over the dense (doc_id, y, xa)
     relation (doc_dense). Each iteration is ONE job: margin, residual
@@ -235,58 +283,11 @@ def train_logreg_dense(dense: DataFrame) -> list[int]:
     lesson-47 broadcast→SMJ cliff; the dense form removes the join (and
     with it the strategy decision) outright, and shuffles D+2 longs per
     map partition per iteration instead of a doc-keyed relation."""
-    from uuid import uuid4
-
-    spark = dense.sparkSession
-    dense = dense.persist()
-    n_rows = dense.count()
-    if n_rows == 0:
-        dense.unpersist()
-        raise ValueError("empty training split for quality_lr")
-    # iteration-relation layout is DATA-derived, not a local[32]
-    # constant: ~100k one-row-per-doc rows (≈30 MB of dense arrays) per
-    # partition. At fixture scale that collapses the 32 near-empty
-    # cached partitions (AQE's parallelismFirst floors post-shuffle
-    # coalescing at the default parallelism) into 1, so each of the 16
-    # iteration jobs schedules 2 tasks instead of 33; at corpus scale
-    # the same rule leaves thousands of partitions.
-    parts = max(1, min(dense.rdd.getNumPartitions(), 1 + n_rows // 100_000))
-    it_rel = dense.coalesce(parts) if parts < dense.rdd.getNumPartitions() else dense
-    view = f"qlr_dense_{uuid4().hex[:12]}"
-    it_rel.createOrReplaceTempView(view)
-    # AQE off for the loop only (restored in finally): every iteration's
-    # shuffle is D+2 longs per map partition into a single final reduce —
-    # there is nothing for AQE to re-optimize at ANY scale, and its
-    # per-query stage re-planning is pure overhead on a 16-statement loop.
-    # Session-global toggle: the engine contract is one statement at a
-    # time per session — a concurrent statement on a shared session would
-    # inherit the loop conf (round-11 advice; same guard as
-    # _merge_loop_env/_loop_conf in queries/curation.py).
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # each iteration is ONE spark.sql() round-trip, and the statement
-        # is kept SMALL: the margin is one zip_with/aggregate fold over
-        # (xa, weight-array literal) and the gradient vector comes back as
-        # 34 (j, g) rows from a posexplode + GROUP BY j — ~15 expression
-        # nodes instead of the 34-column wide-aggregate form (~300 nodes),
-        # whose per-iteration parse/analyze cost dominated the loop
-        # (measured 5.3s vs 2.2s warm for the 16 iterations at sf0.1;
-        # weights bit-identical — same div arithmetic, relocated). The
-        # shuffle is unchanged: ≤ N_W partial sums per map partition.
-        sig = f"{S} div 2 + (m * {S}) div (2 * ({S} + abs(m)))"
+    with scope(dense.sparkSession) as sc:
+        n_rows, view = open_dense(sc, dense)
         w = [0] * N_W
         for _ in range(ITERS):
-            arr = ", ".join(f"CAST({int(wi)} AS BIGINT)" for wi in w)
-            rows = spark.sql(
-                f"SELECT j, CAST(SUM((xj * r) div {S}) AS BIGINT) AS g FROM ("
-                f"  SELECT posexplode(xa) AS (j, xj),"
-                f"         CAST(y AS BIGINT) * {S} - ({sig}) AS r FROM ("
-                f"    SELECT xa, y, aggregate(zip_with(xa, array({arr}),"
-                f"      (a, b) -> (a * b) div {S}), CAST(0 AS BIGINT),"
-                f"      (acc, t) -> acc + t) AS m FROM {view}))"
-                f" GROUP BY j"
-            ).collect()
+            rows = sc.spark.sql(gradient_sql(w, view)).collect()
             g = {r["j"]: int(r["g"] or 0) for r in rows}
             # Python // floors on negatives; SQL div truncates toward
             # zero — _tdiv keeps the driver-side update bit-identical to
@@ -296,10 +297,6 @@ def train_logreg_dense(dense: DataFrame) -> list[int]:
                 for j, wi in enumerate(w)
             ]
         return w
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.catalog.dropTempView(view)
-        dense.unpersist()
 
 
 def score(feats: DataFrame, weights: list[int]) -> DataFrame:

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions.textfns import shingles, tokens
 from mongo_to_parquet_spark.operators.parallel import fan_out
+from mongo_to_parquet_spark.operators.scope import scope
 
 
 # --------------------------------------------------------------------------
@@ -170,13 +171,12 @@ def jaccard_pairs(
             # vocabulary-sized cache, not the corpus). Corpora beyond
             # every small-route cap take zero probe jobs and route
             # straight to prefix — the 100 TB behavior.
-            freq = (
-                base.select(F.explode("sh").alias("s"))
-                .groupBy("s")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .persist()
-            )
-            try:
+            with scope(docs.sparkSession) as sc:
+                freq = sc.persist(
+                    base.select(F.explode("sh").alias("s"))
+                    .groupBy("s")
+                    .agg(F.count(F.lit(1)).alias("n"))
+                )
                 st = freq.agg(
                     F.sum(F.col("n") * F.col("n")).alias("c"),
                     F.count(F.lit(1)).alias("v"),
@@ -188,8 +188,6 @@ def jaccard_pairs(
                 fits = 0 < st["v"] <= cap
                 if fits and n_docs <= bitmask_max_docs:
                     vocab_rows = freq.select("s").collect()
-            finally:
-                freq.unpersist()
         strategy = jaccard_strategy(
             n_docs, fits, bitmask_max_docs, explode_max_docs, cand
         )

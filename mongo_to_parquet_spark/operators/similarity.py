@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions.vector import cosine, dot, norm
 from mongo_to_parquet_spark.operators.parallel import fan_out
+from mongo_to_parquet_spark.operators.scope import pinned
 
 
 def _probe_df(emb: DataFrame, probe_id: int, id_col: str, vec_col: str) -> DataFrame:
@@ -487,9 +488,18 @@ def _overlap_write_jobs(*thunks) -> None:
     job latency per piece. FIFO scheduling keeps the first (largest)
     job's resources intact. Exceptions propagate (the pool re-raises on
     result collection), so a failed piece still fails the build before
-    the layout marker is written."""
+    the layout marker is written.
+
+    Refuses to run under a loop-conf pin (operators/scope.py): the pin's
+    confs are session-global, so the writes would silently inherit the
+    loop's AQE-off / pinned-width plan."""
     from concurrent.futures import ThreadPoolExecutor
 
+    if pinned():
+        raise RuntimeError(
+            "layout writes submitted under a loop-conf pin would inherit "
+            "its session-global confs; build the layout outside the scope"
+        )
     if len(thunks) == 1:
         thunks[0]()
         return

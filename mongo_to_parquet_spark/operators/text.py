@@ -166,18 +166,6 @@ def pack_documents(
     )
 
 
-def text_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full analysis column set to a documents table."""
-    t = F.col(text_col)
-    return docs.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        lang_id(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-        fingerprint(t).alias("fp"),
-    )
-
-
 def chunk_documents(
     docs: DataFrame,
     window: int = 32,

@@ -1386,23 +1386,25 @@ def q_partition_bounds(spark, sf):
     # q_quality_len_adaptive's bounded per-lang value census). The
     # oracle keeps the window form — DuckDB replays semantics, not the
     # distributed plan.
+    from mongo_to_parquet_spark.operators.scope import scope
     from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     li = T(spark, sf, "lineitem")
-    census = (
-        li.groupBy(F.col("l_orderkey").alias("v"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .persist()  # the shared-round rank probes; caller clearCache()s
-    )
-    n = census.agg(F.sum("cnt")).collect()[0][0]
-    targets = {i: (i * n + _PB_N - 1) // _PB_N for i in range(1, _PB_N)}
-    # ONE multi-rank probe: every refinement round is a single census
-    # scan serving all N−1 boundaries (vs N−1 sequential 3-scan probes —
-    # measured 14.9s → ~2s at sf0.1, and at 100 TB it is the difference
-    # between ~4 and ~45 census passes)
-    bounds = exact_ranks_smallest(
-        census, "v", list(targets.values()), weight_col="cnt"
-    )
+    with scope(spark) as sc:
+        census = sc.persist(  # the shared-round rank probes
+            li.groupBy(F.col("l_orderkey").alias("v")).agg(
+                F.count(F.lit(1)).cast("bigint").alias("cnt")
+            )
+        )
+        n = census.agg(F.sum("cnt")).collect()[0][0]
+        targets = {i: (i * n + _PB_N - 1) // _PB_N for i in range(1, _PB_N)}
+        # ONE multi-rank probe: every refinement round is a single census
+        # scan serving all N−1 boundaries (vs N−1 sequential 3-scan probes
+        # — measured 14.9s → ~2s at sf0.1, and at 100 TB it is the
+        # difference between ~4 and ~45 census passes)
+        bounds = exact_ranks_smallest(
+            census, "v", list(targets.values()), weight_col="cnt"
+        )
     rows = [(i, t, bounds[t]) for i, t in targets.items()]
     return spark.createDataFrame(
         rows, "bound_idx bigint, target_rank bigint, boundary bigint"

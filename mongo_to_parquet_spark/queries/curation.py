@@ -15,13 +15,12 @@ surface (BASELINE.json north_star).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions import vector
 from mongo_to_parquet_spark.operators import text, tokenizer
+from mongo_to_parquet_spark.operators.scope import scope
 from mongo_to_parquet_spark.sources.catalog import load_table as T
 from mongo_to_parquet_spark.queries._registry import make_registry
 
@@ -919,131 +918,78 @@ ORDER BY cnt DESC, x ASC, y ASC LIMIT 1
 """
 
 
-@contextmanager
-def _loop_conf(spark, width: int):
-    """Pin the iteration-loop shuffle width and switch AQE off for the
-    scope, restoring both on exit — the shared conf discipline of the
-    census/vocabulary-bounded trainer loops (see _merge_loop_env for the
-    rationale and measurements). Set+restore in one context manager so
-    they cannot be separated (round-11 advice)."""
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(1, width)))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+def _merge_fold(x: str, y: str):
+    """One merge applied to a census's '·'-joined ``sym`` column: the
+    canonical left-to-right non-overlapping single pass ('a a a a' →
+    'aa aa') as a string fold whose merge case is pure append — when the
+    accumulator's LAST symbol is x and the next symbol is y, appending y
+    (no separator) yields the merged token."""
+    s = F.split("sym", "·")
+    return F.aggregate(
+        F.slice(s, F.lit(2), F.size(s) - 1),
+        F.element_at(s, 1),
+        lambda acc, el: F.when(
+            (F.regexp_extract(acc, "[^·]*$", 0) == F.lit(x)) & (el == F.lit(y)),
+            F.concat(acc, F.lit(y)),
+        ).otherwise(F.concat(acc, F.lit("·"), el)),
+    )
 
 
-class _MergeLoopState:
-    """Mutable holder for the merge loops' persist-chain: the loop body
-    rebinds ``census``/``pending`` as it rewrites, and the enclosing
-    context manager's cleanup sees whichever frames are live when the
-    loop exits — normally, early, or by exception."""
-
-    __slots__ = ("census", "pending")
-
-    def __init__(self, census):
-        self.census = census
-        self.pending = None
-
-
-@contextmanager
-def _merge_loop_env(census):
-    """Shared environment for the census merge-loop trainers: persist the
-    census, register it under a fresh temp-view name, and derive the
-    loop's shuffle width from the census's own cached width. Iteration
-    shuffles carry (symbol-pair, partial-count) rows — bounded by the
-    census, never the corpus — so spark.sql.shuffle.partitions for the
-    loop follows the census's partition count (guide §2: scale-adaptive,
-    at fixture scale 1 instead of 32 near-empty reducers per stage, at
-    corpus scale the census's own AQE-coalesced width). AQE itself is
-    OFF inside the loop (the classifier-loop discipline): the width is
-    already pinned to the census's, so there is nothing for AQE to
-    re-plan at any scale, and its per-statement query-stage
-    re-optimization measured ~15-30 ms/iteration of pure overhead
-    (round-12, interleaved A/B). Set and restore live in ONE context
-    manager so the restore cannot be separated from the set (round-11
-    advice); the session is single-threaded per the engine contract, so
-    no concurrent statement observes the loop's conf."""
-    from uuid import uuid4
-
-    spark = census.sparkSession
-    census = census.persist()
-    view = f"merge_census_{uuid4().hex[:12]}"
-    census.createOrReplaceTempView(view)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+def _open_census(sc, census):
+    """Merge-loop setup in scope ``sc`` → (census, view): persist and
+    materialize the census, bind its view, pin the loop conf. Iteration
+    shuffles are census-bounded, so the width follows the census's cached
+    partition count (scale-adaptive: 1 instead of 32 near-empty reducers
+    at fixture scale, the census's AQE-coalesced width at corpus scale)."""
+    census = sc.persist(census)
     census.count()  # materialize: the loop and the width read the cache
-    st = _MergeLoopState(census)
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, census.rdd.getNumPartitions())),
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        yield spark, st, view
-    finally:
-        if st.pending is not None:
-            st.pending.unpersist()
-        st.census.unpersist()
-        spark.catalog.dropTempView(view)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    view = sc.view(census, "merge_census")
+    sc.pin(census.rdd.getNumPartitions())
+    return census, view
+
+
+def _train_merges(census, k: int, argmax_sql: str, row):
+    """The census merge loop shared by BPE and WordPiece: k × [ONE
+    ``argmax_sql`` statement over ``{view}`` (the pair as x, y; no row
+    once fully merged) → ``row(rank, top)`` → fold rewrite]. Each
+    rewrite is persisted and its parent released once the next argmax
+    has materialized it — without the chain, iteration i replays all i-1
+    string folds (quadratic in k: 10.4 -> 4.3s at sf0.1). The scope drops
+    whatever is live at exit, so no census outlives the call."""
+    merges = []
+    with scope(census.sparkSession) as sc:
+        census, view = _open_census(sc, census)
+        parent = None
+        for rank in range(1, k + 1):
+            top = sc.spark.sql(argmax_sql.format(view=view)).collect()
+            if parent is not None:
+                sc.release(parent)
+                parent = None
+            if not top:  # census fully merged to single symbols — stop early
+                break
+            merges.append(row(rank, top[0]))
+            if rank == k:
+                break  # last iteration's rewrite is never observed
+            parent = census
+            census = sc.persist(
+                parent.select(_merge_fold(top[0]["x"], top[0]["y"]).alias("sym"), "wc")
+            )
+            census.createOrReplaceTempView(view)
+    return merges
 
 
 def _bpe_train_from_census(census, k: int = _BPE_TRAIN_K):
-    """Training FROM an explicit (sym, wc) census — the entry point that
-    makes the census a swappable input: q_bpe_train scans the corpus,
-    q_bpe_retrain_incremental reads a maintained census STATE, and both
-    run this identical loop (so the two keys can only differ if their
-    censuses differ)."""
-    merges: list[tuple[int, str, str, str, int]] = []
-    # the context manager wraps the whole loop: the TAIL census of the
-    # persist-chain must not outlive the call. Relying on the caller's
-    # clearCache() (bench.py does, parity.py and library consumers don't)
-    # leaks one cached census per invocation in a long-lived session
-    # (round-7 verdict finding #1). The cleanup sees whichever census is
-    # current when the loop exits — normally, early, or by exception.
-    with _merge_loop_env(census) as (spark, st, view):
-        for rank in range(1, k + 1):
-            # this statement reads the CURRENT census view; running it
-            # also materializes a just-rewritten census's cache, after
-            # which the parent from the previous iteration can go — the
-            # deferred unpersist replaces the old per-iteration count()
-            # materializer job
-            top = spark.sql(_PAIR_ARGMAX_SQL.format(view=view)).collect()
-            if st.pending is not None:
-                st.pending.unpersist()
-                st.pending = None
-            if not top:  # census fully merged to single symbols — stop early
-                break
-            x, y, cnt = top[0]["x"], top[0]["y"], top[0]["cnt"]
-            merges.append((rank, x, y, x + y, int(cnt)))
-            if rank == k:
-                break  # last iteration's rewrite is never observed
-            s = F.split("sym", "·")
-            fold = F.aggregate(
-                F.slice(s, F.lit(2), F.size(s) - 1),
-                F.element_at(s, 1),
-                lambda acc, el: F.when(
-                    (F.regexp_extract(acc, "[^·]*$", 0) == F.lit(x))
-                    & (el == F.lit(y)),
-                    F.concat(acc, F.lit(y)),
-                ).otherwise(F.concat(acc, F.lit("·"), el)),
-            )
-            # persist each rewritten census and drop its parent: without
-            # this, iteration i's pair count replays ALL i-1 interpreted
-            # string folds from the base census (lazy lineage), so the loop
-            # is quadratic in k in fold work — measured 10.4 -> 4.3s at
-            # sf0.1 (best-of-3, idle box). The perf-lessons persist rule:
-            # iterations keep their own materialization.
-            st.pending = st.census
-            st.census = st.pending.select(fold.alias("sym"), "wc").persist()
-            st.census.createOrReplaceTempView(view)
-    return merges
+    """BPE training FROM an explicit (sym, wc) census — the entry point
+    that makes the census a swappable input: q_bpe_train scans the
+    corpus, q_bpe_retrain_incremental reads a maintained census STATE,
+    and both run this identical loop (so the two keys can only differ if
+    their censuses differ)."""
+    return _train_merges(
+        census,
+        k,
+        _PAIR_ARGMAX_SQL,
+        lambda rank, t: (rank, t["x"], t["y"], t["x"] + t["y"], int(t["cnt"])),
+    )
 
 
 @q("q_bpe_train", _bpe_train_sql())
@@ -1784,14 +1730,8 @@ def bpe_apply_cols(merges):
     running — divergence by error; literals make any merge pair safe)."""
 
     def subwords(w):
-        spelled = F.regexp_replace(w, "(.)", "$1·")
-        for x, y in merges:
-            spelled = F.replace(
-                spelled, F.lit(f"{x}·{y}"), F.lit(f"{x}{y}")
-            )
-        return F.size(
-            F.filter(F.split(spelled, "·"), lambda t: t != "")
-        ).cast("bigint")
+        seg = _merge_segment_col(merges, w)
+        return F.size(F.filter(F.split(seg, "·"), lambda t: t != "")).cast("bigint")
 
     words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     n_words = F.size(words).cast("bigint")
@@ -2637,24 +2577,27 @@ def q_graph_kcore(spark, sf):
     # persisted: the median-k probe and peel round 1 both read this
     # node-sized degree table — without the persist, round 1 re-aggregates
     # the full edge set (the probe is its own action, so exchange reuse
-    # cannot span it). Round-12 A/B: median 2.79 -> 2.58s.
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
-    )
-    med = deg.agg(F.floor(F.percentile("d", 0.5) * 0.8)).collect()[0][0]
-    k = int(med) if med is not None else 1  # empty graph → empty result
-    # canonical=True: e is already (u<v)-oriented (sorted per-order part
-    # arrays), self-loop-free, distinct and checkpointed — kcore_peel's
-    # normalize+distinct re-shuffle and round-0 re-materialization of the
-    # SAME edge set are skipped (round-12: one edge-sized exchange +
-    # checkpoint write saved per invocation)
-    return kcore_peel(
-        e, k=k, rounds=3, src="u", dst="v", canonical=True, degrees0=deg
-    ).withColumn("k", F.lit(k).cast("bigint"))
+    # cannot span it). Round-12 A/B: median 2.79 -> 2.58s. Scoped: every
+    # peel round ends in an eager localCheckpoint, so the returned plan
+    # never reads it.
+    with scope(spark) as sc:
+        deg = sc.persist(
+            e.select(F.col("u").alias("x"))
+            .unionAll(e.select(F.col("v").alias("x")))
+            .groupBy("x")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        med = deg.agg(F.floor(F.percentile("d", 0.5) * 0.8)).collect()[0][0]
+        k = int(med) if med is not None else 1  # empty graph → empty result
+        # canonical=True: e is already (u<v)-oriented (sorted per-order
+        # part arrays), self-loop-free, distinct and checkpointed —
+        # kcore_peel's normalize+distinct re-shuffle and round-0
+        # re-materialization of the SAME edge set are skipped (round-12:
+        # one edge-sized exchange + checkpoint write saved per invocation)
+        cores = kcore_peel(
+            e, k=k, rounds=3, src="u", dst="v", canonical=True, degrees0=deg
+        )
+    return cores.withColumn("k", F.lit(k).cast("bigint"))
 
 
 # ------------------------------------------------- recency decay score -----
@@ -3378,37 +3321,37 @@ def q_select_cover(spark, sf):
     from mongo_to_parquet_spark.operators.parallel import fan_out
 
     d = fan_out(T(spark, sf, "documents").select("doc_id", "text"))
-    units = (
-        d.select("doc_id", F.explode(shingles(F.col("text"), 2)).alias("u"))
-        .distinct()
-        .persist()  # k marginal-gain passes; caller clearCache()s after
-    )
+    units = d.select(
+        "doc_id", F.explode(shingles(F.col("text"), 2)).alias("u")
+    ).distinct()
     covered = None
     selected: list[int] = []
     picked: list[tuple[int, int, int]] = []
-    for t in range(1, _COVER_K + 1):
-        cand = units
-        if selected:
-            cand = cand.filter(~F.col("doc_id").isin(selected))
-        if covered is not None:
-            cand = cand.join(F.broadcast(covered), "u", "left_anti")
-        row = (
-            cand.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("gain"))
-            .orderBy(F.col("gain").desc(), F.col("doc_id").asc())
-            .limit(1)
-            .collect()
-        )
-        if not row:
-            break  # every remaining doc adds zero coverage
-        doc, gain = row[0]["doc_id"], row[0]["gain"]
-        picked.append((t, doc, gain))
-        selected.append(doc)
-        new_cov = units.filter(F.col("doc_id") == doc).select("u")
-        covered = (
-            new_cov if covered is None
-            else covered.unionByName(new_cov).distinct()
-        )
+    with scope(spark) as sc:
+        units = sc.persist(units)  # k marginal-gain passes
+        for t in range(1, _COVER_K + 1):
+            cand = units
+            if selected:
+                cand = cand.filter(~F.col("doc_id").isin(selected))
+            if covered is not None:
+                cand = cand.join(F.broadcast(covered), "u", "left_anti")
+            row = (
+                cand.groupBy("doc_id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("gain"))
+                .orderBy(F.col("gain").desc(), F.col("doc_id").asc())
+                .limit(1)
+                .collect()
+            )
+            if not row:
+                break  # every remaining doc adds zero coverage
+            doc, gain = row[0]["doc_id"], row[0]["gain"]
+            picked.append((t, doc, gain))
+            selected.append(doc)
+            new_cov = units.filter(F.col("doc_id") == doc).select("u")
+            covered = (
+                new_cov if covered is None
+                else covered.unionByName(new_cov).distinct()
+            )
     return spark.createDataFrame(picked, "rk bigint, doc_id bigint, gain bigint")
 
 
@@ -3595,15 +3538,11 @@ def q_bpe_curve(spark, sf):
     d = T(spark, sf, "documents")
     words = d.select(F.explode(F.split("text", " ")).alias("w"))
     ones = words.filter(F.length("w") == 1).count()
-    spelled = F.expr(
-        "array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '·')"
-    )
     census = (
         words.filter(F.length("w") >= 2)
-        .select(spelled.alias("sym"))
+        .select(_bpe_spelled().alias("sym"))
         .groupBy("sym")
         .agg(F.count(F.lit(1)).alias("wc"))
-        .persist()  # k+1 curve aggregates; tail unpersisted in finally
     )
 
     def total(cdf):
@@ -3617,30 +3556,18 @@ def q_bpe_curve(spark, sf):
         # the single-char constant alone
         return int(n or 0) + ones
 
-    # try/finally: the tail census must not outlive the call — every
-    # curve point is collected eagerly (total()), so nothing returned
-    # depends on the cache (round-7 verdict finding #1)
-    try:
+    # every curve point is collected eagerly (total()), so nothing
+    # returned depends on the scope's persists
+    with scope(spark) as sc:
+        census = sc.persist(census)
         rows = [(0, total(census))]
         for rank, x, y, _, _ in merges:
-            s = F.split("sym", "·")
-            fold = F.aggregate(
-                F.slice(s, F.lit(2), F.size(s) - 1),
-                F.element_at(s, 1),
-                lambda acc, el: F.when(
-                    (F.regexp_extract(acc, "[^·]*$", 0) == F.lit(x))
-                    & (el == F.lit(y)),
-                    F.concat(acc, F.lit(y)),
-                ).otherwise(F.concat(acc, F.lit("·"), el)),
-            )
-            # persist-chain like _bpe_train_merges: each curve point's
+            # persist-chain like _train_merges: each curve point's
             # aggregate must not replay every earlier fold from the base
-            prev = census
-            census = prev.select(fold.alias("sym"), "wc").persist()
+            parent = census
+            census = sc.persist(parent.select(_merge_fold(x, y).alias("sym"), "wc"))
             rows.append((rank, total(census)))
-            prev.unpersist()
-    finally:
-        census.unpersist()
+            sc.release(parent)
     return spark.createDataFrame(
         rows, "n_merges bigint, total_subwords bigint"
     ).orderBy("n_merges")
@@ -3894,9 +3821,9 @@ def _unigram_train_from_census(census) -> tuple[dict[str, int], list[str]]:
     round t−1's segmentation through lazy lineage — the first cut of
     this trainer was one static unrolled DAG and planned 34 corpus scans
     at 2 rounds (~5^N subtree growth, lesson 9). The census persists for
-    the duration of the call (try/finally, the round-7 leak rule)."""
-    census = census.persist()
-    try:
+    the duration of the call (the scope, the round-7 leak rule)."""
+    with scope(census.sparkSession) as sc:
+        census = sc.persist(census)
         sing_rows = (
             census.select(
                 F.explode(
@@ -3931,47 +3858,45 @@ def _unigram_train_from_census(census) -> tuple[dict[str, int], list[str]]:
         sing = [r["piece"] for r in sing_rows]
         vocab = {r["piece"]: r["cnt"] for r in sing_rows}
         vocab.update({r["piece"]: r["cnt"] for r in seed_rows})
-        # EM rounds under the pinned loop conf (the _merge_loop_env
-        # discipline): every round is one vocabulary-bounded aggregate
-        # over the CACHED census — width follows the cache (the seed
-        # collects above materialized it), and AQE has nothing to
-        # re-plan per round. Round-12 A/B in _merge_loop_env's note.
-        with _loop_conf(census.sparkSession, census.rdd.getNumPartitions()):
-            for _ in range(_UNI_ITERS):
-                vm = _uni_vm_lit(vocab)
-                # vm bound ONCE as a column, dp built over the column ref —
-                # the inline form put one copy of the vocab-map literal at
-                # every DP cost site (4 per step), quadrupling the plan tree
-                # per round (round-11; same staging rule as _eval_family_stats)
-                d = census.select("w", "wc", vm.alias("vm")).select(
-                    "w",
+        # EM rounds under the scope's loop-conf pin (the merge loops'
+        # discipline, _open_census): every round is one vocabulary-bounded
+        # aggregate over the CACHED census — width follows the cache (the
+        # seed collects above materialized it), and AQE has nothing to
+        # re-plan per round.
+        sc.pin(census.rdd.getNumPartitions())
+        for _ in range(_UNI_ITERS):
+            vm = _uni_vm_lit(vocab)
+            # vm bound ONCE as a column, dp built over the column ref —
+            # the inline form put one copy of the vocab-map literal at
+            # every DP cost site (4 per step), quadrupling the plan tree
+            # per round (round-11; same staging rule as _eval_family_stats)
+            d = census.select("w", "wc", vm.alias("vm")).select(
+                "w",
+                "wc",
+                "vm",
+                _uni_dp_col(F.col("w"), F.col("vm")).alias("dp"),
+            )
+            usage_rows = (
+                d.select(
+                    F.explode(
+                        _uni_pieces_col(F.col("w"), F.col("vm"), F.col("dp"))
+                    ).alias("piece"),
                     "wc",
-                    "vm",
-                    _uni_dp_col(F.col("w"), F.col("vm")).alias("dp"),
                 )
-                usage_rows = (
-                    d.select(
-                        F.explode(
-                            _uni_pieces_col(F.col("w"), F.col("vm"), F.col("dp"))
-                        ).alias("piece"),
-                        "wc",
-                    )
-                    .groupBy("piece")
-                    .agg(F.sum("wc").cast("long").alias("cnt"))
-                    .collect()
+                .groupBy("piece")
+                .agg(F.sum("wc").cast("long").alias("cnt"))
+                .collect()
+            )
+            usage = {r["piece"]: r["cnt"] for r in usage_rows}
+            vocab = {ch: usage.get(ch, 0) for ch in sing}
+            vocab.update(
+                dict(
+                    sorted(
+                        ((p, c) for p, c in usage.items() if len(p) >= 2),
+                        key=lambda kv: (-kv[1], kv[0]),
+                    )[:_UNI_KEEP]
                 )
-                usage = {r["piece"]: r["cnt"] for r in usage_rows}
-                vocab = {ch: usage.get(ch, 0) for ch in sing}
-                vocab.update(
-                    dict(
-                        sorted(
-                            ((p, c) for p, c in usage.items() if len(p) >= 2),
-                            key=lambda kv: (-kv[1], kv[0]),
-                        )[:_UNI_KEEP]
-                    )
-                )
-    finally:
-        census.unpersist()
+            )
     return vocab, sing
 
 
@@ -3999,7 +3924,7 @@ def q_unigram_train(spark, sf):
     # discipline applied to a DP-shaped trainer.
     #
     # Scale: ONE corpus scan builds the census (persisted for the call,
-    # released in finally); every EM round is census-sized (distinct
+    # released by its scope); every EM round is census-sized (distinct
     # words × frequency — the same trick that makes q_bpe_train
     # corpus-scale: iterations never touch the corpus), the vocab rides
     # as ~100 plan literals, and the only shuffles are vocabulary-sized
@@ -4164,70 +4089,38 @@ def _wp_train_merges(spark, sf, k: int = _WP_TRAIN_K):
     """The iterative WordPiece loop (census → k × [symbol count + pair
     count → 1-row score argmax collect → fold rewrite]); returns
     [(rank, x, y, merged, cnt, score_x1e9)]. Shared by q_wordpiece_train
-    and q_wordpiece_pipeline. Same persist-chain + try/finally shape as
-    _bpe_train_merges (lesson 36 / round-7 leak rule)."""
-    return _wp_train_from_census(_bpe_census(spark, sf), k)
+    and q_wordpiece_pipeline. Both merge families run the ONE census
+    merge loop (_train_merges) over ONE census definition (_bpe_census),
+    differing only in the argmax statement and its merge-table row."""
+    return _train_merges(
+        _bpe_census(spark, sf),
+        k,
+        _WP_ARGMAX_SQL,
+        lambda rank, t: (
+            rank, t["x"], t["y"], t["x"] + t["y"], int(t["cnt"]), int(t["score_x1e9"])
+        ),
+    )
 
 
 #: the WordPiece per-iteration statement: pair counts scored by
 #: likelihood gain cnt/(cx·cy) against the per-symbol counts, all from
 #: ONE census pass composed in one statement (the symbol-count side
 #: broadcasts — it is alphabet+merges-sized at any corpus scale)
-_WP_ARGMAX_SQL = """
+_WP_ARGMAX_SQL = f"""
 WITH syms AS (
   SELECT s1, SUM(wc) AS c FROM (
-    SELECT explode(split(sym, '·')) AS s1, wc FROM {view}) GROUP BY s1
+    SELECT explode(split(sym, '·')) AS s1, wc FROM {{view}}) GROUP BY s1
 ), pairs AS (
   SELECT p.x AS x, p.y AS y, SUM(wc) AS cnt FROM (
     SELECT explode(transform(sequence(1, size(split(sym, '·')) - 1),
         i -> struct(split(sym, '·')[i-1] AS x, split(sym, '·')[i] AS y))) AS p, wc
-    FROM {view} WHERE size(split(sym, '·')) >= 2) GROUP BY p.x, p.y
+    FROM {{view}} WHERE size(split(sym, '·')) >= 2) GROUP BY p.x, p.y
 )
 SELECT /*+ BROADCAST(sx), BROADCAST(sy) */ pairs.x, pairs.y, cnt,
-       (cnt * {scale}) div (sx.c * sy.c) AS score_x1e9
+       (cnt * {_WP_SCALE}) div (sx.c * sy.c) AS score_x1e9
 FROM pairs JOIN syms sx ON pairs.x = sx.s1 JOIN syms sy ON pairs.y = sy.s1
 ORDER BY score_x1e9 DESC, pairs.x ASC, pairs.y ASC LIMIT 1
 """
-
-
-def _wp_train_from_census(census, k: int = _WP_TRAIN_K):
-    """WordPiece training FROM an explicit (sym, wc) census — the same
-    swappable-census entry point as _bpe_train_from_census (both merge
-    families share ONE census definition, _bpe_census), so an
-    incrementally-maintained census state retrains this family too.
-    Same one-statement-per-iteration / deferred-unpersist loop shape as
-    _bpe_train_from_census (round-11)."""
-    merges: list[tuple[int, str, str, str, int, int]] = []
-    with _merge_loop_env(census) as (spark, st, view):
-        for rank in range(1, k + 1):
-            top = spark.sql(
-                _WP_ARGMAX_SQL.format(view=view, scale=_WP_SCALE)
-            ).collect()
-            if st.pending is not None:
-                st.pending.unpersist()
-                st.pending = None
-            if not top:
-                break
-            x, y = top[0]["x"], top[0]["y"]
-            merges.append(
-                (rank, x, y, x + y, int(top[0]["cnt"]), int(top[0]["score_x1e9"]))
-            )
-            if rank == k:
-                break
-            s = F.split("sym", "·")
-            fold = F.aggregate(
-                F.slice(s, F.lit(2), F.size(s) - 1),
-                F.element_at(s, 1),
-                lambda acc, el: F.when(
-                    (F.regexp_extract(acc, "[^·]*$", 0) == F.lit(x))
-                    & (el == F.lit(y)),
-                    F.concat(acc, F.lit(y)),
-                ).otherwise(F.concat(acc, F.lit("·"), el)),
-            )
-            st.pending = st.census
-            st.census = st.pending.select(fold.alias("sym"), "wc").persist()
-            st.census.createOrReplaceTempView(view)
-    return merges
 
 
 @q("q_wordpiece_train", _wp_train_sql())
@@ -4353,8 +4246,8 @@ def q_unigram_curve(spark, sf):
         ((p, c) for p, c in vocab.items() if len(p) >= 2),
         key=lambda kv: (-kv[1], kv[0]),
     )
-    census = _uni_census(spark, sf).persist()
-    try:
+    with scope(spark) as sc:
+        census = sc.persist(_uni_census(spark, sf))
         rows = []
         for m in _UNI_CURVE_MS:
             vm = _uni_vm_lit(
@@ -4376,8 +4269,6 @@ def q_unigram_curve(spark, sf):
                 .alias("t")
             ).collect()
             rows.append((m, int(r["t"])))
-    finally:
-        census.unpersist()
     return spark.createDataFrame(
         rows, "n_multi_pieces bigint, total_subwords bigint"
     ).orderBy("n_multi_pieces")
@@ -4720,14 +4611,13 @@ def q_tokenizer_eval(spark, sf):
     merges_wp = _wp_merges_artifact(spark, sf)
     vm = _uni_vm_lit(_uni_vocab_artifact(spark, sf))
     d = T(spark, sf, "documents")
-    cen = (
-        d.select("lang", F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("lang", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("wc"))
-        .persist()
-    )
-    try:
+    with scope(spark) as sc:
+        cen = sc.persist(
+            d.select("lang", F.explode(F.split("text", " ")).alias("w"))
+            .filter(F.col("w") != "")
+            .groupBy("lang", "w")
+            .agg(F.count(F.lit(1)).cast("long").alias("wc"))
+        )
 
         def merge_cols(merges):
             seg = _merge_segment_col(merges, F.col("w"))
@@ -4809,8 +4699,6 @@ def q_tokenizer_eval(spark, sf):
         # re-scan the corpus once per family after the unpersist (the
         # round-7 leak rule forbids leaving the census cached instead)
         out = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        cen.unpersist()
     return out
 
 
@@ -4881,11 +4769,10 @@ def q_bpe_retrain_incremental(spark, sf):
 def _dsir_doc_feat(spark, sf):
     """(doc_id, lang, hashed-bigram feature, count) — the ONE corpus
     featurization shared by training and serving (so the two paths
-    cannot drift), persisted because two consumers prune it to different
-    columns (see q_select_dsir's plan note)."""
-    return dsir_feats_of(
-        T(spark, sf, "documents").select("doc_id", "lang", "text")
-    ).persist()
+    cannot drift). The serve persists it in its scope because two
+    consumers prune it to different columns (see q_select_dsir's plan
+    note)."""
+    return dsir_feats_of(T(spark, sf, "documents").select("doc_id", "lang", "text"))
 
 
 def dsir_feats_of(d):
@@ -4956,8 +4843,8 @@ def q_dsir_apply_artifact(spark, sf):
     # pretraining ingest runs against a FIXED target-domain model.
     art = tokenizer.artifact_dir(sf, "dsir")
     want = {"buckets": _DSIR_B, "target": "en"}
-    doc_feat = _dsir_doc_feat(spark, sf)
-    try:
+    with scope(spark) as sc:
+        doc_feat = sc.persist(_dsir_doc_feat(spark, sf))
         if not tokenizer.artifact_current(art, "dsir", want):
             fstats = doc_feat.groupBy("f").agg(
                 F.sum(F.when(F.col("lang") == "en", F.col("n")).otherwise(0))
@@ -4972,6 +4859,4 @@ def q_dsir_apply_artifact(spark, sf):
         out = _dsir_score_top(doc_feat, stored)
         # bounded (top-m rows): materialize before releasing doc_feat
         out = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        doc_feat.unpersist()
     return out

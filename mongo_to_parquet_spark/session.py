@@ -19,9 +19,10 @@ from pyspark.sql import SparkSession
 #: Confs that are safe (and necessary) to set on an *existing* session at
 #: runtime — applied by the catalog so driver-owned sessions behave too.
 RUNTIME_CONFS: dict[str, str] = {
-    # events.parquet stores ts as TIMESTAMP(NANOS); Spark has no ns type, so
-    # read the raw int64 and convert to µs in the catalog (matches DuckDB's
-    # CAST(ts AS TIMESTAMP) truncation — verified in tests).
+    # the fixtures' events.ts is TIMESTAMP(MICROS); a TIMESTAMP(NANOS)
+    # input has no Spark type, so read its raw int64 and convert to µs in
+    # the catalog (matches DuckDB's CAST(ts AS TIMESTAMP) truncation —
+    # verified in tests).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
     # hive partition values stay strings: the reference's `year=` column is

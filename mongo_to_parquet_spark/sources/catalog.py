@@ -5,9 +5,11 @@ Generalizes the reference's catalog scans (``list_database_names`` /
 parquet-backed tables. All reads are plain ``spark.read.parquet`` so Catalyst
 column pruning and filter pushdown reach the scan.
 
-The one normalization: ``events.ts`` is stored as parquet TIMESTAMP(NANOS),
-which Spark cannot represent (TimestampType is µs). We read the raw int64
-(``spark.sql.legacy.parquet.nanosAsLong``) and floor-divide to µs —
+The one normalization: the fixtures store ``events.ts`` as parquet
+TIMESTAMP(MICROS) with ``isAdjustedToUTC=false``, which Spark reads as
+``timestamp_ntz`` directly. A TIMESTAMP(NANOS) input, which Spark cannot
+represent (TimestampType is µs), arrives as the raw int64
+(``spark.sql.legacy.parquet.nanosAsLong``) and is floor-divided to µs —
 bit-identical to DuckDB's ``CAST(ts AS TIMESTAMP)`` (see
 tests/test_catalog.py).
 """

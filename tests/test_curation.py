@@ -390,21 +390,6 @@ def test_dedup_url_matches_urllib_canonicalization(spark, sf_dir):
     assert got == expected and expected
 
 
-def test_bpe_keys_leave_cache_empty(spark, sf_dir):
-    """The BPE persist-chain keys must unpersist their tail census inside
-    the call (try/finally): relying on the caller's clearCache() leaks one
-    cached census per invocation in a long-lived session — bench.py clears
-    the cache, parity.py and library consumers don't (round-7 verdict
-    finding #1)."""
-    spark.catalog.clearCache()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    for key in ("q_bpe_train", "q_bpe_pipeline", "q_bpe_curve",
-                "q_wordpiece_train", "q_wordpiece_pipeline",
-                "q_unigram_train", "q_unigram_pipeline", "q_unigram_curve"):
-        QS[key](spark, sf_dir).collect()
-        assert cm.isEmpty(), f"{key} left persisted relations behind"
-
-
 def test_dedup_url_adversarial_param_names(spark, sf_dir, tmp_path):
     """Round-7 advice: the tracking-param rule must be anchored to a [?&]
     delimiter, so params whose NAMES merely contain 'ref'/'utm_x' (href,

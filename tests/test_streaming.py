@@ -1644,21 +1644,18 @@ def test_stream_fed_langid_and_dsir_state_equals_batch_artifact(
     got_f = sorted(
         (r["f"], int(r["sum_ct"]), int(r["sum_cr"])) for r in dst.collect()
     )
-    doc_feat = _dsir_doc_feat(spark, sf_dir)
-    try:
-        want_f = sorted(
-            tuple(r)
-            for r in doc_feat.groupBy("f")
-            .agg(
-                F.sum(F.when(F.col("lang") == "en", F.col("n")).otherwise(0))
-                .cast("bigint")
-                .alias("ct"),
-                F.sum("n").cast("bigint").alias("cr"),
-            )
-            .collect()
+    want_f = sorted(
+        tuple(r)
+        for r in _dsir_doc_feat(spark, sf_dir)
+        .groupBy("f")
+        .agg(
+            F.sum(F.when(F.col("lang") == "en", F.col("n")).otherwise(0))
+            .cast("bigint")
+            .alias("ct"),
+            F.sum("n").cast("bigint").alias("cr"),
         )
-    finally:
-        doc_feat.unpersist()
+        .collect()
+    )
     assert got_f == want_f
     assert len(got_f) <= _DSIR_B
 

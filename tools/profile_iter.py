@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from mongo_to_parquet_spark import get_spark  # noqa: E402
+from mongo_to_parquet_spark.operators.scope import scope  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -53,77 +54,40 @@ def main():
         show("select1", phases(spark, "SELECT 1"))
         show("range", phases(spark, "SELECT sum(id) FROM range(0, 1000)"))
 
-    if which in ("bpe", "all"):
+    if which in ("bpe", "wp", "all"):
         from mongo_to_parquet_spark.queries.curation import (
             _PAIR_ARGMAX_SQL,
-            _bpe_census,
-            _merge_loop_env,
-        )
-
-        with _merge_loop_env(_bpe_census(spark, SF)) as (spark2, st, view):
-            show("bpe_argmax", phases(spark, _PAIR_ARGMAX_SQL.format(view=view)))
-
-    if which in ("wp", "all"):
-        from mongo_to_parquet_spark.queries.curation import (
             _WP_ARGMAX_SQL,
-            _WP_SCALE,
             _bpe_census,
-            _merge_loop_env,
+            _open_census,
         )
 
-        with _merge_loop_env(_bpe_census(spark, SF)) as (spark2, st, view):
-            show(
-                "wp_argmax",
-                phases(spark, _WP_ARGMAX_SQL.format(view=view, scale=_WP_SCALE)),
-            )
+        for name, sql in (("bpe", _PAIR_ARGMAX_SQL), ("wp", _WP_ARGMAX_SQL)):
+            if which in (name, "all"):
+                with scope(spark) as sc:
+                    _, view = _open_census(sc, _bpe_census(spark, SF))
+                    show(f"{name}_argmax", phases(spark, sql.format(view=view)))
 
     if which in ("qlr", "all"):
         from mongo_to_parquet_spark.operators.classifier import (
             N_W,
-            S,
             doc_dense,
+            gradient_sql,
+            open_dense,
         )
         from mongo_to_parquet_spark.sources.catalog import load_table
 
         docs = load_table(spark, SF, "documents")
-        dense = doc_dense(docs).persist()
-        n = dense.count()
-        parts = max(1, min(dense.rdd.getNumPartitions(), 1 + n // 100_000))
-        it_rel = (
-            dense.coalesce(parts)
-            if parts < dense.rdd.getNumPartitions()
-            else dense
-        )
-        it_rel.createOrReplaceTempView("qlr_prof")
-        aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        sig = f"{S} div 2 + (m * {S}) div (2 * ({S} + abs(m)))"
-
-        def stmt(w):
-            arr = ", ".join(f"CAST({int(wi)} AS BIGINT)" for wi in w)
-            return (
-                f"SELECT j, CAST(SUM((xj * r) div {S}) AS BIGINT) AS g FROM ("
-                f"  SELECT posexplode(xa) AS (j, xj),"
-                f"         CAST(y AS BIGINT) * {S} - ({sig}) AS r FROM ("
-                f"    SELECT xa, y, aggregate(zip_with(xa, array({arr}),"
-                f"      (a, b) -> (a * b) div {S}), CAST(0 AS BIGINT),"
-                f"      (acc, t) -> acc + t) AS m FROM qlr_prof))"
-                f" GROUP BY j"
-            )
-
-        try:
+        with scope(spark) as sc:
+            _, view = open_dense(sc, doc_dense(docs))
             # same weights every rep (codegen-cache best case)
-            show("qlr_same_w", phases(spark, stmt([0] * N_W)))
+            show("qlr_same_w", phases(spark, gradient_sql([0] * N_W, view)))
             # different weights each rep (the real loop)
             rows = []
             for i in range(6):
                 w = [i * 1000 + j for j in range(N_W)]
-                rows.extend(phases(spark, stmt(w), reps=1))
+                rows.extend(phases(spark, gradient_sql(w, view), reps=1))
             show("qlr_diff_w", rows)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
-            spark.catalog.dropTempView("qlr_prof")
-            dense.unpersist()
 
     spark.stop()
 
