@@ -3,6 +3,9 @@ small in-memory tables so each property runs many random cases quickly."""
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -1303,3 +1306,168 @@ def test_auc_matches_sklearn_free_naive(spark, sf_dir):
     assert (got["n1"], got["n2"]) == (n1, n2)
     assert got["u_x2"] == wins_x2
     assert got["auc_x10000"] == (wins_x2 * 10000) // (2 * n1 * n2)
+
+
+# -- mongoexport scan ≡ unwrap_extjson + createDataFrame -------------------
+
+_MISSING = object()
+_EPOCH = dt.datetime(1970, 1, 1)
+_EXT_SCHEMA = (
+    "_id string, s string, n bigint, x double, t timestamp, amount decimal(10,2), "
+    "flag boolean, m map<string,string>, "
+    "sub struct<a: string, b: timestamp, c: decimal(6,1)>, "
+    "dates array<timestamp>, nums array<bigint>, "
+    "deep array<map<string,struct<d: decimal(6,2), s: string>>>"
+)
+
+
+def _opt(strategy):
+    """A value, a JSON null, or the field left out of the document."""
+    return st.one_of(strategy, st.none(), st.just(_MISSING))
+
+
+def _doc(fields):
+    return st.fixed_dictionaries(fields).map(
+        lambda d: {k: v for k, v in d.items() if v is not _MISSING}
+    )
+
+
+def _decimal(bound, scale):
+    # one digit more than the field's scale, and Decimal128's NaN. No exact
+    # ties: the JVM path of createDataFrame rounds those half-up, the scan
+    # half-even (test_mongoexport_decimal_ties_round_half_even)
+    return st.one_of(
+        st.decimals(-bound, bound, places=scale + 1, allow_nan=False, allow_infinity=False)
+        .filter(lambda d: d.as_tuple().digits[-1] != 5),
+        st.just(decimal.Decimal("NaN")),
+    ).map(lambda d: {"$numberDecimal": str(d)})
+
+
+_ms = st.datetimes(dt.datetime(1900, 1, 1), dt.datetime(2200, 1, 1)).map(
+    lambda t: t.replace(microsecond=t.microsecond // 1000 * 1000)
+)
+_ext_date = st.one_of(
+    _ms.map(lambda t: {"$date": t.isoformat(timespec="milliseconds") + "Z"}),
+    _ms.map(lambda t: {"$date": {"$numberLong": str((t - _EPOCH) // dt.timedelta(milliseconds=1))}}),
+    st.tuples(_ms, st.integers(-12, 14)).map(
+        lambda p: {"$date": p[0].replace(tzinfo=dt.timezone(dt.timedelta(hours=p[1])))
+                   .isoformat(timespec="milliseconds")}
+    ),
+)
+_i64 = st.integers(-(2**63), 2**63 - 1)
+_ext_long = st.one_of(
+    _i64,
+    _i64.map(lambda i: {"$numberLong": str(i)}),
+    st.integers(-(2**31), 2**31 - 1).map(lambda i: {"$numberInt": str(i)}),
+)
+_ext_double = st.one_of(
+    st.floats(allow_nan=False),
+    st.floats(allow_nan=False, allow_infinity=False).map(lambda x: {"$numberDouble": repr(x)}),
+    st.sampled_from(["Infinity", "-Infinity"]).map(lambda s: {"$numberDouble": s}),
+)
+# string fields also take the non-string scalars pyspark coerces
+_ext_str = st.one_of(
+    st.text(max_size=6), st.integers(), st.booleans(), st.floats(allow_nan=False),
+    _ext_long, _ext_date,
+)
+_ext_doc = _doc({
+    "s": _opt(_ext_str),
+    "n": _opt(_ext_long),
+    "x": _opt(_ext_double),
+    "t": _opt(_ext_date),
+    "amount": _opt(_decimal(10**7, 2)),
+    "flag": _opt(st.booleans()),
+    "m": _opt(st.dictionaries(st.text(max_size=3), st.one_of(st.none(), _ext_str), max_size=3)),
+    "sub": _opt(_doc({
+        "a": _opt(_ext_str), "b": _opt(_ext_date), "c": _opt(_decimal(10**4, 1)),
+        "extra": _opt(st.text(max_size=3)),
+    })),
+    "dates": _opt(st.lists(st.one_of(st.none(), _ext_date), max_size=3)),
+    "nums": _opt(st.lists(st.one_of(st.none(), _ext_long), max_size=3)),
+    "deep": _opt(st.lists(st.dictionaries(
+        st.text(max_size=3),
+        _doc({"d": _opt(_decimal(10**3, 2)), "s": _opt(_ext_str)}),
+        max_size=2,
+    ), max_size=2)),
+    "extra_field": _opt(st.text(max_size=3)),
+})
+
+
+@given(st.lists(_ext_doc, min_size=1, max_size=25))
+@settings(**_SETTINGS)
+def test_mongoexport_scan_equals_unwrap_then_create(spark, tmp_path, docs):
+    """The column-wise Arrow scan gives exactly the rows pyspark's own
+    local-data path gives for the unwrapped documents (string coercion,
+    half-even decimal quantize, NaN → null, nested maps/structs/arrays),
+    and ``read()`` yields only bounded RecordBatches of the declared
+    Arrow schema."""
+    import json
+    import os
+    import time
+    from unittest import mock
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from mongo_to_parquet_spark.sources import extjson
+    from mongo_to_parquet_spark.sources.extjson import (
+        MongoExportDataSource,
+        _FilePartition,
+        unwrap_extjson,
+    )
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    docs = [{"_id": {"$oid": f"{i:024x}"}, **d} for i, d in enumerate(docs)]
+    path = str(tmp_path / f"dump-{os.getpid()}-{time.monotonic_ns()}.jsonl")
+    with open(path, "w", encoding="utf-8") as fh:
+        for i, d in enumerate(docs):
+            fh.write(json.dumps(d) + ("\n\n" if i % 4 == 3 else "\n"))  # blank lines skip
+    schema = StructType.fromDDL(_EXT_SCHEMA)
+    fields = schema.fieldNames()
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "UTC"  # createDataFrame reads naive datetimes as local
+    time.tzset()
+    try:
+        spark.dataSource.register(MongoExportDataSource)
+        got = spark.read.format("mongoexport").schema(schema).load(path).collect()
+        want = spark.createDataFrame(
+            [tuple(unwrap_extjson(d).get(f) for f in fields) for d in docs], schema
+        ).collect()
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert sorted(got, key=lambda r: r["_id"]) == sorted(want, key=lambda r: r["_id"])
+
+    with mock.patch.object(extjson, "CHUNK_LINES", 4):
+        reader = MongoExportDataSource({"path": path}).reader(schema)
+        batches = list(reader.read(_FilePartition(path)))
+    assert all(isinstance(b, pa.RecordBatch) for b in batches)
+    assert all(b.schema == to_arrow_schema(schema) for b in batches)
+    assert all(b.num_rows <= 4 for b in batches)
+    assert sum(b.num_rows for b in batches) == len(docs)
+
+
+def test_mongoexport_decimal_ties_round_half_even(tmp_path):
+    """Exact ties quantize half-even to the field's scale, as pyspark's
+    per-row local-data converter did before the scan went column-wise."""
+    import json
+
+    from pyspark.sql.types import DecimalType, StructField, StructType
+
+    from mongo_to_parquet_spark.sources.extjson import MongoExportReader, _FilePartition
+
+    path = str(tmp_path / "ties.jsonl")
+    values = ["0.005", "0.015", "-0.025", "2.675", "NaN"]
+    with open(path, "w", encoding="utf-8") as fh:
+        for v in values:
+            fh.write(json.dumps({"a": {"$numberDecimal": v}}) + "\n")
+    schema = StructType([StructField("a", DecimalType(6, 2))])
+    (batch,) = MongoExportReader(schema, {"path": path}).read(_FilePartition(path))
+    assert batch.column("a").to_pylist() == [
+        decimal.Decimal(v) for v in ("0.00", "0.02", "-0.02", "2.68")
+    ] + [None]

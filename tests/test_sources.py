@@ -232,6 +232,89 @@ def test_mongoexport_writer_roundtrip_and_overwrite(spark, tmp_path):
     )
 
 
+def test_mongoexport_reader_dates_are_utc_under_any_tz(tmp_path):
+    """$date is an instant: both of its forms read back as the same UTC
+    microseconds whatever the worker's TZ (a local-time reading moves
+    2024-01-01T00:00Z to 05:00 in New York or into 2023 in Tokyo)."""
+    import os
+    import time
+
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+
+    from mongo_to_parquet_spark.sources.extjson import MongoExportReader, _FilePartition
+
+    f = str(tmp_path / "dates.jsonl")
+    _write_jsonl(f, [
+        {"_id": {"$oid": "iso"}, "t": {"$date": "2024-01-01T00:00:00Z"}},
+        {"_id": {"$oid": "ms"}, "t": {"$date": {"$numberLong": "1704067200000"}}},
+    ])
+    schema = StructType([StructField("_id", StringType()), StructField("t", TimestampType())])
+    old = os.environ.get("TZ")
+    try:
+        for tz in ("America/New_York", "Asia/Tokyo"):
+            os.environ["TZ"] = tz
+            time.tzset()
+            (batch,) = MongoExportReader(schema, {"path": f}).read(_FilePartition(f))
+            assert batch.column("t").cast(pa.int64()).to_pylist() == [1704067200000000] * 2
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def test_mongoexport_reader_refuses_malformed_lines(tmp_path):
+    """Input the per-row reader refused stays refused: a bare number in a
+    timestamp field (Arrow would take it as microseconds) and two
+    documents on one line (the chunk decoder would otherwise split them)."""
+    import pytest
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+    from mongo_to_parquet_spark.sources.extjson import MongoExportReader, _FilePartition
+
+    def read(text, field):
+        f = tmp_path / "bad.jsonl"
+        f.write_text(text)
+        schema = StructType([field])
+        return list(MongoExportReader(schema, {"path": str(f)}).read(_FilePartition(str(f))))
+
+    with pytest.raises(TypeError, match=r"not a \$date"):
+        read('{"t": 1704067200000}\n', StructField("t", TimestampType()))
+    with pytest.raises(ValueError, match="more than one document"):
+        read('{"n": 1}, {"n": 2}\n', StructField("n", LongType()))
+
+
+def test_mongoexport_writer_dates_are_utc_under_local_tz(tmp_path):
+    """The writer formats the instant in UTC: under TZ=America/New_York a
+    Spark timestamp of 2024-01-01T00:00Z must not come out as 19:00 the
+    day before. Runs in a subprocess so the Python workers get that TZ."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    out = str(tmp_path / "dump")
+    script = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from mongo_to_parquet_spark import get_spark\n"
+        "from mongo_to_parquet_spark.sources.extjson import MongoExportDataSource\n"
+        "spark = get_spark('tz-writer', master='local[1]', shuffle_partitions=1)\n"
+        "spark.dataSource.register(MongoExportDataSource)\n"
+        "spark.sql(\"SELECT 'a1' AS _id, timestamp'2024-01-01 00:00:00' AS t\")"
+        f".write.format('mongoexport').mode('append').save({out!r})\n"
+        "spark.stop()\n"
+    )
+    env = {**os.environ, "TZ": "America/New_York", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=600)
+    (part,) = Path(out).glob("part-*.jsonl")
+    assert json.loads(part.read_text()) == {
+        "_id": {"$oid": "a1"}, "t": {"$date": "2024-01-01T00:00:00.000Z"},
+    }
+
+
 def test_run_query_cli_lists_and_runs(spark, sf_dir, capsys):
     from mongo_to_parquet_spark import run_query
 
