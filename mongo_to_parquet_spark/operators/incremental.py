@@ -13,15 +13,21 @@ so a refresh costs O(new data + touched keys), never O(history). The same
 decomposition is why Spark's own partial aggregation works; here it is
 lifted to a persisted table.
 
-Durability contract: state versions are ``v=N`` directories, and a version
-COUNTS only once its ``_COMMITTED.json`` marker exists — the marker is
-written (atomic tmp+rename) strictly after the parquet write completes, so
-a crashed refresh leaves an orphan directory that readers skip and the
-next refresh writes PAST (never reads, never reuses). The marker also
-records the micro-batch id that produced the version, which makes the
-streaming refresh idempotent under foreachBatch's at-least-once replay:
-a replayed batch id ≤ the last committed one is skipped instead of being
-double-counted (checkpoints dedupe *source offsets*, not sink effects).
+Version store format (the one copy — :func:`publish_version` is the only
+writer; the aggregate state here, the streaming upsert / CDC tables of
+streaming/export.py and the trained-model artifacts of
+operators/tokenizer.py all publish through it): a store is a directory of
+``v=N`` versions. A new version is numbered past EVERY ``v=N`` directory,
+orphans included, its parquet is written in full, and only then is
+``v=N/_COMMITTED.json`` = ``{"version": N, **meta}`` published by a tmp
+write plus ``os.replace``. A version COUNTS only once that marker exists,
+so a crashed write leaves an orphan directory that readers skip and the
+next write numbers past (never reads, never reuses). The aggregate
+state's marker also records the micro-batch id that produced the
+version, which makes the streaming refresh idempotent under
+foreachBatch's at-least-once replay: a replayed batch id ≤ the last
+committed one is skipped instead of being double-counted (checkpoints
+dedupe *source offsets*, not sink effects).
 
 Limits, stated: only algebraic aggregates decompose this way. Exact
 count-distinct / exact percentiles are holistic — the scale path for those
@@ -123,14 +129,18 @@ def _versions(state_dir: str) -> list[int]:
     ]
 
 
-def _commit(state_dir: str, version: int, batch_id: int | None) -> None:
-    """Atomically publish a version: tmp write + rename of the marker."""
-    meta = {"version": version, "batch_id": batch_id}
-    path = os.path.join(state_dir, f"v={version}", COMMIT_MARKER)
-    tmp = path + ".tmp"
+def publish_version(state_dir: str, df: DataFrame, meta: dict) -> int:
+    """Write ``df`` as the next version of the store and commit it with
+    ``{"version": N, **meta}``; returns N."""
+    version = (_all_versions(state_dir) or [0])[-1] + 1
+    vdir = os.path.join(state_dir, f"v={version}")
+    df.write.mode("overwrite").parquet(vdir)
+    marker = os.path.join(vdir, COMMIT_MARKER)
+    tmp = marker + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)
+        json.dump({"version": version, **meta}, fh)
+    os.replace(tmp, marker)
+    return version
 
 
 def last_batch_id(state_dir: str) -> int | None:
@@ -199,19 +209,15 @@ def refresh_agg_state(
     state. Cost is O(slice + state), independent of how much history the
     state summarizes — the whole point.
 
-    The new version lands PAST every existing directory (orphans from
-    crashed writes included) and only becomes visible once its commit
-    marker is written, so a concurrent reader either sees the old state or
-    the complete new one — never a half-written directory.
+    The new version is published by :func:`publish_version`, so a
+    concurrent reader either sees the old state or the complete new one —
+    never a half-written directory.
     """
     delta = partial_agg_state(new_slice, keys, measures)
     prev = read_agg_state(spark, state_dir)
     merged = delta if prev is None else merge_agg_states(prev, delta, keys, measures)
-    all_vs = _all_versions(state_dir)
-    next_v = (all_vs[-1] + 1) if all_vs else 1
-    merged.write.mode("overwrite").parquet(os.path.join(state_dir, f"v={next_v}"))
-    _commit(state_dir, next_v, batch_id)
-    return spark.read.parquet(os.path.join(state_dir, f"v={next_v}"))
+    v = publish_version(state_dir, merged, {"batch_id": batch_id})
+    return spark.read.parquet(os.path.join(state_dir, f"v={v}"))
 
 
 def apply_stream_batch(
@@ -239,7 +245,6 @@ def stream_refresh_agg_state(
     checkpoint_dir: str,
     keys: list[str],
     measures: list[str],
-    available_now: bool = True,
 ):
     """Streaming materialized view: every micro-batch folds into the
     persisted aggregate state via ``refresh_agg_state`` — the streaming
@@ -259,11 +264,17 @@ def stream_refresh_agg_state(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_stream_batch(state_dir, batch_df, batch_id, keys, measures)
 
-    writer = (
+    return start_foreach_batch(stream, checkpoint_dir, apply_batch)
+
+
+def start_foreach_batch(stream: DataFrame, checkpoint_dir: str, apply_batch):
+    """Start ``apply_batch`` as the foreachBatch sink of ``stream`` under
+    an availableNow trigger (drain what exists, then stop) — the shared
+    starter of the versioned streaming sinks."""
+    return (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

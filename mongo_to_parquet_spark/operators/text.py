@@ -2,7 +2,9 @@
 token counting, document fingerprinting.
 
 All pure column expressions (JVM codegen) — these run per-document over
-100 TB corpora, so no Python in the path.
+100 TB corpora, so no Python in the path. The one exception is
+``greedy_bins``, the sequential packing recurrence that the grouped-map
+packers run per shard.
 """
 
 from __future__ import annotations
@@ -164,6 +166,25 @@ def pack_documents(
     return out.withColumn(
         "bin", F.floor(cum_excl / F.lit(float(budget_tokens))).cast("long")
     )
+
+
+def greedy_bins(n_toks, pack_l: int, carry: tuple[int, int] = (0, 0)):
+    """Greedy NO-SPLIT packing (the T5 recipe) of one shard's token
+    counts in doc_id order: a doc joins the open bin unless it would
+    overflow a non-empty one, then a fresh bin starts (an oversized doc
+    gets a bin alone). ``carry`` is the (bin, fill) a previous slice of
+    the shard left open. Returns the per-doc bins and the final
+    (bin, fill). A sequential recurrence — run it per shard inside an
+    applyInPandas pass."""
+    b, fill = carry
+    bins = []
+    for t in n_toks:
+        if fill > 0 and fill + t > pack_l:
+            b += 1
+            fill = 0
+        bins.append(b)
+        fill += t
+    return bins, (b, fill)
 
 
 def chunk_documents(

@@ -13,14 +13,11 @@ the per-ingest cost.
 
 This module is that store. An artifact is a parquet table — the merge
 table for BPE/WordPiece (rank, x, y, merged, ...), the (piece, cnt)
-vocabulary for unigram — written under ``art_dir/v=N`` with the SAME
-durability contract as operators/incremental.py's aggregate state (whose
-helpers it reuses): a version counts only once its ``_COMMITTED.json``
-marker exists, the marker is renamed into place strictly after the
-parquet write completes, and readers skip orphan directories from
-crashed writes. The marker's metadata records the tokenizer family and
-training configuration so a loader can refuse an artifact trained under
-a different contract.
+vocabulary for unigram — written under ``art_dir/v=N`` in the version
+store format of operators/incremental.py (``publish_version``; readers
+skip orphan directories from crashed writes). The marker's metadata
+records the tokenizer family and training configuration so a loader can
+refuse an artifact trained under a different contract.
 
 Why the artifact is safe to collect: every trained table is
 vocabulary-sized by construction (k ≤ 8 merge rows; ≤ alphabet +
@@ -41,9 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mongo_to_parquet_spark.operators.incremental import (
     COMMIT_MARKER,
-    _all_versions,
     _versions,
     prune_versions,
+    publish_version,
 )
 
 #: retention for the store: the artifact layout IS the incremental-state
@@ -132,16 +129,11 @@ def save_artifact(
     ``rows`` is a list of tuples or an already-built DataFrame matching
     the family schema.
 
-    Orphans from crashed writes are written PAST (never reused): the new
-    version number is max(all versions, committed or not) + 1, the
-    parquet lands first, and the marker rename publishes it — the
-    incremental.py ``_commit`` contract with family metadata attached.
-    Returns the committed version number.
+    Published by incremental.publish_version with the family attached to
+    the marker metadata. Returns the committed version number.
     """
     if family not in SCHEMAS:
         raise ValueError(f"unknown tokenizer family {family!r}")
-    version = (_all_versions(art_dir) or [0])[-1] + 1
-    vdir = os.path.join(art_dir, f"v={version}")
     df = (
         rows
         if isinstance(rows, DataFrame)
@@ -150,14 +142,9 @@ def save_artifact(
     # single file: every artifact is model-sized (≤ k merges, ~100 vocab
     # pieces, langs×buckets weights), and one part keeps the serving
     # read a single open at any corpus scale
-    df.coalesce(1).write.mode("overwrite").parquet(vdir)
-    payload = {"version": version, "family": family, **(meta or {})}
-    marker = os.path.join(vdir, COMMIT_MARKER)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, marker)
-    return version
+    return publish_version(
+        art_dir, df.coalesce(1), {"family": family, **(meta or {})}
+    )
 
 
 def latest_version(art_dir: str) -> int | None:

@@ -4397,6 +4397,22 @@ def q_pack_concat(spark, sf):
     )
 
 
+_PACKED_SCHEMA = "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint"
+
+
+def _pack_greedy(rows):
+    """(shard, doc_id, n_tok) rows → + bin_id: each shard's docs packed
+    in doc_id order by operators/text.greedy_bins, one Arrow pass per
+    shard."""
+
+    def pack(pdf):
+        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+        pdf["bin_id"], _ = text.greedy_bins(pdf["n_tok"], _PACK_L)
+        return pdf[["shard", "doc_id", "n_tok", "bin_id"]]
+
+    return rows.groupBy("shard").applyInPandas(pack, _PACKED_SCHEMA)
+
+
 @q(
     "q_pack_greedy",
     f"""
@@ -4450,21 +4466,7 @@ def q_pack_greedy(spark, sf):
         n_tok.alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
 
-    def pack(pdf):
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        bins, fill, b = [], 0, 0
-        for t in pdf["n_tok"]:
-            if fill > 0 and fill + t > _PACK_L:
-                b += 1
-                fill = 0
-            bins.append(b)
-            fill += t
-        pdf["bin_id"] = bins
-        return pdf[["shard", "doc_id", "n_tok", "bin_id"]]
-
-    return base.groupBy("shard").applyInPandas(
-        pack, "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint"
-    )
+    return _pack_greedy(base)
 
 
 @q(
@@ -4581,9 +4583,7 @@ def q_pack_bfd(spark, sf):
         pdf["bin_id"] = bins
         return pdf[["shard", "doc_id", "n_tok", "bin_id"]]
 
-    return base.groupBy("shard").applyInPandas(
-        pack, "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint"
-    )
+    return base.groupBy("shard").applyInPandas(pack, _PACKED_SCHEMA)
 
 
 # ------------------------------------------------------- epoch shuffling ---
@@ -5101,21 +5101,7 @@ def q_assembly_pipeline(spark, sf):
         )
     )
 
-    def pack(pdf):
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        bins, fill, b = [], 0, 0
-        for t in pdf["n_tok"]:
-            if fill > 0 and fill + t > _PACK_L:
-                b += 1
-                fill = 0
-            bins.append(b)
-            fill += t
-        pdf["bin_id"] = bins
-        return pdf[["shard", "doc_id", "n_tok", "bin_id"]]
-
-    packed = surv.groupBy("shard").applyInPandas(
-        pack, "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint"
-    )
+    packed = _pack_greedy(surv)
     return packed.groupBy("shard", "bin_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("n_tokens"),

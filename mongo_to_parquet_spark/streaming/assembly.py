@@ -24,9 +24,10 @@ table → extend each shard's open bin exactly where the previous batch
 left it (two-integer pack state). State layout mixes the two proven
 patterns: append-only ``hashes/batch=<id>`` (corpus-growing, the
 stream_dedup_incremental shape) + per-batch ``state/batch=<id>`` swap
-for the shard fills (bounded, the stream_pack shape); the ledger marker
-renames into place LAST, so replays skip and torn batches are invisible
-and recommitted identically from the committed prefix.
+for the shard fills (bounded, the stream_pack shape, written by
+pack.pack_batch), all under the ledger commit of
+streaming/state.start_ledger_stream; the marker also carries the running
+``max_doc_id``.
 
 At 100 TB/day: per-batch cost = one hash anti-join against the seen-text
 state (hash-only rows — text never enters the state), one broadcast gram
@@ -36,7 +37,6 @@ pack pass — the batch pipeline's own plan applied to the delta.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,17 +44,12 @@ from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions.textfns import shingles
 from mongo_to_parquet_spark.streaming import state as st
-
-#: per-batch commit markers still on disk (pre-compaction view; markers at
-#: or below the compaction watermark are vacuumed and become implicit)
-_committed = st.ledger_ids
-
-_ASSIGN_COLS = ["shard", "doc_id", "n_tok", "bin_id"]
-_PACKED_SCHEMA = (
-    "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint,"
-    " open_bin bigint, fill bigint"
+from mongo_to_parquet_spark.streaming.pack import (
+    PACKED_SCHEMA,
+    pack_batch,
+    read_assignments,  # the committed-reports view is the same as stream_pack's
 )
-_STATE_SCHEMA = "shard bigint, open_bin bigint, fill bigint"
+
 _HASH_SCHEMA = "h string"
 
 
@@ -78,13 +73,8 @@ def stream_assembly(
     ``decontaminate.eval_gram_table`` over the eval split. Returns the
     started streaming query (availableNow trigger)."""
     spark = docs_stream.sparkSession
-    os.makedirs(os.path.join(state_dir, "ledger"), exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = os.path.join(state_dir, "ledger", str(bid))
-        if st.is_committed(state_dir, bid):
-            return
+    def body(batch_df: DataFrame, bid: int) -> dict:
         # the monotone-arrival CONTRACT, enforced (round-8 verdict #7):
         # the dedup keeper is the GLOBAL min doc_id per text, which the
         # incremental fold can only honor if ids never go backwards
@@ -146,73 +136,22 @@ def stream_assembly(
             "n_tok",
         )
         # stage 4 — greedy pack, per-shard open bin carried across batches
-        # (swap-style state: only the LAST committed batch's fills matter)
-        lb = st.last_committed(state_dir)
-        if lb is not None:
-            fills_st = spark.read.parquet(
-                os.path.join(state_dir, "state", f"batch={lb}")
-            )
-        else:
-            fills_st = spark.createDataFrame([], _STATE_SCHEMA)
-        joined = surv.join(F.broadcast(fills_st), "shard", "left")
-
-        def pack(pdf):
-            pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-            carried = pdf["open_bin"].notna().any()
-            b = int(pdf["open_bin"].iloc[0]) if carried else 0
-            fill = int(pdf["fill"].iloc[0]) if carried else 0
-            bins = []
-            for t in pdf["n_tok"]:
-                if fill > 0 and fill + t > pack_l:
-                    b += 1
-                    fill = 0
-                bins.append(b)
-                fill += t
-            out = pdf[["shard", "doc_id", "n_tok"]].copy()
-            out["bin_id"] = bins
-            out["open_bin"] = b
-            out["fill"] = fill
-            return out
-
-        packed_path = os.path.join(state_dir, "reports", f"batch={bid}")
-        joined.groupBy("shard").applyInPandas(pack, _PACKED_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(packed_path)
-        # commit artifacts: new text hashes, pack state, then the marker
+        # (swap-style state: only the newest committed batch's fills matter)
+        pack_batch(surv, state_dir, bid, pack_l)
         fresh.select("h").distinct().write.mode("overwrite").parquet(
             os.path.join(state_dir, "hashes", f"batch={bid}")
         )
-        rep = spark.read.parquet(packed_path)
-        batch_state = rep.select("shard", "open_bin", "fill").distinct()
-        carried = fills_st.join(
-            batch_state.select("shard"), "shard", "left_anti"
-        )
-        batch_state.unionByName(carried).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "state", f"batch={bid}")
-        )
-        new_max = bounds["mx"] if bounds["mx"] is not None else prev_max
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid, "max_doc_id": new_max}, f)
-        os.rename(tmp, marker)
+        return {"max_doc_id": bounds["mx"] if bounds["mx"] is not None else prev_max}
+
+    def compact_when_due() -> None:
         # in-stream maintenance: once compact_every markers accumulate,
         # fold them into the compacted dirs (committed batches only, so
         # this is safe at any point between batches)
         if compact_every and len(st.ledger_ids(state_dir)) >= compact_every:
             compact_assembly_state(spark, state_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame:
-    """All committed bin assignments (the exactly-once view)."""
-    return st.read_sub(spark, state_dir, "reports", _PACKED_SCHEMA).select(
-        *_ASSIGN_COLS
+    return st.start_ledger_stream(
+        docs_stream, state_dir, checkpoint_dir, body, after_commit=compact_when_due
     )
 
 
@@ -234,7 +173,7 @@ def compact_assembly_state(
     w = st.compact(
         spark,
         state_dir,
-        {"hashes": _HASH_SCHEMA, "reports": _PACKED_SCHEMA},
+        {"hashes": _HASH_SCHEMA, "reports": PACKED_SCHEMA},
         upto=upto,
         extra={"max_doc_id": carried},
     )

@@ -8,9 +8,8 @@ Per-doc contamination counts depend only on that doc's own grams and
 the static eval table, so union-of-batch-reports ≡ the batch key over
 the union of the docs — pinned in tests/test_streaming.py.
 
-Exactly-once: per-batch report directories + ledger commit markers
-(tmp + rename), the stream_dedup_incremental pattern — replayed batches
-skip on their marker, torn batches are invisible and recommitted.
+Exactly-once: per-batch report directories under the ledger commit of
+streaming/state.start_ledger_stream.
 
 At 100 TB/day ingest: the eval gram table is megabytes (broadcast), the
 per-batch cost is one explode + broadcast join that drops every clean
@@ -19,13 +18,13 @@ gram map-side; per-batch state is hits-only.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions.textfns import shingles
+from mongo_to_parquet_spark.streaming import state as st
 
 _REPORT_SCHEMA = "doc_id bigint, n_shared_ngrams bigint, n_eval_docs bigint"
 
@@ -43,13 +42,6 @@ def eval_gram_table(docs: DataFrame, out_path: str, n: int = 5,
     )
 
 
-def _committed(state_dir: str) -> list[int]:
-    led = os.path.join(state_dir, "ledger")
-    if not os.path.isdir(led):
-        return []
-    return sorted(int(f) for f in os.listdir(led) if f.isdigit())
-
-
 def stream_decontaminate(
     docs_stream: DataFrame,
     eval_grams_path: str,
@@ -63,15 +55,9 @@ def stream_decontaminate(
 
     Returns the started streaming query (availableNow trigger — drains
     what exists, then stops)."""
-    spark = docs_stream.sparkSession
-    os.makedirs(os.path.join(state_dir, "ledger"), exist_ok=True)
-    evd = spark.read.parquet(eval_grams_path)
+    evd = docs_stream.sparkSession.read.parquet(eval_grams_path)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = os.path.join(state_dir, "ledger", str(bid))
-        if os.path.exists(marker):
-            return
+    def body(batch_df: DataFrame, bid: int) -> None:
         grams = batch_df.select(
             F.col(id_col).alias("doc_id"),
             F.explode(shingles(F.col(text_col), n)).alias("g"),
@@ -87,24 +73,10 @@ def stream_decontaminate(
         report.write.mode("overwrite").parquet(
             os.path.join(state_dir, "reports", f"batch={bid}")
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid}, f)
-        os.rename(tmp, marker)
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return st.start_ledger_stream(docs_stream, state_dir, checkpoint_dir, body)
 
 
 def read_reports(spark: SparkSession, state_dir: str) -> DataFrame:
     """All reports from COMMITTED batches (the exactly-once view)."""
-    seen = _committed(state_dir)
-    if not seen:
-        return spark.createDataFrame([], _REPORT_SCHEMA)
-    return spark.read.parquet(
-        *[os.path.join(state_dir, "reports", f"batch={b}") for b in seen]
-    )
+    return st.read_sub(spark, state_dir, "reports", _REPORT_SCHEMA)

@@ -20,14 +20,12 @@ would defeat the incremental point:
       index/batch=<id>/   banded signature rows of that batch's docs
       docs/batch=<id>/    (doc_id, text) of that batch — the verify side
       pairs/batch=<id>/   pairs emitted by that batch
-      ledger/<id>         commit marker, written LAST (tmp + rename)
+      ledger/<id>         commit marker
 
-Exactly-once: a batch's artifacts are written with mode=overwrite and
-the ledger marker renamed into place after all three — a replayed batch
-either skips (marker present) or deterministically rewrites the same
-artifacts from the same committed prefix (markerless dirs are invisible
-to readers and to the "seen so far" reconstruction, so a half-written
-crash leaves no trace in any answer).
+Exactly-once: the ledger commit of streaming/state.start_ledger_stream —
+a torn batch is rewritten deterministically from the same committed
+prefix (markerless dirs are invisible to readers and to the "seen so
+far" reconstruction).
 
 At 100 TB the ``docs/`` mirror would be replaced by the lake's own
 document table (text is only ever read semi-join-pruned to candidate
@@ -36,21 +34,15 @@ docs); it is stored here so the state directory is self-contained.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for parity with siblings)
 
 from mongo_to_parquet_spark.operators.dedup import (
     minhash_incremental_pairs,
     minhash_index,
 )
 from mongo_to_parquet_spark.streaming import state as st
-
-#: per-batch commit markers still on disk (pre-compaction view; markers at
-#: or below the compaction watermark are vacuumed and become implicit)
-_committed = st.ledger_ids
 
 _INDEX_SCHEMA = "doc bigint, band bigint, sigstr string"
 _PAIRS_SCHEMA = "id1 bigint, id2 bigint, jaccard double"
@@ -81,13 +73,8 @@ def stream_dedup_incremental(
     trigger with the identical fold).
     """
     spark = docs_stream.sparkSession
-    os.makedirs(os.path.join(state_dir, "ledger"), exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = os.path.join(state_dir, "ledger", str(bid))
-        if st.is_committed(state_dir, bid):
-            return  # replayed batch: artifacts already committed
+    def body(batch_df: DataFrame, bid: int) -> None:
         batch = batch_df.select(id_col, text_col)
         # committed prior state resolves through the compaction watermark
         # (streaming/state.py): compacted(W) + per-batch dirs above W —
@@ -112,18 +99,13 @@ def stream_dedup_incremental(
         batch.write.mode("overwrite").parquet(
             os.path.join(state_dir, "docs", f"batch={bid}")
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid}, f)
-        os.rename(tmp, marker)
+
+    def compact_when_due() -> None:
         if compact_every and len(st.ledger_ids(state_dir)) >= compact_every:
             compact_dedup_state(spark, state_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return st.start_ledger_stream(
+        docs_stream, state_dir, checkpoint_dir, body, after_commit=compact_when_due
     )
 
 

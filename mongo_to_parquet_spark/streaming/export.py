@@ -2,8 +2,9 @@
 
 The reference (main.py:287-309) snapshots a collection and exports it
 once; re-runs re-copy everything. The streaming version is the same
-logical statement — derive ``year``/``month``/``day`` (with the
-``year=unknown`` bucket) and write hive-partitioned parquet — run
+logical statement — the batch export's plan head (drop ``_id``, derive
+``year``/``month``/``day`` with the ``year=unknown`` bucket) and a
+hive-partitioned parquet write — run
 incrementally under a checkpoint: each trigger exports only NEW source
 data, restarts resume exactly-once from the checkpoint (no dupes, no
 gaps; pinned in tests/test_streaming.py), and a crashed run replays its
@@ -12,14 +13,23 @@ nightly full re-copy and a continuously caught-up export.
 
 Only projections are involved — no state store; the checkpoint holds just
 source offsets (which files / Kafka offsets are committed).
+
+The upsert and CDC sinks below keep versioned tables in the version store
+format of operators/incremental.py (``publish_version``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from mongo_to_parquet_spark.sources.export import with_date_parts
+from mongo_to_parquet_spark.operators.incremental import (
+    publish_version,
+    read_agg_state,
+    start_foreach_batch,
+)
+from mongo_to_parquet_spark.sources.export import _prepare_export
 
 
 def stream_export_partitioned(
@@ -27,25 +37,20 @@ def stream_export_partitioned(
     out_dir: str,
     checkpoint_dir: str,
     date_field: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Incrementally export a stream as ``year=``-partitioned parquet.
-
-    ``available_now=True`` drains everything currently available and
-    stops (the reference's batch-job shape, but incremental); ``False``
-    runs continuously with the default trigger.
-    """
-    enriched = with_date_parts(stream, date_field)
-    writer = (
+    """Incrementally export a stream as ``year=``-partitioned parquet:
+    drains everything currently available and stops (the reference's
+    batch-job shape, but incremental)."""
+    enriched = _prepare_export(stream, date_field, None, None, ("_id",), None)
+    return (
         enriched.writeStream.format("parquet")
         .partitionBy("year")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_merge_upsert(
@@ -54,7 +59,6 @@ def stream_merge_upsert(
     checkpoint_dir: str,
     keys: list[str],
     seq_col: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously maintained SCD-1 table: each micro-batch upserts into
     a persisted parquet state (latest row per key wins, ``seq_col``
@@ -70,24 +74,11 @@ def stream_merge_upsert(
     idempotent under micro-batch replay: re-running a committed batch
     rewrites the same state.
 
-    State versions are ``v=N`` directories (operators/incremental.py
-    pattern): a version counts only once its commit marker exists — the
-    marker is written after the parquet completes, so a reader never sees
-    a half-written version and a crashed batch leaves only an orphan
-    directory that subsequent versions are numbered past (never read).
-    At 100 TB the state would live in a table format with real MERGE INTO
-    (Delta/Iceberg); the operator shape — dedupe batch, anti-join state,
-    union — is identical.
+    State versions are published by incremental.publish_version, so a
+    reader never sees a half-written version. At 100 TB the state would
+    live in a table format with real MERGE INTO (Delta/Iceberg); the
+    operator shape — dedupe batch, anti-join state, union — is identical.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mongo_to_parquet_spark.operators.incremental import (
-        _all_versions,
-        _commit,
-        _versions,
-    )
     from mongo_to_parquet_spark.operators.merge import merge_upsert
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -99,9 +90,8 @@ def stream_merge_upsert(
                 if c not in keys
             ]
         )
-        vs = _versions(state_dir)
-        if vs:
-            state = spark.read.parquet(os.path.join(state_dir, f"v={vs[-1]}"))
+        state = read_agg_state(spark, state_dir)
+        if state is not None:
             # replay guard: only rows strictly newer than the state win
             newer = latest.alias("u").join(
                 state.select(*keys, F.col(seq_col).alias("__cur_seq")), keys, "left"
@@ -111,19 +101,9 @@ def stream_merge_upsert(
             merged = merge_upsert(state, newer.select(*state.columns), keys)
         else:
             merged = latest
-        all_vs = _all_versions(state_dir)
-        next_v = (all_vs[-1] + 1) if all_vs else 1
-        merged.write.mode("overwrite").parquet(os.path.join(state_dir, f"v={next_v}"))
-        _commit(state_dir, next_v, batch_id)
+        publish_version(state_dir, merged, {"batch_id": batch_id})
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, checkpoint_dir, apply_batch)
 
 
 def stream_cdc_apply(
@@ -134,7 +114,6 @@ def stream_cdc_apply(
     seq_cols: list[str],
     op_col: str = "op",
     delete_op: str = "D",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously materialized CDC table: each micro-batch of I/U/D ops
     folds into a persisted latest-per-key state; deletes REMOVE keys
@@ -149,18 +128,9 @@ def stream_cdc_apply(
     stream_merge_upsert; no batch-id bookkeeping needed because the state
     keeps the seq columns).
 
-    State versions follow the commit-marker discipline
-    (operators/incremental.py): readers only see fully-written versions.
+    State versions are published by incremental.publish_version: readers
+    only see fully-written versions.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mongo_to_parquet_spark.operators.incremental import (
-        _all_versions,
-        _commit,
-        _versions,
-    )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -170,9 +140,8 @@ def stream_cdc_apply(
         latest = batch_df.groupBy(*keys).agg(
             F.max_by(F.struct(*payload), F.struct(*seq_cols)).alias("__last")
         ).select(*keys, *[F.col(f"__last.{c}").alias(c) for c in payload])
-        vs = _versions(state_dir)
-        if vs:
-            state = spark.read.parquet(os.path.join(state_dir, f"v={vs[-1]}"))
+        state = read_agg_state(spark, state_dir)
+        if state is not None:
             cur_seq = state.select(
                 *keys, *[F.col(c).alias(f"__cur_{c}") for c in seq_cols]
             )
@@ -195,18 +164,6 @@ def stream_cdc_apply(
             )
         else:
             merged = latest.filter(F.col(op_col) != delete_op)
-        all_vs = _all_versions(state_dir)
-        next_v = (all_vs[-1] + 1) if all_vs else 1
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v={next_v}")
-        )
-        _commit(state_dir, next_v, batch_id)
+        publish_version(state_dir, merged, {"batch_id": batch_id})
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, checkpoint_dir, apply_batch)

@@ -8,8 +8,8 @@ that reflect everything ingested so far.
 Unlike stream_pack this fold is ORDER-INSENSITIVE (counts are a
 commutative monoid), so any batch split converges to the batch key —
 pinned in tests/test_streaming.py. State = |sources| rows of two
-integers, the ledger-keyed state-swap pattern (replay no-op on markers,
-torn batches invisible and recommitted).
+integers, swapped per batch under the ledger commit of
+streaming/state.start_ledger_stream.
 
 At 100 TB/day ingest: per-batch cost is one map-combined aggregate over
 the delta plus a |sources|-row merge; the weights table a training job
@@ -18,20 +18,17 @@ polls is always one committed parquet read.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_to_parquet_spark.streaming import state as st
+
 _STATE_SCHEMA = "source string, n_docs bigint, n_tokens bigint"
-
-
-def _committed(state_dir: str) -> list[int]:
-    led = os.path.join(state_dir, "ledger")
-    if not os.path.isdir(led):
-        return []
-    return sorted(int(f) for f in os.listdir(led) if f.isdigit())
+_WEIGHTS_SCHEMA = (
+    "source string, n_docs bigint, n_tokens bigint, raw_bp bigint, temp_bp bigint"
+)
 
 
 def _weights(per: DataFrame) -> DataFrame:
@@ -65,28 +62,17 @@ def stream_mix(
     Returns the started streaming query (availableNow trigger — drains
     what exists, then stops)."""
     spark = docs_stream.sparkSession
-    os.makedirs(os.path.join(state_dir, "ledger"), exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = os.path.join(state_dir, "ledger", str(bid))
-        if os.path.exists(marker):
-            return
+    def body(batch_df: DataFrame, bid: int) -> None:
         delta = batch_df.groupBy(F.col(source_col).alias("source")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.expr(f"size(filter(split({text_col}, ' '), w -> w != ''))"))
             .cast("bigint")
             .alias("n_tokens"),
         )
-        prior = [b for b in _committed(state_dir) if b < bid]
-        if prior:
-            st = spark.read.parquet(
-                os.path.join(state_dir, "state", f"batch={max(prior)}")
-            )
-        else:
-            st = spark.createDataFrame([], _STATE_SCHEMA)
+        prior = st.read_latest(spark, state_dir, "state", _STATE_SCHEMA, below=bid)
         merged = (
-            st.unionByName(delta)
+            prior.unionByName(delta)
             .groupBy("source")
             .agg(
                 F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -98,28 +84,10 @@ def stream_mix(
         _weights(spark.read.parquet(state_path)).write.mode("overwrite").parquet(
             os.path.join(state_dir, "weights", f"batch={bid}")
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid}, f)
-        os.rename(tmp, marker)
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return st.start_ledger_stream(docs_stream, state_dir, checkpoint_dir, body)
 
 
 def read_weights(spark: SparkSession, state_dir: str) -> DataFrame:
     """The CURRENT committed weights table (last committed batch)."""
-    seen = _committed(state_dir)
-    if not seen:
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, n_tokens bigint,"
-            " raw_bp bigint, temp_bp bigint",
-        )
-    return spark.read.parquet(
-        os.path.join(state_dir, "weights", f"batch={max(seen)}")
-    )
+    return st.read_latest(spark, state_dir, "weights", _WEIGHTS_SCHEMA)

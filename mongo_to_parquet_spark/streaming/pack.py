@@ -7,11 +7,9 @@ packer over everything that has arrived (pinned in
 tests/test_streaming.py).
 
 State per shard is TWO integers — (open_bin, fill) of the currently
-filling bin — carried between batches as a tiny parquet keyed by the
-ledger, the stream_kmv state-swap pattern: per-batch report + state
-dirs, then an atomic marker rename. Replayed batches skip on their
-marker; a torn batch (artifacts without marker) is invisible to readers
-and recommitted identically by the next run.
+filling bin — carried between batches as a tiny per-batch parquet swap
+(``state/batch=<id>``) next to the per-batch assignment reports, all
+under the ledger commit of streaming/state.start_ledger_stream.
 
 At 100 TB/day ingest: the state table is n_shards rows (broadcast), the
 per-batch cost is one shuffle by shard into the Arrow grouped-map pass —
@@ -20,25 +18,59 @@ the batch packer's own plan, applied to the delta only.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_to_parquet_spark.operators.text import greedy_bins
+from mongo_to_parquet_spark.streaming import state as st
+
 _ASSIGN_COLS = ["shard", "doc_id", "n_tok", "bin_id"]
-_PACKED_SCHEMA = (
+PACKED_SCHEMA = (
     "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint,"
     " open_bin bigint, fill bigint"
 )
 _STATE_SCHEMA = "shard bigint, open_bin bigint, fill bigint"
 
 
-def _committed(state_dir: str) -> list[int]:
-    led = os.path.join(state_dir, "ledger")
-    if not os.path.isdir(led):
-        return []
-    return sorted(int(f) for f in os.listdir(led) if f.isdigit())
+def pack_batch(
+    docs: DataFrame, state_dir: str, bid: int, pack_l: int
+) -> None:
+    """Greedy-pack one batch's (doc_id, shard, n_tok) rows, each shard
+    extending the (open_bin, fill) the newest committed batch before
+    ``bid`` left; writes ``reports/batch=<bid>`` (assignments plus the
+    post-batch state on every row) and ``state/batch=<bid>`` (the new
+    fills, with untouched shards carried over)."""
+    spark = docs.sparkSession
+    fills = st.read_latest(spark, state_dir, "state", _STATE_SCHEMA, below=bid)
+    joined = docs.join(F.broadcast(fills), "shard", "left")
+
+    def pack(pdf):
+        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+        carry = (0, 0)
+        if pdf["open_bin"].notna().any():
+            carry = (int(pdf["open_bin"].iloc[0]), int(pdf["fill"].iloc[0]))
+        bins, (b, fill) = greedy_bins(pdf["n_tok"], pack_l, carry)
+        out = pdf[["shard", "doc_id", "n_tok"]].copy()
+        out["bin_id"] = bins
+        # the shard's post-batch state rides every row; readers project
+        # it off, the state write below distincts it
+        out["open_bin"] = b
+        out["fill"] = fill
+        return out
+
+    packed_path = os.path.join(state_dir, "reports", f"batch={bid}")
+    joined.groupBy("shard").applyInPandas(pack, PACKED_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(packed_path)
+    batch_state = (
+        spark.read.parquet(packed_path).select("shard", "open_bin", "fill").distinct()
+    )
+    carried = fills.join(batch_state.select("shard"), "shard", "left_anti")
+    batch_state.unionByName(carried).write.mode("overwrite").parquet(
+        os.path.join(state_dir, "state", f"batch={bid}")
+    )
 
 
 def stream_pack(
@@ -54,80 +86,22 @@ def stream_pack(
 
     Returns the started streaming query (availableNow trigger — drains
     what exists, then stops)."""
-    spark = docs_stream.sparkSession
-    os.makedirs(os.path.join(state_dir, "ledger"), exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = os.path.join(state_dir, "ledger", str(bid))
-        if os.path.exists(marker):
-            return
-        base = batch_df.select(
+    def body(batch_df: DataFrame, bid: int) -> None:
+        docs = batch_df.select(
             F.col(id_col).cast("long").alias("doc_id"),
             (F.col(id_col) % n_shards).cast("long").alias("shard"),
             F.size(F.filter(F.split(text_col, " "), lambda x: x != ""))
             .cast("long")
             .alias("n_tok"),
         ).filter(F.col("n_tok") > 0)
-        prior = [b for b in _committed(state_dir) if b < bid]
-        if prior:
-            st = spark.read.parquet(
-                os.path.join(state_dir, "state", f"batch={max(prior)}")
-            )
-        else:
-            st = spark.createDataFrame([], _STATE_SCHEMA)
-        joined = base.join(F.broadcast(st), "shard", "left")
+        pack_batch(docs, state_dir, bid, pack_l)
 
-        def pack(pdf):
-            pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-            carried = pdf["open_bin"].notna().any()
-            b = int(pdf["open_bin"].iloc[0]) if carried else 0
-            fill = int(pdf["fill"].iloc[0]) if carried else 0
-            bins = []
-            for t in pdf["n_tok"]:
-                if fill > 0 and fill + t > pack_l:
-                    b += 1
-                    fill = 0
-                bins.append(b)
-                fill += t
-            out = pdf[["shard", "doc_id", "n_tok"]].copy()
-            out["bin_id"] = bins
-            # the shard's post-batch state rides every row; readers
-            # project it off, the state writer distincts it
-            out["open_bin"] = b
-            out["fill"] = fill
-            return out
-
-        packed_path = os.path.join(state_dir, "reports", f"batch={bid}")
-        joined.groupBy("shard").applyInPandas(pack, _PACKED_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(packed_path)
-        rep = spark.read.parquet(packed_path)
-        batch_state = rep.select("shard", "open_bin", "fill").distinct()
-        carried = st.join(batch_state.select("shard"), "shard", "left_anti")
-        batch_state.unionByName(carried).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "state", f"batch={bid}")
-        )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid}, f)
-        os.rename(tmp, marker)
-
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return st.start_ledger_stream(docs_stream, state_dir, checkpoint_dir, body)
 
 
 def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame:
     """All bin assignments from COMMITTED batches (the exactly-once view)."""
-    seen = _committed(state_dir)
-    if not seen:
-        return spark.createDataFrame(
-            [], "shard bigint, doc_id bigint, n_tok bigint, bin_id bigint"
-        )
-    return spark.read.parquet(
-        *[os.path.join(state_dir, "reports", f"batch={b}") for b in seen]
-    ).select(*_ASSIGN_COLS)
+    return st.read_sub(spark, state_dir, "reports", PACKED_SCHEMA).select(
+        *_ASSIGN_COLS
+    )

@@ -12,11 +12,10 @@ broadcast, ONE partition-pruned scan of the code table shared by the
 whole batch). Per-probe results are integer-exact and identical to the
 single-probe path — pinned in tests/test_streaming.py.
 
-Exactly-once: per-batch result directories + a ledger of commit markers
-written last (tmp + rename), the stream_dedup_incremental pattern — a
-replayed batch skips on its marker; a torn batch is invisible to
-readers and recommitted identically on the next run (the layout is
-static, so a batch's answer is a pure function of its probes).
+Exactly-once: per-batch result directories under the ledger commit of
+streaming/state.start_ledger_stream — a torn batch is recommitted
+identically because the layout is static, so a batch's answer is a pure
+function of its probes.
 
 At 100 TB: the layout's code table is the only corpus-sized artifact
 and each batch reads n_probe·|batch| cells of it at most (deduped to
@@ -27,7 +26,6 @@ path, measured by bench.py's q_sim_topk_ivfpq_serve.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,15 +34,9 @@ from mongo_to_parquet_spark.operators.similarity import (
     ivfpq_topk_batch_from_layout,
     ivfpq_topk_batch_refined_from_layout,
 )
+from mongo_to_parquet_spark.streaming import state as st
 
 _RESULT_SCHEMA = "probe_id bigint, vec_id bigint, pq_dist bigint, rk bigint"
-
-
-def _committed(state_dir: str) -> list[int]:
-    led = os.path.join(state_dir, "ledger")
-    if not os.path.isdir(led):
-        return []
-    return sorted(int(f) for f in os.listdir(led) if f.isdigit())
 
 
 def stream_ann_probe(
@@ -72,13 +64,8 @@ def stream_ann_probe(
     what exists, then stops; a production run would use a steady trigger
     with the identical fold)."""
     spark = probes_stream.sparkSession
-    os.makedirs(os.path.join(state_dir, "ledger"), exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        bid = int(batch_id)
-        marker = os.path.join(state_dir, "ledger", str(bid))
-        if os.path.exists(marker):
-            return
+    def body(batch_df: DataFrame, bid: int) -> None:
         if refine_emb is not None:
             out = ivfpq_topk_batch_refined_from_layout(
                 spark, layout_dir, batch_df, refine_emb, k=k,
@@ -93,24 +80,10 @@ def stream_ann_probe(
         out.write.mode("overwrite").parquet(
             os.path.join(state_dir, "results", f"batch={bid}")
         )
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": bid}, f)
-        os.rename(tmp, marker)
 
-    return (
-        probes_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return st.start_ledger_stream(probes_stream, state_dir, checkpoint_dir, body)
 
 
 def read_probe_results(spark: SparkSession, state_dir: str) -> DataFrame:
     """All results from COMMITTED batches (the exactly-once view)."""
-    seen = _committed(state_dir)
-    if not seen:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    return spark.read.parquet(
-        *[os.path.join(state_dir, "results", f"batch={b}") for b in seen]
-    )
+    return st.read_sub(spark, state_dir, "results", _RESULT_SCHEMA)

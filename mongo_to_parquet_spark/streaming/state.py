@@ -1,17 +1,34 @@
-"""Ledger-committed compaction for append-only streaming state.
+"""The ledger store format: exactly-once commit and compaction for the
+streaming folds.
 
-``stream_dedup_incremental`` and ``stream_assembly`` persist
+Commit contract (the one copy — every ledger sink in this package goes
+through :func:`start_ledger_stream`): a fold's micro-batch ``bid`` writes
+its artifacts (``<sub>/batch=<bid>`` directories, mode=overwrite), and
+only then is ``ledger/<bid>`` = ``{"batch_id": bid, **extra}`` published
+by a tmp write plus ``os.replace``. foreachBatch is at-least-once, so
+
+- a replayed batch whose marker exists (or that a compaction covers) is
+  skipped;
+- a torn batch (artifacts without a marker) is invisible to every reader
+  and is recomputed identically from the committed prefix on replay;
+- a body that raises commits nothing.
+
+Readers list committed batches through ``ledger_ids`` /
+``is_committed`` / ``last_committed``, never through raw directory
+listings.
+
+Compaction: ``stream_dedup_incremental`` and ``stream_assembly`` persist
 corpus-growing state as per-batch subdirectories (``index/batch=<id>``,
-``hashes/batch=<id>``, ...) under a ledger of commit markers — correct
-and append-only, but after thousands of micro-batches every read lists
-and opens one directory per batch of ingest age: the per-batch listing
-cost and small-file count grow linearly forever (round-8 verdict
-finding #2 — the one unbounded term left in the streaming designs).
+``hashes/batch=<id>``, ...) — correct and append-only, but after
+thousands of micro-batches every read lists and opens one directory per
+batch of ingest age: the per-batch listing cost and small-file count
+grow linearly forever (round-8 verdict finding #2 — the one unbounded
+term left in the streaming designs).
 
-This module bounds it with the SAME exactly-once machinery the folds
-already rely on: a COMPACTION merges every committed per-batch directory
-at or below a watermark ``W`` (plus any older compacted artifact) into
-one ``compact/<sub>/upto=<W>`` directory, and publishes it by renaming a
+This module bounds it with the SAME exactly-once machinery: a
+COMPACTION merges every committed per-batch directory at or below a
+watermark ``W`` (plus any older compacted artifact) into one
+``compact/<sub>/upto=<W>`` directory, and publishes it by renaming a
 marker into ``compact/ledger/<W>`` strictly LAST. Readers resolve state
 as ``compacted(W) ∪ per-batch dirs above W``, so
 
@@ -42,12 +59,55 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 #: compacted state lives under <state_dir>/compact/<sub>/upto=<W>,
 #: published by <state_dir>/compact/ledger/<W>
 COMPACT = "compact"
+
+
+def _publish(marker: str, payload: dict) -> None:
+    """Atomically publish a commit marker: tmp write, then rename."""
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(payload, fh)
+    os.replace(tmp, marker)
+
+
+def start_ledger_stream(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    body: Callable[[DataFrame, int], dict | None],
+    after_commit: Callable[[], object] | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` under an availableNow trigger with the ledger
+    commit around every micro-batch: a committed ``bid`` is skipped;
+    otherwise ``body(batch_df, bid)`` writes the batch's artifacts and
+    ``ledger/<bid>`` = ``{"batch_id": bid, **extra}`` is published, where
+    ``extra`` is the dict the body returns (or nothing). ``after_commit``
+    runs once the marker is in place — the in-stream compaction hook."""
+    led = os.path.join(state_dir, "ledger")
+    os.makedirs(led, exist_ok=True)
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        bid = int(batch_id)
+        if is_committed(state_dir, bid):
+            return  # replayed batch: artifacts already committed
+        extra = body(batch_df, bid) or {}
+        _publish(os.path.join(led, str(bid)), {"batch_id": bid, **extra})
+        if after_commit is not None:
+            after_commit()
+
+    return (
+        stream.writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _ids(path: str) -> list[int]:
@@ -79,12 +139,29 @@ def is_committed(state_dir: str, bid: int) -> bool:
     return os.path.exists(os.path.join(state_dir, "ledger", str(bid)))
 
 
-def last_committed(state_dir: str) -> int | None:
-    """Largest committed batch id (ledger or compaction-implied)."""
-    led = ledger_ids(state_dir)
+def last_committed(state_dir: str, below: int | None = None) -> int | None:
+    """Largest committed batch id (ledger or compaction-implied), or with
+    ``below`` the largest one strictly before it (the in-flight batch's
+    predecessor)."""
     w = compact_watermark(state_dir)
-    cands = ([led[-1]] if led else []) + ([w] if w is not None else [])
+    cands = ledger_ids(state_dir) + ([w] if w is not None else [])
+    cands = [b for b in cands if below is None or b < below]
     return max(cands) if cands else None
+
+
+def read_latest(
+    spark: SparkSession,
+    state_dir: str,
+    sub: str,
+    schema: str,
+    below: int | None = None,
+) -> DataFrame:
+    """Swap-style sub-state: ``sub/batch=<b>`` of the newest committed
+    batch ``b`` (before ``below`` if given), or an empty frame."""
+    b = last_committed(state_dir, below)
+    if b is None:
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(os.path.join(state_dir, sub, f"batch={b}"))
 
 
 def read_sub(
@@ -163,11 +240,10 @@ def compact(
         )
     led_dir = os.path.join(state_dir, COMPACT, "ledger")
     os.makedirs(led_dir, exist_ok=True)
-    marker = os.path.join(led_dir, str(upto))
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"upto": upto, "subs": sorted(subs), **(extra or {})}, fh)
-    os.replace(tmp, marker)
+    _publish(
+        os.path.join(led_dir, str(upto)),
+        {"upto": upto, "subs": sorted(subs), **(extra or {})},
+    )
     return upto
 
 

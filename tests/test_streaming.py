@@ -146,7 +146,12 @@ def test_streaming_export_incremental_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def mk(eid, year):
-        return Row(event_id=eid, created_at=dt.datetime(year, 6, 1), v=float(eid))
+        return Row(
+            _id=f"oid{eid}",
+            event_id=eid,
+            created_at=dt.datetime(year, 6, 1),
+            v=float(eid),
+        )
 
     def run():
         stream = spark.readStream.schema(
@@ -172,6 +177,7 @@ def test_streaming_export_incremental_exactly_once(spark, tmp_path):
     run()  # only the new file exports
     final = spark.read.parquet(out)
     assert sorted(r["event_id"] for r in final.collect()) == [1, 2, 3]
+    assert "_id" not in final.columns  # dropped like the batch export
 
 
 def test_running_user_stats_converges_to_batch(spark, sf_dir):
@@ -735,6 +741,7 @@ def test_stream_dedup_incremental_converges_to_batch_pairs(spark, sf_dir, tmp_pa
     from mongo_to_parquet_spark.queries.llm import QUERIES as LLM_Q
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import dedup as sd
+    from mongo_to_parquet_spark.streaming import state as sst
 
     src = str(tmp_path / "docs_src")
     load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
@@ -774,7 +781,7 @@ def test_stream_dedup_incremental_converges_to_batch_pairs(spark, sf_dir, tmp_pa
 
     # torn batch: delete the last marker — its pairs leave the committed
     # view (crash-consistent read) — then a fresh run recommits it
-    last = max(sd._committed(state))
+    last = max(sst.ledger_ids(state))
     os.remove(os.path.join(state, "ledger", str(last)))
     partial = sd.read_incremental_pairs(spark, state)
     assert partial.count() <= len(got)
@@ -926,6 +933,7 @@ def test_stream_ann_probe_matches_batch_serving(spark, sf_dir, tmp_path):
     )
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import retrieval as sr
+    from mongo_to_parquet_spark.streaming import state as sst
 
     emb = load_table(spark, sf_dir, "embeddings")
     layout = str(tmp_path / "layout")
@@ -970,7 +978,7 @@ def test_stream_ann_probe_matches_batch_serving(spark, sf_dir, tmp_path):
         tuple(r) for r in sr.read_probe_results(spark, state).collect()
     } == want
 
-    last = max(sr._committed(state))
+    last = max(sst.ledger_ids(state))
     os.remove(os.path.join(state, "ledger", str(last)))
     assert sr.read_probe_results(spark, state).count() < len(want)
     run(str(tmp_path / "ck3"))
@@ -991,6 +999,7 @@ def test_stream_ann_probe_refine_mode_matches_single_refine(spark, sf_dir, tmp_p
     )
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import retrieval as sr
+    from mongo_to_parquet_spark.streaming import state as sst
 
     emb = load_table(spark, sf_dir, "embeddings")
     layout = str(tmp_path / "layout")
@@ -1012,7 +1021,7 @@ def test_stream_ann_probe_refine_mode_matches_single_refine(spark, sf_dir, tmp_p
     q.awaitTermination(300)
 
     res = spark.read.parquet(
-        *[f"{state}/results/batch={b}" for b in sr._committed(state)]
+        *[f"{state}/results/batch={b}" for b in sst.ledger_ids(state)]
     )
     got = {
         (r["probe_id"], r["vec_id"], r["sim"], r["rk"]) for r in res.collect()
@@ -1041,6 +1050,7 @@ def test_stream_decontaminate_matches_batch_key(spark, sf_dir, tmp_path):
     from mongo_to_parquet_spark.queries import queries
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import decontaminate as sd
+    from mongo_to_parquet_spark.streaming import state as sst
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ev_path = str(tmp_path / "eval_grams")
@@ -1071,7 +1081,7 @@ def test_stream_decontaminate_matches_batch_key(spark, sf_dir, tmp_path):
     run(str(tmp_path / "ck2"))  # replay: markers skip every batch
     assert {tuple(r) for r in sd.read_reports(spark, state).collect()} == want
 
-    last = max(sd._committed(state))
+    last = max(sst.ledger_ids(state))
     os.remove(os.path.join(state, "ledger", str(last)))
     assert {tuple(r) for r in sd.read_reports(spark, state).collect()} <= want
     run(str(tmp_path / "ck3"))
@@ -1093,6 +1103,7 @@ def test_stream_pack_matches_batch_and_replays(spark, sf_dir, tmp_path):
     from mongo_to_parquet_spark.queries.llm import QUERIES as LLM_Q
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import pack as sp
+    from mongo_to_parquet_spark.streaming import state as sst
 
     src = str(tmp_path / "docs_src")
     os.makedirs(src)
@@ -1130,7 +1141,7 @@ def test_stream_pack_matches_batch_and_replays(spark, sf_dir, tmp_path):
     )
     assert len(want) > 0 and got == want
     # cross-batch continuation must actually happen: some bin spans batches
-    n_batches = len(sp._committed(state))
+    n_batches = len(sst.ledger_ids(state))
     assert n_batches >= 4
 
     run(str(tmp_path / "ck2"))  # replay: every batch skips on its marker
@@ -1141,7 +1152,7 @@ def test_stream_pack_matches_batch_and_replays(spark, sf_dir, tmp_path):
 
     # torn batch: drop the last marker -> its rows leave the committed
     # view -> a fresh run recommits bit-identically
-    last = max(sp._committed(state))
+    last = max(sst.ledger_ids(state))
     os.remove(os.path.join(state, "ledger", str(last)))
     assert sp.read_assignments(spark, state).count() < len(want)
     run(str(tmp_path / "ck3"))
@@ -1162,6 +1173,7 @@ def test_stream_mix_converges_to_batch_weights(spark, sf_dir, tmp_path):
     from mongo_to_parquet_spark.queries.llm import QUERIES as LLM_Q
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import mix as sm
+    from mongo_to_parquet_spark.streaming import state as sst
 
     src = str(tmp_path / "docs_src")
     load_table(spark, sf_dir, "documents").select("source", "text").repartition(
@@ -1190,7 +1202,7 @@ def test_stream_mix_converges_to_batch_weights(spark, sf_dir, tmp_path):
     )
     assert len(want) > 1 and got == want
     # every committed snapshot is a valid weights table
-    for b in sm._committed(state):
+    for b in sst.ledger_ids(state):
         rows = spark.read.parquet(
             os.path.join(state, "weights", f"batch={b}")
         ).collect()
@@ -1203,7 +1215,7 @@ def test_stream_mix_converges_to_batch_weights(spark, sf_dir, tmp_path):
         for r in sm.read_weights(spark, state).collect()
     ) == want
 
-    last = max(sm._committed(state))
+    last = max(sst.ledger_ids(state))
     os.remove(os.path.join(state, "ledger", str(last)))
     run(str(tmp_path / "ck3"))  # torn batch recommitted
     assert sorted(
@@ -1232,6 +1244,7 @@ def test_stream_assembly_matches_batch_pipeline(spark, sf_dir, tmp_path):
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import assembly as sa
     from mongo_to_parquet_spark.streaming import decontaminate as sd
+    from mongo_to_parquet_spark.streaming import state as sst
 
     # the fixed benchmark artifact: gram table of the eval split
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1268,7 +1281,7 @@ def test_stream_assembly_matches_batch_pipeline(spark, sf_dir, tmp_path):
         for r in sa.read_manifest(spark, state).collect()
     )
     assert len(want) > 0 and got == want
-    assert len(sa._committed(state)) >= 4  # the fold really ran per batch
+    assert len(sst.ledger_ids(state)) >= 4  # the fold really ran per batch
 
     run(str(tmp_path / "ck2"))  # replay: every batch skips on its marker
     assert sorted(
@@ -1276,7 +1289,7 @@ def test_stream_assembly_matches_batch_pipeline(spark, sf_dir, tmp_path):
         for r in sa.read_manifest(spark, state).collect()
     ) == want
 
-    last = max(sa._committed(state))
+    last = max(sst.ledger_ids(state))
     os.remove(os.path.join(state, "ledger", str(last)))
     assert sa.read_assignments(spark, state).count() < sum(
         n for _, _, n, _ in want
@@ -1345,7 +1358,7 @@ def test_stream_dedup_compaction_preserves_pairs_and_bounds_files(
     add_slice(1)
     run(str(tmp_path / "ck1"))
     p1 = pairs()
-    assert len(sd._committed(state)) == 2
+    assert len(sst.ledger_ids(state)) == 2
 
     # torn compaction: parquet written, marker removed -> invisible
     w = sd.compact_dedup_state(spark, state, run_vacuum=False)
@@ -1359,7 +1372,7 @@ def test_stream_dedup_compaction_preserves_pairs_and_bounds_files(
     for sub in ("index", "docs", "pairs"):
         assert sst._ids_under(state, sub) == []  # all batches superseded
         assert sst._ids_under(os.path.join(state, "compact"), sub) == [1]
-    assert sd._committed(state) == []  # markers vacuumed...
+    assert sst.ledger_ids(state) == []  # markers vacuumed...
     assert sst.is_committed(state, 0) and sst.is_committed(state, 1)  # ...implicit
 
     # ingest continues THROUGH the compacted state
@@ -1543,6 +1556,100 @@ def test_state_compaction_guards(spark, tmp_path):
     assert sst._ids_under(sd, "vals") == []
     assert sst._ids_under(os.path.join(sd, "compact"), "vals") == [2]
     assert sst.is_committed(sd, 0) and sst.last_committed(sd) == 2
+
+
+def test_commit_markers_keep_their_on_disk_formats(spark, tmp_path):
+    """Stores written before the ledger and version commits were shared
+    stay readable: hand-written markers in the existing formats — a
+    ledger ``{"batch_id": b}``, a state version ``{"version",
+    "batch_id"}`` and an artifact ``{"version", "family", ...meta}`` —
+    make the ledger stream skip the committed batch and read back
+    through last_batch_id / artifact_current / load_artifact; the new
+    writers emit byte-identical markers."""
+    import json
+    import os
+    import time
+
+    from mongo_to_parquet_spark.operators import incremental as inc
+    from mongo_to_parquet_spark.operators import tokenizer as tok
+    from mongo_to_parquet_spark.streaming import state as sst
+
+    def write_marker(path, payload):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as fh:
+            json.dump(payload, fh)
+
+    def read_text(path):
+        with open(path) as fh:
+            return fh.read()
+
+    # ledger format: batch 0 committed by hand, batch 1 arrives new
+    src = str(tmp_path / "src")
+    t0 = time.time() - 100
+    for i in (0, 1):
+        p = os.path.join(src, f"slice-{i}")
+        spark.createDataFrame([(i,)], "x bigint").coalesce(1).write.parquet(p)
+        for f in os.listdir(p):
+            os.utime(os.path.join(p, f), (t0 + i, t0 + i))
+    state = str(tmp_path / "state")
+    write_marker(os.path.join(state, "ledger", "0"), {"batch_id": 0})
+    seen = []
+
+    def body(batch_df, bid):
+        seen.append(bid)
+        return {"rows": batch_df.count()}
+
+    stream = (
+        spark.readStream.schema("x bigint")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
+    sst.start_ledger_stream(
+        stream, state, str(tmp_path / "ck"), body
+    ).awaitTermination(120)
+    assert seen == [1]
+    assert sst.ledger_ids(state) == [0, 1] and sst.last_committed(state) == 1
+    assert read_text(os.path.join(state, "ledger", "1")) == json.dumps(
+        {"batch_id": 1, "rows": 1}
+    )
+
+    # version format: committed v=1 by hand plus an orphan v=2
+    vs = str(tmp_path / "agg")
+    spark.createDataFrame([("a", 1)], "k string, n_rows bigint").write.parquet(
+        os.path.join(vs, "v=1")
+    )
+    write_marker(
+        os.path.join(vs, "v=1", inc.COMMIT_MARKER), {"version": 1, "batch_id": 7}
+    )
+    os.makedirs(os.path.join(vs, "v=2"))
+    assert inc.last_batch_id(vs) == 7
+    one = spark.createDataFrame([("b",)], "k string")
+    assert not inc.apply_stream_batch(vs, one, 7, ["k"], [])  # replay skips
+    assert inc.apply_stream_batch(vs, one, 8, ["k"], [])
+    assert inc.last_batch_id(vs) == 8
+    assert read_text(os.path.join(vs, "v=3", inc.COMMIT_MARKER)) == json.dumps(
+        {"version": 3, "batch_id": 8}
+    )
+
+    # artifact format: family + training config in the marker
+    art = str(tmp_path / "art")
+    rows = [(0, "a", "b", "ab", 3)]
+    spark.createDataFrame(rows, tok.SCHEMAS["bpe"]).write.parquet(
+        os.path.join(art, "v=1")
+    )
+    write_marker(
+        os.path.join(art, "v=1", inc.COMMIT_MARKER),
+        {"version": 1, "family": "bpe", "k": 8},
+    )
+    assert tok.artifact_current(art, "bpe", {"k": 8})
+    assert not tok.artifact_current(art, "bpe", {"k": 4})
+    got = [tuple(r) for r in tok.load_artifact(spark, art, "bpe").collect()]
+    assert got == rows
+    assert tok.save_artifact(spark, rows, art, "bpe", meta={"k": 8}) == 2
+    assert read_text(os.path.join(art, "v=2", inc.COMMIT_MARKER)) == json.dumps(
+        {"version": 2, "family": "bpe", "k": 8}
+    )
 
 
 def test_stream_fed_langid_and_dsir_state_equals_batch_artifact(
