@@ -42,10 +42,13 @@ def read_collection(
         raise NotImplementedError(
             "MongoDB Spark connector not on the classpath; add "
             "org.mongodb.spark:mongo-spark-connector to spark.jars.packages "
-            "(full recipe: docs/mongo_live.md). Without the jar, use the "
-            "tested mongoexport extended-JSON route instead — "
-            "sources/extjson.read_mongoexport, oracle-checked by "
-            "q_mongo_export. All parquet sources work without it."
+            "(full recipe: docs/mongo_live.md). Without the jar, read a "
+            "mongoexport dump instead: spark.dataSource.register("
+            "MongoExportDataSource) from sources/extjson, then "
+            "spark.read.format(\"mongoexport\"), or the CLI's --source-dir "
+            "with --source-format mongoexport (oracle-checked by "
+            "q_mongo_export). "
+            "All parquet sources work without it."
         ) from e
 
 

@@ -268,9 +268,12 @@ def test_mongoexport_reader_dates_are_utc_under_any_tz(tmp_path):
 def test_mongoexport_reader_refuses_malformed_lines(tmp_path):
     """Input the per-row reader refused stays refused: a bare number in a
     timestamp field (Arrow would take it as microseconds) and two
-    documents on one line (the chunk decoder would otherwise split them)."""
+    documents on one line (the chunk decoder would otherwise split them).
+    Neither a bare number in a date field (days since the epoch) nor a
+    fractional number in an integer field (truncated) is read silently:
+    both raise a TypeError that names the field."""
     import pytest
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+    from pyspark.sql.types import DateType, LongType, StructField, StructType, TimestampType
 
     from mongo_to_parquet_spark.sources.extjson import MongoExportReader, _FilePartition
 
@@ -284,6 +287,143 @@ def test_mongoexport_reader_refuses_malformed_lines(tmp_path):
         read('{"t": 1704067200000}\n', StructField("t", TimestampType()))
     with pytest.raises(ValueError, match="more than one document"):
         read('{"n": 1}, {"n": 2}\n', StructField("n", LongType()))
+    with pytest.raises(TypeError, match=r"field 'd' holds 5, not a \$date"):
+        read('{"d": 5}\n', StructField("d", DateType()))
+    with pytest.raises(TypeError, match=r"field 'n' holds 1\.5, not a whole number"):
+        read('{"n": 5.0}\n{"n": 1.5}\n', StructField("n", LongType()))
+    (batch,) = read('{"n": 5.0}\n{"n": 6}\n', StructField("n", LongType()))
+    assert batch.column("n").to_pylist() == [5, 6]  # whole floats read as before
+
+
+def test_mongoexport_scan_never_imports_pandas(spark, tmp_path):
+    """pa.array imports pandas through pyarrow's pandas shim, and every scan
+    worker would keep it until the JVM exits; the scan assembles its columns
+    from buffers instead. A fresh interpreter, because pytest's holds pandas."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql.types import StructType
+
+    repo = str(Path(__file__).resolve().parents[1])
+    f = str(tmp_path / "all.jsonl")
+    _write_jsonl(f, EXT_ROWS + [{
+        "s": 7, "bin": "xy", "flag": True, "i8": 1, "i16": 2, "i32": 3,
+        "f32": 0.5, "amount": {"$numberDecimal": "1.005"},
+        "day": {"$date": "2024-01-01T00:00:00Z"}, "ntz": {"$date": "2024-01-01T00:00:00Z"},
+        "m": {"k": ["v"]},
+        "sub": {"a": {"$numberInt": "1"}, "b": [{"$date": "2020-01-01T00:00:00Z"}]},
+    }, {}])
+    schema = StructType.fromDDL(
+        "_id string, created_at timestamp, n bigint, price double, name string, "
+        "tags array<string>, s string, bin binary, flag boolean, i8 tinyint, i16 smallint, "
+        "i32 int, f32 float, amount decimal(6,2), day date, ntz timestamp_ntz, v void, "
+        "m map<string,array<string>>, sub struct<a: int, b: array<timestamp>>"
+    )
+    script = (
+        f"import json, sys; sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql.types import StringType, StructField, StructType\n"
+        "from mongo_to_parquet_spark.sources.extjson import MongoExportReader, _FilePartition\n"
+        f"schema = StructType.fromJson(json.loads({schema.json()!r}))\n"
+        "raw = StructType([StructField('doc', StringType())])\n"
+        "rows = 0\n"
+        "for s in (schema, raw):\n"
+        f"    for b in MongoExportReader(s, {{'path': {f!r}}}).read(_FilePartition({f!r})):\n"
+        "        rows += b.num_rows\n"
+        "assert rows == 10, rows\n"
+        "assert 'pandas' not in sys.modules, 'the scan imported pandas'\n"
+    )
+    subprocess.run([sys.executable, "-c", script], check=True, timeout=300)
+
+
+def _equivalence_table():
+    """(DDL, values as decoded, the same values as pa.array takes them)
+    for every Spark type the scan maps to Arrow, alone and inside an
+    array, a map and a struct, with nulls, all-null chunks and empty
+    arrays and maps."""
+    from decimal import Decimal
+
+    t0, t1 = dt.datetime(2024, 1, 1, 12, 30, 0, 123456), dt.datetime(1960, 6, 1)
+    scalars = [
+        ("string", ["a", "ü", ""], None),
+        ("string", [7, True, 1.5, Decimal("2.50"), t0],
+         ["7", "true", "1.5", "2.50", str(t0)]),
+        ("binary", ["xy", b"\x00z", ""], [b"xy", b"\x00z", b""]),
+        ("boolean", [True, False, True], None),
+        ("tinyint", [-128, 127, 5.0], [-128, 127, 5]),
+        ("smallint", [-(2**15), 2**15 - 1, 0], None),
+        ("int", [-(2**31), 2**31 - 1, Decimal("3")], [-(2**31), 2**31 - 1, 3]),
+        ("bigint", [-(2**63), 2**63 - 1, 0], None),
+        ("float", [0.1, 1e300, 2**24], None),
+        ("double", [0.1, float("inf"), 2**53, True], [0.1, float("inf"), 2.0**53, 1.0]),
+        ("decimal(6,2)", [Decimal("1.005"), Decimal("-0.015"), Decimal("NaN"), 12],
+         [Decimal("1.00"), Decimal("-0.02"), None, Decimal("12.00")]),
+        ("decimal(38,18)", [Decimal("12345678901234567890.123456789012345678"),
+                            Decimal("-1E-18"), 0], [
+            Decimal("12345678901234567890.123456789012345678"), Decimal("-1E-18"), Decimal(0)]),
+        ("date", [t0, t1, dt.datetime(1969, 12, 31, 23, 59)], None),
+        ("timestamp", [t0, t1, dt.datetime(1, 1, 1)], None),
+        ("timestamp_ntz", [t0, t1, dt.datetime(9999, 12, 31, 23, 59, 59, 999999)], None),
+        ("void", [None, None, None], None),
+    ]
+    for ddl, values, coerced in scalars:
+        coerced = coerced or values
+        v0, v1, v2 = values[:3]
+        c0, c1, c2 = coerced[:3]
+        yield ddl, [*values, None], [*coerced, None]
+        yield ddl, [None, None], [None, None]
+        yield f"array<{ddl}>", [[v0, None, v1], [], None, [v2]], [[c0, None, c1], [], None, [c2]]
+        yield f"map<string,{ddl}>", [{"k": v0, "j": None}, {}, None, {"k": v2}], \
+            [[("k", c0), ("j", None)], [], None, [("k", c2)]]
+        yield f"struct<a: {ddl}, b: array<{ddl}>>", [{"a": v0, "b": [v1]}, None, {}, {"b": []}], \
+            [{"a": c0, "b": [c1]}, None, {"a": None, "b": None}, {"a": None, "b": []}]
+    yield "array<array<bigint>>", [[[1], None, []], [], None], None
+    yield "map<string,struct<a: bigint>>", [{"k": {"a": 1}, "j": {}}, None], \
+        [[("k", {"a": 1}), ("j", {"a": None})], None]
+    yield "array<map<string,string>>", [[{}, None, {"k": "v"}], None], \
+        [[[], None, [("k", "v")]], None]
+
+
+def test_mongoexport_build_equals_pa_array_per_type(spark):
+    """The scan's buffer-built columns equal what pa.array builds from the
+    same (coerced) values, type by type and nested; and what pa.array
+    refuses, the builder refuses too."""
+    import pyarrow as pa
+    import pytest
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    from mongo_to_parquet_spark.sources.extjson import _build
+
+    n = 0
+    for ddl, values, coerced in _equivalence_table():
+        data_type = _parse_datatype_string(ddl)
+        arrow_type = to_arrow_type(data_type)
+        got = _build(list(values), data_type, arrow_type)
+        got.validate(full=True)
+        want = pa.array(coerced or values, arrow_type)
+        assert got.equals(want), (ddl, values, got, want)
+        n += 1
+    assert n > 80
+
+    refused = [
+        ("bigint", True), ("tinyint", False), ("double", "1.5"), ("float", "x"),
+        ("tinyint", 300), ("tinyint", -129), ("smallint", 2**15), ("int", -(2**31) - 1),
+        ("bigint", 2**63), ("bigint", -(2**63) - 1), ("bigint", float("nan")),
+        ("double", 2**53 + 1), ("float", -(2**24) - 1), ("boolean", 1),
+        ("date", "2024-01-01"), ("timestamp", "2024-01-01T00:00:00Z"),
+        ("timestamp_ntz", "2024-01-01"), ("binary", 5), ("void", 0),
+        ("array<bigint>", 5), ("array<string>", {"a": "b"}), ("map<string,string>", ["k"]),
+        ("map<bigint,string>", {"1": "v"}), ("struct<a: bigint>", 5),
+        ("array<bigint>", [True]), ("struct<a: double>", {"a": "x"}),
+    ]
+    for ddl, value in refused:
+        data_type = _parse_datatype_string(ddl)
+        arrow_type = to_arrow_type(data_type)
+        with pytest.raises((pa.ArrowException, TypeError, OverflowError)):
+            pa.array([None, value], arrow_type)
+        with pytest.raises((TypeError, OverflowError)):
+            _build([None, value], data_type, arrow_type)
 
 
 def test_mongoexport_writer_dates_are_utc_under_local_tz(tmp_path):
