@@ -42,6 +42,7 @@ from mongo_to_parquet_spark.operators.incremental import (
     prune_versions,
     publish_version,
 )
+from mongo_to_parquet_spark.sources.catalog import scratch_dir
 
 #: retention for the store: the artifact layout IS the incremental-state
 #: layout (v=N dirs + commit markers), so its vacuum is the same code —
@@ -91,18 +92,7 @@ SCHEMAS = {
 def artifact_dir(sf: str, family: str) -> str:
     """The default store location for a corpus dir: keyed by the sf
     basename so artifacts trained on one fixture never serve another."""
-    tag = os.path.basename(sf.rstrip("/"))
-    return os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__),
-            "..",
-            "..",
-            "_scratch",
-            "tok_artifacts",
-            tag,
-            family,
-        )
-    )
+    return os.path.join(scratch_dir("tok_artifacts", sf), family)
 
 
 def artifact_current(art_dir: str, family: str, want: dict) -> bool:

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from mongo_to_parquet_spark.functions import vector
 from mongo_to_parquet_spark.operators import text, tokenizer
 from mongo_to_parquet_spark.operators.scope import scope
-from mongo_to_parquet_spark.sources.catalog import load_table as T
+from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.queries._registry import make_registry
 
 QUERIES, ORACLE, q = make_registry()
@@ -4732,7 +4732,6 @@ def q_bpe_retrain_incremental(spark, sf):
     # trainers inherit the same shape through their own census entry
     # points. The same state also powers stream-fed retraining via
     # incremental.apply_stream_batch (batch-id replay guard).
-    import os
     import shutil
 
     from mongo_to_parquet_spark.operators import incremental
@@ -4746,12 +4745,7 @@ def q_bpe_retrain_incremental(spark, sf):
             .select(_bpe_spelled().alias("sym"))
         )
 
-    tag = os.path.basename(sf.rstrip("/"))
-    sd = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "census_state", tag
-        )
-    )
+    sd = scratch_dir("census_state", sf)
     shutil.rmtree(sd, ignore_errors=True)
     incremental.refresh_agg_state(
         spark, sd, spelled_words(d.filter(F.col("doc_id") % 4 != 0)), ["sym"], []

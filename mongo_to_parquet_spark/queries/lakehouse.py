@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mongo_to_parquet_spark.sources.catalog import load_table as T
+from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.queries._registry import make_registry
 
 QUERIES, ORACLE, q = make_registry()
@@ -429,15 +429,11 @@ def q_mv_refresh(spark, sf):
     # run — re-folding the same slices into surviving state would
     # double-count (the batch API has no replay guard; the STREAMING
     # refresh records batch ids for exactly that).
-    import os
     import shutil
 
     from mongo_to_parquet_spark.operators import incremental as inc
 
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
-    state_dir = os.path.abspath(
-        os.path.join(scratch, "mv_state", os.path.basename(sf.rstrip("/")))
-    )
+    state_dir = scratch_dir("mv_state", sf)
     shutil.rmtree(state_dir, ignore_errors=True)
     o = T(spark, sf, "orders")
     cut = F.lit("1997-01-01").cast("timestamp_ntz")
@@ -483,15 +479,11 @@ def q_mv_diff(spark, sf):
     # must equal the second slice's direct contribution. This is the
     # audit query a production MV needs after every refresh ("what did
     # last night's load change?") — O(keys), never re-reading history.
-    import os
     import shutil
 
     from mongo_to_parquet_spark.operators import incremental as inc
 
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
-    state_dir = os.path.abspath(
-        os.path.join(scratch, "mv_diff", os.path.basename(sf.rstrip("/")))
-    )
+    state_dir = scratch_dir("mv_diff", sf)
     shutil.rmtree(state_dir, ignore_errors=True)
     o = T(spark, sf, "orders")
     cut = F.lit("1997-01-01").cast("timestamp_ntz")

@@ -26,7 +26,7 @@ from mongo_to_parquet_spark.operators import (
     text,
     tokenizer,
 )
-from mongo_to_parquet_spark.sources.catalog import load_table as T
+from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.queries._registry import make_registry
 
 QUERIES, ORACLE, q = make_registry()
@@ -806,18 +806,12 @@ def q_sim_topk_ivf_incremental(spark, sf):
     # including that the probe (vec_id 0, itself a delta vector) sees
     # same-day neighbors. Layout is rebuilt from scratch each run
     # (rmtree) so repeated invocations can't stack appends.
-    import os
     import shutil
 
     emb = T(spark, sf, "embeddings")
     base = emb.filter(F.col("vec_id") % 4 != 0)
     delta = emb.filter(F.col("vec_id") % 4 == 0)
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    layout = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "ivf_inc", tag
-        )
-    )
+    layout = scratch_dir("ivf_inc", sf)
     shutil.rmtree(layout, ignore_errors=True)
     similarity.build_ivf_layout(base, layout)
     similarity.ivf_append(delta, layout)
@@ -2764,6 +2758,40 @@ def q_mm_audio_windows(spark, sf):
 _WN_W = 4  # winnowing window over the trigram-shingle hash stream
 
 
+def _winnow_fp(spark, sf):
+    """The distinct (doc_id, fh) winnowing fingerprints of the documents
+    table: md5 trigram-shingle hashes, each full length-_WN_W window's
+    minimum with the rightmost-occurrence tie rule."""
+    from pyspark.sql import Window
+
+    d = T(spark, sf, "documents")
+    sh = d.select(
+        "doc_id", F.posexplode(shingles(F.col("text"), 3)).alias("p0", "s")
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "s")
+    h = sh.select(
+        "doc_id",
+        "pos",
+        F.conv(F.substring(F.md5(F.concat(F.lit("wn:"), F.col("s"))), 1, 12), 16, 10)
+        .cast("bigint")
+        .alias("h"),
+    )
+    wsel = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WN_W - 1)
+    wdoc = Window.partitionBy("doc_id")
+    sel = h.select(
+        "doc_id",
+        "pos",
+        F.min(F.col("h") * 4096 + (F.lit(4095) - F.col("pos"))).over(wsel).alias(
+            "selkey"
+        ),
+        F.max("pos").over(wdoc).alias("m"),
+    )
+    return (
+        sel.filter(F.col("pos") <= F.greatest(F.col("m") - (_WN_W - 1), F.lit(1)))
+        .select("doc_id", F.expr("selkey div 4096").alias("fh"))
+        .distinct()
+    )
+
+
 @q(
     "q_text_winnow",
     f"""
@@ -2817,38 +2845,7 @@ def q_text_winnow(spark, sf):
     # the stream ~w× before the distinct. Shuffle rows carry (id, hash)
     # only. Position fits the 4096 tie-break radix because documents are
     # chunked upstream (q_text_chunk) long before 4k shingles.
-    from pyspark.sql import Window
-
-    d = T(spark, sf, "documents")
-    sh = d.select(
-        "doc_id", F.posexplode(shingles(F.col("text"), 3)).alias("p0", "s")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "s")
-    h = sh.select(
-        "doc_id",
-        "pos",
-        F.conv(F.substring(F.md5(F.concat(F.lit("wn:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h"),
-    )
-    wsel = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(0, _WN_W - 1)
-    )
-    wdoc = Window.partitionBy("doc_id")
-    sel = h.select(
-        "doc_id",
-        "pos",
-        F.min(F.col("h") * 4096 + (F.lit(4095) - F.col("pos"))).over(wsel).alias(
-            "selkey"
-        ),
-        F.max("pos").over(wdoc).alias("m"),
-    )
-    fp = (
-        sel.filter(F.col("pos") <= F.greatest(F.col("m") - (_WN_W - 1), F.lit(1)))
-        .select("doc_id", F.expr("selkey div 4096").alias("fh"))
-        .distinct()
-    )
+    fp = _winnow_fp(spark, sf)
     return fp.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_fp"),
         F.array_join(F.sort_array(F.collect_list("fh")), ",").alias("fp"),
@@ -2918,34 +2915,7 @@ def q_dedup_winnow(spark, sf):
     # join, and a boilerplate hash shared by many docs is visible (and
     # stoppable) in its bucket size. Overlap arithmetic is int/int
     # division of exact counts.
-    from pyspark.sql import Window
-
-    d = T(spark, sf, "documents")
-    sh = d.select(
-        "doc_id", F.posexplode(shingles(F.col("text"), 3)).alias("p0", "s")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "s")
-    h = sh.select(
-        "doc_id",
-        "pos",
-        F.conv(F.substring(F.md5(F.concat(F.lit("wn:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h"),
-    )
-    wsel = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WN_W - 1)
-    wdoc = Window.partitionBy("doc_id")
-    sel = h.select(
-        "doc_id",
-        "pos",
-        F.min(F.col("h") * 4096 + (F.lit(4095) - F.col("pos"))).over(wsel).alias(
-            "selkey"
-        ),
-        F.max("pos").over(wdoc).alias("m"),
-    )
-    fp = (
-        sel.filter(F.col("pos") <= F.greatest(F.col("m") - (_WN_W - 1), F.lit(1)))
-        .select("doc_id", F.expr("selkey div 4096").alias("fh"))
-        .distinct()
-    )
+    fp = _winnow_fp(spark, sf)
     sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     a = fp.select(F.col("doc_id").alias("id1"), "fh")
     b = fp.select(F.col("doc_id").alias("id2"), "fh")
@@ -4676,6 +4646,47 @@ _BITEXT_SRC, _BITEXT_TGT = "en", "fr"
 _BITEXT_K = 4
 
 
+def _bitext_margin(sims):
+    """Ratio-margin bitext pairs from a (a_id, b_id, s) similarity
+    relation: each source doc's best target, kept when its integer margin
+    over both directions' top-_BITEXT_K neighbourhood means clears 1.0."""
+    from pyspark.sql import Window as W
+
+    wa = W.partitionBy("a_id").orderBy(F.col("s").desc(), F.col("b_id").asc())
+    wb = W.partitionBy("b_id").orderBy(F.col("s").desc(), F.col("a_id").asc())
+    ka = (
+        sims.withColumn("rk", F.row_number().over(wa))
+        .filter(F.col("rk") <= _BITEXT_K)
+        .groupBy("a_id")
+        .agg(
+            F.sum("s").cast("bigint").alias("sum_a"),
+            F.count(F.lit(1)).cast("bigint").alias("n_a"),
+        )
+    )
+    kb = (
+        sims.withColumn("rk", F.row_number().over(wb))
+        .filter(F.col("rk") <= _BITEXT_K)
+        .groupBy("b_id")
+        .agg(
+            F.sum("s").cast("bigint").alias("sum_b"),
+            F.count(F.lit(1)).cast("bigint").alias("n_b"),
+        )
+    )
+    best = sims.withColumn("rk", F.row_number().over(wa)).filter(F.col("rk") == 1)
+    margin = F.expr(
+        "(2 * n_a * n_b * s * 10000)"
+        " div GREATEST(sum_a * n_b + sum_b * n_a, 1)"
+    ).cast("bigint")
+    return (
+        best.join(ka, "a_id")
+        .join(F.broadcast(kb), "b_id")
+        .select(
+            "a_id", "b_id", F.col("s").alias("sim_x10000"), margin.alias("margin_x10000")
+        )
+        .filter(F.col("margin_x10000") > 10000)
+    )
+
+
 @q(
     "q_mine_bitext",
     f"""
@@ -4765,41 +4776,7 @@ def q_mine_bitext(spark, sf):
         .filter(F.col("s") > 0)
         .persist()  # three consumers w/ different shapes; caller clearCache()s
     )
-    from pyspark.sql import Window as W
-
-    wa = W.partitionBy("a_id").orderBy(F.col("s").desc(), F.col("b_id").asc())
-    wb = W.partitionBy("b_id").orderBy(F.col("s").desc(), F.col("a_id").asc())
-    ka = (
-        sims.withColumn("rk", F.row_number().over(wa))
-        .filter(F.col("rk") <= _BITEXT_K)
-        .groupBy("a_id")
-        .agg(
-            F.sum("s").cast("bigint").alias("sum_a"),
-            F.count(F.lit(1)).cast("bigint").alias("n_a"),
-        )
-    )
-    kb = (
-        sims.withColumn("rk", F.row_number().over(wb))
-        .filter(F.col("rk") <= _BITEXT_K)
-        .groupBy("b_id")
-        .agg(
-            F.sum("s").cast("bigint").alias("sum_b"),
-            F.count(F.lit(1)).cast("bigint").alias("n_b"),
-        )
-    )
-    best = sims.withColumn("rk", F.row_number().over(wa)).filter(F.col("rk") == 1)
-    margin = F.expr(
-        "(2 * n_a * n_b * s * 10000)"
-        " div GREATEST(sum_a * n_b + sum_b * n_a, 1)"
-    ).cast("bigint")
-    return (
-        best.join(ka, "a_id")
-        .join(F.broadcast(kb), "b_id")
-        .select(
-            "a_id", "b_id", F.col("s").alias("sim_x10000"), margin.alias("margin_x10000")
-        )
-        .filter(F.col("margin_x10000") > 10000)
-    )
+    return _bitext_margin(sims)
 
 
 # one packing definition gates all three keys — the q_dedup_incremental
@@ -5355,41 +5332,7 @@ def q_mine_bitext_ivf(spark, sf):
         .filter(F.col("s") > 0)
         .persist()  # three consumers w/ different shapes; caller clearCache()s
     )
-    from pyspark.sql import Window as W
-
-    wa = W.partitionBy("a_id").orderBy(F.col("s").desc(), F.col("b_id").asc())
-    wb = W.partitionBy("b_id").orderBy(F.col("s").desc(), F.col("a_id").asc())
-    ka = (
-        sims.withColumn("rk", F.row_number().over(wa))
-        .filter(F.col("rk") <= _BITEXT_K)
-        .groupBy("a_id")
-        .agg(
-            F.sum("s").cast("bigint").alias("sum_a"),
-            F.count(F.lit(1)).cast("bigint").alias("n_a"),
-        )
-    )
-    kb = (
-        sims.withColumn("rk", F.row_number().over(wb))
-        .filter(F.col("rk") <= _BITEXT_K)
-        .groupBy("b_id")
-        .agg(
-            F.sum("s").cast("bigint").alias("sum_b"),
-            F.count(F.lit(1)).cast("bigint").alias("n_b"),
-        )
-    )
-    best = sims.withColumn("rk", F.row_number().over(wa)).filter(F.col("rk") == 1)
-    margin = F.expr(
-        "(2 * n_a * n_b * s * 10000)"
-        " div GREATEST(sum_a * n_b + sum_b * n_a, 1)"
-    ).cast("bigint")
-    return (
-        best.join(ka, "a_id")
-        .join(F.broadcast(kb), "b_id")
-        .select(
-            "a_id", "b_id", F.col("s").alias("sim_x10000"), margin.alias("margin_x10000")
-        )
-        .filter(F.col("margin_x10000") > 10000)
-    )
+    return _bitext_margin(sims)
 
 
 @q(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mongo_to_parquet_spark.sources.catalog import load_table as T
+from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.queries._registry import make_registry
 
 QUERIES, ORACLE, q = make_registry()
@@ -68,6 +68,59 @@ _BM25_TERMS = ("spark", "join", "filter")
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 
+def _bm25_corpus(spark, sf):
+    """The documents token stream with its BM25 corpus statistics:
+    ``(toks, dl, stats)`` = (doc_id, tok) rows, per-doc length and the
+    one-row (n_docs, avgdl)."""
+    d = T(spark, sf, "documents")
+    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+    return toks, dl, stats
+
+
+def _bm25_sum(tf, dl, stats, w=None):
+    """The BM25 scorer over a (doc_id, tok, tf) table: per-term Okapi
+    scores cast DECIMAL(38,18), summed per doc to (doc_id, score). ``w``
+    is an optional per-term weight column multiplying each term score."""
+    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
+    s = (
+        F.log(
+            (F.col("n_docs") - F.col("df") + F.lit(0.5))
+            / (F.col("df") + F.lit(0.5))
+            + F.lit(1.0)
+        )
+        * (F.col("tf") * (k1 + F.lit(1.0)))
+        / (F.col("tf") + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.col("avgdl")))
+    )
+    if w is not None:
+        s = s * w
+    return (
+        tf.join(F.broadcast(df), "tok")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", s.cast("decimal(38,18)").alias("s"))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum("s").cast("double"), 4).alias("score"))
+    )
+
+
+def _bm25_scored(spark, sf):
+    """q_bm25's (doc_id, score) over the whole corpus — shared by the
+    fusion and RM3 keys so every ranking comes from the same scorer."""
+    toks, dl, stats = _bm25_corpus(spark, sf)
+    tf = (
+        toks.filter(F.col("tok").isin(*_BM25_TERMS))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    return _bm25_sum(tf, dl, stats)
+
+
 @q(
     "q_bm25",
     f"""
@@ -111,41 +164,8 @@ def q_bm25(spark, sf):
     # the scan), df is a tiny agg over tf, dl/avgdl are corpus stats a
     # serving system precomputes (q_inverted_index's table); final is a
     # TakeOrdered top-20. No window, no join wider than the query's terms.
-    d = T(spark, sf, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
-    s = (
-        F.log(
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        )
-        * (F.col("tf") * (k1 + F.lit(1.0)))
-        / (
-            F.col("tf")
-            + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.col("avgdl"))
-        )
-    ).cast("decimal(38,18)")
-    scored = (
-        tf.join(F.broadcast(df), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", s.alias("s"))
-    )
     return (
-        scored.groupBy("doc_id")
-        .agg(F.round(F.sum("s").cast("double"), 4).alias("score"))
+        _bm25_scored(spark, sf)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(20)
     )
@@ -559,7 +579,6 @@ def q_sim_topk_ivfpq(spark, sf):
     # every distance is an integer so ranks are engine-exact. At 100 TB
     # the serve-time read is n_probe/n_cells of a code table ~1500×
     # smaller than the fp32 corpus — the vectors are never read at all.
-    import os
     import shutil
 
     from mongo_to_parquet_spark.operators.similarity import (
@@ -568,14 +587,90 @@ def q_sim_topk_ivfpq(spark, sf):
     )
 
     emb = T(spark, sf, "embeddings")
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    layout = os.path.abspath(
-        os.path.join(os.path.dirname(__file__), "..", "..", "_scratch", "ivfpq", tag)
-    )
+    layout = scratch_dir("ivfpq", sf)
     shutil.rmtree(layout, ignore_errors=True)
     build_ivfpq_layout(emb, layout)
-    pv = _serve_probe_vec(emb, sf)
+    pv = _probe_vec(emb)
     return ivfpq_topk_from_layout(spark, layout, pv, k=10, n_probe=4, exclude_id=0)
+
+
+def _ivfpq_scored(emb):
+    """The in-memory IVF×PQ route for probe vec_id 0, the dataflow the
+    ivfpq layout keys materialize: the probe's 4 nearest cells, its ADC
+    table over the PQ codebook and the summed integer ADC distance of
+    every other vector in those cells. Returns ``(pvec, scored)`` — the
+    broadcast probe row (``__probe``) and (vec_id, pq_dist)."""
+    from mongo_to_parquet_spark.functions.vector import dot as _dot
+    from mongo_to_parquet_spark.operators.similarity import (
+        _assign_cells,
+        _centroids,
+        _sq8,
+        pq_codes,
+    )
+
+    cents = _centroids(emb, 16, "vec_id", "embedding")
+    assigned = _assign_cells(emb, F.broadcast(cents), "vec_id", "embedding")
+    codes, codebook, rng = pq_codes(emb)
+    pvec = F.broadcast(
+        emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__probe"))
+    )
+    cells = (
+        cents.crossJoin(pvec)
+        .select("cell", _dot(F.col("cvec"), F.col("__probe")).alias("ps"))
+        .orderBy(F.col("ps").desc(), F.col("cell").asc())
+        .limit(4)
+        .select("cell")
+    )
+    # ADC table = the probe's own (sub, cid) SQ8 distances — recompute via
+    # pq_codes' dist path by quantizing vec_id 0 like any corpus vector
+    qdims = emb.filter(F.col("vec_id") == 0).select(
+        F.posexplode("embedding").alias("pos", "val")
+    ).select("pos", F.col("val").cast("double").alias("val"))
+    pqv = qdims.join(F.broadcast(rng), "pos").select(
+        "pos", _sq8(F.col("val")).alias("pqv")
+    )
+    pdiff = F.col("pqv") - F.col("cqv")
+    adc = (
+        codebook.join(F.broadcast(pqv), "pos")
+        .groupBy("sub", "cid")
+        .agg(F.sum((pdiff * pdiff).cast("bigint")).alias("pd"))
+    )
+    scored = (
+        codes.join(assigned.select("vec_id", "cell"), "vec_id")
+        .join(F.broadcast(cells), "cell")
+        .join(F.broadcast(adc), ["sub", "cid"])
+        .filter(F.col("vec_id") != 0)
+        .groupBy("vec_id")
+        .agg(F.sum("pd").alias("pq_dist"))
+    )
+    return pvec, scored
+
+
+def _recall_at_10(emb, approx):
+    """recall@10 of ``approx`` (a_vid, a_rk) against the exact cosine
+    top-10 of probe vec_id 0: one row of hits, recall % and the rank the
+    true top-1 landed at (0 = missed)."""
+    from mongo_to_parquet_spark.operators.similarity import brute_force_topk
+
+    exact = brute_force_topk(emb, probe_id=0, k=10).withColumn(
+        "rk",
+        F.row_number().over(
+            Window.orderBy(F.col("sim").desc(), F.col("vec_id").asc())
+        ),
+    ).select("vec_id", "rk")
+    return (
+        exact.join(F.broadcast(approx), exact.vec_id == approx.a_vid, "left")
+        .agg(
+            F.lit(0).cast("bigint").alias("probe_id"),
+            F.count("a_vid").cast("bigint").alias("hits"),
+            (F.count("a_vid") * 10).cast("bigint").alias("recall_pct"),
+            F.coalesce(
+                F.max(F.when(F.col("rk") == 1, F.col("a_rk"))), F.lit(0)
+            )
+            .cast("bigint")
+            .alias("top1_rank"),
+        )
+    )
 
 
 @q(
@@ -617,53 +712,10 @@ def q_eval_ann_recall_pq(spark, sf):
     # layout write is pure materialization of the identical dataflow
     # (covered by q_sim_topk_ivfpq's hash check), so this stays a pure
     # query the oracle replays end to end.
-    from mongo_to_parquet_spark.operators.similarity import (
-        _assign_cells,
-        _centroids,
-        brute_force_topk,
-        pq_codes,
-    )
-
     emb = T(spark, sf, "embeddings")
-    cents = _centroids(emb, 16, "vec_id", "embedding")
-    assigned = _assign_cells(emb, F.broadcast(cents), "vec_id", "embedding")
-    codes, codebook, rng = pq_codes(emb)
-    pvec = F.broadcast(
-        emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__probe"))
-    )
-    from mongo_to_parquet_spark.functions.vector import dot as _dot
-
-    cells = (
-        cents.crossJoin(pvec)
-        .select("cell", _dot(F.col("cvec"), F.col("__probe")).alias("ps"))
-        .orderBy(F.col("ps").desc(), F.col("cell").asc())
-        .limit(4)
-        .select("cell")
-    )
-    # ADC table = the probe's own (sub, cid) SQ8 distances — recompute via
-    # pq_codes' dist path by quantizing vec_id 0 like any corpus vector
-    qdims = emb.filter(F.col("vec_id") == 0).select(
-        F.posexplode("embedding").alias("pos", "val")
-    ).select("pos", F.col("val").cast("double").alias("val"))
-    from mongo_to_parquet_spark.operators.similarity import _sq8
-
-    pqv = qdims.join(F.broadcast(rng), "pos").select(
-        "pos", _sq8(F.col("val")).alias("pqv")
-    )
-    pdiff = F.col("pqv") - F.col("cqv")
-    adc = (
-        codebook.join(F.broadcast(pqv), "pos")
-        .groupBy("sub", "cid")
-        .agg(F.sum((pdiff * pdiff).cast("bigint")).alias("pd"))
-    )
+    _, scored = _ivfpq_scored(emb)
     approx = (
-        codes.join(assigned.select("vec_id", "cell"), "vec_id")
-        .join(F.broadcast(cells), "cell")
-        .join(F.broadcast(adc), ["sub", "cid"])
-        .filter(F.col("vec_id") != 0)
-        .groupBy("vec_id")
-        .agg(F.sum("pd").alias("pq_dist"))
-        .withColumn(
+        scored.withColumn(
             "rk",
             F.row_number().over(
                 Window.orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
@@ -672,25 +724,7 @@ def q_eval_ann_recall_pq(spark, sf):
         .filter(F.col("rk") <= 10)
         .select(F.col("vec_id").alias("a_vid"), F.col("rk").alias("a_rk"))
     )
-    exact = brute_force_topk(emb, probe_id=0, k=10).withColumn(
-        "rk",
-        F.row_number().over(
-            Window.orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        ),
-    ).select("vec_id", "rk")
-    return (
-        exact.join(F.broadcast(approx), exact.vec_id == approx.a_vid, "left")
-        .agg(
-            F.lit(0).cast("bigint").alias("probe_id"),
-            F.count("a_vid").cast("bigint").alias("hits"),
-            (F.count("a_vid") * 10).cast("bigint").alias("recall_pct"),
-            F.coalesce(
-                F.max(F.when(F.col("rk") == 1, F.col("a_rk"))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("top1_rank"),
-        )
-    )
+    return _recall_at_10(emb, approx)
 
 
 @q(
@@ -721,7 +755,6 @@ def q_sim_topk_ivfpq_refine(spark, sf):
     # recall strictly dominates the raw-PQ row (q_eval_ann_recall_pq vs
     # q_eval_ann_recall_pq_refine measure it). At 100 TB stage 2 is 50
     # point lookups; the extra read cost over raw ADC is ~50 vectors.
-    import os
     import shutil
 
     from mongo_to_parquet_spark.operators.similarity import (
@@ -730,15 +763,10 @@ def q_sim_topk_ivfpq_refine(spark, sf):
     )
 
     emb = T(spark, sf, "embeddings")
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    layout = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "ivfpq_refine", tag
-        )
-    )
+    layout = scratch_dir("ivfpq_refine", sf)
     shutil.rmtree(layout, ignore_errors=True)
     build_ivfpq_layout(emb, layout)
-    pv = _serve_probe_vec(emb, sf)
+    pv = _probe_vec(emb)
     return ivfpq_topk_refined_from_layout(
         spark, layout, emb, pv, k=10, shortlist=50, n_probe=4, exclude_id=0
     )
@@ -790,7 +818,6 @@ def q_sim_topk_ivfpq_incremental(spark, sf):
     # append ∪ original ≡ re-encode-with-same-quantizers end to end,
     # including that same-day vectors are immediately probeable. Layout
     # rebuilt from scratch each run (rmtree) so appends can't stack.
-    import os
     import shutil
 
     from mongo_to_parquet_spark.operators.similarity import (
@@ -802,16 +829,11 @@ def q_sim_topk_ivfpq_incremental(spark, sf):
     emb = T(spark, sf, "embeddings")
     base = emb.filter(F.col("vec_id") % 4 != 0)
     delta = emb.filter(F.col("vec_id") % 4 == 0)
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    layout = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "ivfpq_inc", tag
-        )
-    )
+    layout = scratch_dir("ivfpq_inc", sf)
     shutil.rmtree(layout, ignore_errors=True)
     build_ivfpq_layout(base, layout)
     ivfpq_append(delta, layout)
-    pv = _serve_probe_vec(emb, sf)
+    pv = _probe_vec(emb)
     return ivfpq_topk_from_layout(spark, layout, pv, k=10, n_probe=4, exclude_id=0)
 
 
@@ -865,49 +887,11 @@ def q_eval_ann_recall_pq_refine(spark, sf):
     # 50-row broadcast (the serving key's IN-pushdown shape is covered by
     # q_sim_topk_ivfpq_refine's own plan test).
     from mongo_to_parquet_spark.functions.vector import cosine as _cos
-    from mongo_to_parquet_spark.functions.vector import dot as _dot
-    from mongo_to_parquet_spark.operators.similarity import (
-        _assign_cells,
-        _centroids,
-        _sq8,
-        brute_force_topk,
-        pq_codes,
-    )
 
     emb = T(spark, sf, "embeddings")
-    cents = _centroids(emb, 16, "vec_id", "embedding")
-    assigned = _assign_cells(emb, F.broadcast(cents), "vec_id", "embedding")
-    codes, codebook, rng = pq_codes(emb)
-    pvec = F.broadcast(
-        emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__probe"))
-    )
-    cells = (
-        cents.crossJoin(pvec)
-        .select("cell", _dot(F.col("cvec"), F.col("__probe")).alias("ps"))
-        .orderBy(F.col("ps").desc(), F.col("cell").asc())
-        .limit(4)
-        .select("cell")
-    )
-    qdims = emb.filter(F.col("vec_id") == 0).select(
-        F.posexplode("embedding").alias("pos", "val")
-    ).select("pos", F.col("val").cast("double").alias("val"))
-    pqv = qdims.join(F.broadcast(rng), "pos").select(
-        "pos", _sq8(F.col("val")).alias("pqv")
-    )
-    pdiff = F.col("pqv") - F.col("cqv")
-    adc = (
-        codebook.join(F.broadcast(pqv), "pos")
-        .groupBy("sub", "cid")
-        .agg(F.sum((pdiff * pdiff).cast("bigint")).alias("pd"))
-    )
+    pvec, scored = _ivfpq_scored(emb)
     shortlist = (
-        codes.join(assigned.select("vec_id", "cell"), "vec_id")
-        .join(F.broadcast(cells), "cell")
-        .join(F.broadcast(adc), ["sub", "cid"])
-        .filter(F.col("vec_id") != 0)
-        .groupBy("vec_id")
-        .agg(F.sum("pd").alias("pq_dist"))
-        .orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
+        scored.orderBy(F.col("pq_dist").asc(), F.col("vec_id").asc())
         .limit(50)
         .select("vec_id")
     )
@@ -927,66 +911,12 @@ def q_eval_ann_recall_pq_refine(spark, sf):
         .filter(F.col("rk") <= 10)
         .select(F.col("vec_id").alias("a_vid"), F.col("rk").alias("a_rk"))
     )
-    exact = brute_force_topk(emb, probe_id=0, k=10).withColumn(
-        "rk",
-        F.row_number().over(
-            Window.orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        ),
-    ).select("vec_id", "rk")
-    return (
-        exact.join(F.broadcast(refined), exact.vec_id == refined.a_vid, "left")
-        .agg(
-            F.lit(0).cast("bigint").alias("probe_id"),
-            F.count("a_vid").cast("bigint").alias("hits"),
-            (F.count("a_vid") * 10).cast("bigint").alias("recall_pct"),
-            F.coalesce(
-                F.max(F.when(F.col("rk") == 1, F.col("a_rk"))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("top1_rank"),
-        )
-    )
+    return _recall_at_10(emb, refined)
 
 
 # --------------------------------------------------------- hybrid fusion ---
 _RRF_K = 60          # standard RRF dampening constant
 _RRF_LIST = 50       # depth of each retriever's candidate list
-
-
-def _bm25_scored(spark, sf):
-    """The q_bm25 scoring pipeline up to (doc_id, score) — shared by the
-    fusion query so both rankings come from the same scorer."""
-    d = T(spark, sf, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
-    s = (
-        F.log(
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        )
-        * (F.col("tf") * (k1 + F.lit(1.0)))
-        / (F.col("tf") + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.col("avgdl")))
-    ).cast("decimal(38,18)")
-    return (
-        tf.join(F.broadcast(df), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", s.alias("s"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s").cast("double"), 4).alias("score"))
-    )
 
 
 #: shared BM25-scoring CTE prefix for the fusion oracle (same CTEs as q_bm25)
@@ -1931,6 +1861,27 @@ def q_eval_ann_recall(spark, sf):
     )
 
 
+def _labeled_topk(emb):
+    """The exact cosine top-10 of every _EVAL_PROBES probe with both
+    labels attached: ``(ranked, plabels)`` = (probe_id, vec_id, sim, rk,
+    label, plabel) rows and the broadcast (probe_id, plabel) table."""
+    from mongo_to_parquet_spark.operators.similarity import brute_force_topk_batch
+
+    probes = list(_EVAL_PROBES)
+    labels = emb.select("vec_id", "label")
+    plabels = F.broadcast(
+        emb.filter(F.col("vec_id").isin(probes)).select(
+            F.col("vec_id").alias("probe_id"), F.col("label").alias("plabel")
+        )
+    )
+    ranked = (
+        brute_force_topk_batch(emb, probes, k=10)
+        .join(labels, "vec_id")
+        .join(plabels, "probe_id")
+    )
+    return ranked, plabels
+
+
 @q(
     "q_eval_ranking",
     """
@@ -1982,25 +1933,11 @@ def q_eval_ranking(spark, sf):
     # metric windows then run over k·|probes| rows — nothing. With
     # labeled eval sets in the millions, the same plan shards by
     # probe_id; relevance labels ride the broadcast probe table.
-    from mongo_to_parquet_spark.operators.similarity import brute_force_topk_batch
-
-    emb = T(spark, sf, "embeddings")
-    probes = list(_EVAL_PROBES)
-    labels = emb.select("vec_id", "label")
-    plabels = F.broadcast(
-        emb.filter(F.col("vec_id").isin(probes)).select(
-            F.col("vec_id").alias("probe_id"), F.col("label").alias("plabel")
-        )
-    )
-    ranked = (
-        brute_force_topk_batch(emb, probes, k=10)
-        .join(labels, "vec_id")
-        .join(plabels, "probe_id")
-        .select(
-            "probe_id",
-            "rk",
-            F.when(F.col("label") == F.col("plabel"), 1).otherwise(0).alias("rel"),
-        )
+    ranked, _ = _labeled_topk(T(spark, sf, "embeddings"))
+    ranked = ranked.select(
+        "probe_id",
+        "rk",
+        F.when(F.col("label") == F.col("plabel"), 1).otherwise(0).alias("rel"),
     )
     w = (
         Window.partitionBy("probe_id")
@@ -2095,16 +2032,8 @@ def q_eval_ndcg(spark, sf):
     # batch-eval shape; n_rel per probe is one broadcast-joined count
     # aggregation over (label, probe) — label cardinality keys. Metric
     # arithmetic runs over k·|probes| rows.
-    from mongo_to_parquet_spark.operators.similarity import brute_force_topk_batch
-
     emb = T(spark, sf, "embeddings")
-    probes = list(_EVAL_PROBES)
-    labels = emb.select("vec_id", "label")
-    plabels = F.broadcast(
-        emb.filter(F.col("vec_id").isin(probes)).select(
-            F.col("vec_id").alias("probe_id"), F.col("label").alias("plabel")
-        )
-    )
+    ranked, plabels = _labeled_topk(emb)
     nrel = (
         emb.select("vec_id", "label")
         .crossJoin(plabels.withColumnRenamed("probe_id", "p_id"))
@@ -2115,10 +2044,7 @@ def q_eval_ndcg(spark, sf):
     w_case = f"CASE rk {_NDCG_W_SQL} END"
     iw_case = f"CASE least(n_rel, 10) {_NDCG_IW_SQL} END"
     dcg = (
-        brute_force_topk_batch(emb, probes, k=10)
-        .join(labels, "vec_id")
-        .join(plabels, "probe_id")
-        .select(
+        ranked.select(
             "probe_id",
             F.when(F.col("label") == F.col("plabel"), 1).otherwise(0).alias("rel"),
             F.expr(w_case).alias("w"),
@@ -2183,21 +2109,9 @@ def q_eval_mrr(spark, sf):
     # probes, WindowGroupLimit keeps 10 per probe), then two tiny
     # aggregates over k*|probes| rows. With labeled eval sets in the
     # millions the same plan shards by probe_id.
-    from mongo_to_parquet_spark.operators.similarity import brute_force_topk_batch
-
-    emb = T(spark, sf, "embeddings")
-    probes = list(_EVAL_PROBES)
-    labels = emb.select("vec_id", "label")
-    plabels = F.broadcast(
-        emb.filter(F.col("vec_id").isin(probes)).select(
-            F.col("vec_id").alias("probe_id"), F.col("label").alias("plabel")
-        )
-    )
+    ranked, _ = _labeled_topk(T(spark, sf, "embeddings"))
     frr = (
-        brute_force_topk_batch(emb, probes, k=10)
-        .join(labels, "vec_id")
-        .join(plabels, "probe_id")
-        .groupBy("probe_id")
+        ranked.groupBy("probe_id")
         .agg(
             F.coalesce(
                 F.min(F.when(F.col("label") == F.col("plabel"), F.col("rk"))),
@@ -2466,24 +2380,45 @@ def q_eval_auc(spark, sf):
     )
 
 
+def _probe_vec(emb) -> list[float]:
+    """vec_id 0's embedding as a list of Python floats (the ANN keys' probe)."""
+    return [
+        float(x)
+        for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
+    ]
+
+
 #: bench scaffolding, not serving work: a real serving layer RECEIVES the
 #: probe vector with the request — fetching vec 0 from the corpus each rep
 #: (a filter-pushdown job) priced the harness, not the serve. Memoized per
-#: corpus dir.
+#: corpus dir, so only the bench-only serve keys below may read it: a
+#: declared key must see the corpus as it is now.
 _SERVE_PROBE_CACHE: dict[str, list[float]] = {}
 
 
 def _serve_probe_vec(emb, sf: str) -> list[float]:
     pv = _SERVE_PROBE_CACHE.get(sf)
     if pv is None:
-        pv = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .head()[0]
-        ]
-        _SERVE_PROBE_CACHE[sf] = pv
+        pv = _SERVE_PROBE_CACHE[sf] = _probe_vec(emb)
     return pv
+
+
+def _serve_layout(emb, sf: str) -> str:
+    """The serve keys' shared IVF×PQ layout, built on first use only. The
+    session writes no _SUCCESS markers; "layout exists" = the last
+    artifact build_ivfpq_layout writes (rng/) has parquet files in it."""
+    import os
+
+    from mongo_to_parquet_spark.operators.similarity import build_ivfpq_layout
+
+    layout = scratch_dir("ivfpq_serve", sf)
+    rng_dir = os.path.join(layout, "rng")
+    if not (
+        os.path.isdir(rng_dir)
+        and any(f.endswith(".parquet") for f in os.listdir(rng_dir))
+    ):
+        build_ivfpq_layout(emb, layout)
+    return layout
 
 
 def q_sim_topk_ivfpq_serve(spark, sf):
@@ -2494,28 +2429,10 @@ def q_sim_topk_ivfpq_serve(spark, sf):
     # read → partition-pruned code scan → broadcast integer ADC. This is
     # the latency number an ANN serving layer is judged on; the declared
     # key's time is build+write+serve.
-    import os
-
-    from mongo_to_parquet_spark.operators.similarity import (
-        build_ivfpq_layout,
-        ivfpq_topk_from_layout,
-    )
+    from mongo_to_parquet_spark.operators.similarity import ivfpq_topk_from_layout
 
     emb = T(spark, sf, "embeddings")
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    layout = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "ivfpq_serve", tag
-        )
-    )
-    # the session writes no _SUCCESS markers; "layout exists" = the last
-    # artifact build_ivfpq_layout writes (rng/) has parquet files in it
-    rng_dir = os.path.join(layout, "rng")
-    if not (
-        os.path.isdir(rng_dir)
-        and any(f.endswith(".parquet") for f in os.listdir(rng_dir))
-    ):
-        build_ivfpq_layout(emb, layout)
+    layout = _serve_layout(emb, sf)
     pv = _serve_probe_vec(emb, sf)
     return ivfpq_topk_from_layout(spark, layout, pv, k=10, n_probe=4, exclude_id=0)
 
@@ -2526,26 +2443,12 @@ def q_sim_topk_ivfpq_refine_serve(spark, sf):
     # refined query: ADC shortlist + 50-vector IN-pushdown exact re-rank.
     # The delta over q_sim_topk_ivfpq_serve IS the published price of the
     # recall jump (30→80% at sf0.01).
-    import os
-
     from mongo_to_parquet_spark.operators.similarity import (
-        build_ivfpq_layout,
         ivfpq_topk_refined_from_layout,
     )
 
     emb = T(spark, sf, "embeddings")
-    tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    layout = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "ivfpq_serve", tag
-        )
-    )
-    rng_dir = os.path.join(layout, "rng")
-    if not (
-        os.path.isdir(rng_dir)
-        and any(f.endswith(".parquet") for f in os.listdir(rng_dir))
-    ):
-        build_ivfpq_layout(emb, layout)
+    layout = _serve_layout(emb, sf)
     pv = _serve_probe_vec(emb, sf)
     return ivfpq_topk_refined_from_layout(
         spark, layout, emb, pv, k=10, shortlist=50, n_probe=4, exclude_id=0
@@ -3126,13 +3029,7 @@ def q_bm25_rm3(spark, sf):
     # broadcast relation into the token scan. Two scans total — the
     # PRF trade every production system accepts — and no all-corpus
     # window anywhere.
-    d = T(spark, sf, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
+    toks, dl, stats = _bm25_corpus(spark, sf)
     fb = (
         _bm25_scored(spark, sf)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -3157,25 +3054,8 @@ def q_bm25_rm3(spark, sf):
         .groupBy("doc_id", "tok", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
-    s = (
-        F.log(
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        )
-        * (F.col("tf") * (k1 + F.lit(1.0)))
-        / (F.col("tf") + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.col("avgdl")))
-        * F.col("w")
-    ).cast("decimal(38,18)")
     return (
-        tf.join(F.broadcast(df), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", s.alias("s"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s").cast("double"), 4).alias("score"))
+        _bm25_sum(tf, dl, stats, F.col("w"))
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(20)
     )

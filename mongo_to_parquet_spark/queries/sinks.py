@@ -14,7 +14,7 @@ import os
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions.layout import zorder_oracle_expr, zorder_value
-from mongo_to_parquet_spark.sources.catalog import load_table as T
+from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.sources.export import export_partitioned
 from mongo_to_parquet_spark.queries._registry import make_registry
 
@@ -31,10 +31,7 @@ QUERIES, ORACLE, q = make_registry()
     """,
 )
 def q_sink_partitioned(spark, sf):
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
-    out = os.path.abspath(
-        os.path.join(scratch, "sink_partitioned", os.path.basename(sf.rstrip("/")))
-    )
+    out = scratch_dir("sink_partitioned", sf)
     export_partitioned(T(spark, sf, "orders"), out, date_field="o_orderdate")
     back = spark.read.parquet(out)
     return (
@@ -67,10 +64,7 @@ def q_sink_formats(spark, sf):
     # table proves every format preserves doubles (Java shortest-repr
     # round-trip) and ms timestamps end-to-end. Decimal-cast before SUM so
     # the result is addition-order-free.
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
-    outroot = os.path.abspath(
-        os.path.join(scratch, "sink_formats", os.path.basename(sf.rstrip("/")))
-    )
+    outroot = scratch_dir("sink_formats", sf)
     o = T(spark, sf, "orders")
     parts = None
     for fmt in ("csv", "json", "orc", "parquet"):
@@ -131,10 +125,7 @@ def q_mongo_export(spark, sf):
     )
     from mongo_to_parquet_spark.sources.mongo import ExportJob
 
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
-    root = os.path.abspath(
-        os.path.join(scratch, "mongo_export", os.path.basename(sf.rstrip("/")))
-    )
+    root = scratch_dir("mongo_export", sf)
     os.makedirs(root, exist_ok=True)
     dump = os.path.join(root, "orders.jsonl")
 
@@ -264,9 +255,9 @@ def q_join_bucketed(spark, sf):
     # unbucketed source — bucketing is pure layout, rows are identical.
     from mongo_to_parquet_spark.sources.export import export_bucketed
 
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
+    outroot = scratch_dir("bucketed", sf)
+    # table names are SQL identifiers: no dots
     tag = os.path.basename(sf.rstrip("/")).replace(".", "_")
-    outroot = os.path.abspath(os.path.join(scratch, "bucketed", tag))
     names = {}
     for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         name = f"bjoin_{tag}_{tbl}"
@@ -323,10 +314,7 @@ def q_schema_evolution(spark, sf):
     # path stays one scan + one map-combined aggregate; no rewrite of
     # old files is ever needed to add a column, which at 100 TB is the
     # difference between a metadata tick and a full-corpus migration.
-    scratch = os.path.join(os.path.dirname(__file__), "..", "..", "_scratch")
-    outroot = os.path.abspath(
-        os.path.join(scratch, "schema_evo", os.path.basename(sf.rstrip("/")))
-    )
+    outroot = scratch_dir("schema_evo", sf)
     o = T(spark, sf, "orders")
     cut = F.lit("1997-01-01").cast("timestamp")
     o.filter(F.col("o_orderdate") < cut).select(
@@ -387,12 +375,7 @@ def q_join_dpp(spark, sf):
     # a foldable literal; the oracle collapses dim+join to the equivalent
     # static predicate on the unpartitioned source table. Money sums in
     # exact cents (partition-ordering-free).
-    outroot = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "dpp",
-            os.path.basename(sf.rstrip("/")).replace(".", "_"),
-        )
-    )
+    outroot = scratch_dir("dpp", sf)
     o = T(spark, sf, "orders")
     fact_path = os.path.join(outroot, "orders_by_year")
     o.withColumn("year", F.year("o_orderdate")).write.mode(
@@ -490,12 +473,7 @@ def q_export_fixity(spark, sf):
         )
 
     o = T(spark, sf, "orders")
-    outroot = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "fixity",
-            os.path.basename(sf.rstrip("/")).replace(".", "_"),
-        )
-    )
+    outroot = scratch_dir("fixity", sf)
     o.withColumn("year", F.year("o_orderdate")).write.mode(
         "overwrite"
     ).partitionBy("year").parquet(outroot)

@@ -16,6 +16,8 @@ tests/test_catalog.py).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +49,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
+
+
+def scratch_dir(store: str, sf_dir: str) -> str:
+    """Where a key keeps what it writes for a corpus dir:
+    ``_scratch/<store>/<basename of sf_dir>`` at the repo root, so a store
+    built from one fixture never serves another."""
+    return os.path.abspath(
+        os.path.join(
+            os.path.dirname(__file__), "..", "..", "_scratch", store,
+            os.path.basename(sf_dir.rstrip("/")),
+        )
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.session import apply_runtime_confs
+from mongo_to_parquet_spark.sources.catalog import scratch_dir
 
 
 def replay_events(spark: SparkSession, sf_dir: str, n_files: int = 8) -> DataFrame:
@@ -46,12 +47,7 @@ def replay_events(spark: SparkSession, sf_dir: str, n_files: int = 8) -> DataFra
 
     apply_runtime_confs(spark)
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    replay_dir = os.path.abspath(
-        os.path.join(
-            os.path.dirname(__file__), "..", "..", "_scratch", "stream_replay",
-            os.path.basename(sf_dir.rstrip("/")),
-        )
-    )
+    replay_dir = scratch_dir("stream_replay", sf_dir)
     if not os.path.isdir(replay_dir):
         sliced = batch.withColumn(
             "__slice", F.ntile(n_files).over(Window.orderBy("ts", "event_id"))

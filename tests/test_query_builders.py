@@ -1,0 +1,104 @@
+"""Oracle pins for the keys that share one query builder.
+
+Several declared keys are thin tails over a shared private builder in
+queries/retrieval.py or queries/llm.py (the BM25 scorer, the in-memory
+IVF×PQ route, the labelled eval top-k, the winnowing fingerprints, the
+bitext margin). An edit to a builder moves every key that calls it, so
+each of those keys is checked here against its DuckDB oracle with the
+same comparison tools/parity.py applies.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+
+from parity import compare, duck_connection  # noqa: E402
+
+from mongo_to_parquet_spark.queries import oracle_sql, queries  # noqa: E402
+
+QS = queries()
+OS = oracle_sql()
+
+BUILDER_KEYS = (
+    # _bm25_corpus / _bm25_sum / _bm25_scored
+    "q_bm25",
+    "q_hybrid_rrf",
+    "q_bm25_rm3",
+    # _ivfpq_scored / _recall_at_10
+    "q_eval_ann_recall_pq",
+    "q_eval_ann_recall_pq_refine",
+    # _labeled_topk
+    "q_eval_ranking",
+    "q_eval_ndcg",
+    "q_eval_mrr",
+    # _winnow_fp
+    "q_text_winnow",
+    "q_dedup_winnow",
+    # _bitext_margin
+    "q_mine_bitext",
+    "q_mine_bitext_ivf",
+)
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    return duck_connection(sf_dir)
+
+
+@pytest.mark.parametrize("key", BUILDER_KEYS)
+def test_shared_builder_key_matches_oracle(spark, sf_dir, duck, key):
+    got = QS[key](spark, sf_dir).toPandas()
+    spark.catalog.clearCache()  # the bitext keys persist their sims
+    want = duck.execute(OS[key]).df()
+    assert len(got) > 0, key
+    assert compare(got, want) is None, (key, compare(got, want))
+
+
+def _write_embeddings(d, seed):
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(seed)
+    n = 200
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array(
+                    [rng.rand(8).astype("float32") for _ in range(n)],
+                    pa.list_(pa.float32()),
+                ),
+                "label": pa.array([i % 5 for i in range(n)], pa.int32()),
+            }
+        ),
+        f"{d}/embeddings.parquet",
+    )
+
+
+def test_declared_ivfpq_keys_serve_the_current_probe(spark, tmp_path):
+    """The declared IVF×PQ keys rebuild their layout on every call, so
+    they must also read the probe vector on every call: after a first run
+    on a corpus dir, new embeddings written to that dir must still match
+    the oracle (only the bench-only *_serve keys may memoize the probe)."""
+    import duckdb
+
+    d = str(tmp_path)
+    _write_embeddings(d, seed=1)
+    QS["q_sim_topk_ivfpq"](spark, d).collect()
+    _write_embeddings(d, seed=2)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet'")
+    for key in (
+        "q_sim_topk_ivfpq",
+        "q_sim_topk_ivfpq_refine",
+        "q_sim_topk_ivfpq_incremental",
+    ):
+        got = QS[key](spark, d).toPandas()
+        want = con.execute(OS[key]).df()
+        assert compare(got, want) is None, (key, compare(got, want))

@@ -7,11 +7,12 @@ validates the COMPOSED suite — cross-query cache/GC interactions, heap
 pressure from one query's spill landing on the next, accumulated JVM
 state — the things per-key probes structurally cannot see.
 
-Growth model = tools/scaletest.py's (disjoint key spaces via
-KEY_STRIDE offsets; documents get per-replica token PREFIXES so
-near-dup/gram density stays constant — the lesson-15 invariant), with
-``part`` added to the offset tables so the TPC-H headline rows join
-replicated facts against a matching catalog.
+The ×10 replica is tools/scaletest.py's (``materialize`` over every
+table in its OFFSETS: disjoint key spaces via KEY_STRIDE offsets, with
+``part`` offset so the TPC-H headline rows join replicated facts against
+a matching catalog; documents get per-replica token PREFIXES so
+near-dup/gram density stays constant — the lesson-15 invariant), shared
+with scaletest's own ×10 probes under _scratch/scaletest/m10.
 
 Protocol: one warmup pass of every key at sf0.001 (codegen/JIT), then
 ONE timed pass per (key, scale) — single-rep because the deliverable is
@@ -33,91 +34,20 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from mongo_to_parquet_spark import get_spark  # noqa: E402
 from mongo_to_parquet_spark.queries import bench_only, queries  # noqa: E402
+from scaletest import (  # noqa: E402  (tools/scaletest.py)
+    BASE,
+    OFFSETS,
+    WARM,
+    materialize,
+    shuffle_bytes,
+)
 
-BASE = "/root/testdata/sf0.1"
-WARM = "/root/testdata/sf0.001"
 OUT = os.path.abspath(
     os.path.join(os.path.dirname(__file__), "..", "_scratch", "headline_m10")
 )
-KEY_STRIDE = 10**9
 MULT = 10
-
-OFFSETS = {
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "documents": ["doc_id"],
-    "events": ["user_id", "event_id"],
-    "embeddings": ["vec_id"],
-}
-STATIC = ["nation", "region"]
-
-
-def shuffle_bytes(spark):
-    """Cumulative shuffle-write bytes from the UI REST API, or None.
-
-    None (not a sentinel int) on any failure: a -1 sentinel subtracted
-    from a later success produced inflated deltas indistinguishable from
-    real measurements in the results JSON (round-8 ADVICE finding).
-    """
-    import urllib.request
-
-    sc = spark.sparkContext
-    ui = sc.uiWebUrl
-    if not ui:
-        return None
-    url = f"{ui}/api/v1/applications/{sc.applicationId}/executors"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            rows = json.loads(r.read())
-        return sum(e.get("totalShuffleWrite", 0) for e in rows)
-    except Exception:
-        return None
-
-
-def materialize(spark) -> str:
-    for t in STATIC:
-        dest = os.path.join(OUT, f"{t}.parquet")
-        if not os.path.exists(dest):
-            os.makedirs(OUT, exist_ok=True)
-            src = f"{BASE}/{t}.parquet"
-            if os.path.isdir(src):
-                shutil.copytree(src, dest)
-            else:
-                shutil.copy2(src, dest)
-    for t, cols in OFFSETS.items():
-        dest = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(os.path.join(dest, "_SUCCESS")):
-            continue
-        base = spark.read.parquet(f"{BASE}/{t}.parquet")
-        reps = []
-        for i in range(MULT):
-            r = base
-            for c in cols:
-                r = r.withColumn(c, F.col(c) + F.lit(i * KEY_STRIDE))
-            if t == "documents" and i > 0:
-                r = r.withColumn(
-                    "text",
-                    F.array_join(
-                        F.transform(
-                            F.split("text", " "),
-                            lambda tok: F.concat(F.lit(f"r{i}·"), tok),
-                        ),
-                        " ",
-                    ),
-                )
-            reps.append(r)
-        u = reps[0]
-        for r in reps[1:]:
-            u = u.unionByName(r)
-        u.write.mode("overwrite").parquet(dest)
-    return OUT
 
 
 def main() -> None:
@@ -136,7 +66,7 @@ def main() -> None:
     from bench import HEADLINE  # noqa: E402  (repo-root bench.py)
 
     qs = {**queries(), **bench_only()}
-    m10 = materialize(spark)
+    m10 = materialize(spark, MULT, list(OFFSETS))
     results: dict[str, dict] = {}
     for key in HEADLINE:
         qs[key](spark, WARM).write.format("noop").mode("overwrite").save()

@@ -142,6 +142,7 @@ OFFSETS = {
     "orders": ["o_orderkey", "o_custkey"],
     "customer": ["c_custkey"],
     "supplier": ["s_suppkey"],
+    "part": ["p_partkey"],
     "documents": ["doc_id"],
     "events": ["user_id", "event_id"],
     "embeddings": ["vec_id"],
@@ -152,28 +153,31 @@ OFFSETS = {
 STATIC = ["nation", "region"]
 
 
-def shuffle_bytes(spark) -> int:
+def shuffle_bytes(spark) -> int | None:
     """Executor-cumulative shuffle write bytes via the UI REST API.
 
     The counter never resets within an app, so a before/after delta
-    isolates one run's shuffle volume. Returns -1 if the UI is off.
+    isolates one run's shuffle volume. None (not a sentinel int) when the
+    UI is off or the read fails: a -1 sentinel subtracted from a later
+    success produced inflated deltas indistinguishable from real ones.
     """
     sc = spark.sparkContext
     ui = sc.uiWebUrl
     if not ui:
-        return -1
+        return None
     url = f"{ui}/api/v1/applications/{sc.applicationId}/executors"
     try:
         with urllib.request.urlopen(url, timeout=10) as r:
             rows = json.loads(r.read())
         return sum(e.get("totalShuffleWrite", 0) for e in rows)
     except Exception:
-        return -1
+        return None
 
 
-def materialize(spark, mult: int) -> str:
+def materialize(spark, mult: int, tables) -> str:
+    """The ×``mult`` replica of BASE's ``tables`` (plus STATIC dims) under
+    SCRATCH/m<mult>; a table already written there is reused."""
     out = os.path.join(SCRATCH, f"m{mult}")
-    tables = sorted({t for ts in PROBES.values() for t in ts})
     for t in STATIC:
         src = f"{BASE}/{t}.parquet"
         dest = os.path.join(out, f"{t}.parquet")
@@ -238,7 +242,8 @@ def main() -> None:
         int(x)
         for x in os.environ.get("SCALETEST_MULTS", "1,2,5,10").split(",")
     ]
-    dirs = {m: materialize(spark, m) if m > 1 else BASE for m in mults}
+    tables = sorted({t for ts in PROBES.values() for t in ts})
+    dirs = {m: materialize(spark, m, tables) if m > 1 else BASE for m in mults}
 
     for key in probes:
         qs[key](spark, WARM).write.format("noop").mode("overwrite").save()
@@ -248,7 +253,7 @@ def main() -> None:
         row = {}
         for m in mults:
             best = float("inf")
-            s0 = s1 = -1
+            s0 = s1 = None
             for rep in range(3):
                 if rep == 2:
                     s0 = shuffle_bytes(spark)
@@ -259,7 +264,7 @@ def main() -> None:
                     s1 = shuffle_bytes(spark)
             spark.catalog.clearCache()
             row[f"x{m}"] = round(best, 3)
-            if s0 >= 0 and s1 >= 0:
+            if s0 is not None and s1 is not None:
                 row[f"shuffle_x{m}"] = s1 - s0
         base = row["x1"]
         row["linearity"] = {
