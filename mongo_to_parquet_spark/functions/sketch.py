@@ -32,7 +32,7 @@ engines take the same CASE branch.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: md5-prefix hash space (2^32) — 8 hex chars
@@ -139,3 +139,31 @@ def cms_bucket_sql(tok_expr: str, i_expr: str, w: int = CMS_W) -> str:
         f"CAST(concat('0x', substr(md5(concat('cms', CAST({i_expr} AS VARCHAR), "
         f"':', {tok_expr})), 1, 8)) AS BIGINT) % {w}"
     )
+
+
+# ------------------------------------------------------- fixity digest -----
+
+#: the fixity checksum modulus, 2^61 - 1 (q_export_fixity's oracle spells
+#: the same literal)
+FIXITY_PRIME = 2305843009213693951
+
+
+def fixity_batch(df: DataFrame, part_col: Column, payload_col: Column) -> DataFrame:
+    """Per-partition (part, n_rows, vsum) digest of ``df`` — shared by the
+    q_export_fixity audit (queries/sinks.py) and the stream fold
+    (streaming/sketches.stream_fixity): every row contributes a 48-bit
+    md5-prefix integer of its payload (Spark ``conv(hex,16,10)`` ≡ DuckDB
+    ``CAST('0x'||hex)``); counts and sums are additive and order-
+    insensitive, so digests merge across micro-batches, partitions and
+    replicas by plain addition. Sums stay UNREDUCED (DECIMAL(38,0)) so
+    merging remains linear; :func:`fixity_checksum` reduces them."""
+    v = F.conv(F.substring(F.md5(payload_col), 1, 12), 16, 10).cast("bigint")
+    return df.groupBy(part_col.alias("part")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum(v.cast("decimal(38,0)")).cast("decimal(38,0)").alias("vsum"),
+    )
+
+
+def fixity_checksum(vsum: Column) -> Column:
+    """The wire checksum of a digest sum: ``vsum mod 2^61-1`` as BIGINT."""
+    return (vsum % FIXITY_PRIME).cast("bigint")

@@ -270,7 +270,8 @@ def stream_refresh_agg_state(
 def start_foreach_batch(stream: DataFrame, checkpoint_dir: str, apply_batch):
     """Start ``apply_batch`` as the foreachBatch sink of ``stream`` under
     an availableNow trigger (drain what exists, then stop) — the shared
-    starter of the versioned streaming sinks."""
+    starter of the versioned streaming sinks and of the ledger folds
+    (streaming/state.start_ledger_stream)."""
     return (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)

@@ -646,10 +646,22 @@ def _ivfpq_scored(emb):
     return pvec, scored
 
 
+def _recall_aggs():
+    """The recall@10 aggregates over an exact-top-10 (rk) LEFT JOIN
+    approx-top-10 (a_vid, a_rk) overlap: hits, recall % and the rank the
+    true top-1 landed at (0 = missed)."""
+    return [
+        F.count("a_vid").cast("bigint").alias("hits"),
+        (F.count("a_vid") * 10).cast("bigint").alias("recall_pct"),
+        F.coalesce(F.max(F.when(F.col("rk") == 1, F.col("a_rk"))), F.lit(0))
+        .cast("bigint")
+        .alias("top1_rank"),
+    ]
+
+
 def _recall_at_10(emb, approx):
     """recall@10 of ``approx`` (a_vid, a_rk) against the exact cosine
-    top-10 of probe vec_id 0: one row of hits, recall % and the rank the
-    true top-1 landed at (0 = missed)."""
+    top-10 of probe vec_id 0: one row of probe_id and :func:`_recall_aggs`."""
     from mongo_to_parquet_spark.operators.similarity import brute_force_topk
 
     exact = brute_force_topk(emb, probe_id=0, k=10).withColumn(
@@ -660,16 +672,7 @@ def _recall_at_10(emb, approx):
     ).select("vec_id", "rk")
     return (
         exact.join(F.broadcast(approx), exact.vec_id == approx.a_vid, "left")
-        .agg(
-            F.lit(0).cast("bigint").alias("probe_id"),
-            F.count("a_vid").cast("bigint").alias("hits"),
-            (F.count("a_vid") * 10).cast("bigint").alias("recall_pct"),
-            F.coalesce(
-                F.max(F.when(F.col("rk") == 1, F.col("a_rk"))), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("top1_rank"),
-        )
+        .agg(F.lit(0).cast("bigint").alias("probe_id"), *_recall_aggs())
     )
 
 
@@ -1850,15 +1853,7 @@ def q_eval_ann_recall(spark, sf):
         (F.col("probe_id") == F.col("a_pid")) & (F.col("vec_id") == F.col("a_vid")),
         "left",
     )
-    return j.groupBy("probe_id").agg(
-        F.count("a_vid").cast("bigint").alias("hits"),
-        (F.count("a_vid") * 10).cast("bigint").alias("recall_pct"),
-        F.coalesce(
-            F.max(F.when(F.col("rk") == 1, F.col("a_rk"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("top1_rank"),
-    )
+    return j.groupBy("probe_id").agg(*_recall_aggs())
 
 
 def _labeled_topk(emb):

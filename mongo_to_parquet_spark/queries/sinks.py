@@ -14,6 +14,7 @@ import os
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions.layout import zorder_oracle_expr, zorder_value
+from mongo_to_parquet_spark.functions.sketch import fixity_batch, fixity_checksum
 from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.sources.export import export_partitioned
 from mongo_to_parquet_spark.queries._registry import make_registry
@@ -436,11 +437,11 @@ def q_join_dpp(spark, sf):
 def q_export_fixity(spark, sf):
     # fixity audit of a partitioned export — "is the copy byte-complete?"
     # without sorting or row-aligning 100 TB: every row contributes a
-    # 48-bit md5-prefix integer (Spark conv(hex,16,10) ≡ DuckDB
-    # CAST('0x'||hex)), summed per year partition in exact integer space
-    # (DECIMAL(38,0)/HUGEINT) and reduced mod 2^61-1 — an ORDER-
-    # INSENSITIVE checksum, so source and export can be scanned in any
-    # partition order/parallelism. The engine audits its own export
+    # 48-bit md5-prefix integer (functions/sketch.fixity_batch; Spark
+    # conv(hex,16,10) ≡ DuckDB CAST('0x'||hex)), summed per year
+    # partition in exact integer space (DECIMAL(38,0)/HUGEINT) and
+    # reduced mod 2^61-1 — an ORDER-INSENSITIVE checksum, so source and
+    # export can be scanned in any partition order/parallelism. The engine audits its own export
     # (write → read back → compare per-partition count + checksum); the
     # oracle recomputes the SOURCE digest independently with export_match
     # pinned TRUE — a corrupt or lossy export flips the engine's flag (or
@@ -458,18 +459,12 @@ def q_export_fixity(spark, sf):
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").cast("string"),
         F.col("o_orderpriority"),
     )
-    v = F.conv(F.substring(F.md5(payload), 1, 12), 16, 10).cast("bigint")
-    prime = F.lit(2305843009213693951)
 
     def digest(df, yr_col):
-        return (
-            df.groupBy(yr_col.cast("bigint").alias("yr"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                (F.sum(v.cast("decimal(38,0)")) % prime)
-                .cast("bigint")
-                .alias("checksum"),
-            )
+        return fixity_batch(df, yr_col.cast("bigint"), payload).select(
+            F.col("part").alias("yr"),
+            "n_rows",
+            fixity_checksum(F.col("vsum")).alias("checksum"),
         )
 
     o = T(spark, sf, "orders")

@@ -20,6 +20,43 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _event_pairs(events: DataFrame, band_minutes: int, watermark: str, how: str):
+    """Same-user pairs with 0 < t2 − t1 ≤ band as a stream-stream ``how``
+    join, watermarks on BOTH sides (required for state eviction).
+    Output: id1, id2, delta_us."""
+    a = (
+        events.select("event_id", "user_id", "ts")
+        .withWatermark("ts", watermark)
+        .alias("a")
+    )
+    b = (
+        events.select(
+            F.col("event_id").alias("event_id_b"),
+            F.col("user_id").alias("user_id_b"),
+            F.col("ts").alias("ts_b"),
+        )
+        .withWatermark("ts_b", watermark)
+        .alias("b")
+    )
+    band = F.expr(f"INTERVAL {band_minutes} MINUTES")
+    return (
+        a.join(
+            b,
+            (F.col("a.user_id") == F.col("b.user_id_b"))
+            & (F.col("b.ts_b") > F.col("a.ts"))
+            & (F.col("b.ts_b") <= F.col("a.ts") + band),
+            how,
+        )
+        .select(
+            F.col("a.event_id").alias("id1"),
+            F.col("b.event_id_b").alias("id2"),
+            (F.unix_micros(F.col("b.ts_b")) - F.unix_micros(F.col("a.ts"))).alias(
+                "delta_us"
+            ),
+        )
+    )
+
+
 def stream_event_pairs_outer(
     events: DataFrame, band_minutes: int = 5, watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -32,37 +69,7 @@ def stream_event_pairs_outer(
     drives this with a bounded replay and checks both the paired set and
     the null-padded remainder.
     """
-    a = (
-        events.select("event_id", "user_id", "ts")
-        .withWatermark("ts", watermark)
-        .alias("a")
-    )
-    b = (
-        events.select(
-            F.col("event_id").alias("event_id_b"),
-            F.col("user_id").alias("user_id_b"),
-            F.col("ts").alias("ts_b"),
-        )
-        .withWatermark("ts_b", watermark)
-        .alias("b")
-    )
-    band = F.expr(f"INTERVAL {band_minutes} MINUTES")
-    return (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id_b"))
-            & (F.col("b.ts_b") > F.col("a.ts"))
-            & (F.col("b.ts_b") <= F.col("a.ts") + band),
-            "left_outer",
-        )
-        .select(
-            F.col("a.event_id").alias("id1"),
-            F.col("b.event_id_b").alias("id2"),
-            (F.unix_micros(F.col("b.ts_b")) - F.unix_micros(F.col("a.ts"))).alias(
-                "delta_us"
-            ),
-        )
-    )
+    return _event_pairs(events, band_minutes, watermark, "left_outer")
 
 
 def stream_event_pairs(
@@ -71,36 +78,7 @@ def stream_event_pairs(
     """Ordered same-user pairs with 0 < t2 − t1 ≤ band, as a stream-stream
     inner join with watermarks on BOTH sides (required for state
     eviction). Output: id1, id2, delta_us."""
-    a = (
-        events.select("event_id", "user_id", "ts")
-        .withWatermark("ts", watermark)
-        .alias("a")
-    )
-    b = (
-        events.select(
-            F.col("event_id").alias("event_id_b"),
-            F.col("user_id").alias("user_id_b"),
-            F.col("ts").alias("ts_b"),
-        )
-        .withWatermark("ts_b", watermark)
-        .alias("b")
-    )
-    band = F.expr(f"INTERVAL {band_minutes} MINUTES")
-    return (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id_b"))
-            & (F.col("b.ts_b") > F.col("a.ts"))
-            & (F.col("b.ts_b") <= F.col("a.ts") + band),
-        )
-        .select(
-            F.col("a.event_id").alias("id1"),
-            F.col("b.event_id_b").alias("id2"),
-            (F.unix_micros(F.col("b.ts_b")) - F.unix_micros(F.col("a.ts"))).alias(
-                "delta_us"
-            ),
-        )
-    )
+    return _event_pairs(events, band_minutes, watermark, "inner")
 
 
 def stream_interval_overlap(

@@ -1,69 +1,100 @@
-"""Streaming sketch maintenance — mergeable KMV distinct-count state.
+"""Streaming sketch maintenance — mergeable sketches folded on the ledger.
 
-The KMV twin queries (queries/relational.py, functions/sketch.py) argue
-that k-minimum-values sketches are MERGEABLE: union the retained hashes,
-re-truncate to the k smallest, re-estimate. This module is that argument
-made operational: a ``foreachBatch`` fold maintains the k-smallest
-distinct-hash state across micro-batches, and because set-union +
-truncate is associative, commutative AND idempotent, the folded state is
-bit-identical to the batch sketch over the same data — for ANY batch
-partitioning, and even under batch REPLAY (re-folding a batch changes
-nothing, so exactly-once comes from the algebra, not from bookkeeping;
-contrast operators/incremental.py, whose additive folds need the
-recorded-batch-id guard).
+The sketch twins (queries/relational.py, functions/sketch.py) argue that
+KMV, count-min, histogram, Misra-Gries and fixity summaries are
+MERGEABLE: the state after batch ``b`` is a merge of the state after
+``b-1`` with batch ``b``'s own summary, so the folded state equals the
+batch sketch over the same data for ANY batch partitioning. This module
+makes that operational with one fold, :func:`_start_fold`: batch ``bid``
+reads each sub-state's newest committed version (``read_latest``), writes
+``merge(batch, prior)`` to ``<sub>/batch=<bid>``, and commits through the
+ledger marker of ``streaming/state.start_ledger_stream`` — the same store
+as every other fold in this package. The marker is published after ALL
+sub-states of a batch are written, so a multi-sketch batch is in every
+sketch or in none; a torn batch (dirs without a marker) is invisible to
+the readers and recomputed on replay; a committed batch id is skipped, so
+the additive folds (CMS, histogram, MG, fixity) never double-count. After
+each commit the vacuum drops every older version of every sub-state.
 
-State layout: ``state_dir/current`` holds ≤k (h BIGINT) rows as parquet.
-Each batch writes the merged-truncated set to a tmp dir (materializing
-it BEFORE the old state is touched), then swaps via two renames. A
-crash can land between the renames (no ``current``), so every reader
-first runs :func:`_recover`, which restores the newest COMMITTED state:
-``_tmp`` when its parquet _SUCCESS marker proves the merge completed,
-else ``_old`` — a crash therefore never loses folded batches and never
-exposes a partial write.
+Ledger contract: a state dir belongs to one checkpoint; a rerun under a
+fresh checkpoint skips the batch ids that are already committed.
 
-Scale: per batch the stream side contributes its distinct hashes
-(partial-aggregated map-side); the state side is k rows. The fold's
-shuffle is bounded by the batch's distinct count, the state by k —
-a distinct-count rollup over an unbounded stream in O(k) storage.
+Scale: per batch the shuffle carries the batch's own summary (distinct
+hashes, d·w CMS cells, bins, distinct items, partitions) plus the prior
+state; storage is one version of each sketch — O(k + d·w + bins) for any
+stream length.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions import sketch as _sk
+from mongo_to_parquet_spark.streaming import state as st
+
+_KMV = "h bigint"
+_CMS = "i int, b bigint, c bigint"
+_HIST = "bin bigint, c bigint"
+_MG = "item string, c bigint"
+_META = "n bigint"
+_MULTI = {"kmv": _KMV, "cms": _CMS, "hist": _HIST}
+#: an empty digest state reads with BIGINT parts (the stream's own part
+#: type is only known to the stream)
+_DIGESTS = "part bigint, n_rows bigint, vsum decimal(38,0)"
 
 
-def _state_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "current")
+def _start_fold(
+    stream_df: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    subs: dict,
+    merge: Callable[[DataFrame, dict[str, DataFrame]], dict[str, DataFrame]],
+):
+    """Start the ledger fold of every sketch here: ``subs`` maps each
+    sub-state to its schema, ``merge(batch_df, prior)`` maps the batch and
+    the ``{sub: newest committed state}`` frames to ``{sub: new state}``.
+    Returns the started StreamingQuery (availableNow trigger — callers
+    drain with ``awaitTermination``)."""
+    spark = stream_df.sparkSession
+
+    def body(batch_df: DataFrame, bid: int) -> None:
+        prior = {
+            sub: st.read_latest(spark, state_dir, sub, schema, below=bid)
+            for sub, schema in subs.items()
+        }
+        for sub, df in merge(batch_df, prior).items():
+            df.write.mode("overwrite").parquet(
+                os.path.join(state_dir, sub, f"batch={bid}")
+            )
+
+    return st.start_ledger_stream(
+        stream_df,
+        state_dir,
+        checkpoint_dir,
+        body,
+        after_commit=lambda: st.vacuum(state_dir, [], swap_subs=list(subs)),
+    )
 
 
-def _recover(state_dir: str) -> None:
-    """Roll the state forward/back after a crash mid-swap.
+def _kmv_merge(hashes: DataFrame, prior: DataFrame, k: int) -> DataFrame:
+    """k smallest of the union — set-union + truncate is associative,
+    commutative and idempotent, so the fold is bit-identical to the batch
+    sketch."""
+    return hashes.unionByName(prior).distinct().orderBy("h").limit(k)
 
-    The swap is rename(current→_old) then rename(_tmp→current); a crash
-    between the two leaves NO ``current``. Recovery prefers ``_tmp``
-    when its parquet commit marker (_SUCCESS) proves the merge was fully
-    written — it already contains the old state — and falls back to
-    ``_old`` otherwise. Either way a committed state is restored before
-    the next fold reads it (without this, a crash in the window would
-    silently restart the sketch empty while the checkpoint skips the
-    already-folded batches).
-    """
-    cur = _state_path(state_dir)
-    if os.path.exists(cur):
-        return
-    tmp = os.path.join(state_dir, "_tmp")
-    old = os.path.join(state_dir, "_old")
-    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
-    elif os.path.exists(old):
-        os.rename(old, cur)
+
+def _sum_merge(contrib: DataFrame, prior: DataFrame, keys, cols) -> DataFrame:
+    """Additive merge: per-key sums of ``cols`` over contribution ∪ prior
+    (a sum keeps the BIGINT and DECIMAL(38,0) types of the states)."""
+    return (
+        contrib.unionByName(prior)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in cols])
+    )
 
 
 def stream_kmv_distinct(
@@ -74,41 +105,16 @@ def stream_kmv_distinct(
     k: int = _sk.DEFAULT_K,
     salt: str = "kmv:",
 ):
-    """Maintain a KMV distinct-count sketch of ``col`` over a stream.
-
-    Returns the started StreamingQuery (availableNow trigger — callers
-    drain with ``awaitTermination``). Estimate afterwards with
-    :func:`read_kmv_estimate`.
-    """
-    spark = stream_df.sparkSession
-    os.makedirs(state_dir, exist_ok=True)
+    """Maintain a KMV distinct-count sketch of ``col`` over a stream; the
+    state ``kmv`` holds ≤k (h BIGINT) rows. Estimate afterwards with
+    :func:`read_kmv_estimate`."""
     h = _sk.kmv_hash(F.col(col), salt=salt)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _recover(state_dir)
-        bh = batch_df.select(h.alias("h")).filter(F.col("h").isNotNull()).distinct()
-        cur = _state_path(state_dir)
-        if os.path.exists(cur):
-            bh = bh.unionByName(spark.read.parquet(cur))
-        merged = bh.distinct().orderBy("h").limit(k)
-        tmp = os.path.join(state_dir, "_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        # the tmp write MATERIALIZES the merge while the old state is
-        # still readable; only then swap directories (rename = commit)
-        merged.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(state_dir, "_old")
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(cur):
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
+    def merge(batch_df, prior):
+        bh = batch_df.select(h.alias("h")).filter(F.col("h").isNotNull())
+        return {"kmv": _kmv_merge(bh, prior["kmv"], k)}
 
-    return (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(stream_df, state_dir, checkpoint_dir, {"kmv": _KMV}, merge)
 
 
 def read_kmv_estimate(
@@ -117,10 +123,8 @@ def read_kmv_estimate(
     """1-row (approx_users DOUBLE) estimate from the committed state —
     the same expression as the batch q_agg_approx_distinct twin, so the
     streamed fold must hash-match it exactly over identical data."""
-    _recover(state_dir)
-    s = (
-        spark.read.parquet(_state_path(state_dir))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("m"), F.max("h").alias("theta"))
+    s = st.read_latest(spark, state_dir, "kmv", _KMV).agg(
+        F.count(F.lit(1)).cast("bigint").alias("m"), F.max("h").alias("theta")
     )
     return s.select(
         _sk.kmv_estimate(F.col("m"), F.col("theta"), k).alias("approx_users")
@@ -128,14 +132,6 @@ def read_kmv_estimate(
 
 
 # ------------------------------------------------------ multi-sketch fold ---
-
-# geometry + bucket hash SHARED with the batch query (q_sketch_cms)
-# through functions/sketch.py — one definition, retunes stay twinned
-from mongo_to_parquet_spark.functions.sketch import (  # noqa: E402
-    CMS_D,
-    CMS_W,
-    cms_bucket as _cms_bucket,
-)
 
 
 def multi_sketch_batch(
@@ -162,13 +158,13 @@ def multi_sketch_batch(
         .orderBy("h")
         .limit(k)
     )
-    ii = F.array(*[F.lit(i) for i in range(CMS_D)])
+    ii = F.array(*[F.lit(i) for i in range(_sk.CMS_D)])
     toks = df.select(F.col(freq_col).cast("string").alias("tok")).filter(
         F.col("tok").isNotNull()
     )
     cms = (
         toks.select("tok", F.explode(ii).alias("i"))
-        .groupBy("i", _cms_bucket(F.col("tok"), F.col("i")).alias("b"))
+        .groupBy("i", _sk.cms_bucket(F.col("tok"), F.col("i")).alias("b"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
     hist = (
@@ -191,89 +187,39 @@ def stream_multi_sketch(
     hist_step: float = 10.0,
     k: int = _sk.DEFAULT_K,
 ):
-    """Maintain THREE sketches over one stream pass with ONE atomic
-    commit per batch: a KMV distinct sketch (idempotent fold), a
-    count-min frequency sketch and a fixed-bin histogram (both ADDITIVE
-    folds — re-adding a replayed batch would double-count).
+    """Maintain THREE sketches over one stream pass with ONE commit per
+    batch: a KMV distinct sketch (idempotent fold), a count-min frequency
+    sketch and a fixed-bin histogram (both ADDITIVE folds — re-adding a
+    replayed batch would double-count).
 
-    The exactly-once story differs per sketch and the state layout
-    resolves it: all three tables PLUS a ``batches`` ledger of folded
-    batch ids live under one ``current/`` directory that is swapped by
-    a single rename, so a batch is either folded into every sketch and
-    recorded, or into none. The additive folds check the ledger before
-    touching anything (operators/incremental.py's replay guard), and
-    because ledger and sketches commit in the same rename there is no
-    window where one sketch saw the batch and another didn't — the
-    multi-sketch atomicity is what upgrades the per-sketch guards into
-    a joint exactly-once.
+    All three tables of a batch are written before its single ledger
+    marker is published, so a batch is folded into every sketch or into
+    none, and a committed batch id is skipped before anything is read —
+    one commit point turns the per-sketch guards into a joint
+    exactly-once across the two merge algebras.
 
     Scale: per batch the shuffle carries the batch's distinct hashes
     (≤ batch distinct count) + d·w CMS cells + histogram bins — state
     and traffic are O(k + d·w + bins) regardless of stream length.
     """
-    spark = stream_df.sparkSession
-    os.makedirs(state_dir, exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _recover(state_dir)
-        cur = _state_path(state_dir)
-        have_state = os.path.exists(cur)
-        if have_state:
-            seen = (
-                spark.read.parquet(os.path.join(cur, "batches"))
-                .filter(F.col("batch_id") == batch_id)
-                .count()
-            )
-            if seen:
-                return  # replayed batch: every sketch already has it
-        contrib = multi_sketch_batch(
+    def merge(batch_df, prior):
+        c = multi_sketch_batch(
             batch_df, distinct_col, freq_col, hist_col, hist_step, k=k
         )
-        kmv, cms, hist = contrib["kmv"], contrib["cms"], contrib["hist"]
-        ledger = spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        if have_state:
-            kmv = (
-                kmv.unionByName(spark.read.parquet(os.path.join(cur, "kmv")))
-                .distinct()
-                .orderBy("h")
-                .limit(k)
-            )
-            cms = (
-                cms.unionByName(spark.read.parquet(os.path.join(cur, "cms")))
-                .groupBy("i", "b")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-            hist = (
-                hist.unionByName(spark.read.parquet(os.path.join(cur, "hist")))
-                .groupBy("bin")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-            ledger = ledger.unionByName(
-                spark.read.parquet(os.path.join(cur, "batches"))
-            )
-        tmp = os.path.join(state_dir, "_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        # materialize EVERY table before the swap; the top-level marker
-        # is written last, so _recover only ever adopts a complete set
-        kmv.write.parquet(os.path.join(tmp, "kmv"))
-        cms.write.parquet(os.path.join(tmp, "cms"))
-        hist.write.parquet(os.path.join(tmp, "hist"))
-        ledger.write.parquet(os.path.join(tmp, "batches"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        old = os.path.join(state_dir, "_old")
-        shutil.rmtree(old, ignore_errors=True)
-        if have_state:
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
+        return {
+            "kmv": _kmv_merge(c["kmv"], prior["kmv"], k),
+            "cms": _sum_merge(c["cms"], prior["cms"], ["i", "b"], ["c"]),
+            "hist": _sum_merge(c["hist"], prior["hist"], ["bin"], ["c"]),
+        }
 
-    return (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(stream_df, state_dir, checkpoint_dir, _MULTI, merge)
+
+
+def read_multi_sketch(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
+    """The committed sketch tables — compare directly against
+    :func:`multi_sketch_batch` over the same data."""
+    return {sub: st.read_latest(spark, state_dir, sub, s) for sub, s in _MULTI.items()}
 
 
 # -------------------------------------------------- heavy-hitters fold -----
@@ -301,118 +247,46 @@ def stream_heavy_hitters(
     with true count > n_total/(k+1) is guaranteed present, and each
     retained ``c`` is a LOWER bound with ``true - c <= n/(k+1)``.
 
-    The additive merge makes replay double-count, so the batch-id ledger
-    commits in the SAME rename as the summary (the stream_multi_sketch
-    exactly-once pattern); total row count ``n`` rides in a meta table
-    for threshold math at read time. Per-batch shuffle: the batch's
-    distinct items (map-combined) + k state rows; state O(k).
+    The additive merge makes replay double-count; the ledger skip of a
+    committed batch id prevents it. The summary ``mg`` and the total row
+    count ``meta`` (for threshold math at read time) commit under one
+    marker. Per-batch shuffle: the batch's distinct items (map-combined)
+    + k state rows; state O(k).
     """
-    spark = stream_df.sparkSession
-    os.makedirs(state_dir, exist_ok=True)
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _recover(state_dir)
-        cur = _state_path(state_dir)
-        have_state = os.path.exists(cur)
-        if have_state:
-            seen = (
-                spark.read.parquet(os.path.join(cur, "batches"))
-                .filter(F.col("batch_id") == batch_id)
-                .count()
-            )
-            if seen:
-                return
+    def merge(batch_df, prior):
         src = batch_df.select(F.col(col).cast("string").alias("item")).filter(
             F.col("item").isNotNull()
         )
-        merged = src.groupBy("item").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        n_new = src.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        ledger = spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        if have_state:
-            merged = (
-                merged.unionByName(spark.read.parquet(os.path.join(cur, "mg")))
-                .groupBy("item")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-            n_new = (
-                n_new.unionByName(spark.read.parquet(os.path.join(cur, "meta")))
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-            ledger = ledger.unionByName(
-                spark.read.parquet(os.path.join(cur, "batches"))
-            )
+        counts = src.groupBy("item").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        merged = _sum_merge(counts, prior["mg"], ["item"], ["c"])
+        n = src.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         # compaction: cut = (k+1)-th largest count if more than k items
         # survive the merge (0 otherwise) — only the top-(k+1) slice is
         # ever materialized, never a global sort of the merged relation
         top = merged.orderBy(F.desc("c"), "item").limit(k + 1).collect()
         cut = int(top[-1]["c"]) if len(top) == k + 1 else 0
-        summary = merged.filter(F.col("c") > cut).select(
-            "item", (F.col("c") - cut).alias("c")
-        )
-        tmp = os.path.join(state_dir, "_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        summary.write.parquet(os.path.join(tmp, "mg"))
-        n_new.write.parquet(os.path.join(tmp, "meta"))
-        ledger.write.parquet(os.path.join(tmp, "batches"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        old = os.path.join(state_dir, "_old")
-        shutil.rmtree(old, ignore_errors=True)
-        if have_state:
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
+        return {
+            "mg": merged.filter(F.col("c") > cut).select(
+                "item", (F.col("c") - cut).alias("c")
+            ),
+            "meta": _sum_merge(n, prior["meta"], [], ["n"]),
+        }
 
-    return (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    subs = {"mg": _MG, "meta": _META}
+    return _start_fold(stream_df, state_dir, checkpoint_dir, subs, merge)
 
 
 def read_heavy_hitters(spark: SparkSession, state_dir: str) -> DataFrame:
     """Committed MG summary joined with the folded total: (item, lb, n).
     Containment contract for callers: every item with true count
     > n/(k+1) is present, and lb <= true count <= lb + n/(k+1)."""
-    _recover(state_dir)
-    cur = _state_path(state_dir)
-    mg = spark.read.parquet(os.path.join(cur, "mg"))
-    n = spark.read.parquet(os.path.join(cur, "meta"))
-    return mg.crossJoin(F.broadcast(n)).select(
-        "item", F.col("c").alias("lb"), "n"
-    )
-
-
-def read_multi_sketch(spark: SparkSession, state_dir: str) -> dict[str, DataFrame]:
-    """The committed sketch tables (after crash recovery) — compare
-    directly against :func:`multi_sketch_batch` over the same data."""
-    _recover(state_dir)
-    cur = _state_path(state_dir)
-    return {
-        name: spark.read.parquet(os.path.join(cur, name))
-        for name in ("kmv", "cms", "hist", "batches")
-    }
+    mg = st.read_latest(spark, state_dir, "mg", _MG)
+    n = st.read_latest(spark, state_dir, "meta", _META)
+    return mg.crossJoin(F.broadcast(n)).select("item", F.col("c").alias("lb"), "n")
 
 
 # ------------------------------------------------------- fixity digests ----
-_FIXITY_PRIME = 2305843009213693951  # 2^61 - 1
-
-
-def fixity_batch(df: DataFrame, part_col, payload_col) -> DataFrame:
-    """Per-partition (n_rows, raw digest sum) of ``df`` — the batch half
-    of the q_export_fixity audit (queries/sinks.py), factored so a
-    stream can fold the SAME algebra: every row contributes a 48-bit
-    md5-prefix integer of its payload; counts and sums are additive and
-    order-insensitive, so digests merge across micro-batches, partitions
-    and replicas by plain addition. Sums stay UNREDUCED (DECIMAL(38,0));
-    the mod-prime checksum is applied at read time so merging remains
-    linear."""
-    v = F.conv(F.substring(F.md5(payload_col), 1, 12), 16, 10).cast("bigint")
-    return df.groupBy(part_col.alias("part")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(v.cast("decimal(38,0)")).cast("decimal(38,0)").alias("vsum"),
-    )
 
 
 def stream_fixity(
@@ -424,75 +298,33 @@ def stream_fixity(
 ):
     """Maintain per-partition fixity digests over a stream — continuous
     export verification: as batches ship, the folded state always equals
-    :func:`fixity_batch` over everything shipped so far, so an auditor
-    can compare the destination copy's digest against the stream's at
-    any moment without re-scanning history.
+    ``functions/sketch.fixity_batch`` over everything shipped so far, so
+    an auditor can compare the destination copy's digest against the
+    stream's at any moment without re-scanning history.
 
     The digest sum is ADDITIVE (not idempotent like the KMV union), so
-    replay would double-count: the batch-id ledger commits in the SAME
-    rename as the digests (the stream_heavy_hitters exactly-once
-    pattern). Per-batch shuffle: the batch's partition census; state:
+    replay would double-count; the ledger skip of a committed batch id
+    prevents it. Per-batch shuffle: the batch's partition census; state:
     one row per partition ever seen.
     """
-    spark = stream_df.sparkSession
-    os.makedirs(state_dir, exist_ok=True)
+    # the digest schema follows part_col's type, so take it from the
+    # (unstarted) stream's own plan
+    subs = {"digests": _sk.fixity_batch(stream_df, part_col, payload_col).schema}
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _recover(state_dir)
-        cur = _state_path(state_dir)
-        have_state = os.path.exists(cur)
-        if have_state:
-            seen = (
-                spark.read.parquet(os.path.join(cur, "batches"))
-                .filter(F.col("batch_id") == batch_id)
-                .count()
-            )
-            if seen:
-                return
-        merged = fixity_batch(batch_df, part_col, payload_col)
-        ledger = spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        if have_state:
-            merged = (
-                merged.unionByName(spark.read.parquet(os.path.join(cur, "digests")))
-                .groupBy("part")
-                .agg(
-                    F.sum("n_rows").cast("bigint").alias("n_rows"),
-                    F.sum("vsum").cast("decimal(38,0)").alias("vsum"),
-                )
-            )
-            ledger = ledger.unionByName(
-                spark.read.parquet(os.path.join(cur, "batches"))
-            )
-        tmp = os.path.join(state_dir, "_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.parquet(os.path.join(tmp, "digests"))
-        ledger.write.parquet(os.path.join(tmp, "batches"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        old = os.path.join(state_dir, "_old")
-        shutil.rmtree(old, ignore_errors=True)
-        if have_state:
-            os.rename(cur, old)
-        os.rename(tmp, cur)
-        shutil.rmtree(old, ignore_errors=True)
+    def merge(batch_df, prior):
+        d = _sk.fixity_batch(batch_df, part_col, payload_col)
+        cols = ["n_rows", "vsum"]
+        return {"digests": _sum_merge(d, prior["digests"], ["part"], cols)}
 
-    return (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(stream_df, state_dir, checkpoint_dir, subs, merge)
 
 
 def read_fixity(spark: SparkSession, state_dir: str) -> DataFrame:
     """Committed digests, reduced to the wire format: (part, n_rows,
-    checksum = vsum mod 2^61-1) — directly comparable to
-    ``fixity_batch(...).select(part, n_rows, vsum % prime)`` over the
-    same rows, and to q_export_fixity's per-year checksum column."""
-    _recover(state_dir)
-    cur = _state_path(state_dir)
-    return spark.read.parquet(os.path.join(cur, "digests")).select(
-        "part",
-        "n_rows",
-        (F.col("vsum") % _FIXITY_PRIME).cast("bigint").alias("checksum"),
+    checksum) — directly comparable to ``fixity_batch`` reduced by
+    ``fixity_checksum`` over the same rows, and to q_export_fixity's
+    per-year checksum column."""
+    d = st.read_latest(spark, state_dir, "digests", _DIGESTS)
+    return d.select(
+        "part", "n_rows", _sk.fixity_checksum(F.col("vsum")).alias("checksum")
     )

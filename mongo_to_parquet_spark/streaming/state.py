@@ -63,6 +63,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
+
+from mongo_to_parquet_spark.operators.incremental import start_foreach_batch
 
 #: compacted state lives under <state_dir>/compact/<sub>/upto=<W>,
 #: published by <state_dir>/compact/ledger/<W>
@@ -102,12 +105,7 @@ def start_ledger_stream(
         if after_commit is not None:
             after_commit()
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, checkpoint_dir, fold)
 
 
 def _ids(path: str) -> list[int]:
@@ -153,7 +151,7 @@ def read_latest(
     spark: SparkSession,
     state_dir: str,
     sub: str,
-    schema: str,
+    schema: str | StructType,
     below: int | None = None,
 ) -> DataFrame:
     """Swap-style sub-state: ``sub/batch=<b>`` of the newest committed

@@ -509,14 +509,15 @@ def test_stream_kmv_fold_converges_to_batch_sketch(spark, sf_dir, tmp_path):
     state must equal the batch sketch BIT-FOR-BIT (union+truncate is
     associative/commutative), the estimate must equal the declared
     q_agg_approx_distinct twin exactly, and re-folding the same data with
-    a fresh checkpoint must be a no-op (idempotent by algebra — the
-    exactly-once argument needs no batch-id bookkeeping)."""
+    a fresh checkpoint must be a no-op (the ledger skips every committed
+    batch id)."""
     from pyspark.sql import functions as F
 
     from mongo_to_parquet_spark.functions import sketch as _sk
     from mongo_to_parquet_spark.queries.relational import QUERIES as REL_Q
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import sketches as sk
+    from mongo_to_parquet_spark.streaming import state as st
 
     state, ck1 = str(tmp_path / "kmv_state"), str(tmp_path / "ck1")
     q = sk.stream_kmv_distinct(
@@ -533,7 +534,9 @@ def test_stream_kmv_fold_converges_to_batch_sketch(spark, sf_dir, tmp_path):
         .orderBy("h")
         .limit(_sk.DEFAULT_K)
     )
-    got_state = sorted(r["h"] for r in spark.read.parquet(f"{state}/current").collect())
+    got_state = sorted(
+        r["h"] for r in st.read_latest(spark, state, "kmv", "h bigint").collect()
+    )
     assert got_state == sorted(r["h"] for r in batch_k.collect())
 
     # estimate == the declared twin's answer
@@ -548,57 +551,57 @@ def test_stream_kmv_fold_converges_to_batch_sketch(spark, sf_dir, tmp_path):
         sw.replay_events(spark, sf_dir), "user_id", state, str(tmp_path / "ck2")
     )
     q2.awaitTermination(120)
-    again = sorted(r["h"] for r in spark.read.parquet(f"{state}/current").collect())
+    again = sorted(
+        r["h"] for r in st.read_latest(spark, state, "kmv", "h bigint").collect()
+    )
     assert again == got_state
 
 
-def test_stream_kmv_state_swap_crash_recovery(spark, sf_dir, tmp_path):
-    """A crash between the two swap renames leaves no `current` dir; the
-    next reader must restore the newest committed state — `_tmp` when its
-    _SUCCESS marker proves the merge completed (it already contains the
-    old state), else `_old` — instead of silently restarting empty."""
+def _batch_dirs(state: str, sub: str) -> list[str]:
     import os
-    import shutil
+
+    names = os.listdir(os.path.join(state, sub))
+    return sorted(d for d in names if d.startswith("batch="))
+
+
+def test_stream_kmv_torn_batch_is_invisible(spark, sf_dir, tmp_path):
+    """Ledger crash contract for the KMV fold: after a drained stream the
+    vacuum has left exactly one ``kmv/batch=`` version, and a torn batch —
+    a ``kmv/batch=<last+1>`` dir written without its ledger marker (a
+    crash before the commit) — changes no reader's answer."""
+    import os
 
     from mongo_to_parquet_spark.streaming import sketches as sk
+    from mongo_to_parquet_spark.streaming import state as st
 
     state = str(tmp_path / "kmv_state")
     q = sk.stream_kmv_distinct(
         sw.replay_events(spark, sf_dir), "user_id", state, str(tmp_path / "ck")
     )
     q.awaitTermination(120)
-    committed = sorted(
-        r["h"] for r in spark.read.parquet(f"{state}/current").collect()
+    last = st.last_committed(state)
+    assert last >= 1  # the fold really was incremental
+    assert _batch_dirs(state, "kmv") == [f"batch={last}"]
+    est = sk.read_kmv_estimate(spark, state).collect()
+
+    # torn batch: a one-row state for last+1 that never got its marker
+    spark.createDataFrame([(1,)], "h bigint").write.parquet(
+        os.path.join(state, "kmv", f"batch={last + 1}")
     )
-
-    # crash window A: current renamed away, tmp fully written (_SUCCESS)
-    shutil.copytree(f"{state}/current", f"{state}/_tmp")
-    os.rename(f"{state}/current", f"{state}/_old")
-    est = sk.read_kmv_estimate(spark, state).collect()[0]["approx_users"]
-    assert est is not None
-    assert sorted(
-        r["h"] for r in spark.read.parquet(f"{state}/current").collect()
-    ) == committed
-    assert not os.path.exists(f"{state}/_old")
-
-    # crash window B: tmp incomplete (no _SUCCESS) → fall back to _old
-    os.rename(f"{state}/current", f"{state}/_old")
-    os.makedirs(f"{state}/_tmp")  # torn write: empty dir, no marker
-    sk.read_kmv_estimate(spark, state).collect()
-    assert sorted(
-        r["h"] for r in spark.read.parquet(f"{state}/current").collect()
-    ) == committed
+    assert st.last_committed(state) == last
+    assert sk.read_kmv_estimate(spark, state).collect() == est
 
 
 def test_stream_multi_sketch_atomic_fold(spark, sf_dir, tmp_path):
     """Three sketches (idempotent KMV + additive CMS + additive histogram)
-    folded in ONE stream pass with one atomic commit per batch: every
-    table must equal its batch-computed counterpart exactly, and a full
-    replay under a fresh checkpoint must change NOTHING — the batch-id
-    ledger commits in the same rename as the sketches, so the additive
-    folds cannot double-count."""
+    folded in ONE stream pass with one commit per batch: every table must
+    equal its batch-computed counterpart exactly, and a full replay under
+    a fresh checkpoint must change NOTHING — the single ledger marker
+    commits after every sketch is written, and committed batch ids are
+    skipped, so the additive folds cannot double-count."""
     from mongo_to_parquet_spark.sources.catalog import load_table
     from mongo_to_parquet_spark.streaming import sketches as sk
+    from mongo_to_parquet_spark.streaming import state as st
 
     state = str(tmp_path / "ms_state")
     q = sk.stream_multi_sketch(
@@ -622,7 +625,7 @@ def test_stream_multi_sketch_atomic_fold(spark, sf_dir, tmp_path):
     assert sorted(map(hist_key, got["hist"].collect())) == sorted(
         map(hist_key, want["hist"].collect())
     )
-    n_batches = got["batches"].count()
+    n_batches = len(st.ledger_ids(state))
     assert n_batches >= 2  # the fold really was incremental
 
     # whole-stream replay, fresh checkpoint: ledger short-circuits every
@@ -639,20 +642,18 @@ def test_stream_multi_sketch_atomic_fold(spark, sf_dir, tmp_path):
     assert sorted(map(hist_key, got2["hist"].collect())) == sorted(
         map(hist_key, want["hist"].collect())
     )
-    assert got2["batches"].count() == n_batches
+    assert len(st.ledger_ids(state)) == n_batches
 
 
-def test_multi_sketch_crash_recovery_atomicity(spark, sf_dir, tmp_path):
-    """Crash simulations around the multi-sketch swap: (a) a PARTIAL _tmp
-    (no top-level _SUCCESS — crash mid-materialization) must be discarded
-    in favor of the committed state; (b) a COMPLETE _tmp with current
-    already renamed away (crash between the two renames) must be adopted
-    with every table intact — including the batch ledger, so the additive
-    sketches cannot double-fold after recovery."""
+def test_multi_sketch_torn_batch_is_invisible(spark, sf_dir, tmp_path):
+    """Ledger crash contract for the multi-sketch fold: the vacuum leaves
+    exactly one ``batch=`` version per sketch, and a batch torn halfway
+    through its writes — only ``cms/batch=<last+1>`` on disk, no kmv,
+    hist or marker — leaves every sketch table unchanged."""
     import os
-    import shutil
 
     from mongo_to_parquet_spark.streaming import sketches as sk
+    from mongo_to_parquet_spark.streaming import state as st
 
     state = str(tmp_path / "ms_state")
     q = sk.stream_multi_sketch(
@@ -660,28 +661,20 @@ def test_multi_sketch_crash_recovery_atomicity(spark, sf_dir, tmp_path):
         state, str(tmp_path / "ck1"), hist_step=10.0,
     )
     q.awaitTermination(120)
-    committed = sk.read_multi_sketch(spark, state)
-    want = {
-        name: sorted(map(tuple, committed[name].collect()))
-        for name in ("kmv", "cms", "hist", "batches")
-    }
+    last = st.last_committed(state)
+    for sub in ("kmv", "cms", "hist"):
+        assert _batch_dirs(state, sub) == [f"batch={last}"]
 
-    # (a) partial _tmp, current intact → _tmp discarded, state unchanged
-    cur, tmp = os.path.join(state, "current"), os.path.join(state, "_tmp")
-    shutil.copytree(cur, tmp)
-    os.remove(os.path.join(tmp, "_SUCCESS"))
-    got = sk.read_multi_sketch(spark, state)
-    for name in want:
-        assert sorted(map(tuple, got[name].collect())) == want[name]
+    def snapshot():
+        return {
+            name: sorted(map(tuple, df.collect()))
+            for name, df in sk.read_multi_sketch(spark, state).items()
+        }
 
-    # (b) crash BETWEEN renames: current moved to _old, complete _tmp
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.copytree(cur, tmp)  # complete (_SUCCESS included)
-    os.rename(cur, os.path.join(state, "_old"))
-    got2 = sk.read_multi_sketch(spark, state)
-    for name in want:
-        assert sorted(map(tuple, got2[name].collect())) == want[name]
-    assert not os.path.exists(os.path.join(state, "_old"))
+    want = snapshot()
+    torn = spark.createDataFrame([(0, 0, 10**6)], "i int, b bigint, c bigint")
+    torn.write.parquet(os.path.join(state, "cms", f"batch={last + 1}"))
+    assert snapshot() == want
 
 
 def test_streaming_window_topk_chained_aggregation(spark, sf_dir):
@@ -849,6 +842,7 @@ def test_stream_fixity_equals_batch_and_replay_safe(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from mongo_to_parquet_spark.functions import sketch as _sk
     from mongo_to_parquet_spark.streaming import sketches as sk
 
     batches = [
@@ -879,8 +873,8 @@ def test_stream_fixity_equals_batch_and_replay_safe(spark, tmp_path):
     )
     want = {
         r["part"]: (r["n_rows"], r["checksum"])
-        for r in sk.fixity_batch(whole, part, payload)
-        .select("part", "n_rows", (F.col("vsum") % sk._FIXITY_PRIME).cast("bigint").alias("checksum"))
+        for r in _sk.fixity_batch(whole, part, payload)
+        .select("part", "n_rows", _sk.fixity_checksum(F.col("vsum")).alias("checksum"))
         .collect()
     }
     got = {
@@ -909,8 +903,8 @@ def test_stream_fixity_equals_batch_and_replay_safe(spark, tmp_path):
     )
     tdig = {
         r["part"]: (r["n_rows"], r["checksum"])
-        for r in sk.fixity_batch(tampered, part, payload)
-        .select("part", "n_rows", (F.col("vsum") % sk._FIXITY_PRIME).cast("bigint").alias("checksum"))
+        for r in _sk.fixity_batch(tampered, part, payload)
+        .select("part", "n_rows", _sk.fixity_checksum(F.col("vsum")).alias("checksum"))
         .collect()
     }
     assert tdig[1996] != got[1996]
