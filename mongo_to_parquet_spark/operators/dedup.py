@@ -595,6 +595,9 @@ _IMH_P = 4294967311  # prime > 2^32 (Kirsch–Mitzenmacher family, md5-derived)
 
 
 def _md5_long(prefix: str, col) -> F.Column:
+    """The first 48 bits of md5(prefix || col) as a BIGINT — the oracle
+    spells it ``CAST(concat('0x', substr(md5(concat(prefix, s)), 1, 12))
+    AS BIGINT)``."""
     return (
         F.conv(F.substring(F.md5(F.concat(F.lit(prefix), col)), 1, 12), 16, 10)
         .cast("bigint")
@@ -612,13 +615,14 @@ def minhash_index(
     """Banded MinHash index rows ``(doc, band, sigstr)`` — the persistable
     side of incremental dedup.
 
-    Same md5-derived Kirsch–Mitzenmacher family, banding, and shingling
-    as ``q_dedup_minhash_md5`` (queries/llm.py), so an index built by one
-    is probe-compatible with the other and every stage stays
-    hash-checkable by the DuckDB oracle. The output is tiny relative to
-    the corpus — ``bands`` short rows per document, no text, no shingle
-    sets — which is exactly what makes it worth persisting: tomorrow's
-    delta probes these rows instead of re-signaturing the corpus.
+    ``q_dedup_minhash_md5`` and ``q_lsh_tuning`` (queries/llm.py) build
+    their bands with this function, so an index built here is
+    probe-compatible with that pipeline by construction and every stage
+    stays hash-checkable by the DuckDB oracle. The output is tiny
+    relative to the corpus — ``bands`` short rows per document, no text,
+    no shingle sets — which is exactly what makes it worth persisting:
+    tomorrow's delta probes these rows instead of re-signaturing the
+    corpus.
 
     Scale: one shuffle to assemble per-(doc, band) signature strings;
     partial-combined min() per hash index before it. Parquet-persisted
@@ -711,6 +715,16 @@ def minhash_incremental_pairs(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(shingles(F.col(text_col), ngram))).alias("s"),
     )
+    return jaccard_verify(cand, sh, threshold)
+
+
+def jaccard_verify(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs ``(id1, id2)`` over the
+    distinct shingle rows ``sh`` ``(doc, s)``: ``(id1, id2, jaccard)``
+    for the pairs at or above ``threshold``, jaccard rounded to 4
+    places. The intersection is an equi-join on the shingle, so only
+    candidate documents' shingles move.
+    """
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     sa = sh.select(F.col("doc").alias("id1"), "s")
     sb = sh.select(F.col("doc").alias("id2"), F.col("s").alias("s2"))

@@ -549,6 +549,28 @@ def build_ivf_layout(
     )
 
 
+def _probe_sample(emb: DataFrame, salt: str, n: int, *cols: str) -> list:
+    """The ``n`` rows ``(vec_id, *cols, hp)`` of ``emb`` with the lowest
+    ``hp`` = md5(salt || vec_id) prefix (ties by vec_id), collected: a
+    content-addressed bottom-n probe sample — bounded at any corpus size
+    and a pure function of the ids, so reruns and the oracle pick the
+    same probes."""
+    return (
+        emb.select(
+            "vec_id",
+            *cols,
+            F.substring(
+                F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))),
+                1,
+                12,
+            ).alias("hp"),
+        )
+        .orderBy(F.col("hp").asc(), F.col("vec_id").asc())
+        .limit(n)
+        .collect()
+    )
+
+
 def recall_leg(
     corp: DataFrame,
     cents: DataFrame,
@@ -566,20 +588,7 @@ def recall_leg(
     SHARED definition behind q_ann_drift's two legs and the
     :func:`maintain_ivf_layout` rebuild loop, so the monitor and the
     remediation measure staleness with identical machinery."""
-    probe_ids = [
-        r[0]
-        for r in corp.select(
-            "vec_id",
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))),
-                1,
-                12,
-            ).alias("hp"),
-        )
-        .orderBy(F.col("hp").asc(), F.col("vec_id").asc())
-        .limit(n_probes)
-        .collect()
-    ]
+    probe_ids = [r["vec_id"] for r in _probe_sample(corp, salt, n_probes)]
     assigned = _assign_cells(corp, cents, "vec_id", "embedding")
     probes = F.broadcast(
         corp.filter(F.col("vec_id").isin(probe_ids)).select(
@@ -935,20 +944,7 @@ def ivfpq_sample_recall_bp(
     the layout, so this measures the COMPOSED staleness (coarse cells AND
     codebook drift). ``refine > 0`` measures the two-stage operating
     point instead (ADC shortlist of that size + exact re-rank)."""
-    probe_rows = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("vec_id").cast("string"))),
-                1,
-                12,
-            ).alias("hp"),
-        )
-        .orderBy(F.col("hp").asc(), F.col("vec_id").asc())
-        .limit(n_probes)
-        .collect()
-    )
+    probe_rows = _probe_sample(emb, salt, n_probes, "embedding")
     probe_ids = [r["vec_id"] for r in probe_rows]
     exact = {
         (r["probe_id"], r["vec_id"])

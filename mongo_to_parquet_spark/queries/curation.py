@@ -3041,16 +3041,7 @@ def q_select_dsir(spark, sf):
     # TakeOrdered(m). Cross-engine exactness: integer counts → the same
     # double ratios → LN (bm25 precedent) → per-term DECIMAL(38,18)
     # accumulation → ROUND 4dp, ties broken by doc_id.
-    from mongo_to_parquet_spark.functions.sketch import kmv_hash
-    from mongo_to_parquet_spark.functions.textfns import shingles
-    from mongo_to_parquet_spark.operators.parallel import fan_out
-
-    d = fan_out(T(spark, sf, "documents").select("doc_id", "lang", "text"))
-    feats = d.select(
-        "doc_id", "lang", F.explode(shingles(F.col("text"), 2)).alias("bg")
-    ).select(
-        "doc_id", "lang", (kmv_hash(F.col("bg"), salt="dsir:") % _DSIR_B).alias("f")
-    )
+    #
     # persisted: two consumers (f-level stats; the scoring join) prune
     # doc_feat to DIFFERENT columns, so their exchange subtrees are not
     # canonically equal and ReuseExchange cannot dedupe them — the
@@ -3058,42 +3049,8 @@ def q_select_dsir(spark, sf):
     # measured win. Bounded: ≤ min(doc_tokens, B)=256 rows per doc.
     # Caller (bench.py / parity) clearCache()s afterwards, like
     # q_stats_spearman.
-    doc_feat = (
-        feats.groupBy("doc_id", "lang", "f")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
-    )
-    fstats = doc_feat.groupBy("f").agg(
-        F.sum(F.when(F.col("lang") == "en", F.col("n")).otherwise(0))
-        .cast("bigint")
-        .alias("ct"),
-        F.sum("n").cast("bigint").alias("cr"),
-    )
-    tots = fstats.agg(
-        F.sum("ct").cast("bigint").alias("tt"),
-        F.sum("cr").cast("bigint").alias("tr"),
-    )
-    w = fstats.crossJoin(F.broadcast(tots)).select(
-        "f",
-        (
-            F.log((F.col("ct") + 1).cast("double") / (F.col("tt") + _DSIR_B))
-            - F.log((F.col("cr") + 1).cast("double") / (F.col("tr") + _DSIR_B))
-        ).alias("wf"),
-    )
-    return (
-        doc_feat.join(F.broadcast(w), "f")
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum((F.col("n") * F.col("wf")).cast("decimal(38,18)")).cast(
-                    "double"
-                ),
-                4,
-            ).alias("dsir_weight")
-        )
-        .orderBy(F.col("dsir_weight").desc(), F.col("doc_id").asc())
-        .limit(_DSIR_TOP)
-    )
+    doc_feat = _dsir_doc_feat(spark, sf).persist()
+    return _dsir_score_top(doc_feat, _dsir_fstats(doc_feat))
 
 
 # ------------------------------------- Fellegi-Sunter record linkage -------
@@ -3721,6 +3678,18 @@ def _uni_cost_col(word, vm, start, L: int):
     )
 
 
+def _uni_k(dp, word):
+    """Spark twin of the oracle's piece count
+    ``(dp[len(word) + 1] + BIG - 1) // BIG``."""
+    return F.floor(
+        (
+            F.element_at(dp, (F.length(word) + 1).cast("int"))
+            + F.lit(_UNI_BIG - 1)
+        )
+        / F.lit(_UNI_BIG)
+    ).cast("long")
+
+
 def _uni_dp_col(word, vm):
     def step(acc, i):
         cands = [
@@ -3763,13 +3732,7 @@ def _uni_pieces_col(word, vm, dp):
     # exactly k iterations (k = piece count from the DP score), matching
     # the oracle fold step for step — see _uni_pieces_sql on why neither
     # side may carry an identity branch
-    k = F.floor(
-        (
-            F.element_at(dp, (F.length(word) + 1).cast("int"))
-            + F.lit(_UNI_BIG - 1)
-        )
-        / F.lit(_UNI_BIG)
-    ).cast("long")
+    k = _uni_k(dp, word)
     bt = F.aggregate(
         F.sequence(F.lit(1), k),
         F.array(F.length(word).cast("string")),
@@ -3994,18 +3957,7 @@ def q_unigram_pipeline(spark, sf):
     # per-occurrence fold work). Measured 9.0s → per-distinct at sf0.1.
     wk = words.select("w").distinct().select(
         "w",
-        F.floor(
-            (
-                F.element_at(
-                    _uni_dp_col(F.col("w"), vm),
-                    (F.length("w") + 1).cast("int"),
-                )
-                + F.lit(_UNI_BIG - 1)
-            )
-            / F.lit(_UNI_BIG)
-        )
-        .cast("long")
-        .alias("k"),
+        _uni_k(_uni_dp_col(F.col("w"), vm), F.col("w")).alias("k"),
     )
     scored = words.join(wk, "w")
     return scored.groupBy("lang").agg(
@@ -4253,16 +4205,7 @@ def q_unigram_curve(spark, sf):
             vm = _uni_vm_lit(
                 {p: vocab[p] for p in sing} | dict(multis[:m])
             )
-            k = F.floor(
-                (
-                    F.element_at(
-                        _uni_dp_col(F.col("w"), vm),
-                        (F.length("w") + 1).cast("int"),
-                    )
-                    + F.lit(_UNI_BIG - 1)
-                )
-                / F.lit(_UNI_BIG)
-            ).cast("long")
+            k = _uni_k(_uni_dp_col(F.col("w"), vm), F.col("w"))
             [r] = census.agg(
                 F.coalesce(F.sum(F.col("wc") * k), F.lit(0))
                 .cast("long")
@@ -4408,18 +4351,7 @@ def q_unigram_apply_artifact(spark, sf):
     ).filter((F.col("w") != "") & (F.length("w") <= _UNI_WMAX))
     wk = words.select("w").distinct().select(
         "w",
-        F.floor(
-            (
-                F.element_at(
-                    _uni_dp_col(F.col("w"), vm),
-                    (F.length("w") + 1).cast("int"),
-                )
-                + F.lit(_UNI_BIG - 1)
-            )
-            / F.lit(_UNI_BIG)
-        )
-        .cast("long")
-        .alias("k"),
+        _uni_k(_uni_dp_col(F.col("w"), vm), F.col("w")).alias("k"),
     )
     return words.join(wk, "w").groupBy("lang").agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
@@ -4647,13 +4579,7 @@ def q_tokenizer_eval(spark, sf):
                 ),
             ),
         ]
-        ku = F.floor(
-            (
-                F.element_at(F.col("dp"), (F.length("w") + 1).cast("int"))
-                + F.lit(_UNI_BIG - 1)
-            )
-            / F.lit(_UNI_BIG)
-        ).cast("long")
+        ku = _uni_k(F.col("dp"), F.col("w"))
         cu = F.aggregate(
             F.col("up"), F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
         )
@@ -4788,6 +4714,18 @@ def dsir_feats_of(d):
     )
 
 
+def _dsir_fstats(doc_feat):
+    """The ≤B-row integer sufficient statistics ``(f, ct, cr)``: per
+    feature, the target ('en') and raw counts — what the artifact
+    stores."""
+    return doc_feat.groupBy("f").agg(
+        F.sum(F.when(F.col("lang") == "en", F.col("n")).otherwise(0))
+        .cast("bigint")
+        .alias("ct"),
+        F.sum("n").cast("bigint").alias("cr"),
+    )
+
+
 def _dsir_score_top(doc_feat, fstats):
     """Weights from the integer feature stats + the scoring join + the
     top-m cut — q_select_dsir's tail, shared with the artifact serve."""
@@ -4840,13 +4778,9 @@ def q_dsir_apply_artifact(spark, sf):
     with scope(spark) as sc:
         doc_feat = sc.persist(_dsir_doc_feat(spark, sf))
         if not tokenizer.artifact_current(art, "dsir", want):
-            fstats = doc_feat.groupBy("f").agg(
-                F.sum(F.when(F.col("lang") == "en", F.col("n")).otherwise(0))
-                .cast("bigint")
-                .alias("ct"),
-                F.sum("n").cast("bigint").alias("cr"),
+            tokenizer.save_artifact(
+                spark, _dsir_fstats(doc_feat), art, "dsir", meta=want
             )
-            tokenizer.save_artifact(spark, fstats, art, "dsir", meta=want)
         stored = tokenizer.load_artifact(spark, art, "dsir").select(
             "f", "ct", "cr"
         )

@@ -399,6 +399,30 @@ def q_mm_phash_dedup(spark, sf):
 
 
 # -------------------------------------------- incremental MV end-to-end ----
+def _mv_two_slices(spark, sf, name: str):
+    """Wipe the ``name`` state dir under _scratch and fold orders into it
+    as two date slices (before 1997 → v=1, the rest → v=2) with
+    ``refresh_agg_state``; returns ``(state_dir, final state)``."""
+    import shutil
+
+    from mongo_to_parquet_spark.operators import incremental as inc
+
+    state_dir = scratch_dir(name, sf)
+    shutil.rmtree(state_dir, ignore_errors=True)
+    o = T(spark, sf, "orders")
+    cut = F.lit("1997-01-01").cast("timestamp_ntz")
+    keys, measures = ["o_orderstatus"], ["o_totalprice"]
+    inc.refresh_agg_state(
+        spark, state_dir, o.filter(F.col("o_orderdate") < cut), keys, measures
+    )
+    st = inc.refresh_agg_state(
+        spark, state_dir,
+        o.filter(~(F.col("o_orderdate") < cut) | F.col("o_orderdate").isNull()),
+        keys, measures,
+    )
+    return state_dir, st
+
+
 @q(
     "q_mv_refresh",
     """
@@ -429,23 +453,7 @@ def q_mv_refresh(spark, sf):
     # run — re-folding the same slices into surviving state would
     # double-count (the batch API has no replay guard; the STREAMING
     # refresh records batch ids for exactly that).
-    import shutil
-
-    from mongo_to_parquet_spark.operators import incremental as inc
-
-    state_dir = scratch_dir("mv_state", sf)
-    shutil.rmtree(state_dir, ignore_errors=True)
-    o = T(spark, sf, "orders")
-    cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    keys, measures = ["o_orderstatus"], ["o_totalprice"]
-    inc.refresh_agg_state(
-        spark, state_dir, o.filter(F.col("o_orderdate") < cut), keys, measures
-    )
-    st = inc.refresh_agg_state(
-        spark, state_dir,
-        o.filter(~(F.col("o_orderdate") < cut) | F.col("o_orderdate").isNull()),
-        keys, measures,
-    )
+    _, st = _mv_two_slices(spark, sf, "mv_state")
     return st.select(
         "o_orderstatus",
         F.col("n_rows").cast("bigint").alias("n_rows"),
@@ -479,23 +487,9 @@ def q_mv_diff(spark, sf):
     # must equal the second slice's direct contribution. This is the
     # audit query a production MV needs after every refresh ("what did
     # last night's load change?") — O(keys), never re-reading history.
-    import shutil
-
     from mongo_to_parquet_spark.operators import incremental as inc
 
-    state_dir = scratch_dir("mv_diff", sf)
-    shutil.rmtree(state_dir, ignore_errors=True)
-    o = T(spark, sf, "orders")
-    cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    keys, measures = ["o_orderstatus"], ["o_totalprice"]
-    inc.refresh_agg_state(
-        spark, state_dir, o.filter(F.col("o_orderdate") < cut), keys, measures
-    )
-    inc.refresh_agg_state(
-        spark, state_dir,
-        o.filter(~(F.col("o_orderdate") < cut) | F.col("o_orderdate").isNull()),
-        keys, measures,
-    )
+    state_dir, _ = _mv_two_slices(spark, sf, "mv_diff")
     v1 = inc.read_agg_state(spark, state_dir, version=1).select(
         "o_orderstatus", F.col("n_rows").alias("r1")
     )

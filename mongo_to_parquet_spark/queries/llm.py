@@ -436,14 +436,7 @@ def lid_trigrams_of(d):
     ).select(
         "doc_id",
         "lang",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("lid:"), F.col("g"))), 1, 12),
-                16,
-                10,
-            ).cast("bigint")
-            % _LID_BUCKETS
-        ).alias("b"),
+        (dedup._md5_long("lid:", F.col("g")) % _LID_BUCKETS).alias("b"),
     )
 
 
@@ -2771,9 +2764,7 @@ def _winnow_fp(spark, sf):
     h = sh.select(
         "doc_id",
         "pos",
-        F.conv(F.substring(F.md5(F.concat(F.lit("wn:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h"),
+        dedup._md5_long("wn:", F.col("s")).alias("h"),
     )
     wsel = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WN_W - 1)
     wdoc = Window.partitionBy("doc_id")
@@ -2938,7 +2929,6 @@ def q_dedup_winnow(spark, sf):
 
 # ------------------------------------------------ oracle-exact MinHash -----
 _MH_N, _MH_BANDS = 16, 4          # 16 hashes, 4 bands x 4 rows
-_MH_P = 4294967311                # prime > 2^32 for Kirsch-Mitzenmacher
 _MH_TAU = 0.8
 
 
@@ -2964,7 +2954,7 @@ _MH_TAU = 0.8
     ),
     idx AS (SELECT CAST(unnest(range({_MH_N})) AS BIGINT) AS i),
     sig AS (
-        SELECT doc, i, MIN((h1 + i * h2) % {_MH_P}) AS mh
+        SELECT doc, i, MIN((h1 + i * h2) % {dedup._IMH_P}) AS mh
         FROM hs CROSS JOIN idx GROUP BY doc, i
     ),
     bands AS (
@@ -3008,44 +2998,8 @@ def q_dedup_minhash_md5(spark, sf):
     # signature fold partial-combines to n rows per doc, the bucket join
     # never enumerates all pairs, the exact verify touches candidates
     # only. Shuffles carry (doc, hash) ints and band strings.
-    from pyspark.sql import Window  # noqa: F401  (parallel structure w/ siblings)
-
     d = T(spark, sf, "documents")
-    sh = (
-        d.select(
-            F.col("doc_id").alias("doc"),
-            F.explode(F.array_distinct(shingles(F.col("text"), 3))).alias("s"),
-        )
-    )
-    hs = sh.select(
-        "doc",
-        "s",
-        F.conv(F.substring(F.md5(F.concat(F.lit("mh1:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h1"),
-        F.conv(F.substring(F.md5(F.concat(F.lit("mh2:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h2"),
-    )
-    idx = F.array(*[F.lit(i) for i in range(_MH_N)])
-    sig = (
-        hs.select("doc", "h1", "h2", F.explode(idx).alias("i"))
-        .groupBy("doc", "i")
-        .agg(F.min((F.col("h1") + F.col("i") * F.col("h2")) % _MH_P).alias("mh"))
-    )
-    rows_per_band = _MH_N // _MH_BANDS
-    bands = (
-        sig.groupBy("doc", F.expr(f"i div {rows_per_band}").alias("band"))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mh"))),
-                    lambda x: x["mh"].cast("string"),
-                ),
-                "-",
-            ).alias("sigstr")
-        )
-    )
+    bands = dedup.minhash_index(d, num_hashes=_MH_N, bands=_MH_BANDS)
     a = bands.select(F.col("doc").alias("id1"), "band", "sigstr")
     b = bands.select(F.col("doc").alias("id2"), "band", "sigstr")
     cand = (
@@ -3054,27 +3008,11 @@ def q_dedup_minhash_md5(spark, sf):
         .select("id1", "id2")
         .distinct()
     )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    sa = sh.select(F.col("doc").alias("id1"), "s")
-    sb = sh.select(F.col("doc").alias("id2"), F.col("s").alias("s2"))
-    inter = (
-        cand.join(sa, "id1")
-        .join(sb, "id2")
-        .filter(F.col("s") == F.col("s2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    sh = d.select(
+        F.col("doc_id").alias("doc"),
+        F.explode(F.array_distinct(shingles(F.col("text"), 3))).alias("s"),
     )
-    s1 = sizes.select(F.col("doc").alias("id1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("doc").alias("id2"), F.col("sz").alias("sz2"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("sz1") + F.col("sz2") - F.col("n_inter")
-    )
-    return (
-        inter.join(s1, "id1")
-        .join(s2, "id2")
-        .filter(jac >= _MH_TAU)
-        .select("id1", "id2", F.round(jac, 4).alias("jaccard"))
-    )
+    return dedup.jaccard_verify(cand, sh, _MH_TAU)
 
 
 # ------------------------------------------- incremental MinHash dedup -----
@@ -3236,9 +3174,7 @@ def q_dedup_simhash_md5(spark, sf):
     h = tf.select(
         "doc",
         "tf",
-        F.conv(F.substring(F.md5(F.concat(F.lit("sh:"), F.col("tok"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h"),
+        dedup._md5_long("sh:", F.col("tok")).alias("h"),
     )
     bits = F.array(*[F.lit(i) for i in range(_SH_BITS)])
     # per-bit extraction via expr: Spark's shiftright API takes an int
@@ -3288,6 +3224,58 @@ def _hp_c_sql(p: str, j: str) -> str:
     return (
         f"(CAST(concat('0x', substr(md5(concat('hp:', CAST({p} AS VARCHAR), ':', "
         f"CAST({j} AS VARCHAR))), 1, 12)) AS BIGINT) % 20014) / 10007.0 - 1.0"
+    )
+
+
+def _hp_sig(spark, e, n_planes: int):
+    """``(vec_id, sig)``: the md5 hyperplane signature of each embedding
+    over ``n_planes`` planes — the Spark side of the oracle's dims,
+    planes (``_hp_c_sql``), proj and sig steps. Projections sum in
+    DECIMAL, so every sign, and so every bucket, is bit-identical
+    across engines."""
+    dims = e.select(
+        "vec_id",
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("j", "val"),
+    )
+    pj = [(p, j) for p in range(n_planes) for j in range(64)]
+    c = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.lit("hp:"),
+                        F.col("p").cast("string"),
+                        F.lit(":"),
+                        F.col("j").cast("string"),
+                    )
+                ),
+                1,
+                12,
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % 20014
+    ) / F.lit(10007.0) - F.lit(1.0)
+    planes = spark.createDataFrame(pj, "p long, j long").select("p", "j", c.alias("c"))
+    proj = (
+        dims.join(F.broadcast(planes), "j")
+        .groupBy("vec_id", "p")
+        .agg(
+            F.sum((F.col("val") * F.col("c")).cast("decimal(38,18)"))
+            .cast("double")
+            .alias("pr")
+        )
+    )
+    return proj.groupBy("vec_id").agg(
+        F.sum(
+            F.when(
+                F.col("pr") >= 0,
+                F.expr("shiftleft(cast(1 as bigint), cast(p as int))"),
+            ).otherwise(F.lit(0).cast("bigint"))
+        )
+        .cast("bigint")
+        .alias("sig")
     )
 
 
@@ -3343,53 +3331,8 @@ def q_sim_topk_lsh_md5(spark, sf):
     # the corpus) per probe instead of the corpus — the recall/cost dial
     # is the plane count, and multi-probe (flipping low-|proj| bits)
     # raises recall without rebuilds.
-    from pyspark.sql import functions as F  # noqa: F811
-
     e = T(spark, sf, "embeddings")
-    dims = e.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("j", "val"),
-    )
-    pj = [(p, j) for p in range(_HP_PLANES) for j in range(64)]
-    c = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("hp:"),
-                        F.col("p").cast("string"),
-                        F.lit(":"),
-                        F.col("j").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 20014
-    ) / F.lit(10007.0) - F.lit(1.0)
-    planes = spark.createDataFrame(pj, "p long, j long").select("p", "j", c.alias("c"))
-    proj = (
-        dims.join(F.broadcast(planes), "j")
-        .groupBy("vec_id", "p")
-        .agg(
-            F.sum((F.col("val") * F.col("c")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("pr")
-        )
-    )
-    sig = proj.groupBy("vec_id").agg(
-        F.sum(
-            F.when(
-                F.col("pr") >= 0,
-                F.expr("shiftleft(cast(1 as bigint), cast(p as int))"),
-            ).otherwise(F.lit(0).cast("bigint"))
-        )
-        .cast("bigint")
-        .alias("sig")
-    )
+    sig = _hp_sig(spark, e, _HP_PLANES)
     se = sig.join(e, "vec_id")
     probe = F.broadcast(
         se.filter(F.col("vec_id") == 0).select(
@@ -3465,50 +3408,7 @@ def q_dedup_embed_lsh_md5(spark, sf):
     # bucket join replaces all-pairs with per-bucket fans, and the plane
     # count dials bucket size against recall.
     e = T(spark, sf, "embeddings")
-    dims = e.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("j", "val"),
-    )
-    pj = [(p, j) for p in range(_EHP_PLANES) for j in range(64)]
-    c = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("hp:"),
-                        F.col("p").cast("string"),
-                        F.lit(":"),
-                        F.col("j").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 20014
-    ) / F.lit(10007.0) - F.lit(1.0)
-    planes = spark.createDataFrame(pj, "p long, j long").select("p", "j", c.alias("c"))
-    proj = (
-        dims.join(F.broadcast(planes), "j")
-        .groupBy("vec_id", "p")
-        .agg(
-            F.sum((F.col("val") * F.col("c")).cast("decimal(38,18)"))
-            .cast("double")
-            .alias("pr")
-        )
-    )
-    sig = proj.groupBy("vec_id").agg(
-        F.sum(
-            F.when(
-                F.col("pr") >= 0,
-                F.expr("shiftleft(cast(1 as bigint), cast(p as int))"),
-            ).otherwise(F.lit(0).cast("bigint"))
-        )
-        .cast("bigint")
-        .alias("sig")
-    )
+    sig = _hp_sig(spark, e, _EHP_PLANES)
     a = sig.select(F.col("vec_id").alias("id1"), "sig")
     b = sig.select(F.col("vec_id").alias("id2"), "sig")
     pairs = a.join(b, "sig").filter(F.col("id1") < F.col("id2")).select("id1", "id2")
@@ -5435,7 +5335,7 @@ def _lsh_tuning_sql(sample_frac: float = 1.0) -> str:
     ),
     idx AS (SELECT CAST(unnest(range({_MH_N})) AS BIGINT) AS i),
     sig AS (
-        SELECT doc, i, MIN((h1 + i * h2) % {_MH_P}) AS mh
+        SELECT doc, i, MIN((h1 + i * h2) % {dedup._IMH_P}) AS mh
         FROM hs CROSS JOIN idx GROUP BY doc, i
     ),
     bands AS (
@@ -5467,9 +5367,8 @@ def q_lsh_tuning(spark, sf, sample_frac: float = 1.0):
     # banded-MinHash buckets actually capture. Theory says capture =
     # 1−(1−s^r)^b; this key gives the EMPIRICAL curve on your corpus
     # with the exact hash family the pipeline runs (same shingles, same
-    # md5 Kirsch–Mitzenmacher signatures as q_dedup_minhash_md5 — the
-    # definitions are embedded verbatim so a parameter change re-gates
-    # the curve). High bins must capture ~everything, low bins ~nothing;
+    # md5 Kirsch–Mitzenmacher bands as q_dedup_minhash_md5 — both call
+    # dedup.minhash_index, so a parameter change re-gates the curve). High bins must capture ~everything, low bins ~nothing;
     # the transition band tells you whether τ sits on the safe side.
     #
     # Scale: the exact side is the q_dedup_ngram explode-join (its
@@ -5481,21 +5380,13 @@ def q_lsh_tuning(spark, sf, sample_frac: float = 1.0):
     # on doc_id (_lsh_sample_bound) keeps the sampled-in set a pure
     # function of the data, so _lsh_tuning_sql(sample_frac) builds the
     # matching oracle and the sampled curve stays engine-exact
-    # (tests/test_dedup.py::test_lsh_tuning_sample_frac). Sampling DOCS
+    # (tests/test_operators.py::test_lsh_tuning_sample_frac). Sampling DOCS
     # (not pairs) shrinks the exact side's candidate volume
     # quadratically: frac² of the pairs for frac of the docs.
     d = T(spark, sf, "documents")
     if sample_frac < 1.0:
         d = d.filter(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("lsht:"), F.col("doc_id").cast("string"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            dedup._md5_long("lsht:", F.col("doc_id").cast("string"))
             < F.lit(_lsh_sample_bound(sample_frac))
         )
     sh = d.select(
@@ -5521,33 +5412,7 @@ def q_lsh_tuning(spark, sf, sample_frac: float = 1.0):
             F.expr("(ni * 10000) div (sz1 + sz2 - ni)").cast("bigint").alias("j_bp"),
         )
     )
-    hs = sh.select(
-        "doc",
-        "s",
-        F.conv(F.substring(F.md5(F.concat(F.lit("mh1:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h1"),
-        F.conv(F.substring(F.md5(F.concat(F.lit("mh2:"), F.col("s"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("h2"),
-    )
-    idx = F.array(*[F.lit(i) for i in range(_MH_N)])
-    sig = (
-        hs.select("doc", "h1", "h2", F.explode(idx).alias("i"))
-        .groupBy("doc", "i")
-        .agg(F.min((F.col("h1") + F.col("i") * F.col("h2")) % _MH_P).alias("mh"))
-    )
-    bands = sig.groupBy(
-        "doc", F.expr(f"i div {_MH_N // _MH_BANDS}").alias("band")
-    ).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "mh"))),
-                lambda x: x["mh"].cast("string"),
-            ),
-            "-",
-        ).alias("sigstr")
-    )
+    bands = dedup.minhash_index(d, num_hashes=_MH_N, bands=_MH_BANDS)
     ca = bands.select(F.col("doc").alias("id1"), "band", "sigstr")
     cb = bands.select(F.col("doc").alias("id2"), "band", "sigstr")
     cand = (

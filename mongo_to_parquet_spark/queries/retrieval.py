@@ -2659,26 +2659,16 @@ def q_ann_tuning(spark, sf):
     from mongo_to_parquet_spark.operators.similarity import (
         _assign_cells,
         _centroids,
+        _probe_sample,
         brute_force_topk_batch,
         dot,
     )
 
     emb = T(spark, sf, "embeddings")
     max_p = max(_ANN_TUNE_PS)
-    probe_rows = (
-        emb.select(
-            "vec_id",
-            F.substring(
-                F.md5(F.concat(F.lit("annt:"), F.col("vec_id").cast("string"))),
-                1,
-                12,
-            ).alias("hp"),
-        )
-        .orderBy(F.col("hp").asc(), F.col("vec_id").asc())
-        .limit(_ANN_TUNE_NPROBES)
-        .collect()
-    )
-    probe_ids = [r["vec_id"] for r in probe_rows]
+    probe_ids = [
+        r["vec_id"] for r in _probe_sample(emb, "annt:", _ANN_TUNE_NPROBES)
+    ]
     cents = F.broadcast(_centroids(emb, _ANN_TUNE_CELLS, "vec_id", "embedding"))
     assigned = _assign_cells(
         emb, cents, "vec_id", "embedding", overlap=max(_ANN_TUNE_OVERLAPS)

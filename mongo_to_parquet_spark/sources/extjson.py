@@ -196,6 +196,19 @@ def write_extjson_lines(path: str, docs, id_field: str = "_id") -> int:
     return n
 
 
+def _dump_files(path: str) -> list[str]:
+    """The data files of a mongoexport dump: a directory's ``.json`` and
+    ``.jsonl`` files (not ``_``/``.``-prefixed markers), sorted by name,
+    or the one file ``path`` names."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith((".json", ".jsonl")) and not f.startswith(("_", "."))
+    )
+
+
 def infer_extjson_schema(spark, path: str, sample_rows: int = 1000):
     """Schema for a mongoexport dump from a bounded driver-side sample.
 
@@ -205,17 +218,8 @@ def infer_extjson_schema(spark, path: str, sample_rows: int = 1000):
     resulting schema is an explicit, reviewable artifact the caller pins —
     not the reference's silent first-batch freeze (main.py:212-218).
     """
-    files = (
-        sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith((".json", ".jsonl")) and not f.startswith(("_", "."))
-        )
-        if os.path.isdir(path)
-        else [path]
-    )
     docs = []
-    for fp in files:
+    for fp in _dump_files(path):
         with open(fp, encoding="utf-8") as fh:
             for line in fh:
                 line = line.strip()
@@ -399,18 +403,13 @@ class MongoExportReader(DataSourceReader):
             raise ValueError("mongoexport source requires a path")
 
     def partitions(self):
-        p = self.path
-        if os.path.isdir(p):
-            files = sorted(
-                os.path.join(p, f)
-                for f in os.listdir(p)
-                if f.endswith((".json", ".jsonl")) and not f.startswith(("_", "."))
-            )
-        else:
-            files = [p]
-        return [_FilePartition(f) for f in files] or [_FilePartition(p)]
+        # an empty dump still needs one partition: "" reads as no rows
+        files = _dump_files(self.path)
+        return [_FilePartition(f) for f in files] or [_FilePartition("")]
 
     def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
+        if not partition.path:  # empty-dump placeholder
+            return
         # imported here, not at module level: the planner's Python workers
         # import this module to unpickle the DataSource and never scan
         import pyarrow as pa
@@ -461,13 +460,7 @@ class MongoExportStreamReader(DataSourceStreamReader):
         self._batch_reader = MongoExportReader(schema, options)
 
     def _files(self) -> list[str]:
-        if os.path.isdir(self.path):
-            return sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith((".json", ".jsonl")) and not f.startswith(("_", "."))
-            )
-        return [self.path] if os.path.exists(self.path) else []
+        return _dump_files(self.path) if os.path.exists(self.path) else []
 
     def initialOffset(self) -> dict:
         return {"index": 0}
@@ -482,8 +475,6 @@ class MongoExportStreamReader(DataSourceStreamReader):
         ] or [_FilePartition("")]
 
     def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
-        if not partition.path:  # empty micro-batch placeholder
-            return iter(())
         return self._batch_reader.read(partition)
 
     def commit(self, end: dict) -> None:

@@ -1,11 +1,15 @@
 """Oracle pins for the keys that share one query builder.
 
-Several declared keys are thin tails over a shared private builder in
-queries/retrieval.py or queries/llm.py (the BM25 scorer, the in-memory
-IVF×PQ route, the labelled eval top-k, the winnowing fingerprints, the
-bitext margin). An edit to a builder moves every key that calls it, so
-each of those keys is checked here against its DuckDB oracle with the
-same comparison tools/parity.py applies.
+Several declared keys are thin tails over a shared builder in
+queries/retrieval.py, queries/llm.py, queries/curation.py,
+queries/lakehouse.py or operators/dedup.py (the BM25 scorer, the
+in-memory IVF×PQ route, the labelled eval top-k, the winnowing
+fingerprints, the bitext margin, the md5 MinHash bands and exact-Jaccard
+verify, the 48-bit md5 hash, the md5 hyperplane signature, the DSIR
+featurization and scoring, the unigram piece count, the two-slice MV
+refresh). An edit to a builder moves every key that calls it, so each
+of those keys that no other tier-1 test compares with its DuckDB oracle
+is checked here, with the same comparison tools/parity.py applies.
 """
 
 from __future__ import annotations
@@ -42,6 +46,21 @@ BUILDER_KEYS = (
     # _bitext_margin
     "q_mine_bitext",
     "q_mine_bitext_ivf",
+    # dedup.minhash_index / dedup.jaccard_verify
+    "q_dedup_minhash_md5",
+    "q_dedup_incremental",
+    # dedup._md5_long
+    "q_dedup_simhash_md5",
+    # _hp_sig
+    "q_sim_topk_lsh_md5",
+    "q_dedup_embed_lsh_md5",
+    # _dsir_doc_feat / _dsir_fstats / _dsir_score_top
+    "q_select_dsir",
+    # _uni_k
+    "q_unigram_curve",
+    # _mv_two_slices
+    "q_mv_refresh",
+    "q_mv_diff",
 )
 
 
@@ -53,7 +72,7 @@ def duck(sf_dir):
 @pytest.mark.parametrize("key", BUILDER_KEYS)
 def test_shared_builder_key_matches_oracle(spark, sf_dir, duck, key):
     got = QS[key](spark, sf_dir).toPandas()
-    spark.catalog.clearCache()  # the bitext keys persist their sims
+    spark.catalog.clearCache()  # the bitext keys and q_select_dsir persist
     want = duck.execute(OS[key]).df()
     assert len(got) > 0, key
     assert compare(got, want) is None, (key, compare(got, want))

@@ -49,6 +49,23 @@ def test_mongoexport_source_unwraps_envelopes(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 2
 
 
+def test_mongoexport_empty_dump_reads_zero_rows(spark, tmp_path):
+    """A dump directory with no data files (only markers) is an empty
+    table, not an attempt to open the directory as a file."""
+    from mongo_to_parquet_spark.sources.extjson import (
+        MongoExportDataSource,
+        infer_extjson_schema,
+    )
+
+    d = tmp_path / "dump"
+    d.mkdir()
+    (d / "_SUCCESS").write_text("")
+    spark.dataSource.register(MongoExportDataSource)
+    df = spark.read.format("mongoexport").schema("_id string, n bigint").load(str(d))
+    assert df.count() == 0
+    assert len(infer_extjson_schema(spark, str(d)).fields) == 0
+
+
 def test_mongoexport_decimal128_stays_exact(spark, tmp_path):
     """$numberDecimal (BSON Decimal128 — money) must bind losslessly to a
     DecimalType field; a float round-trip would corrupt the one BSON
