@@ -1,21 +1,32 @@
 """Similarity search over embedding columns (SURVEY §2.3 N★).
 
-Three tiers, trading exactness for scale:
+What it holds, trading exactness for scale:
 
-  brute_force_topk   — exact cosine top-k: broadcast the probe, score every
-                       vector JVM-side (functions/vector.py), TakeOrdered.
-                       The 100 TB shape: per-partition local top-k then a
-                       single driver merge of k × partitions rows — Spark's
-                       ``orderBy().limit(k)`` already plans exactly that
-                       (TakeOrderedAndProject), so no custom code.
-  lsh_topk           — random-hyperplane LSH: bucket vectors by sign
-                       pattern, search only the probe's bucket (+ optional
-                       multi-probe neighbors). Approximate; recall grows
-                       with tables.
-  ivf_topk           — IVF-style coarse quantization without a trained
-                       codebook: deterministic centroids = first vector of
-                       each label (or provided), assign by nearest centroid,
-                       probe nearest n_probe cells. Approximate.
+  exact top-k   brute_force_topk(_batch), range_search, hard_negatives:
+                broadcast the probe (or probe batch), score every vector
+                JVM-side (functions/vector.py). One probe ends in
+                ``orderBy().limit(k)`` (TakeOrderedAndProject: per-partition
+                top-k, one driver merge); a batch in a per-probe rank
+                window (WindowGroupLimit).
+  lsh_topk      random-hyperplane LSH: scan only the probe's bucket.
+  IVF           the first n_cells vectors by id as coarse centroids,
+                nearest-centroid cells, probe the n_probe nearest: in
+                memory (ivf_topk(_batch)) or as a cell-partitioned layout
+                (build_ivf_layout, ivf_append, ivf_topk_from_layout).
+  PQ, IVF×PQ    SQ8 quantization (sq8_dims), 2-subspace PQ codes (pq_codes,
+                pq_encode_frozen) and the IVF×PQ layout served by integer
+                ADC with an optional exact re-rank (build_ivfpq_layout,
+                ivfpq_append, ivfpq_topk_*).
+  drift         recall_leg measures a layout against brute force;
+                maintain_ivf_layout / maintain_ivfpq_layout rebuild it on
+                drift through one loop (_maintain_layout).
+  k-means       Lloyd's, on integer-quantized distances.
+
+Each step the operators share is one private builder: the probe batch
+(_probe_rows, _probe_batch), the rounded cosine (_sim) and its single-probe
+and per-probe tails (_sim_topk, _probe_topk), the per-probe cell pick
+(_probe_cells), SQ8 (_sq8, _sq8_dims), the PQ split, argmin and ADC table
+(_pq_split, _pq_argmin, _adc_table).
 
 Embedding near-dup (cosine ≥ τ pair mining) lives here too — used by
 queries/llm.py with a same-label blocking key; unblocked variant pairs via
@@ -36,6 +47,61 @@ def _probe_df(emb: DataFrame, probe_id: int, id_col: str, vec_col: str) -> DataF
     return emb.filter(F.col(id_col) == probe_id).select(F.col(vec_col).alias("__probe"))
 
 
+def _probe_rows(rows: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """(probe_id, __probe, *extra): the probe side of every batch operator."""
+    return rows.select(
+        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__probe"), *extra
+    )
+
+
+def _probe_batch(emb: DataFrame, probe_ids, id_col: str, vec_col: str, *extra):
+    """The broadcast :func:`_probe_rows` of the vectors in ``probe_ids``."""
+    probes = emb.filter(F.col(id_col).isin(list(probe_ids)))
+    return F.broadcast(_probe_rows(probes, id_col, vec_col, *extra))
+
+
+def _sim(vec_col: str, probe):
+    """The rounded cosine every top-k here ranks by: 4dp, so ties and the
+    (sim desc, id asc) order are engine-stable."""
+    return F.round(cosine(F.col(vec_col), probe), 4).alias("sim")
+
+
+def _sim_topk(df: DataFrame, probe, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Single-probe tail: (id, sim), the first k by sim desc, id asc —
+    plans as TakeOrderedAndProject."""
+    return (
+        df.select(F.col(id_col), _sim(vec_col, probe))
+        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
+
+
+def _probe_topk(scored: DataFrame, k: int, id_col: str, by=None) -> DataFrame:
+    """Per-probe tail: ``rk`` = row_number over (partition by probe_id
+    order by ``by`` (default sim desc), id asc), kept while rk ≤ k —
+    plans as WindowGroupLimit."""
+    by = F.col("sim").desc() if by is None else by
+    w = Window.partitionBy("probe_id").orderBy(by, F.col(id_col).asc())
+    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
+        F.col("rk") <= k
+    )
+
+
+def _probe_cells(cents: DataFrame, probes: DataFrame, n_probe: int) -> DataFrame:
+    """(probe_id, cell, crk ≤ n_probe): each probe's cells by centroid dot
+    product, nearest first, cell asc on ties."""
+    cw = Window.partitionBy("probe_id").orderBy(
+        F.col("pscore").desc(), F.col("cell").asc()
+    )
+    return (
+        cents.crossJoin(probes)
+        .withColumn("pscore", dot(F.col("cvec"), F.col("__probe")))
+        .withColumn("crk", F.row_number().over(cw).cast("long"))
+        .filter(F.col("crk") <= n_probe)
+        .select("probe_id", "cell", "crk")
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     probe_id: int,
@@ -49,16 +115,8 @@ def brute_force_topk(
     id so results hash-match an oracle that sorts the same way.
     """
     probe = F.broadcast(_probe_df(emb, probe_id, id_col, vec_col))
-    return (
-        emb.filter(F.col(id_col) != probe_id)
-        .crossJoin(probe)
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    scored = emb.filter(F.col(id_col) != probe_id).crossJoin(probe)
+    return _sim_topk(scored, F.col("__probe"), k, id_col, vec_col)
 
 
 def brute_force_topk_batch(
@@ -78,22 +136,12 @@ def brute_force_topk_batch(
     partition only keeps k rows per probe. Scan cost is paid once no
     matter how many probes.
     """
-    probes = F.broadcast(
-        emb.filter(F.col(id_col).isin(list(probe_ids))).select(
-            F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__probe")
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        emb.crossJoin(probes)
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
+    probes = _probe_batch(emb, probe_ids, id_col, vec_col)
+    scored = emb.crossJoin(probes).filter(F.col(id_col) != F.col("probe_id"))
+    return _probe_topk(
+        scored.select("probe_id", F.col(id_col), _sim(vec_col, F.col("__probe"))),
+        k,
+        id_col,
     )
 
 
@@ -146,16 +194,10 @@ def lsh_topk(
             F.col(vec_col).alias("__probe"), F.col("__b").alias("__pb")
         )
     )
-    return (
-        bucketed.crossJoin(probe)
-        .filter((F.col("__b") == F.col("__pb")) & (F.col(id_col) != probe_id))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    scored = bucketed.crossJoin(probe).filter(
+        (F.col("__b") == F.col("__pb")) & (F.col(id_col) != probe_id)
     )
+    return _sim_topk(scored, F.col("__probe"), k, id_col, vec_col)
 
 
 def _centroids(emb: DataFrame, n_cells: int, id_col: str, vec_col: str) -> DataFrame:
@@ -220,7 +262,7 @@ def ivf_topk(
     cents = F.broadcast(_centroids(emb, n_cells, id_col, vec_col))
     assigned = _assign_cells(emb, cents, id_col, vec_col)
     # probe the n_probe cells whose centroid is nearest the probe vector
-    probe_vec = F.broadcast(emb.filter(F.col(id_col) == probe_id).select(F.col(vec_col).alias("__probe")))
+    probe_vec = F.broadcast(_probe_df(emb, probe_id, id_col, vec_col))
     cells = (
         cents.crossJoin(probe_vec)
         .withColumn("pscore", dot(F.col("cvec"), F.col("__probe")))
@@ -228,16 +270,38 @@ def ivf_topk(
         .limit(n_probe)
         .select("cell")
     )
-    return (
+    scored = (
         assigned.join(F.broadcast(cells), "cell")
         .filter(F.col(id_col) != probe_id)
         .crossJoin(probe_vec)
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
+    )
+    return _sim_topk(scored, F.col("__probe"), k, id_col, vec_col)
+
+
+def _ivf_batch(
+    emb: DataFrame,
+    cents: DataFrame,
+    probes: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF-flat top-k of a probe batch under the given (broadcast)
+    centroids: assign every vector of ``emb`` to its nearest cell, let each
+    probe scan its own n_probe cells, rank per probe. Returns (probe_id,
+    id, sim, rk ≤ k)."""
+    assigned = _assign_cells(emb, cents, id_col, vec_col)
+    cells = _probe_cells(cents, probes, n_probe).select("probe_id", "cell")
+    scored = (
+        assigned.join(F.broadcast(cells), "cell")
+        .filter(F.col(id_col) != F.col("probe_id"))
+        .join(probes, "probe_id")
+    )
+    return _probe_topk(
+        scored.select("probe_id", F.col(id_col), _sim(vec_col, F.col("__probe"))),
+        k,
+        id_col,
     )
 
 
@@ -259,37 +323,8 @@ def ivf_topk_batch(
     two are directly joinable for recall evaluation.
     """
     cents = F.broadcast(_centroids(emb, n_cells, id_col, vec_col))
-    assigned = _assign_cells(emb, cents, id_col, vec_col)
-    probes = F.broadcast(
-        emb.filter(F.col(id_col).isin(list(probe_ids))).select(
-            F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__probe")
-        )
-    )
-    cw = Window.partitionBy("probe_id").orderBy(
-        F.col("pscore").desc(), F.col("cell").asc()
-    )
-    cells = (
-        cents.crossJoin(probes.select("probe_id", "__probe"))
-        .withColumn("pscore", dot(F.col("cvec"), F.col("__probe")))
-        .withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") <= n_probe)
-        .select("probe_id", "cell")
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        assigned.join(F.broadcast(cells), "cell")
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .join(probes, "probe_id")
-        .select(
-            "probe_id",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-    )
+    probes = _probe_batch(emb, probe_ids, id_col, vec_col)
+    return _ivf_batch(emb, cents, probes, k, n_probe, id_col, vec_col)
 
 
 #: layout metadata marker — the ANN analogue of the artifact store's
@@ -589,40 +624,10 @@ def recall_leg(
     :func:`maintain_ivf_layout` rebuild loop, so the monitor and the
     remediation measure staleness with identical machinery."""
     probe_ids = [r["vec_id"] for r in _probe_sample(corp, salt, n_probes)]
-    assigned = _assign_cells(corp, cents, "vec_id", "embedding")
-    probes = F.broadcast(
-        corp.filter(F.col("vec_id").isin(probe_ids)).select(
-            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pv")
-        )
-    )
-    cw = Window.partitionBy("probe_id").orderBy(
-        F.col("pscore").desc(), F.col("cell").asc()
-    )
-    cells = (
-        cents.crossJoin(probes)
-        .withColumn("pscore", dot(F.col("cvec"), F.col("pv")))
-        .withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") <= n_probe)
-        .select("probe_id", "cell")
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    approx = (
-        assigned.join(F.broadcast(cells), "cell")
-        .join(probes, "probe_id")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("pv")), 4).alias("sim"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col("probe_id").alias("a_pid"), F.col("vec_id").alias("a_vid")
-        )
-    )
+    probes = _probe_batch(corp, probe_ids, "vec_id", "embedding")
+    approx = _ivf_batch(
+        corp, cents, probes, k, n_probe, "vec_id", "embedding"
+    ).select(F.col("probe_id").alias("a_pid"), F.col("vec_id").alias("a_vid"))
     exact = brute_force_topk_batch(corp, probe_ids, k=k).select(
         "probe_id", "vec_id"
     )
@@ -674,62 +679,60 @@ def maintain_ivf_layout(
     the one corpus-sized pass (assign + partitioned rewrite), priced in
     SCALE.md's ×10 probe.
     """
-    want = {"family": "ivf", "n_cells": n_cells, "overlap": overlap}
-    meta = read_layout_meta(layout_dir)
-
-    def _measure(cents) -> int:
-        return int(
-            recall_leg(
-                emb,
-                F.broadcast(cents),
-                "bp",
-                n_probe=n_probe,
-                n_probes=n_probes,
-            ).first()["bp"]
-        )
-
-    def _build(version: int) -> int:
-        build_ivf_layout(
-            emb, layout_dir, n_cells=n_cells, overlap=overlap
-        )
-        spark = emb.sparkSession
-        bp = _measure(spark.read.parquet(f"{layout_dir}/centroids"))
-        # marker lands after data (build_ivf_layout), then gains the
-        # version + measured recall — data is complete at both writes
-        write_layout_meta(
-            layout_dir, {**want, "version": version, "build_recall_bp": bp}
-        )
-        return bp
-
-    if not (meta and all(meta.get(k) == v for k, v in want.items())):
-        bp = _build(1)
-        return {
-            "version": 1,
-            "build_recall_bp": bp,
-            "now_recall_bp": bp,
-            "drift_bp": 0,
-            "rebuilt": True,
-            "new_recall_bp": bp,
-        }
-
     spark = emb.sparkSession
-    build_bp = int(meta["build_recall_bp"])
-    now_bp = _measure(spark.read.parquet(f"{layout_dir}/centroids"))
-    drift = build_bp - now_bp
-    if drift <= thresh_bp:
-        return {
-            "version": int(meta["version"]),
-            "build_recall_bp": build_bp,
-            "now_recall_bp": now_bp,
-            "drift_bp": drift,
-            "rebuilt": False,
-            "new_recall_bp": now_bp,
-        }
-    new_bp = _build(int(meta["version"]) + 1)
+
+    def measure() -> int:
+        cents = F.broadcast(spark.read.parquet(f"{layout_dir}/centroids"))
+        leg = recall_leg(emb, cents, "bp", n_probe=n_probe, n_probes=n_probes)
+        return int(leg.first()["bp"])
+
+    return _maintain_layout(
+        layout_dir,
+        {"family": "ivf", "n_cells": n_cells, "overlap": overlap},
+        lambda: build_ivf_layout(emb, layout_dir, n_cells=n_cells, overlap=overlap),
+        measure,
+        thresh_bp,
+    )
+
+
+def _maintain_layout(layout_dir: str, want: dict, build, measure, thresh_bp: int) -> dict:
+    """The build→monitor→rebuild loop behind :func:`maintain_ivf_layout`
+    and :func:`maintain_ivfpq_layout`. ``build()`` (re)writes the layout
+    data, ``measure()`` returns the recall of what is on disk now in basis
+    points, ``want`` is the config the marker must match.
+
+    A marker that is missing or names another config → build version 1.
+    Otherwise drift = the marker's build_recall_bp − measure(); drift
+    ≤ thresh_bp returns without touching the layout, a larger drift
+    rebuilds at version + 1. After every build the marker is rewritten
+    with the version and the freshly measured recall (the build itself
+    already landed a config-only marker after its data, so the data is
+    complete at both writes)."""
+    meta = read_layout_meta(layout_dir)
+    if meta and all(meta.get(k) == v for k, v in want.items()):
+        version = int(meta["version"])
+        build_bp = int(meta["build_recall_bp"])
+        now_bp = measure()
+        drift = build_bp - now_bp
+        if drift <= thresh_bp:
+            return {
+                "version": version,
+                "build_recall_bp": build_bp,
+                "now_recall_bp": now_bp,
+                "drift_bp": drift,
+                "rebuilt": False,
+                "new_recall_bp": now_bp,
+            }
+        version += 1
+    else:
+        version, build_bp, now_bp, drift = 1, None, None, 0
+    build()
+    new_bp = measure()
+    write_layout_meta(layout_dir, {**want, "version": version, "build_recall_bp": new_bp})
     return {
-        "version": int(meta["version"]) + 1,
-        "build_recall_bp": build_bp,
-        "now_recall_bp": now_bp,
+        "version": version,
+        "build_recall_bp": new_bp if build_bp is None else build_bp,
+        "now_recall_bp": new_bp if now_bp is None else now_bp,
         "drift_bp": drift,
         "rebuilt": True,
         "new_recall_bp": new_bp,
@@ -797,13 +800,7 @@ def ivf_topk_from_layout(
         # is ONE candidate — dedup by id before scoring (rows differ only
         # in cell/ark; the vector payload is identical)
         scan = scan.dropDuplicates([id_col])
-    return (
-        scan.select(
-            F.col(id_col), F.round(cosine(F.col(vec_col), pv), 4).alias("sim")
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _sim_topk(scan, pv, k, id_col, vec_col)
 
 
 def pq_codes(
@@ -812,8 +809,7 @@ def pq_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """PQ encode (the q_embed_pq dataflow, reusable): returns
-    ``(codes, codebook, rng)`` —
+    """PQ encode: returns ``(codes, codebook, rng)`` —
 
     - codes:    (id, sub, cid) — each vector's nearest codebook centroid
                 per subspace (2 subspaces), integer-exact argmin over SQ8
@@ -827,6 +823,10 @@ def pq_codes(
     Scale: codebook is n_codes×DIM rows → broadcast; the distance agg is
     keyed (vector, sub, cid) and partial-combines map-side; argmin is a
     min(struct) aggregate — no window over corpus-sized data.
+
+    The quantize, split and argmin steps are the builders q_embed_pq and
+    q_sim_topk_pq call too (_sq8_dims, _pq_split, _pq_argmin); this
+    encode adds the fan_out of its input.
     """
     # fan_out BEFORE the explode: the (vec, pos) expansion and everything
     # downstream (range agg, the DIM×n_codes distance pipeline) otherwise
@@ -838,39 +838,19 @@ def pq_codes(
     # higher-order functions evaluate interpreted per element, while this
     # explode+join pipeline stays in whole-stage codegen. Keep the
     # codegen'd join; buy parallelism with fan_out.)
-    dims = fan_out(emb.select(id_col, vec_col)).select(
-        id_col, F.posexplode(vec_col).alias("pos", "val")
-    ).select(id_col, "pos", F.col("val").cast("double").alias("val"))
-    rng = dims.groupBy("pos").agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
-    qv = dims.join(F.broadcast(rng), "pos").select(
-        id_col, "pos", _sq8(F.col("val")).alias("qv")
-    )
-    half = emb.select(
-        F.floor(F.size(vec_col) / 2).cast("int").alias("h")
-    ).first()["h"]
-    qs = qv.withColumn("sub", (F.col("pos") >= half).cast("int"))
-    codebook = qs.filter(F.col(id_col) < n_codes).select(
-        F.col(id_col).alias("cid"), "pos", F.col("qv").alias("cqv"), "sub"
-    )
-    diff = F.col("qv") - F.col("cqv")
-    dist = (
-        qs.join(F.broadcast(codebook.drop("sub")), "pos")
-        .groupBy(id_col, "sub", "cid")
-        .agg(F.sum((diff * diff).cast("bigint")).alias("dist"))
-    )
-    codes = (
-        dist.groupBy(id_col, "sub")
-        .agg(F.min(F.struct("dist", "cid")).alias("b"))
-        .select(id_col, "sub", F.col("b.cid").alias("cid"))
+    qv, rng = _sq8_dims(fan_out(emb.select(id_col, vec_col)), id_col, vec_col)
+    qs, codebook = _pq_split(qv, emb, n_codes, id_col, vec_col)
+    codes = _pq_argmin(qs, codebook, id_col).select(
+        id_col, "sub", F.col("b.cid").alias("cid")
     )
     return codes, codebook, rng
 
 
 def _sq8(val):
     """The engine-stable SQ8 bucket function (floor, clamp-high) given a
-    double component and in-scope ``mn``/``mx`` columns — one definition
-    so encode (pq_codes) and probe quantization (ivfpq serve) can never
-    drift apart."""
+    double component and in-scope ``mn``/``mx`` columns. It is the only
+    definition: corpus quantization (_sq8_dims) and probe quantization
+    (the ivfpq serves) both call it; _py_adc replicates it driver-side."""
     return (
         F.when(F.col("mx") == F.col("mn"), F.lit(0).cast("long"))
         .otherwise(
@@ -882,6 +862,75 @@ def _sq8(val):
             )
         )
         .cast("int")
+    )
+
+
+def _sq8_dims(
+    emb: DataFrame, id_col: str, vec_col: str, rng: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """``(qv, rng)``: every component of every vector as (id, pos, qv)
+    SQ8-bucketed under the per-dimension (pos, mn, mx) ranges ``rng`` —
+    derived from ``emb`` itself (a DIM-row aggregate, broadcast back)
+    unless a frozen ``rng`` is given."""
+    dims = emb.select(id_col, F.posexplode(vec_col).alias("pos", "val")).select(
+        id_col, "pos", F.col("val").cast("double").alias("val")
+    )
+    if rng is None:
+        rng = dims.groupBy("pos").agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
+    qv = dims.join(F.broadcast(rng), "pos").select(
+        id_col, "pos", _sq8(F.col("val")).alias("qv")
+    )
+    return qv, rng
+
+
+def _pq_split(
+    qv: DataFrame, emb: DataFrame, n_codes: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(qs, codebook)``: the quantized components with their subspace
+    ``sub`` (1 from half the dimension of ``emb`` on), and the first
+    ``n_codes`` vectors by id as the codebook (cid, pos, cqv, sub)."""
+    half = emb.select(F.floor(F.size(vec_col) / 2).cast("int").alias("h")).first()["h"]
+    qs = qv.withColumn("sub", (F.col("pos") >= half).cast("int"))
+    codebook = qs.filter(F.col(id_col) < n_codes).select(
+        F.col(id_col).alias("cid"), "pos", F.col("qv").alias("cqv"), "sub"
+    )
+    return qs, codebook
+
+
+def _pq_argmin(qv: DataFrame, codebook: DataFrame, id_col: str) -> DataFrame:
+    """(id, sub, b): per vector and subspace, ``b`` = min(struct(dist,
+    cid)) over the codebook — the integer squared distance to the nearest
+    centroid, lowest cid on ties. ``sub`` comes from ``qv`` when it
+    carries one, else from the codebook rows (pos-determined, so the
+    same)."""
+    if "sub" in qv.columns:
+        codebook = codebook.drop("sub")
+    diff = F.col("qv") - F.col("cqv")
+    dist = (
+        qv.join(F.broadcast(codebook), "pos")
+        .groupBy(id_col, "sub", "cid")
+        .agg(F.sum((diff * diff).cast("bigint")).alias("dist"))
+    )
+    return dist.groupBy(id_col, "sub").agg(F.min(F.struct("dist", "cid")).alias("b"))
+
+
+def _adc_table(
+    probes: DataFrame, vec_col: str, rng: DataFrame, codebook: DataFrame, *keys
+) -> DataFrame:
+    """(*keys, sub, cid, pd): each probe SQ8-quantized under ``rng``, and
+    its integer squared distance to every codebook centroid per subspace
+    — the ADC lookup table the codes are scored with."""
+    pqv = (
+        probes.select(*keys, F.posexplode(vec_col).alias("pos", "val"))
+        .select(*keys, "pos", F.col("val").cast("double").alias("val"))
+        .join(F.broadcast(rng), "pos")
+        .select(*keys, "pos", _sq8(F.col("val")).alias("pqv"))
+    )
+    pdiff = F.col("pqv") - F.col("cqv")
+    return (
+        codebook.join(F.broadcast(pqv), "pos")
+        .groupBy(*keys, "sub", "cid")
+        .agg(F.sum((pdiff * pdiff).cast("bigint")).alias("pd"))
     )
 
 
@@ -990,69 +1039,29 @@ def maintain_ivfpq_layout(
     refine: int = 0,
     thresh_bp: int = 500,
 ) -> dict:
-    """:func:`maintain_ivf_layout`'s loop for the IVFPQ family — the
-    layout that actually serves at 100 TB, where staleness has TWO frozen
-    halves (coarse cells scattering appends, and SQ8 ranges / codebook
-    centroids mis-quantizing a shifted distribution; ivfpq_append freezes
-    both by design). Same contract: build v1 and record build-time
+    """:func:`maintain_ivf_layout`'s loop (_maintain_layout) for the IVFPQ
+    family — the layout that actually serves at 100 TB, where staleness
+    has TWO frozen halves (coarse cells scattering appends, and SQ8 ranges
+    / codebook centroids mis-quantizing a shifted distribution;
+    ivfpq_append freezes both by design). Same contract: build v1 and record build-time
     recall; re-measure the frozen layout on the current corpus; rebuild
     version-bumped when drift > thresh_bp; invalidate-first crash safety
     throughout. Monitor cost is n_probes bounded serves + one truth scan;
     the rebuild is the corpus-sized encode+rewrite."""
-    want = {"family": "ivfpq", "n_cells": n_cells, "n_codes": n_codes}
-    spark = emb.sparkSession
-    meta = read_layout_meta(layout_dir)
-
-    def _measure() -> int:
-        return ivfpq_sample_recall_bp(
-            spark,
+    return _maintain_layout(
+        layout_dir,
+        {"family": "ivfpq", "n_cells": n_cells, "n_codes": n_codes},
+        lambda: build_ivfpq_layout(emb, layout_dir, n_cells=n_cells, n_codes=n_codes),
+        lambda: ivfpq_sample_recall_bp(
+            emb.sparkSession,
             emb,
             layout_dir,
             n_probe=n_probe,
             n_probes=n_probes,
             refine=refine,
-        )
-
-    def _build(version: int) -> int:
-        build_ivfpq_layout(emb, layout_dir, n_cells=n_cells, n_codes=n_codes)
-        bp = _measure()
-        write_layout_meta(
-            layout_dir, {**want, "version": version, "build_recall_bp": bp}
-        )
-        return bp
-
-    if not (meta and all(meta.get(k) == v for k, v in want.items())):
-        bp = _build(1)
-        return {
-            "version": 1,
-            "build_recall_bp": bp,
-            "now_recall_bp": bp,
-            "drift_bp": 0,
-            "rebuilt": True,
-            "new_recall_bp": bp,
-        }
-
-    build_bp = int(meta["build_recall_bp"])
-    now_bp = _measure()
-    drift = build_bp - now_bp
-    if drift <= thresh_bp:
-        return {
-            "version": int(meta["version"]),
-            "build_recall_bp": build_bp,
-            "now_recall_bp": now_bp,
-            "drift_bp": drift,
-            "rebuilt": False,
-            "new_recall_bp": now_bp,
-        }
-    new_bp = _build(int(meta["version"]) + 1)
-    return {
-        "version": int(meta["version"]) + 1,
-        "build_recall_bp": build_bp,
-        "now_recall_bp": now_bp,
-        "drift_bp": drift,
-        "rebuilt": True,
-        "new_recall_bp": new_bp,
-    }
+        ),
+        thresh_bp,
+    )
 
 
 def pq_encode_frozen(
@@ -1064,25 +1073,13 @@ def pq_encode_frozen(
 ) -> DataFrame:
     """PQ-encode vectors against a FROZEN quantizer pair (codebook + SQ8
     ranges) instead of deriving them from the input — the encode half of
-    incremental layout maintenance. Exactly :func:`pq_codes`' dist→argmin
-    dataflow, with sub taken from the codebook rows (pos-determined, so
-    identical to the vector-side derivation). Returns (id, sub, cid)."""
-    dims = fan_out(emb.select(id_col, vec_col)).select(
-        id_col, F.posexplode(vec_col).alias("pos", "val")
-    ).select(id_col, "pos", F.col("val").cast("double").alias("val"))
-    qv = dims.join(F.broadcast(rng), "pos").select(
-        id_col, "pos", _sq8(F.col("val")).alias("qv")
-    )
-    diff = F.col("qv") - F.col("cqv")
-    dist = (
-        qv.join(F.broadcast(codebook), "pos")
-        .groupBy(id_col, "sub", "cid")
-        .agg(F.sum((diff * diff).cast("bigint")).alias("dist"))
-    )
-    return (
-        dist.groupBy(id_col, "sub")
-        .agg(F.min(F.struct("dist", "cid")).alias("b"))
-        .select(id_col, "sub", F.col("b.cid").alias("cid"))
+    incremental layout maintenance. It runs :func:`pq_codes`' own quantize
+    and argmin builders (_sq8_dims under the frozen rng, _pq_argmin), with
+    sub taken from the codebook rows (pos-determined, so identical to the
+    vector-side derivation). Returns (id, sub, cid)."""
+    qv, _ = _sq8_dims(fan_out(emb.select(id_col, vec_col)), id_col, vec_col, rng)
+    return _pq_argmin(qv, codebook, id_col).select(
+        id_col, "sub", F.col("b.cid").alias("cid")
     )
 
 
@@ -1214,15 +1211,7 @@ def ivfpq_topk_refined_from_layout(
         .collect()
     ]
     pv = F.array(*[F.lit(float(x)) for x in probe_vec])
-    return (
-        emb.filter(F.col(id_col).isin(ids))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), pv), 4).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _sim_topk(emb.filter(F.col(id_col).isin(ids)), pv, k, id_col, vec_col)
 
 
 def ivfpq_topk_batch_from_layout(
@@ -1247,35 +1236,13 @@ def ivfpq_topk_batch_from_layout(
     (probe_id, id, pq_dist, rk ≤ k), ranked (pq_dist asc, id asc) —
     integer-exact, so per-probe results are identical to the single-probe
     path (pinned in tests/test_streaming.py)."""
-    pr = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__pv")
-    )
+    pr = _probe_rows(probes, id_col, vec_col)
     cents = spark.read.parquet(f"{layout_dir}/centroids")
-    cw = Window.partitionBy("probe_id").orderBy(
-        F.col("ps").desc(), F.col("cell").asc()
-    )
-    cells = (
-        cents.crossJoin(F.broadcast(pr))
-        .select("probe_id", "cell", dot(F.col("cvec"), F.col("__pv")).alias("ps"))
-        .withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") <= n_probe)
-        .select("probe_id", "cell")
-    )
+    cells = _probe_cells(cents, F.broadcast(pr), n_probe).select("probe_id", "cell")
     cell_list = [str(r["cell"]) for r in cells.select("cell").distinct().collect()]
     rng = spark.read.parquet(f"{layout_dir}/rng")
     codebook = spark.read.parquet(f"{layout_dir}/codebook")
-    pqv = (
-        pr.select("probe_id", F.posexplode("__pv").alias("pos", "val"))
-        .select("probe_id", "pos", F.col("val").cast("double").alias("val"))
-        .join(F.broadcast(rng), "pos")
-        .select("probe_id", "pos", _sq8(F.col("val")).alias("pqv"))
-    )
-    pdiff = F.col("pqv") - F.col("cqv")
-    adc = (
-        codebook.join(F.broadcast(pqv), "pos")
-        .groupBy("probe_id", "sub", "cid")
-        .agg(F.sum((pdiff * pdiff).cast("bigint")).alias("pd"))
-    )
+    adc = _adc_table(pr, "__probe", rng, codebook, "probe_id")
     scan = spark.read.parquet(f"{layout_dir}/codes").filter(
         F.col("cell").isin(cell_list)
     )
@@ -1284,14 +1251,11 @@ def ivfpq_topk_batch_from_layout(
     )
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col("probe_id"))
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("pq_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.groupBy("probe_id", id_col)
-        .agg(F.sum("pd").alias("pq_dist"))
-        .withColumn("rk", F.row_number().over(rw).cast("bigint"))
-        .filter(F.col("rk") <= k)
+    return _probe_topk(
+        scored.groupBy("probe_id", id_col).agg(F.sum("pd").alias("pq_dist")),
+        k,
+        id_col,
+        by=F.col("pq_dist").asc(),
     )
 
 
@@ -1336,23 +1300,13 @@ def ivfpq_topk_batch_refined_from_layout(
             f"probe_id long, {id_col} long",
         )
     )
-    pr = F.broadcast(
-        probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__pv"))
-    )
+    pr = F.broadcast(_probe_rows(probes, id_col, vec_col))
     fetched = emb.filter(F.col(id_col).isin(ids)).select(id_col, vec_col)
-    rw = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        fetched.join(pair_df, id_col)
-        .join(pr, "probe_id")
-        .select(
-            "probe_id",
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__pv")), 4).alias("sim"),
-        )
-        .withColumn("rk", F.row_number().over(rw).cast("bigint"))
-        .filter(F.col("rk") <= k)
+    scored = fetched.join(pair_df, id_col).join(pr, "probe_id")
+    return _probe_topk(
+        scored.select("probe_id", F.col(id_col), _sim(vec_col, F.col("__probe"))),
+        k,
+        id_col,
     )
 
 
@@ -1417,10 +1371,7 @@ def range_search(
     return (
         emb.filter(F.col(id_col) != probe_id)
         .crossJoin(probe)
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
+        .select(F.col(id_col), _sim(vec_col, F.col("__probe")))
         .filter(F.col("sim") >= tau)
     )
 
@@ -1462,27 +1413,7 @@ def sq8_dims(
     IVF/PQ coding; downstream integer arithmetic (see q_embed_pq) is
     exactly reproducible. Constant-range dimensions quantize to 0.
     """
-    dims = emb.select(
-        id_col, F.posexplode(vec_col).alias("pos", "val")
-    ).select(id_col, "pos", F.col("val").cast("double").alias("val"))
-    rng = dims.groupBy("pos").agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
-    return dims.join(F.broadcast(rng), "pos").select(
-        id_col,
-        "pos",
-        F.when(F.col("mx") == F.col("mn"), F.lit(0).cast("long"))
-        .otherwise(
-            F.least(
-                F.lit(255).cast("long"),
-                F.floor(
-                    (F.col("val") - F.col("mn"))
-                    * F.lit(256.0)
-                    / (F.col("mx") - F.col("mn"))
-                ),
-            )
-        )
-        .cast("int")
-        .alias("qv"),
-    )
+    return _sq8_dims(emb, id_col, vec_col)[0]
 
 
 def hard_negatives(
@@ -1507,27 +1438,20 @@ def hard_negatives(
     (cell_assign + pruned probes) to avoid the full scan — identical
     downstream shape.
     """
-    probes = F.broadcast(
-        emb.filter(F.col(id_col).isin(list(probe_ids))).select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("__probe"),
-            F.col(label_col).alias("__probe_label"),
-        )
+    probes = _probe_batch(
+        emb, probe_ids, id_col, vec_col, F.col(label_col).alias("__probe_label")
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
+    return _probe_topk(
         emb.crossJoin(probes)
         .filter(F.col(label_col) != F.col("__probe_label"))
         .select(
             "probe_id",
             F.col(id_col),
             F.col(label_col),
-            F.round(cosine(F.col(vec_col), F.col("__probe")), 4).alias("sim"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
+            _sim(vec_col, F.col("__probe")),
+        ),
+        k,
+        id_col,
     )
 
 

@@ -141,24 +141,15 @@ def q_knn_classify(spark, sf):
     # 100 TB is q_sim_topk_batch's plan with the vote aggregation fused on
     # top; for probe sets too big to broadcast, block by IVF cell
     # (operators/similarity.py) before voting.
+    from mongo_to_parquet_spark.operators.similarity import _probe_rows, _probe_topk, _sim
+
     e = T(spark, sf, "embeddings")
-    probes = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p")
+    probes = _probe_rows(e.filter(F.col("vec_id") < 20), "vec_id", "embedding")
+    scored = e.filter(F.col("vec_id") >= 20).crossJoin(F.broadcast(probes)).select(
+        "probe_id", "vec_id", "label", _sim("embedding", F.col("__probe"))
     )
-    scored = (
-        e.filter(F.col("vec_id") >= 20)
-        .crossJoin(F.broadcast(probes))
-        .select(
-            "probe_id",
-            "vec_id",
-            "label",
-            F.round(vector.cosine(F.col("embedding"), F.col("p")), 4).alias("sim"),
-        )
-    )
-    wk = Window.partitionBy("probe_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     votes = (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= 5)
+        _probe_topk(scored, 5, "vec_id")
         .groupBy("probe_id", "label")
         .agg(F.count(F.lit(1)).alias("votes"))
     )

@@ -233,26 +233,11 @@ def q_embed_pq(spark, sf):
     # combined; argmin is a min(struct) aggregate, no window over data.
     # This is the compression step that turns a 100 TB fp32 corpus into a
     # ~1.5 TB code table the IVF layout (operators/similarity) serves.
-    from mongo_to_parquet_spark.operators.similarity import sq8_dims
+    from mongo_to_parquet_spark.operators.similarity import _pq_argmin, _pq_split, sq8_dims
 
     e = T(spark, sf, "embeddings")
-    qv = sq8_dims(e)
-    half = e.select(F.floor(F.size("embedding") / 2).cast("int").alias("h")).first()[
-        "h"
-    ]
-    qs = qv.withColumn("sub", (F.col("pos") >= half).cast("int"))
-    cb = qs.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cid"), "pos", F.col("qv").alias("cqv")
-    )
-    diff = F.col("qv") - F.col("cqv")
-    dist = (
-        qs.join(F.broadcast(cb), "pos")
-        .groupBy("vec_id", "sub", "cid")
-        .agg(F.sum((diff * diff).cast("bigint")).alias("dist"))
-    )
-    best = dist.groupBy("vec_id", "sub").agg(
-        F.min(F.struct("dist", "cid")).alias("b")
-    )
+    qs, cb = _pq_split(sq8_dims(e), e, 16, "vec_id", "embedding")
+    best = _pq_argmin(qs, cb, "vec_id")
     return best.groupBy("vec_id").agg(
         F.min(F.when(F.col("sub") == 0, F.col("b.cid"))).cast("bigint").alias("code0"),
         F.min(F.when(F.col("sub") == 1, F.col("b.cid"))).cast("bigint").alias("code1"),
@@ -464,27 +449,12 @@ def q_sim_topk_pq(spark, sf):
     # corpus is never touched after encoding. Exact re-rank of the PQ
     # top-k (brute_force_topk over just those ids) is the standard second
     # stage.
-    from mongo_to_parquet_spark.operators.similarity import sq8_dims
+    from mongo_to_parquet_spark.operators.similarity import _pq_argmin, _pq_split, sq8_dims
 
     e = T(spark, sf, "embeddings")
-    qv = sq8_dims(e)
-    half = e.select(F.floor(F.size("embedding") / 2).cast("int").alias("h")).first()[
-        "h"
-    ]
-    qs = qv.withColumn("sub", (F.col("pos") >= half).cast("int"))
-    cb = qs.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cid"), "pos", F.col("qv").alias("cqv"), "sub"
-    )
-    diff = F.col("qv") - F.col("cqv")
-    dist = (
-        qs.join(F.broadcast(cb.drop("sub")), "pos")
-        .groupBy("vec_id", "sub", "cid")
-        .agg(F.sum((diff * diff).cast("bigint")).alias("dist"))
-    )
-    codes = (
-        dist.groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("dist", "cid")).alias("b"))
-        .select("vec_id", "sub", F.col("b.cid").alias("cid"))
+    qs, cb = _pq_split(sq8_dims(e), e, 16, "vec_id", "embedding")
+    codes = _pq_argmin(qs, cb, "vec_id").select(
+        "vec_id", "sub", F.col("b.cid").alias("cid")
     )
     cdiff = F.col("a_cqv") - F.col("b_cqv")
     pairdist = (
@@ -602,18 +572,17 @@ def _ivfpq_scored(emb):
     broadcast probe row (``__probe``) and (vec_id, pq_dist)."""
     from mongo_to_parquet_spark.functions.vector import dot as _dot
     from mongo_to_parquet_spark.operators.similarity import (
+        _adc_table,
         _assign_cells,
         _centroids,
-        _sq8,
+        _probe_df,
         pq_codes,
     )
 
     cents = _centroids(emb, 16, "vec_id", "embedding")
     assigned = _assign_cells(emb, F.broadcast(cents), "vec_id", "embedding")
     codes, codebook, rng = pq_codes(emb)
-    pvec = F.broadcast(
-        emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__probe"))
-    )
+    pvec = F.broadcast(_probe_df(emb, 0, "vec_id", "embedding"))
     cells = (
         cents.crossJoin(pvec)
         .select("cell", _dot(F.col("cvec"), F.col("__probe")).alias("ps"))
@@ -621,20 +590,8 @@ def _ivfpq_scored(emb):
         .limit(4)
         .select("cell")
     )
-    # ADC table = the probe's own (sub, cid) SQ8 distances — recompute via
-    # pq_codes' dist path by quantizing vec_id 0 like any corpus vector
-    qdims = emb.filter(F.col("vec_id") == 0).select(
-        F.posexplode("embedding").alias("pos", "val")
-    ).select("pos", F.col("val").cast("double").alias("val"))
-    pqv = qdims.join(F.broadcast(rng), "pos").select(
-        "pos", _sq8(F.col("val")).alias("pqv")
-    )
-    pdiff = F.col("pqv") - F.col("cqv")
-    adc = (
-        codebook.join(F.broadcast(pqv), "pos")
-        .groupBy("sub", "cid")
-        .agg(F.sum((pdiff * pdiff).cast("bigint")).alias("pd"))
-    )
+    # ADC table of vec_id 0, quantized like any corpus vector
+    adc = _adc_table(emb.filter(F.col("vec_id") == 0), "embedding", rng, codebook)
     scored = (
         codes.join(assigned.select("vec_id", "cell"), "vec_id")
         .join(F.broadcast(cells), "cell")
@@ -889,7 +846,7 @@ def q_eval_ann_recall_pq_refine(spark, sf):
     # a pure query the oracle replays end to end; the shortlist join is a
     # 50-row broadcast (the serving key's IN-pushdown shape is covered by
     # q_sim_topk_ivfpq_refine's own plan test).
-    from mongo_to_parquet_spark.functions.vector import cosine as _cos
+    from mongo_to_parquet_spark.operators.similarity import _sim
 
     emb = T(spark, sf, "embeddings")
     pvec, scored = _ivfpq_scored(emb)
@@ -901,10 +858,7 @@ def q_eval_ann_recall_pq_refine(spark, sf):
     refined = (
         emb.join(F.broadcast(shortlist), "vec_id")
         .crossJoin(pvec)
-        .select(
-            "vec_id",
-            F.round(_cos(F.col("embedding"), F.col("__probe")), 4).alias("sim"),
-        )
+        .select("vec_id", _sim("embedding", F.col("__probe")))
         .withColumn(
             "rk",
             F.row_number().over(
@@ -2659,9 +2613,11 @@ def q_ann_tuning(spark, sf):
     from mongo_to_parquet_spark.operators.similarity import (
         _assign_cells,
         _centroids,
+        _probe_batch,
+        _probe_cells,
         _probe_sample,
+        _sim,
         brute_force_topk_batch,
-        dot,
     )
 
     emb = T(spark, sf, "embeddings")
@@ -2673,23 +2629,8 @@ def q_ann_tuning(spark, sf):
     assigned = _assign_cells(
         emb, cents, "vec_id", "embedding", overlap=max(_ANN_TUNE_OVERLAPS)
     )
-    probes = F.broadcast(
-        emb.filter(F.col("vec_id").isin(probe_ids)).select(
-            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pv")
-        )
-    )
-    cw = Window.partitionBy("probe_id").orderBy(
-        F.col("pscore").desc(), F.col("cell").asc()
-    )
-    cellrk = (
-        cents.crossJoin(probes)
-        .withColumn("pscore", dot(F.col("cvec"), F.col("pv")))
-        .withColumn("crk", F.row_number().over(cw).cast("long"))
-        .filter(F.col("crk") <= max_p)
-        .select("probe_id", "cell", "crk")
-    )
-    from mongo_to_parquet_spark.functions.vector import cosine
-
+    probes = _probe_batch(emb, probe_ids, "vec_id", "embedding")
+    cellrk = _probe_cells(cents, probes, max_p)
     scored = (
         assigned.join(F.broadcast(cellrk), "cell")
         .join(probes, "probe_id")
@@ -2699,7 +2640,7 @@ def q_ann_tuning(spark, sf):
             "vec_id",
             "crk",
             "ark",
-            F.round(cosine(F.col("embedding"), F.col("pv")), 4).alias("sim"),
+            _sim("embedding", F.col("__probe")),
         )
     )
     ps = spark.createDataFrame(

@@ -9,7 +9,8 @@ Unlike stream_pack this fold is ORDER-INSENSITIVE (counts are a
 commutative monoid), so any batch split converges to the batch key —
 pinned in tests/test_streaming.py. State = |sources| rows of two
 integers, swapped per batch under the ledger commit of
-streaming/state.start_ledger_stream.
+streaming/state.start_ledger_stream; after each commit the superseded
+state and weights versions are vacuumed.
 
 At 100 TB/day ingest: per-batch cost is one map-combined aggregate over
 the delta plus a |sources|-row merge; the weights table a training job
@@ -85,7 +86,13 @@ def stream_mix(
             os.path.join(state_dir, "weights", f"batch={bid}")
         )
 
-    return st.start_ledger_stream(docs_stream, state_dir, checkpoint_dir, body)
+    return st.start_ledger_stream(
+        docs_stream,
+        state_dir,
+        checkpoint_dir,
+        body,
+        after_commit=lambda: st.vacuum(state_dir, [], swap_subs=["state", "weights"]),
+    )
 
 
 def read_weights(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -8,8 +8,9 @@ tests/test_streaming.py).
 
 State per shard is TWO integers — (open_bin, fill) of the currently
 filling bin — carried between batches as a tiny per-batch parquet swap
-(``state/batch=<id>``) next to the per-batch assignment reports, all
-under the ledger commit of streaming/state.start_ledger_stream.
+(``state/batch=<id>``, only the newest committed one kept) next to the
+per-batch assignment reports, all under the ledger commit of
+streaming/state.start_ledger_stream.
 
 At 100 TB/day ingest: the state table is n_shards rows (broadcast), the
 per-batch cost is one shuffle by shard into the Arrow grouped-map pass —
@@ -97,7 +98,14 @@ def stream_pack(
         ).filter(F.col("n_tok") > 0)
         pack_batch(docs, state_dir, bid, pack_l)
 
-    return st.start_ledger_stream(docs_stream, state_dir, checkpoint_dir, body)
+    # reports/ stay: read_assignments reads every committed batch
+    return st.start_ledger_stream(
+        docs_stream,
+        state_dir,
+        checkpoint_dir,
+        body,
+        after_commit=lambda: st.vacuum(state_dir, [], swap_subs=["state"]),
+    )
 
 
 def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -341,3 +341,56 @@ def test_ivfpq_drift_rebuild_loop(spark, tmp_path):
     assert r2["new_recall_bp"] - r2["now_recall_bp"] > 500
     assert layout_current(d, {"version": 2, "family": "ivfpq"})
     assert not layout_current(d, {"version": 1})
+
+
+def test_layout_loop_edges_without_spark(tmp_path):
+    """The one build→monitor→rebuild loop behind maintain_ivf_layout and
+    maintain_ivfpq_layout, driven by fake build/measure callables (no
+    Spark): drift exactly equal to thresh_bp does not rebuild (the
+    comparison is strict), and a committed marker of another config
+    rebuilds at version 1 whatever version it carried."""
+    from mongo_to_parquet_spark.operators.similarity import (
+        _maintain_layout,
+        read_layout_meta,
+        write_layout_meta,
+    )
+
+    d = str(tmp_path / "layout")
+    os.makedirs(d)
+    want = {"family": "fake", "n_cells": 4}
+    builds = []
+    recall = {"bp": 9000}
+
+    def build():
+        builds.append(1)
+        write_layout_meta(d, dict(want))  # a build lands a config-only marker
+
+    def loop():
+        return _maintain_layout(d, want, build, lambda: recall["bp"], 500)
+
+    r = loop()
+    assert r == {
+        "version": 1, "build_recall_bp": 9000, "now_recall_bp": 9000,
+        "drift_bp": 0, "rebuilt": True, "new_recall_bp": 9000,
+    }
+    assert read_layout_meta(d) == {**want, "version": 1, "build_recall_bp": 9000}
+
+    recall["bp"] = 8500  # drift == thresh_bp: kept
+    r = loop()
+    assert not r["rebuilt"] and r["drift_bp"] == 500 and r["version"] == 1
+    assert len(builds) == 1
+    assert read_layout_meta(d)["build_recall_bp"] == 9000
+
+    recall["bp"] = 8499  # one past: rebuilt at version 2
+    r = loop()
+    assert r["rebuilt"] and r["drift_bp"] == 501 and r["version"] == 2
+    assert (r["build_recall_bp"], r["now_recall_bp"]) == (9000, 8499)
+    assert len(builds) == 2
+
+    # a committed marker of another config: rebuilt at version 1
+    write_layout_meta(d, {**want, "n_cells": 8, "version": 7, "build_recall_bp": 1})
+    recall["bp"] = 7000
+    r = loop()
+    assert r["rebuilt"] and r["version"] == 1 and r["drift_bp"] == 0
+    assert len(builds) == 3
+    assert read_layout_meta(d) == {**want, "version": 1, "build_recall_bp": 7000}

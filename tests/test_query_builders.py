@@ -2,12 +2,14 @@
 
 Several declared keys are thin tails over a shared builder in
 queries/retrieval.py, queries/llm.py, queries/curation.py,
-queries/lakehouse.py or operators/dedup.py (the BM25 scorer, the
-in-memory IVF×PQ route, the labelled eval top-k, the winnowing
-fingerprints, the bitext margin, the md5 MinHash bands and exact-Jaccard
-verify, the 48-bit md5 hash, the md5 hyperplane signature, the DSIR
-featurization and scoring, the unigram piece count, the two-slice MV
-refresh). An edit to a builder moves every key that calls it, so each
+queries/lakehouse.py, operators/dedup.py or operators/similarity.py (the
+BM25 scorer, the in-memory IVF×PQ route, the labelled eval top-k, the
+winnowing fingerprints, the bitext margin, the md5 MinHash bands and
+exact-Jaccard verify, the 48-bit md5 hash, the md5 hyperplane signature,
+the DSIR featurization and scoring, the unigram piece count, the
+two-slice MV refresh, and the vector-search steps: the probe batch, the
+single-probe and per-probe top-k tails, the IVF cell pick, the SQ8
+quantizer and the PQ split and argmin). An edit to a builder moves every key that calls it, so each
 of those keys that no other tier-1 test compares with its DuckDB oracle
 is checked here, with the same comparison tools/parity.py applies.
 """
@@ -61,6 +63,19 @@ BUILDER_KEYS = (
     # _mv_two_slices
     "q_mv_refresh",
     "q_mv_diff",
+    # similarity: _probe_batch / _sim_topk / _probe_topk / _probe_cells /
+    # _ivf_batch / _sq8_dims / _pq_split / _pq_argmin
+    "q_sim_topk",
+    "q_sim_topk_batch",
+    "q_sim_topk_ivf",
+    "q_sim_topk_ivf_incremental",
+    "q_sim_range",
+    "q_sim_hard_negatives",
+    "q_embed_pq",
+    "q_sim_topk_pq",
+    "q_eval_ann_recall",
+    "q_embed_quantize",
+    "q_knn_classify",
 )
 
 

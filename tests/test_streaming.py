@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import Row
 
 from mongo_to_parquet_spark.queries.stream import QUERIES as BATCH_Q
@@ -1082,13 +1084,33 @@ def test_stream_decontaminate_matches_batch_key(spark, sf_dir, tmp_path):
     assert {tuple(r) for r in sd.read_reports(spark, state).collect()} == want
 
 
-def test_stream_pack_matches_batch_and_replays(spark, sf_dir, tmp_path):
+def _tear_batch(monkeypatch, sst, bid, run) -> None:
+    """Run a ledger stream whose batch ``bid`` writes its artifacts and
+    then fails before its commit marker is published."""
+    publish = sst._publish
+
+    def torn(path, payload):
+        if payload["batch_id"] == bid:
+            raise RuntimeError(f"torn batch {bid}")
+        publish(path, payload)
+
+    monkeypatch.setattr(sst, "_publish", torn)
+    with pytest.raises(Exception, match=f"torn batch {bid}"):
+        run()
+    monkeypatch.setattr(sst, "_publish", publish)
+
+
+def test_stream_pack_matches_batch_and_replays(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Streaming greedy packing: docs arrive in doc_id order (the
     crawl-append contract) across 4 micro-batches; the union of streamed
     bin assignments must be bit-identical to q_pack_greedy over the same
-    corpus (per-shard open-bin state carried between batches). Replay
-    against a fresh checkpoint is a no-op; a torn batch (marker deleted)
-    leaves the committed view and is recommitted identically."""
+    corpus (per-shard open-bin state carried between batches). A torn
+    last batch (its writes land, its marker does not) stays out of the
+    committed view and a fresh run recommits it identically; after the
+    drained stream one fill-state version is left on disk. Replay
+    against a fresh checkpoint is a no-op."""
     import os
     import time
 
@@ -1124,44 +1146,47 @@ def test_stream_pack_matches_batch_and_replays(spark, sf_dir, tmp_path):
         q = sp.stream_pack(stream, state, ck)
         q.awaitTermination(300)
 
-    run(str(tmp_path / "ck1"))
     want = sorted(
         (r["shard"], r["doc_id"], r["n_tok"], r["bin_id"])
         for r in LLM_Q["q_pack_greedy"](spark, sf_dir).collect()
     )
-    got = sorted(
-        (r["shard"], r["doc_id"], r["n_tok"], r["bin_id"])
-        for r in sp.read_assignments(spark, state).collect()
-    )
-    assert len(want) > 0 and got == want
+
+    def got():
+        return sorted(
+            (r["shard"], r["doc_id"], r["n_tok"], r["bin_id"])
+            for r in sp.read_assignments(spark, state).collect()
+        )
+
+    # torn last batch: batch 3 writes its artifacts, then dies before its
+    # marker is published (and before the vacuum that follows a commit)
+    _tear_batch(monkeypatch, sst, 3, lambda: run(str(tmp_path / "ck1")))
+    assert sst.ledger_ids(state) == [0, 1, 2]
+    assert len(got()) < len(want)
+
+    run(str(tmp_path / "ck2"))  # batches 0-2 skip, batch 3 recommits
+    assert len(want) > 0 and got() == want
     # cross-batch continuation must actually happen: some bin spans batches
     n_batches = len(sst.ledger_ids(state))
     assert n_batches >= 4
+    # superseded fill-state versions are vacuumed; every report stays
+    assert _batch_dirs(state, "state") == [f"batch={max(sst.ledger_ids(state))}"]
+    assert _batch_dirs(state, "reports") == sorted(
+        f"batch={b}" for b in sst.ledger_ids(state)
+    )
 
-    run(str(tmp_path / "ck2"))  # replay: every batch skips on its marker
-    assert sorted(
-        (r["shard"], r["doc_id"], r["n_tok"], r["bin_id"])
-        for r in sp.read_assignments(spark, state).collect()
-    ) == want
-
-    # torn batch: drop the last marker -> its rows leave the committed
-    # view -> a fresh run recommits bit-identically
-    last = max(sst.ledger_ids(state))
-    os.remove(os.path.join(state, "ledger", str(last)))
-    assert sp.read_assignments(spark, state).count() < len(want)
-    run(str(tmp_path / "ck3"))
-    assert sorted(
-        (r["shard"], r["doc_id"], r["n_tok"], r["bin_id"])
-        for r in sp.read_assignments(spark, state).collect()
-    ) == want
+    run(str(tmp_path / "ck3"))  # replay: every batch skips on its marker
+    assert got() == want
 
 
-def test_stream_mix_converges_to_batch_weights(spark, sf_dir, tmp_path):
+def test_stream_mix_converges_to_batch_weights(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Streaming mixture weights: after draining the corpus in 4
     micro-batches (any split — counts are a commutative monoid), the
     committed weights table equals q_mix_temperature over the whole
-    corpus; mid-stream snapshots always sum to <= 10000 bp; replay is a
-    no-op and a torn last batch is recommitted identically."""
+    corpus; the mid-stream and final snapshots sum to <= 10000 bp; a
+    torn last batch is recommitted identically, only the newest state
+    and weights versions stay on disk, and replay is a no-op."""
     import os
 
     from mongo_to_parquet_spark.queries.llm import QUERIES as LLM_Q
@@ -1185,37 +1210,33 @@ def test_stream_mix_converges_to_batch_weights(spark, sf_dir, tmp_path):
         q = sm.stream_mix(stream, state, ck)
         q.awaitTermination(300)
 
-    run(str(tmp_path / "ck1"))
     want = sorted(
         (r["source"], r["n_docs"], r["n_tokens"], r["raw_bp"], r["temp_bp"])
         for r in LLM_Q["q_mix_temperature"](spark, sf_dir).collect()
     )
-    got = sorted(
-        (r["source"], r["n_docs"], r["n_tokens"], r["raw_bp"], r["temp_bp"])
-        for r in sm.read_weights(spark, state).collect()
-    )
-    assert len(want) > 1 and got == want
-    # every committed snapshot is a valid weights table
-    for b in sst.ledger_ids(state):
-        rows = spark.read.parquet(
-            os.path.join(state, "weights", f"batch={b}")
-        ).collect()
+
+    def got():
+        rows = sm.read_weights(spark, state).collect()
+        # every committed snapshot is a valid weights table
         assert sum(r["raw_bp"] for r in rows) <= 10000
         assert sum(r["temp_bp"] for r in rows) <= 10000
+        return sorted(
+            (r["source"], r["n_docs"], r["n_tokens"], r["raw_bp"], r["temp_bp"])
+            for r in rows
+        )
 
-    run(str(tmp_path / "ck2"))  # replay: markers skip every batch
-    assert sorted(
-        (r["source"], r["n_docs"], r["n_tokens"], r["raw_bp"], r["temp_bp"])
-        for r in sm.read_weights(spark, state).collect()
-    ) == want
+    last = len([f for f in os.listdir(src) if f.endswith(".parquet")]) - 1
+    _tear_batch(monkeypatch, sst, last, lambda: run(str(tmp_path / "ck1")))
+    assert sst.ledger_ids(state) == list(range(last))
+    assert got() != want  # the mid-stream snapshot of the committed prefix
 
-    last = max(sst.ledger_ids(state))
-    os.remove(os.path.join(state, "ledger", str(last)))
-    run(str(tmp_path / "ck3"))  # torn batch recommitted
-    assert sorted(
-        (r["source"], r["n_docs"], r["n_tokens"], r["raw_bp"], r["temp_bp"])
-        for r in sm.read_weights(spark, state).collect()
-    ) == want
+    run(str(tmp_path / "ck2"))  # torn batch recommitted
+    assert len(want) > 1 and got() == want
+    assert _batch_dirs(state, "state") == [f"batch={last}"]
+    assert _batch_dirs(state, "weights") == [f"batch={last}"]
+
+    run(str(tmp_path / "ck3"))  # replay: markers skip every batch
+    assert got() == want
 
 
 def test_stream_assembly_matches_batch_pipeline(spark, sf_dir, tmp_path):

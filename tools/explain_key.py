@@ -19,13 +19,14 @@ line per oracle SQL string, beside the plans. Run it with the same
 SPARK_GRAFT_SF_DIR in the parent and in the changed checkout; then
 ``diff -r <parent>/plans/<round>/all_<tag> <change>/plans/<round>/all_<tag>``
 is the whole check. Keys named after ``all`` are re-dumped into the
-same directory. Two keys differ between two fresh runs of the same
-tree, so re-dump them alone, one key per process (``<tag> all
+same directory. Three keys can differ between two fresh runs of the
+same tree, so re-dump them alone, one key per process (``<tag> all
 q_profile``), before reading a diff in them as a change: ``q_profile``
-(its Expand column order follows the session's expression-id counter)
-and ``q_graph_pagerank`` (its codegen ids can swap even in a lone
-re-dump; a diff only in codegen ids and their stage numbers that a
-second lone re-dump clears is not a change).
+and ``q_decontaminate_doc`` (their Expand column order follows the
+session's expression-id counter, so it changes with the keys dumped
+before them) and ``q_graph_pagerank`` (its codegen ids can swap even in
+a lone re-dump; a diff only in codegen ids and their stage numbers that
+a second lone re-dump clears is not a change).
 """
 
 from __future__ import annotations
