@@ -1412,6 +1412,31 @@ def connected_components_star(
     return labels.unionByName(roots).distinct()
 
 
+def _basket_pairs(
+    baskets: DataFrame, arr: str, u: str = "u", v: str = "v"
+) -> DataFrame:
+    """(u, v) for every ordered pair u < v of each row's SORTED array
+    ``arr``, generated map-side: posexplode picks u at position i, and
+    slice(arr, i + 2, size) yields every later element as v. One
+    groupBy(basket) collect_set shuffle upstream replaces a self-join's
+    two shuffles; per-row fan-out is O(len(arr)²)."""
+    return baskets.select(F.posexplode(arr).alias("i", u), arr).select(
+        u,
+        F.explode(F.slice(F.col(arr), F.col("i") + F.lit(2), F.size(arr))).alias(v),
+    )
+
+
+def _edge_degrees(edges: DataFrame) -> DataFrame:
+    """(x, d): each endpoint of a (u, v) edge set with its edge count —
+    one map-combined aggregate over the union of both endpoint columns."""
+    return (
+        edges.select(F.col("u").alias("x"))
+        .unionAll(edges.select(F.col("v").alias("x")))
+        .groupBy("x")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
 def kcore_peel(
     pairs: DataFrame,
     k: int,
@@ -1456,9 +1481,10 @@ def kcore_peel(
     INPUT edge set (materialized by the caller): a caller that already
     aggregated degrees for its own probe (q_graph_kcore's median-k)
     hands them in so round 1 does not re-aggregate the full edge set —
-    exchange reuse cannot span the probe's separate action. Must equal
-    ``degrees(e)`` exactly; later rounds always recompute from the
-    peeled edges.
+    exchange reuse cannot span the probe's separate action. Build it
+    with :func:`_edge_degrees` over the canonical edge set (the builder
+    every round uses), so it equals round 1's own degrees by
+    construction; later rounds always recompute from the peeled edges.
     """
     if canonical:
         e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -1472,16 +1498,8 @@ def kcore_peel(
             .distinct()
         )
 
-    def degrees(edges: DataFrame) -> DataFrame:
-        return (
-            edges.select(F.col("u").alias("x"))
-            .unionAll(edges.select(F.col("v").alias("x")))
-            .groupBy("x")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-
     def peel(edges: DataFrame, deg: DataFrame | None = None) -> DataFrame:
-        keep = (deg if deg is not None else degrees(edges)).filter(
+        keep = (deg if deg is not None else _edge_degrees(edges)).filter(
             F.col("d") >= k
         ).select("x")
         return (
@@ -1513,6 +1531,6 @@ def kcore_peel(
             prev, prev_e = cs, e
         else:
             raise RuntimeError(f"kcore_peel: no fixpoint in {max_iter} rounds")
-    return degrees(e).select(
+    return _edge_degrees(e).select(
         F.col("x").alias("node"), F.col("d").cast("bigint").alias("degree")
     )

@@ -27,6 +27,10 @@ otherwise — AQE picks).
 Assumes a non-negative integral ``col`` (floor-div bucketing); map
 values onto an integer grid first (cents, micro-units) as every caller
 in this repo already does.
+
+``_moment_sums`` is the exact bivariate sufficient-sum aggregate that
+Pearson-on-ranks (q_stats_spearman) and the OLS fit
+(q_stats_regression) both evaluate their closed forms over.
 """
 
 from __future__ import annotations
@@ -67,4 +71,27 @@ def doubled_midranks(df: DataFrame, col: str, bucket_div: int = 16384) -> DataFr
                 f"r{col}2"
             ),
         )
+    )
+
+
+def _moment_sums(df: DataFrame, x: str, y: str, *by: str) -> DataFrame:
+    """(*by, n, sx, sy, sxy, sxx, syy, n_rows): the bivariate sufficient
+    sums of integral columns ``x`` and ``y`` (one row per ``by`` group,
+    or one row when ``by`` is empty). Each sum accumulates in
+    DECIMAL(38,0) (DuckDB HUGEINT on the oracle side) — exact and
+    order-free — and converts ONCE to double, so a closed-form statistic
+    over them (OLS fit, Pearson on ranks) sees the same IEEE inputs on
+    both engines."""
+    def dsum(c):
+        return F.sum(c.cast("decimal(38,0)")).cast("double")
+
+    cx, cy = F.col(x), F.col(y)
+    return df.groupBy(*by).agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        dsum(cx).alias("sx"),
+        dsum(cy).alias("sy"),
+        dsum(cx * cy).alias("sxy"),
+        dsum(cx * cx).alias("sxx"),
+        dsum(cy * cy).alias("syy"),
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
     )

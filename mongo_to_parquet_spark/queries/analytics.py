@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mongo_to_parquet_spark.operators.dedup import _basket_pairs
 from mongo_to_parquet_spark.sources.catalog import load_table as T
 from mongo_to_parquet_spark.queries._registry import make_registry
 
@@ -68,8 +69,8 @@ def q_assoc_rules(spark, sf):
     # counting as the O(basket^2) self-join; the engine never self-joins:
     # each order's distinct brands are collected into ONE sorted array
     # (collect_set dedupes in-agg) and ordered pairs are generated
-    # map-side via posexplode + slice (the q_graph_triangles edge-build
-    # pattern — one groupBy(order) shuffle replaces the self-join's two).
+    # map-side (dedup._basket_pairs, the q_graph_triangles edge build —
+    # one groupBy(order) shuffle replaces the self-join's two).
     #
     # Scale: the fact shuffles exactly once (groupBy order); per-basket
     # pair fan-out is O(basket^2) with basket = items per order — data-
@@ -85,13 +86,7 @@ def q_assoc_rules(spark, sf):
     )
     baskets = ob.groupBy("ok").agg(F.sort_array(F.collect_set("b")).alias("bs"))
     pairs = (
-        baskets.select(F.posexplode("bs").alias("i", "u"), "bs")
-        .select(
-            "u",
-            F.explode(
-                F.slice(F.col("bs"), F.col("i") + F.lit(2), F.size("bs"))
-            ).alias("v"),
-        )
+        _basket_pairs(baskets, "bs")
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("pair_cnt"))
     )
@@ -854,19 +849,10 @@ def q_stats_spearman(spark, sf):
         F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("y"),
     ).persist()
 
-    from mongo_to_parquet_spark.operators.ranks import doubled_midranks
+    from mongo_to_parquet_spark.operators.ranks import _moment_sums, doubled_midranks
 
     j = t.join(doubled_midranks(t, "x"), "x").join(doubled_midranks(t, "y"), "y")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = j.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dec(F.col("rx2"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("ry2"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("rx2") * F.col("ry2"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("rx2") * F.col("rx2"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("ry2") * F.col("ry2"))).cast("double").alias("syy"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    )
+    s = _moment_sums(j, "rx2", "ry2")
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     rho = (n * sxy - sx * sy) / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))

@@ -19,7 +19,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from mongo_to_parquet_spark.functions import vector
-from mongo_to_parquet_spark.operators import text, tokenizer
+from mongo_to_parquet_spark.operators import dedup, text, tokenizer
+from mongo_to_parquet_spark.operators.ranks import _moment_sums
 from mongo_to_parquet_spark.operators.scope import scope
 from mongo_to_parquet_spark.sources.catalog import load_table as T, scratch_dir
 from mongo_to_parquet_spark.queries._registry import make_registry
@@ -355,16 +356,7 @@ def q_stats_regression(spark, sf):
         F.col("l_quantity").cast("bigint").alias("x"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("y"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = t.groupBy("flag").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).cast("double").alias("syy"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    )
+    s = _moment_sums(t, "x", "y", "flag")
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     num = n * sxy - sx * sy
@@ -380,6 +372,25 @@ def q_stats_regression(spark, sf):
 
 
 # -------------------------------------------------------- SCD-2 history ----
+def _scd2_segments(ev, *order):
+    """``ev`` plus the gaps-and-islands columns chg (1 where event_type
+    changes from the user's previous row under ``order``) and seg_id
+    (the running sum of chg) — the oracle's ``chg`` and ``seg`` CTEs.
+    The change flag is null-safe (= the oracle's IS DISTINCT FROM): a
+    NULL event_type following a non-null one IS a change, and the first
+    row's NULL lag differs from any value — `lag != col` would return
+    NULL (→ 0) in both cases and silently glue segments together."""
+    wo = Window.partitionBy("user_id").orderBy(*order)
+    return ev.withColumn(
+        "chg",
+        F.when(
+            ~F.lag("event_type").over(wo).eqNullSafe(F.col("event_type")), 1
+        ).otherwise(0),
+    ).withColumn(
+        "seg_id", F.sum("chg").over(wo.rowsBetween(Window.unboundedPreceding, 0))
+    )
+
+
 @q(
     "q_scd2_history",
     """
@@ -426,17 +437,7 @@ def q_scd2_history(spark, sf):
     ev = T(spark, sf, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts"), "event_id"
     )
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # null-safe change flag (= the oracle's IS DISTINCT FROM): a NULL
-    # event_type following a non-null one IS a change, and the first row's
-    # NULL lag differs from any value — `lag != col` would return NULL
-    # (→ 0) in both cases and silently glue segments together
-    seg = ev.withColumn(
-        "chg",
-        F.when(
-            ~F.lag("event_type").over(wo).eqNullSafe(F.col("event_type")), 1
-        ).otherwise(0),
-    ).withColumn("seg_id", F.sum("chg").over(wo.rowsBetween(Window.unboundedPreceding, 0)))
+    seg = _scd2_segments(ev, "ts", "event_id")
     hist = seg.groupBy("user_id", F.col("seg_id").cast("bigint").alias("seg_id")).agg(
         F.min("event_type").alias("event_type"),
         F.unix_micros(F.min("ts")).alias("valid_from_us"),
@@ -1064,27 +1065,18 @@ def q_bpe_pipeline(spark, sf):
     # per-language word vs subword counts (the compression the tokenizer
     # actually achieves — the number a tokenizer-budget decision reads).
     # Spark: the k-merge training loop (_bpe_train_merges, census-sized),
-    # then the trained table fed straight into the q_bpe_apply expression
-    # builder (bpe_apply_cols — merges folded in as literals, map-only
-    # codegen'd HOFs over one corpus scan). Oracle: the SAME train CTEs
-    # plus a replace chain taking the merge pairs as correlated columns —
-    # the whole train→apply dataflow hash-checked end to end.
+    # then the trained table fed straight into the merge-family apply
+    # tail (_merge_family_apply over bpe_apply_cols — merges folded in as
+    # literals, map-only codegen'd HOFs over one corpus scan). Oracle: the
+    # SAME train CTEs plus a replace chain taking the merge pairs as
+    # correlated columns — the whole train→apply dataflow hash-checked
+    # end to end.
     #
     # Scale: training cost is the census loop (q_bpe_train); apply is one
     # map-only corpus pass at scan speed (the merge table broadcasts as
     # expression literals, the way real tokenizers ship merge files).
     merges = _bpe_train_merges(spark, sf)
-    n_words, n_subwords = bpe_apply_cols([(x, y) for _, x, y, _, _ in merges])
-    d = T(spark, sf, "documents")
-    return (
-        d.select("lang", n_words.alias("nw"), n_subwords.alias("ns"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("nw").cast("bigint").alias("n_words"),
-            F.sum("ns").cast("bigint").alias("n_subwords"),
-        )
-    )
+    return _merge_family_apply(spark, sf, [(x, y) for _, x, y, _, _ in merges])
 
 
 # ----------------------------------------------------- n-gram LM training ---
@@ -1468,25 +1460,11 @@ def q_graph_triangles(spark, sf):
     g = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
-    e = (
-        g.select(F.posexplode("ps").alias("i", "u"), "ps")
-        .select(
-            "u",
-            F.explode(
-                F.slice(F.col("ps"), F.col("i") + F.lit(2), F.size("ps"))
-            ).alias("v"),
-        )
-        .distinct()
-    )
+    e = dedup._basket_pairs(g, "ps").distinct()
     # shuffle_hash hints on the remaining joins: edge-sized inputs whose
     # SMJ sort dominates — hash build sides measured 13% faster at sf0.1,
     # exact same rows
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = dedup._edge_degrees(e)
     # orient each edge from lower (deg, id) to higher (deg, id)
     du = deg.select(F.col("x").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("x").alias("v"), F.col("d").alias("dv"))
@@ -1778,12 +1756,7 @@ def q_graph_degree_stats(spark, sf):
         .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
         .distinct()
     )
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionAll(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = dedup._edge_degrees(e)
     lb = (F.length(F.bin(F.col("d"))) - 1).cast("bigint")
     return deg.groupBy(lb.alias("lb")).agg(
         F.count(F.lit(1)).alias("n_vertices"),
@@ -1934,6 +1907,23 @@ def q_seq_trigrams(spark, sf):
 _MIX_WEIGHTS = (("src0", 0.4), ("src1", 0.3), ("src2", 0.2), ("src3", 0.1))
 
 
+def _mix_quota(spark, d):
+    """The oracle's avail → w → caps → t chain over the documents ``d``:
+    returns (caps ⨯ t_max, quota) — one row per weighted source with
+    source, weight, avail_tokens, cap_total and t_max, and the per-source
+    token quota floor(weight · t_max) as a column over it."""
+    avail = d.groupBy("source").agg(
+        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("avail_tokens")
+    )
+    w = spark.createDataFrame(list(_MIX_WEIGHTS), "source string, weight double")
+    caps = avail.join(F.broadcast(w), "source").withColumn(
+        "cap_total", F.floor(F.col("avail_tokens") / F.col("weight")).cast("bigint")
+    )
+    t = caps.agg(F.min("cap_total").alias("t_max"))
+    quota = F.floor(F.col("weight") * F.col("t_max")).cast("bigint")
+    return caps.crossJoin(F.broadcast(t)), quota
+
+
 @q(
     "q_mix_plan",
     f"""
@@ -1971,27 +1961,13 @@ def q_mix_plan(spark, sf):
     # rows of state), a broadcast join against the literal weight table,
     # and a 1-row min folded back with a broadcast cross join — plan cost
     # is independent of corpus size beyond the single token-count scan.
-    d = T(spark, sf, "documents")
-    avail = d.groupBy("source").agg(
-        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("avail_tokens")
-    )
-    w = spark.createDataFrame(list(_MIX_WEIGHTS), "source string, weight double")
-    caps = avail.join(F.broadcast(w), "source").withColumn(
-        "cap_total", F.floor(F.col("avail_tokens") / F.col("weight")).cast("bigint")
-    )
-    t = caps.agg(F.min("cap_total").alias("t_max"))
-    quota = F.floor(F.col("weight") * F.col("t_max")).cast("bigint")
-    return (
-        caps.crossJoin(F.broadcast(t))
-        .select(
-            "source",
-            "weight",
-            "avail_tokens",
-            quota.alias("quota_tokens"),
-            F.round(
-                quota.cast("double") / F.col("avail_tokens"), 4
-            ).alias("utilization"),
-        )
+    caps, quota = _mix_quota(spark, T(spark, sf, "documents"))
+    return caps.select(
+        "source",
+        "weight",
+        "avail_tokens",
+        quota.alias("quota_tokens"),
+        F.round(quota.cast("double") / F.col("avail_tokens"), 4).alias("utilization"),
     )
 
 
@@ -2165,7 +2141,7 @@ def q_join_pit_scd2(spark, sf):
     # version count is unbounded (sensor state every second) use the
     # as-of union-window form instead (q_join_asof — one window, no
     # fan). The dimension build is the q_scd2_history gaps-and-islands
-    # single shuffle.
+    # single shuffle (_scd2_segments).
     ev = T(spark, sf, "events")
     st = ev.filter(F.col("event_type").isin(*_PIT_STATES)).select(
         "user_id",
@@ -2173,15 +2149,7 @@ def q_join_pit_scd2(spark, sf):
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
         "event_id",
     )
-    wo = Window.partitionBy("user_id").orderBy("us", "event_id")
-    seg = st.withColumn(
-        "chg",
-        F.when(
-            ~F.lag("event_type").over(wo).eqNullSafe(F.col("event_type")), 1
-        ).otherwise(0),
-    ).withColumn(
-        "seg_id", F.sum("chg").over(wo.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    seg = _scd2_segments(st, "us", "event_id")
     ws = Window.partitionBy("user_id").orderBy("seg_id")
     dim = (
         seg.groupBy("user_id", "seg_id")
@@ -2274,19 +2242,9 @@ def q_mix_draw(spark, sf):
     # deterministic under any partitioning because the order key is
     # content-addressed.
     d = T(spark, sf, "documents")
-    avail = d.groupBy("source").agg(
-        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("avail_tokens")
-    )
-    w = spark.createDataFrame(list(_MIX_WEIGHTS), "source string, weight double")
-    caps = avail.join(F.broadcast(w), "source").withColumn(
-        "cap_total", F.floor(F.col("avail_tokens") / F.col("weight")).cast("bigint")
-    )
-    t = caps.agg(F.min("cap_total").alias("t_max"))
-    quota = caps.crossJoin(F.broadcast(t)).select(
-        "source",
-        F.floor(F.col("weight") * F.col("t_max")).cast("bigint").alias("quota_tokens"),
-    )
-    docs = d.join(F.broadcast(quota), "source").select(
+    caps, quota = _mix_quota(spark, d)
+    quotas = caps.select("source", quota.alias("quota_tokens"))
+    docs = d.join(F.broadcast(quotas), "source").select(
         "source",
         "doc_id",
         "quota_tokens",
@@ -2545,20 +2503,12 @@ def q_graph_kcore(spark, sf):
     # fixpoint) is unit-tested on graphs with known cores. Each round is
     # one map-combined degree aggregate + two node-keyed semi joins over
     # a monotonically shrinking edge set.
-    from mongo_to_parquet_spark.operators.dedup import kcore_peel
-
     li = T(spark, sf, "lineitem")
     g = li.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
     e = (
-        g.select(F.posexplode("ps").alias("i", "u"), "ps")
-        .select(
-            "u",
-            F.explode(
-                F.slice(F.col("ps"), F.col("i") + F.lit(2), F.size("ps"))
-            ).alias("v"),
-        )
+        dedup._basket_pairs(g, "ps")
         .distinct()
         # materialize ONCE: the expensive collect_set/explode edge build
         # otherwise runs twice — for the median-k probe AND inside
@@ -2572,12 +2522,7 @@ def q_graph_kcore(spark, sf):
     # peel round ends in an eager localCheckpoint, so the returned plan
     # never reads it.
     with scope(spark) as sc:
-        deg = sc.persist(
-            e.select(F.col("u").alias("x"))
-            .unionAll(e.select(F.col("v").alias("x")))
-            .groupBy("x")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+        deg = sc.persist(dedup._edge_degrees(e))
         med = deg.agg(F.floor(F.percentile("d", 0.5) * 0.8)).collect()[0][0]
         k = int(med) if med is not None else 1  # empty graph → empty result
         # canonical=True: e is already (u<v)-oriented (sorted per-order
@@ -2585,7 +2530,7 @@ def q_graph_kcore(spark, sf):
         # kcore_peel's normalize+distinct re-shuffle and round-0
         # re-materialization of the SAME edge set are skipped (round-12:
         # one edge-sized exchange + checkpoint write saved per invocation)
-        cores = kcore_peel(
+        cores = dedup.kcore_peel(
             e, k=k, rounds=3, src="u", dst="v", canonical=True, degrees0=deg
         )
     return cores.withColumn("k", F.lit(k).cast("bigint"))
@@ -2788,9 +2733,7 @@ def q_graph_linkpred(spark, sf):
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
     ).distinct()
     ps = s.groupBy("ok").agg(F.sort_array(F.collect_set("p")).alias("ps"))
-    pairs = ps.select(
-        F.posexplode("ps").alias("i", "u"), "ps"
-    ).select("u", F.explode(F.expr("slice(ps, i + 2, size(ps))")).alias("v"))
+    pairs = dedup._basket_pairs(ps, "ps")
     w = pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
     adj = w.select(F.col("u").alias("x"), F.col("v").alias("y"), "w").unionByName(
         w.select(F.col("v").alias("x"), F.col("u").alias("y"), "w")
@@ -2819,9 +2762,7 @@ def q_graph_linkpred(spark, sf):
         F.sort_array(F.collect_set("y")).alias("ns")
     ).persist()
     deg2 = nbrs.select("x", F.size("ns").cast("bigint").alias("d"))
-    wedges = nbrs.select(
-        F.posexplode("ns").alias("i", "a"), "ns"
-    ).select("a", F.explode(F.expr("slice(ns, i + 2, size(ns))")).alias("b"))
+    wedges = dedup._basket_pairs(nbrs, "ns", "a", "b")
     cn = wedges.groupBy("a", "b").agg(F.count(F.lit(1)).alias("cn"))
     pred = (
         cn.join(und, (cn.a == und.u) & (cn.b == und.v), "left_anti")
@@ -3074,9 +3015,46 @@ _FS_W_CTE = f"""
     )"""
 
 
-def _fs_weights(stats):
-    """Spark twin of :data:`_FS_W_CTE` — identical expression tree so both
-    engines take LN of identical doubles (bm25 precedent)."""
+def _fs_feats(spark, sf, *extra):
+    """The twins' customer features (the oracle's ``feats`` CTE): id,
+    nation block, market segment f1 and account-balance band f2, plus
+    any ``extra`` customer columns."""
+    return T(spark, sf, "customer").select(
+        F.col("c_custkey").alias("id"),
+        F.col("c_nationkey").alias("blk"),
+        F.col("c_mktsegment").alias("f1"),
+        F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("f2"),
+        *extra,
+    )
+
+
+def _fs_weights(feats):
+    """The oracle's ``vf`` → ``stats`` → ``w`` chain: ONE stacked
+    value-frequency pass for BOTH fields' u-numerators and the row count
+    (replaces three aggregate jobs chained through nested 1-row cross
+    joins — their sequential stage latency dominated locally; at scale
+    it is also simply fewer passes), then the Spark twin of
+    :data:`_FS_W_CTE` — identical expression tree so both engines take
+    LN of identical doubles (bm25 precedent)."""
+    vf = (
+        feats.select(
+            F.explode(
+                F.array(
+                    F.concat(F.lit("1:"), F.col("f1")),
+                    F.concat(F.lit("2:"), F.col("f2").cast("string")),
+                )
+            ).alias("fld")
+        )
+        .groupBy("fld")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    pairs_of = F.col("c") * (F.col("c") - 1) / 2
+    is1 = F.col("fld").startswith("1:")
+    stats = vf.agg(
+        F.sum(F.when(is1, pairs_of)).cast("bigint").alias("num1"),
+        F.sum(F.when(~is1, pairs_of)).cast("bigint").alias("num2"),
+        F.sum(F.when(is1, F.col("c"))).cast("bigint").alias("n"),
+    )
     m = F.lit(float(_FS_M))
     den = F.col("n") * (F.col("n") - 1) / 2
     dmax = F.expr("div(n * (n - 1), 2) - 1")
@@ -3090,6 +3068,32 @@ def _fs_weights(stats):
         F.log((1 - m) * den / (den - c1)).alias("wd1"),
         F.log(m * den / c2).alias("wa2"),
         F.log((1 - m) * den / (den - c2)).alias("wd2"),
+    )
+
+
+def _fs_top(pairs, w, id1, id2, f1, f2):
+    """Score candidate ``pairs`` with the FS weights ``w`` and keep the
+    top :data:`_FS_TOP` — the oracle's agree/score select and its
+    ``ORDER BY fs_score DESC, id1, id2 LIMIT``. ``id1``/``id2`` are the
+    output id columns; ``f1``/``f2`` are each field's (left, right)
+    column names."""
+    eq1 = F.col(f1[0]) == F.col(f1[1])
+    eq2 = F.col(f2[0]) == F.col(f2[1])
+    return (
+        pairs.crossJoin(F.broadcast(w))
+        .select(
+            id1.alias("id1"),
+            id2.alias("id2"),
+            eq1.cast("bigint").alias("agree_seg"),
+            eq2.cast("bigint").alias("agree_bal"),
+            F.round(
+                F.when(eq1, F.col("wa1")).otherwise(F.col("wd1"))
+                + F.when(eq2, F.col("wa2")).otherwise(F.col("wd2")),
+                4,
+            ).alias("fs_score"),
+        )
+        .orderBy(F.col("fs_score").desc(), F.col("id1").asc(), F.col("id2").asc())
+        .limit(_FS_TOP)
     )
 
 
@@ -3150,63 +3154,21 @@ def q_link_fs(spark, sf):
     # standard linkage knob) with a codegen'd per-pair expression;
     # selection is TakeOrdered. Rounded score + (id1, id2) tiebreak keeps
     # the cut engine-exact.
-    c = T(spark, sf, "customer")
-    feats = c.select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("f1"),
-        F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("f2"),
-    )
-    # one stacked value-frequency pass for BOTH fields' u-numerators and
-    # the row count — replaces three aggregate jobs chained through nested
-    # 1-row cross joins (their sequential stage latency dominated locally;
-    # at scale it's also simply fewer passes)
-    vf = (
-        feats.select(
-            F.explode(
-                F.array(
-                    F.concat(F.lit("1:"), F.col("f1")),
-                    F.concat(F.lit("2:"), F.col("f2").cast("string")),
-                )
-            ).alias("fld")
-        )
-        .groupBy("fld")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    pairs_of = F.col("c") * (F.col("c") - 1) / 2
-    is1 = F.col("fld").startswith("1:")
-    stats = vf.agg(
-        F.sum(F.when(is1, pairs_of)).cast("bigint").alias("num1"),
-        F.sum(F.when(~is1, pairs_of)).cast("bigint").alias("num2"),
-        F.sum(F.when(is1, F.col("c"))).cast("bigint").alias("n"),
-    )
-    w = _fs_weights(stats)
+    feats = _fs_feats(spark, sf)
+    w = _fs_weights(feats)
     from mongo_to_parquet_spark.operators.parallel import fan_out
 
     # stream side fanned out (pairwise_cosine precedent): the blocked
     # self-join's quadratic per-block pair loop otherwise runs at the
     # single-file scan's parallelism
     a, b = fan_out(feats).alias("a"), feats.alias("b")
-    return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
-        .crossJoin(F.broadcast(w))
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            (F.col("a.f1") == F.col("b.f1")).cast("bigint").alias("agree_seg"),
-            (F.col("a.f2") == F.col("b.f2")).cast("bigint").alias("agree_bal"),
-            F.round(
-                F.when(F.col("a.f1") == F.col("b.f1"), F.col("wa1")).otherwise(
-                    F.col("wd1")
-                )
-                + F.when(F.col("a.f2") == F.col("b.f2"), F.col("wa2")).otherwise(
-                    F.col("wd2")
-                ),
-                4,
-            ).alias("fs_score"),
-        )
-        .orderBy(F.col("fs_score").desc(), F.col("id1").asc(), F.col("id2").asc())
-        .limit(_FS_TOP)
+    return _fs_top(
+        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))),
+        w,
+        F.col("a.id"),
+        F.col("b.id"),
+        ("a.f1", "b.f1"),
+        ("a.f2", "b.f2"),
     )
 
 
@@ -3368,34 +3330,8 @@ def q_link_fs_snm(spark, sf):
     # q_link_fs (one stacked u-estimation pass).
     from mongo_to_parquet_spark.operators.parallel import fan_out
 
-    c = T(spark, sf, "customer")
-    feats = c.select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("f1"),
-        F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("f2"),
-        "c_acctbal",
-    )
-    vf = (
-        feats.select(
-            F.explode(
-                F.array(
-                    F.concat(F.lit("1:"), F.col("f1")),
-                    F.concat(F.lit("2:"), F.col("f2").cast("string")),
-                )
-            ).alias("fld")
-        )
-        .groupBy("fld")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    pairs_of = F.col("c") * (F.col("c") - 1) / 2
-    is1 = F.col("fld").startswith("1:")
-    stats = vf.agg(
-        F.sum(F.when(is1, pairs_of)).cast("bigint").alias("num1"),
-        F.sum(F.when(~is1, pairs_of)).cast("bigint").alias("num2"),
-        F.sum(F.when(is1, F.col("c"))).cast("bigint").alias("n"),
-    )
-    w = _fs_weights(stats)
+    feats = _fs_feats(spark, sf, "c_acctbal")
+    w = _fs_weights(feats)
     rn = F.row_number().over(
         Window.partitionBy("blk").orderBy(F.col("c_acctbal").asc(), F.col("id").asc())
     )
@@ -3410,28 +3346,14 @@ def q_link_fs_snm(spark, sf):
         "blk", "rn",
         F.col("id").alias("idb"), F.col("f1").alias("bf1"), F.col("f2").alias("bf2"),
     )
-    scored = (
-        a.join(b, ["blk", "rn"])
-        .crossJoin(F.broadcast(w))
-        .select(
-            F.least("ida", "idb").alias("id1"),
-            F.greatest("ida", "idb").alias("id2"),
-            (F.col("af1") == F.col("bf1")).cast("bigint").alias("agree_seg"),
-            (F.col("af2") == F.col("bf2")).cast("bigint").alias("agree_bal"),
-            F.round(
-                F.when(F.col("af1") == F.col("bf1"), F.col("wa1")).otherwise(
-                    F.col("wd1")
-                )
-                + F.when(F.col("af2") == F.col("bf2"), F.col("wa2")).otherwise(
-                    F.col("wd2")
-                ),
-                4,
-            ).alias("fs_score"),
-        )
+    return _fs_top(
+        a.join(b, ["blk", "rn"]),
+        w,
+        F.least("ida", "idb"),
+        F.greatest("ida", "idb"),
+        ("af1", "bf1"),
+        ("af2", "bf2"),
     )
-    return scored.orderBy(
-        F.col("fs_score").desc(), F.col("id1").asc(), F.col("id2").asc()
-    ).limit(_FS_TOP)
 
 
 def _bpe_curve_sql(k: int = _BPE_TRAIN_K) -> str:
@@ -3935,23 +3857,29 @@ def q_unigram_pipeline(spark, sf):
     # shared by both engines: apply text is the training corpus (or a
     # subset), so every character is in the vocab and no DP cell is NULL.
     vocab, _ = _unigram_train_vocab(spark, sf)
-    vm = _uni_vm_lit(vocab)
+    return _uni_apply(spark, sf, _uni_vm_lit(vocab))
+
+
+def _uni_apply(spark, sf, vm):
+    """The unigram apply tail shared by q_unigram_pipeline (inline
+    vocab) and q_unigram_apply_artifact (stored vocab): per-language
+    (n_docs, n_words, n_subwords) of the corpus segmented under the
+    literal vocab map ``vm``. The DP fold is an interpreted HOF (lesson
+    25/41): it runs once per DISTINCT word — the same census trick every
+    trainer here uses — and the piece counts join back onto the
+    occurrences (AQE broadcasts the word→k table when it is small; at
+    open-vocabulary scale it degrades to a keyed join, still ∝ distinct
+    words, never per-occurrence fold work). Measured 9.0s →
+    per-distinct at sf0.1."""
     d = T(spark, sf, "documents")
     words = d.select(
         "lang", "doc_id", F.explode(F.split("text", " ")).alias("w")
     ).filter((F.col("w") != "") & (F.length("w") <= _UNI_WMAX))
-    # the DP fold is an interpreted HOF (lesson 25/41): run it once per
-    # DISTINCT word — the same census trick every trainer here uses —
-    # and join the piece counts back onto the occurrences (AQE
-    # broadcasts the word→k table when it is small; at open-vocabulary
-    # scale it degrades to a keyed join, still ∝ distinct words, never
-    # per-occurrence fold work). Measured 9.0s → per-distinct at sf0.1.
     wk = words.select("w").distinct().select(
         "w",
         _uni_k(_uni_dp_col(F.col("w"), vm), F.col("w")).alias("k"),
     )
-    scored = words.join(wk, "w")
-    return scored.groupBy("lang").agg(
+    return words.join(wk, "w").groupBy("lang").agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
         F.count(F.lit(1)).cast("bigint").alias("n_words"),
         F.sum("k").cast("bigint").alias("n_subwords"),
@@ -4098,26 +4026,16 @@ def q_wordpiece_pipeline(spark, sf):
     # SAME corpus with the trained merges, per-language word vs subword
     # counts: the q_bpe_pipeline report for the third tokenizer family,
     # so all three (BPE / unigram / WordPiece) are directly comparable on
-    # one corpus. Spark feeds _wp_train_merges into the SAME expression
-    # builder BPE applies with (bpe_apply_cols — merge folding is
-    # family-agnostic); the oracle appends the SAME apply tail
-    # (_merge_apply_sql) to the WordPiece train CTEs — one apply
-    # definition gates both families (the shared-CTE discipline).
+    # one corpus. Spark feeds _wp_train_merges into the SAME apply tail
+    # BPE uses (_merge_family_apply — merge folding is family-agnostic);
+    # the oracle appends the SAME apply tail (_merge_apply_sql) to the
+    # WordPiece train CTEs — one apply definition gates both families
+    # (the shared-CTE discipline).
     #
     # Scale: training as in q_wordpiece_train; apply is one map-only
     # corpus pass with the merge table folded in as expression literals.
     merges = _wp_train_merges(spark, sf)
-    n_words, n_subwords = bpe_apply_cols([(x, y) for _, x, y, _, _, _ in merges])
-    d = T(spark, sf, "documents")
-    return (
-        d.select("lang", n_words.alias("nw"), n_subwords.alias("ns"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("nw").cast("bigint").alias("n_words"),
-            F.sum("ns").cast("bigint").alias("n_subwords"),
-        )
-    )
+    return _merge_family_apply(spark, sf, [(x, y) for _, x, y, _, _, _ in merges])
 
 
 #: vocab-size curve points: number of multi-char pieces kept at each point
@@ -4216,10 +4134,11 @@ _tok_artifact_current = tokenizer.artifact_current
 
 
 def _merge_family_apply(spark, sf, merges):
-    """The shared apply tail for the merge families (BPE / WordPiece)
-    once the rank-ordered merge list is in hand — identical to the
-    inline pipelines' aggregation so artifact and inline paths cannot
-    drift in accounting."""
+    """The apply tail of the merge families (BPE / WordPiece) once the
+    rank-ordered (x, y) merge list is in hand: per-language (n_docs,
+    n_words, n_subwords) through bpe_apply_cols. The inline pipelines
+    (freshly trained merges) and the artifact keys (stored merges) all
+    call it, so the two paths cannot drift in accounting."""
     n_words, n_subwords = bpe_apply_cols(merges)
     d = T(spark, sf, "documents")
     return (
@@ -4325,30 +4244,16 @@ def q_wordpiece_apply_artifact(spark, sf):
 def q_unigram_apply_artifact(spark, sf):
     # the unigram family's serving shape: the trained (piece, cnt)
     # vocabulary persists as the artifact, and apply loads it into the
-    # literal map (_uni_vm_lit) feeding the once-per-DISTINCT-word DP +
-    # join-back — the exact apply plan q_unigram_pipeline runs after
-    # training, minus the training. The artifact IS the vocabulary the
-    # EM trainer converged to, so the oracle (train+apply in one
-    # statement) hash-matches iff the parquet round-trip preserved every
-    # (piece, cnt) pair and the loaded map reproduces the inline DP.
+    # literal map (_uni_vm_lit) and runs q_unigram_pipeline's apply tail
+    # (_uni_apply) on it — the training is the only difference. The
+    # artifact IS the vocabulary the EM trainer converged to, so the
+    # oracle (train+apply in one statement) hash-matches iff the parquet
+    # round-trip preserved every (piece, cnt) pair.
     #
     # Scale: the EM loop (census-sized but iterative) leaves the
     # per-ingest path entirely; serving cost is one corpus scan + a
     # distinct-word DP with the vocab broadcast by value (~100 literals).
-    vm = _uni_vm_lit(_uni_vocab_artifact(spark, sf))
-    d = T(spark, sf, "documents")
-    words = d.select(
-        "lang", "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter((F.col("w") != "") & (F.length("w") <= _UNI_WMAX))
-    wk = words.select("w").distinct().select(
-        "w",
-        _uni_k(_uni_dp_col(F.col("w"), vm), F.col("w")).alias("k"),
-    )
-    return words.join(wk, "w").groupBy("lang").agg(
-        F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
-        F.count(F.lit(1)).cast("bigint").alias("n_words"),
-        F.sum("k").cast("bigint").alias("n_subwords"),
-    )
+    return _uni_apply(spark, sf, _uni_vm_lit(_uni_vocab_artifact(spark, sf)))
 
 
 # ------------------------------------------- tokenizer quality comparison --

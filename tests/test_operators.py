@@ -1307,6 +1307,29 @@ def test_kcore_peel_fixpoint_and_fixed_rounds(spark):
     assert set(one) == {1, 2, 3, 4, 5, 6}  # only 7 peeled so far
     assert one[6] == 1  # below k: one round has not converged
 
+    # q_graph_kcore's path: a canonical, checkpointed edge set with its
+    # round-1 degrees handed in from dedup._edge_degrees must peel exactly
+    # like the normalizing call on a raw copy of the same graph (reversed
+    # duplicates and a self-loop). k=3 on K4 + node 5 (linked to 1, 2, 6)
+    # + tail 6-7-8: round 1 drops the tail, round 2 drops 5.
+    edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+             (1, 5), (2, 5), (5, 6), (6, 7), (7, 8)]
+    raw = spark.createDataFrame(
+        edges + [(v, u) for u, v in edges] + [(5, 5)], "doc1 long, doc2 long"
+    )
+    canon = spark.createDataFrame(edges, "u long, v long").localCheckpoint()
+    peeled = {}
+    for rounds in (1, 2, 3):
+        want = dedup.kcore_peel(raw, k=3, rounds=rounds).collect()
+        got = dedup.kcore_peel(
+            canon, k=3, rounds=rounds, src="u", dst="v",
+            canonical=True, degrees0=dedup._edge_degrees(canon),
+        ).collect()
+        peeled[rounds] = dict(map(tuple, want))
+        assert dict(map(tuple, got)) == peeled[rounds], rounds
+    assert peeled[1] == {1: 4, 2: 4, 3: 3, 4: 3, 5: 2}
+    assert peeled[2] == peeled[3] == {1: 3, 2: 3, 3: 3, 4: 3}
+
 
 def test_ivf_batch_with_full_probing_is_exact(spark, sf_dir):
     """ivf_topk_batch probing EVERY cell must reproduce brute-force

@@ -2,16 +2,20 @@
 
 Several declared keys are thin tails over a shared builder in
 queries/retrieval.py, queries/llm.py, queries/curation.py,
-queries/lakehouse.py, operators/dedup.py or operators/similarity.py (the
-BM25 scorer, the in-memory IVF×PQ route, the labelled eval top-k, the
-winnowing fingerprints, the bitext margin, the md5 MinHash bands and
-exact-Jaccard verify, the 48-bit md5 hash, the md5 hyperplane signature,
-the DSIR featurization and scoring, the unigram piece count, the
-two-slice MV refresh, and the vector-search steps: the probe batch, the
-single-probe and per-probe top-k tails, the IVF cell pick, the SQ8
-quantizer and the PQ split and argmin). An edit to a builder moves every key that calls it, so each
-of those keys that no other tier-1 test compares with its DuckDB oracle
-is checked here, with the same comparison tools/parity.py applies.
+queries/lakehouse.py, operators/dedup.py, operators/similarity.py or
+operators/ranks.py (the BM25 scorer, the in-memory IVF×PQ route, the
+labelled eval top-k, the winnowing fingerprints, the bitext margin, the
+md5 MinHash bands and exact-Jaccard verify, the 48-bit md5 hash, the md5
+hyperplane signature, the DSIR featurization and scoring, the unigram
+piece count and apply tail, the two-slice MV refresh, the vector-search
+steps: the probe batch, the single-probe and per-probe top-k tails, the
+IVF cell pick, the SQ8 quantizer and the PQ split and argmin, and the
+curation and statistics steps: the basket→ordered-pair generator, the
+edge-degree table, the mixture quota, the SCD-2 segmentation and the
+DECIMAL(38,0) moment sums). An edit to a builder moves every key that
+calls it, so each of those keys that no other tier-1 test compares with
+its DuckDB oracle is checked here, with the same comparison
+tools/parity.py applies.
 """
 
 from __future__ import annotations
@@ -76,6 +80,23 @@ BUILDER_KEYS = (
     "q_eval_ann_recall",
     "q_embed_quantize",
     "q_knn_classify",
+    # dedup._basket_pairs / dedup._edge_degrees
+    "q_graph_triangles",
+    "q_graph_kcore",
+    "q_graph_degree_stats",
+    "q_graph_linkpred",
+    "q_assoc_rules",
+    # _mix_quota
+    "q_mix_plan",
+    "q_mix_draw",
+    # _scd2_segments
+    "q_scd2_history",
+    "q_join_pit_scd2",
+    # _uni_apply
+    "q_unigram_apply_artifact",
+    # ranks._moment_sums
+    "q_stats_regression",
+    "q_stats_spearman",
 )
 
 
