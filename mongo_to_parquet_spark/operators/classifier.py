@@ -25,12 +25,14 @@ Determinism contract (the whole point of the fixed-point form):
 
 Scale: model state is D+2 scaled-integer weights — it rides the plan as
 LITERALS (the kmeans-centroid driver-pick exception), so the margin pass
-is map-side with NO join. Each iteration costs one features-scan margin
-aggregation (doc_id-keyed, map-combined) plus one co-partitioned
-features⋈residuals join and a D-row gradient aggregate; the features
-relation is built once and cached. Serving is a single scan with the
-weight array folded in — zero joins, zero Python — at 100 TB the gate
-scores at scan speed exactly like the fixed-weight q_quality_model.
+is map-side with NO join. Training reads one row per document (label +
+dense D+2 feature array, built once from one token pass and cached);
+each iteration is one scan of it whose margin, residual and gradient
+terms are map-side arithmetic, reduced to D+2 partial sums per map
+partition — no join and no doc-keyed shuffle. Serving is a single scan
+with the weight array folded in — zero joins, zero Python — at 100 TB
+the gate scores at scan speed exactly like the fixed-weight
+q_quality_model.
 """
 
 from __future__ import annotations
@@ -110,9 +112,7 @@ def doc_stats(docs: DataFrame) -> DataFrame:
 
 #: the dense fixed-point feature vector (array slot j = bucket j's x,
 #: slot D = bias, slot D+1 = scaled length) as a SQL expression over
-#: doc_stats columns. An absent bucket contributes x=0 — identical to
-#: the sparse form where the (doc, b) row simply does not exist, since
-#: every downstream term is (x * w) div S and (0 * w) div S = 0.
+#: doc_stats columns. An absent bucket contributes x=0.
 _XA_EXPR = (
     f"concat(transform(sequence(0, {D - 1}),"
     f" j -> (coalesce(element_at(cm, j), CAST(0 AS BIGINT)) * {S})"
@@ -120,48 +120,13 @@ _XA_EXPR = (
     f" array(CAST({S} AS BIGINT), (n_tok * {S}) div 100))"
 )
 
-#: label gate over doc_stats columns (n_tok >= 1 always: split('') is [''])
+#: label gate over doc_stats columns: curated-positive = passes the
+#: deterministic C4-ish gate (enough tokens, sane mean word length),
+#: integer-exact on both engines (n_tok >= 1 always: split('') is [''])
 _Y_EXPR = (
     "CASE WHEN n_tok >= 40 AND (sum_len * 10) div n_tok BETWEEN 30 AND 60"
     " THEN 1 ELSE 0 END"
 )
-
-
-def doc_features(docs: DataFrame) -> DataFrame:
-    """(doc_id, b, x): hashed-token tf buckets in fixed point, plus the
-    bias and scaled-length dimensions. x sums to ~2S+len per doc.
-    Derived from doc_stats (one token pass, no join); the sparse rows
-    are the map entries exploded back out — bit-identical to the old
-    two-pass union shape."""
-    st = doc_stats(docs)
-    hashed = st.select(
-        "doc_id", F.explode("cm").alias("b", "c"), "n_tok"
-    ).select("doc_id", "b", F.expr(f"(c * {S}) div n_tok").alias("x"))
-    extra = st.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(BIAS_B).alias("b"), F.lit(S).cast("bigint").alias("x")
-                ),
-                F.struct(
-                    F.lit(LEN_B).alias("b"),
-                    F.expr(f"(n_tok * {S}) div 100").alias("x"),
-                ),
-            )
-        ).alias("e"),
-    ).select("doc_id", "e.b", "e.x")
-    return hashed.unionByName(extra)
-
-
-def doc_labels(docs: DataFrame) -> DataFrame:
-    """(doc_id, y): curated-positive = passes the deterministic C4-ish
-    gate (enough tokens, sane mean word length) — integer-exact on both
-    engines: y = 1 iff n_tok >= 40 and 30 <= (Σ len(tok)·10) div n_tok
-    <= 60."""
-    return doc_stats(docs).select(
-        "doc_id", F.expr(_Y_EXPR).cast("int").alias("y")
-    )
 
 
 def doc_dense(docs: DataFrame) -> DataFrame:
@@ -195,35 +160,6 @@ def _margin_expr(weights: list[int]) -> str:
         if int(wj) != 0
     ]
     return " + ".join(terms) if terms else "CAST(0 AS BIGINT)"
-
-
-def train_logreg(feats: DataFrame, labels: DataFrame) -> list[int]:
-    """Fixed-point batch gradient descent, ITERS iterations; returns the
-    N_W scaled-integer weights. ``feats``/``labels`` should already be
-    restricted to the training split. Model state stays driver-side
-    Python ints (exact, unbounded) and re-enters each iteration's plan as
-    literals; the corpus-sized relation is scanned once per iteration.
-
-    Sparse-input compatibility wrapper: densifies (doc_id, b, x) rows
-    into the one-row-per-doc array relation and trains on that — the
-    weights are bit-identical because absent buckets contribute
-    (0 · w) div S = 0 to every sum the sparse form simply omitted."""
-    dense = (
-        feats.groupBy("doc_id")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("b", "x"))).alias("fm")
-        )
-        .join(labels, "doc_id")
-        .select(
-            "doc_id",
-            "y",
-            F.expr(
-                f"transform(sequence(0, {N_W - 1}),"
-                f" j -> coalesce(element_at(fm, j), CAST(0 AS BIGINT)))"
-            ).alias("xa"),
-        )
-    )
-    return train_logreg_dense(dense)
 
 
 def gradient_sql(w: list[int], view: str) -> str:
@@ -299,29 +235,12 @@ def train_logreg_dense(dense: DataFrame) -> list[int]:
         return w
 
 
-def score(feats: DataFrame, weights: list[int]) -> DataFrame:
-    """(doc_id, score_scaled, keep): σ_int of the margin under the given
-    weights, keep = score ≥ S/2. Map-side: weights are literals."""
-    warr = F.array(*[F.lit(int(wi)).cast("bigint") for wi in weights])
-    m = (
-        feats.withColumn("w", F.element_at(warr, F.col("b") + 1))
-        .select("doc_id", F.expr(f"(x * w) div {S}").alias("t"))
-        .groupBy("doc_id")
-        .agg(F.sum("t").cast("bigint").alias("m"))
-    )
-    return m.select(
-        "doc_id",
-        _sigmoid_int("m").cast("bigint").alias("score_scaled"),
-        (_sigmoid_int("m") >= S // 2).alias("keep"),
-    )
-
-
 def score_docs(docs: DataFrame, weights: list[int]) -> DataFrame:
-    """score() straight off the documents relation: one token pass into
-    doc_stats, margin and sigmoid as map-side literal-weight arithmetic
-    on the per-doc row — the serving path pays one explode + two chained
-    aggregates and ZERO joins (the sparse route re-scanned the tokens
-    for n_tok and shuffled ~N_W rows per doc into a second aggregate)."""
+    """(doc_id, score_scaled, keep) straight off the documents relation:
+    σ_int of the margin under the given weights, keep = score ≥ S/2. One
+    token pass into doc_stats, margin and sigmoid as map-side
+    literal-weight arithmetic on the per-doc row — the serving path pays
+    one explode + two chained aggregates and ZERO joins."""
     m = doc_stats(docs).select(
         "doc_id", F.expr(_XA_EXPR).alias("xa")
     ).select("doc_id", F.expr(_margin_expr(weights)).alias("m"))

@@ -925,40 +925,41 @@ def connected_components(
     overflow ANSI long arithmetic.
     """
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    edges = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition("b")
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
+
     def label_sum(df: DataFrame):
         return df.agg(
             F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    prev_sum = label_sum(labels)
-    for _ in range(max_iter):
-        prop = edges.join(
-            labels.select(F.col("node").alias("b"), "comp").hint("shuffle_hash"),
-            "b",
-        ).select(F.col("a").alias("node"), "comp")
-        new_labels = (
-            labels.union(prop).groupBy("node").agg(F.min("comp").alias("comp"))
-        ).localCheckpoint()
-        new_sum = label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    return labels
+    # every round's labels is an eager localCheckpoint, so the returned
+    # relation never reads the persisted edges: they die with the call
+    with scope(pairs.sparkSession) as sc:
+        edges = sc.persist(
+            e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            .repartition("b")
+        )
+        labels = (
+            edges.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
+            .localCheckpoint()
+        )
+        prev_sum = label_sum(labels)
+        for _ in range(max_iter):
+            prop = edges.join(
+                labels.select(F.col("node").alias("b"), "comp").hint("shuffle_hash"),
+                "b",
+            ).select(F.col("a").alias("node"), "comp")
+            new_labels = (
+                labels.union(prop).groupBy("node").agg(F.min("comp").alias("comp"))
+            ).localCheckpoint()
+            new_sum = label_sum(new_labels)
+            labels = new_labels
+            if new_sum == prev_sum:
+                return labels
+            prev_sum = new_sum
+    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
 
 
 def span_dedup(
@@ -1299,6 +1300,36 @@ def exact_substr_incremental(
     return _substr_cut(base_d, dup, L)
 
 
+def _edge_fixpoint(e: DataFrame, step, max_iter: int) -> DataFrame:
+    """Iterate ``e = step(e, r)`` for rounds r = 0, 1, … over a distinct
+    (u, v) edge set until it stops changing; raise after ``max_iter``
+    rounds without a fixpoint.
+
+    Fixpoint detection is checksum-based, one aggregate over the edge
+    set per round: (count, Σu, Σv) in DECIMAL(38,0). A matching
+    checksum is then CONFIRMED by an exact set diff (``exceptAll``
+    emptiness — one direction suffices: both rounds' edge sets are
+    distinct and the checksum already matched their counts), so a
+    checksum collision on a non-fixpoint set cannot terminate the loop
+    early; the exact diff runs once, at convergence, not per round.
+    Every round ``localCheckpoint``s the new edge set to truncate
+    iterative lineage — on a cluster, ``checkpoint()`` (same rationale
+    as :func:`connected_components`)."""
+    prev = prev_e = None
+    for r in range(max_iter):
+        e = step(e, r).localCheckpoint()
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
+            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
+        ).collect()[0]
+        cs = (row["n"], row["su"], row["sv"])
+        if cs == prev and prev_e.exceptAll(e).isEmpty():
+            return e
+        prev, prev_e = cs, e
+    raise RuntimeError(f"edge-set loop: no fixpoint in {max_iter} rounds")
+
+
 def connected_components_star(
     pairs: DataFrame,
     src: str = "doc1",
@@ -1329,16 +1360,9 @@ def connected_components_star(
     chains (pinned in tests: a 200-edge path that min-label cannot solve
     in 10 rounds finishes here in 6).
 
-    Fixpoint detection is checksum-based, one aggregate over the edge
-    set per round: (count, Σu, Σv) in DECIMAL(38,0). A matching
-    checksum is then CONFIRMED by an exact set diff (``exceptAll``
-    emptiness — one direction suffices: both rounds' edge sets are
-    distinct and the checksum already matched their counts), so a
-    checksum collision on a non-fixpoint set cannot terminate the loop
-    early; the exact diff runs once, at convergence, not per round.
-    Every round ``localCheckpoint``s the (node-count-sized) edge set to
-    truncate iterative lineage — on a cluster, ``checkpoint()`` (same
-    rationale as :func:`connected_components`).
+    Rounds run to the edge-set fixpoint of :func:`_edge_fixpoint`
+    (checksum per round, exact set diff at a matching checksum); each
+    round's edge set is node-count-sized.
     """
     e = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -1347,17 +1371,7 @@ def connected_components_star(
         .localCheckpoint()
     )
 
-    def checksum(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).collect()[0]
-        return (row["n"], row["su"], row["sv"])
-
-    prev = None
-    prev_e = None
-    for _ in range(max_iter):
+    def star_round(e: DataFrame, _r: int) -> DataFrame:
         # ---- large-star: symmetrize, re-point larger neighbors at min
         b = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = b.groupBy("u").agg(
@@ -1375,7 +1389,7 @@ def connected_components_star(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         ).distinct()
         mins2 = o.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
+        return (
             o.join(mins2.hint("shuffle_hash"), "u")
             .select(
                 F.explode(
@@ -1388,22 +1402,9 @@ def connected_components_star(
             .select(F.col("e.a").alias("u"), F.col("e.b").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
-        e = ss
-        cs = checksum(e)
-        # checksum equality is the cheap per-round signal; confirm with an
-        # exact diff before declaring convergence (collision guard — see
-        # docstring). Counts already match via cs, sets are distinct, so
-        # one-direction exceptAll emptiness proves set equality.
-        if cs == prev and prev_e.exceptAll(e).isEmpty():
-            break
-        prev = cs
-        prev_e = e
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} rounds"
-        )
+
+    e = _edge_fixpoint(e, star_round, max_iter)
     # converged edges form stars child→root; roots label themselves
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
     roots = e.select(F.col("v").alias("node")).distinct().withColumn(
@@ -1460,10 +1461,10 @@ def kcore_peel(
     previous edges ~5× (degree build + two semi joins), so a lazily
     nested plan grows ~5^N subtrees — measured 42s vs 3s at sf0.01 for
     N=3 — while the materialization is one edge-sized write per round.
-    ``rounds=None`` peels to the exact k-core fixpoint:
+    ``rounds=None`` peels to the exact k-core fixpoint through
+    :func:`_edge_fixpoint` (the loop connected_components_star runs):
     checksum-per-round with an exceptAll confirm at the suspected
-    fixpoint (the connected_components_star collision guard) and
-    ``localCheckpoint`` lineage truncation.
+    fixpoint and ``localCheckpoint`` lineage truncation.
 
     Scale: each round is one map-combined degree aggregate plus two
     node-keyed semi joins — shuffle volume is the CURRENT edge set,
@@ -1516,21 +1517,9 @@ def kcore_peel(
     else:
         if not canonical:
             e = e.localCheckpoint()
-        prev = None
-        prev_e = None
-        for r in range(max_iter):
-            e = peel(e, degrees0 if r == 0 else None).localCheckpoint()
-            row = e.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-                F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-            ).collect()[0]
-            cs = (row["n"], row["su"], row["sv"])
-            if cs == prev and prev_e.exceptAll(e).isEmpty():
-                break
-            prev, prev_e = cs, e
-        else:
-            raise RuntimeError(f"kcore_peel: no fixpoint in {max_iter} rounds")
+        e = _edge_fixpoint(
+            e, lambda e, r: peel(e, degrees0 if r == 0 else None), max_iter
+        )
     return _edge_degrees(e).select(
         F.col("x").alias("node"), F.col("d").cast("bigint").alias("degree")
     )

@@ -282,31 +282,47 @@ def profile_columns(
     )
 
 
-def exact_kth_smallest(
-    df: DataFrame, col: str, k: int, buckets: int = 1024,
+def exact_ranks_smallest(
+    df: DataFrame,
+    col: str,
+    ks: list[int],
+    buckets: int = 1024,
     weight_col: str | None = None,
-) -> int:
-    """EXACT k-th smallest of an integer column WITHOUT a global sort —
-    the 100 TB path for exact quantiles.
+) -> dict[int, int]:
+    """EXACT k-th smallest of an integer column for every rank in ``ks``,
+    WITHOUT a global sort — the 100 TB path for exact quantiles,
+    equi-depth boundaries and percentile grids.
 
     Spark's ``percentile`` aggregate buffers every value (exact but
     memory-bound); a global sort is a full shuffle of the fact. This
     instead narrows an integer value range by iterative HISTOGRAM
     REFINEMENT: each round is ONE map-combined aggregate that buckets
-    the in-range rows into ≤``buckets`` cells (≤``buckets`` rows reach
-    the driver), picks the cell holding rank k, and recurses into it.
-    Rounds = ⌈log_buckets(range)⌉ — 3 full scans for a 32-bit domain at
-    B=1024, independent of row count; per-round driver state is the
-    bucket census (the kmeans/kcore scalar-probe exception).
+    the in-window rows into ≤``buckets`` cells per window (≤``buckets``
+    rows per window reach the driver), picks each rank's cell, and
+    recurses into it. Rounds = ⌈log_buckets(range)⌉ — 3 full scans for a
+    32-bit domain at B=1024 plus one min/max pass, independent of row
+    count and of the number of ranks; driver state is one bucket
+    census per distinct window.
 
-    When the bucket width reaches 1, the chosen cell IS the answer (a
-    single integer with count > 0 — an actual data value). Requires a
-    non-null integer-valued column; caller pre-scales decimals.
+    Every round serves all still-active ranks in one scan. Each rank's
+    window is either identical to or disjoint from every other rank's:
+    all start in the global window, each round splits a window into
+    disjoint cells, and ranks sharing a window share its base count
+    (weight known below ``lo``). So a row falls into at most one window,
+    and the round is a filter on the OR of the literal ``between``
+    windows plus one literal ``CASE`` that tags the row with its window
+    and bucket — no join. Both expressions grow with the number of
+    distinct windows, at most ``len(ks)`` (today's callers pass ≤15).
+
+    When a window's bucket width reaches 1, the chosen cell IS the
+    answer (a single integer with count > 0 — an actual data value).
+    Requires an integer-valued column; caller pre-scales decimals.
+    NULL values are not ranked.
 
     ``weight_col``: treat each row as ``weight`` occurrences of its
     value — rank-k over the EXPANDED multiset without expanding it.
     This is what lets a caller collapse a 100 TB fact to its key census
-    once (one scan, |keys| rows) and then run many rank probes against
+    once (one scan, |keys| rows) and then run the rank probes against
     the census instead of the fact (q_partition_bounds).
     """
     c = F.col(col)
@@ -322,101 +338,44 @@ def exact_kth_smallest(
         F.max(c).alias("hi"),
         F.sum(F.when(c.isNotNull(), w)).alias("n"),
     ).collect()[0]
-    lo, hi, n = row["lo"], row["hi"], row["n"] or 0
-    if n == 0 or not 1 <= k <= n:
-        raise ValueError(f"rank {k} out of range for {n} rows")
-    base = 0  # values known < lo from previous rounds
-    while hi > lo:
-        width = (hi - lo + buckets) // buckets  # ceil → width >= 1
-        # INTEGER bucket index: (c - lo) / width through double would
-        # mis-bucket once the range passes 2^53 (value near a bucket
-        # boundary rounds across it); div() keeps the whole contract in
-        # int64 like the driver-side range arithmetic below
-        census = dict(
-            df.filter(c.between(lo, hi))
-            .groupBy(F.expr(f"div({col} - {int(lo)}L, {int(width)}L)").alias("b"))
-            .agg(F.sum(w).alias("cnt"))
-            .collect()
-        )
-        cum = base
-        for b in sorted(census):
-            if cum + census[b] >= k:
-                new_lo = lo + b * width
-                hi = min(hi, new_lo + width - 1)
-                lo = new_lo
-                base = cum
-                break
-            cum += census[b]
-        else:  # pragma: no cover - counts always reach k by construction
-            raise AssertionError("rank not found in census")
-    return int(lo)
-
-
-def exact_ranks_smallest(
-    df: DataFrame,
-    col: str,
-    ks: list[int],
-    buckets: int = 1024,
-    weight_col: str | None = None,
-) -> dict[int, int]:
-    """MANY exact ranks in shared passes — :func:`exact_kth_smallest` for
-    a whole rank list (equi-depth boundaries, percentile grids).
-
-    Probing R ranks one at a time costs R·⌈log_B(range)⌉ scans; here
-    every refinement ROUND is ONE scan serving all still-active ranks:
-    each rank's current [lo, hi] window rides a broadcast relation, rows
-    fan out to the windows containing them (R-row broadcast nested-loop
-    — R is tens), and one (rank, bucket) aggregate narrows every window
-    simultaneously. Total scans = ⌈log_B(range)⌉ + 1, independent of R
-    and of row count. Per-rank results are IDENTICAL to the one-rank
-    probe (pinned in tests). Driver state: R bucket histograms.
-    """
-    c = F.col(col)
-    w = F.col(weight_col) if weight_col else F.lit(1)
-    # NULL-value rows are excluded from n for the same reason as in
-    # exact_kth_smallest: they can never land in a bucket census
-    row = df.agg(
-        F.min(c).alias("lo"),
-        F.max(c).alias("hi"),
-        F.sum(F.when(c.isNotNull(), w)).alias("n"),
-    ).collect()[0]
-    glo, ghi, n = row["lo"], row["hi"], row["n"] or 0
+    n = row["n"] or 0
     bad = [k for k in ks if n == 0 or not 1 <= k <= n]
     if bad:
         raise ValueError(f"ranks {bad} out of range for {n} rows")
-    # state per rank: [lo, hi, base] (base = weight known < lo)
-    state = {k: [glo, ghi, 0] for k in set(ks)}
-    spark = df.sparkSession
-    while True:
-        active = {k: s for k, s in state.items() if s[1] > s[0]}
-        if not active:
-            break
-        wins = [
-            (k, s[0], s[1], (s[1] - s[0] + buckets) // buckets)
-            for k, s in active.items()
-        ]
-        wdf = F.broadcast(
-            spark.createDataFrame(wins, "k long, wlo long, whi long, wwidth long")
+    # state per rank: (lo, hi, base) — base = weight known < lo
+    state = {k: (int(row["lo"]), int(row["hi"]), 0) for k in ks}
+    while wins := sorted({(lo, hi) for lo, hi, _ in state.values() if hi > lo}):
+        width = {win: (win[1] - win[0] + buckets) // buckets for win in wins}
+        # cell = window index · buckets + bucket (a bucket index is
+        # < buckets). INTEGER bucket index: (c - lo) / width through
+        # double would mis-bucket once the range passes 2^53 (value near
+        # a bucket boundary rounds across it); div() keeps the whole
+        # contract in int64 like the driver-side range arithmetic below
+        cases = " ".join(
+            f"WHEN {col} BETWEEN {lo}L AND {hi}L"
+            f" THEN {i * buckets}L + div({col} - {lo}L, {width[lo, hi]}L)"
+            for i, (lo, hi) in enumerate(wins)
         )
-        census: dict[int, dict[int, int]] = {k: {} for k in active}
-        rows = (
-            df.join(wdf, c.between(F.col("wlo"), F.col("whi")))
-            .groupBy("k", F.expr(f"div({col} - wlo, wwidth)").alias("b"))
+        census: dict[tuple[int, int], dict[int, int]] = {win: {} for win in wins}
+        for r in (
+            df.filter(reduce(Column.__or__, [c.between(lo, hi) for lo, hi in wins]))
+            .groupBy(F.expr(f"CASE {cases} END").alias("cell"))
             .agg(F.sum(w).alias("cnt"))
             .collect()
-        )
-        for r in rows:
-            census[r["k"]][r["b"]] = r["cnt"]
-        for k, s in active.items():
-            lo, hi, base = s
-            width = (hi - lo + buckets) // buckets
+        ):
+            i, b = divmod(r["cell"], buckets)
+            census[wins[i]][b] = r["cnt"]
+        for k, (lo, hi, base) in state.items():
+            if hi <= lo:
+                continue
+            cells = census[lo, hi]
             cum = base
-            for b in sorted(census[k]):
-                if cum + census[k][b] >= k:  # the dict key IS the rank
-                    new_lo = lo + b * width
-                    state[k] = [new_lo, min(hi, new_lo + width - 1), cum]
+            for b in sorted(cells):
+                if cum + cells[b] >= k:  # the state key IS the rank
+                    new_lo = lo + b * width[lo, hi]
+                    state[k] = (new_lo, min(hi, new_lo + width[lo, hi] - 1), cum)
                     break
-                cum += census[k][b]
-            else:  # pragma: no cover
+                cum += cells[b]
+            else:  # pragma: no cover - counts always reach k by construction
                 raise AssertionError("rank not found in census")
-    return {k: int(state[k][0]) for k in ks}
+    return {k: state[k][0] for k in ks}

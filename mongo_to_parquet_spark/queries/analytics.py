@@ -1362,10 +1362,11 @@ def q_partition_bounds(spark, sf):
     # reproducible (sorted export file boundaries, bucket pruning docs).
     #
     # Scale: the corpus collapses to its KEY CENSUS first (ONE
-    # map-combined scan — |keys| rows, persisted), then each boundary is
-    # a WEIGHTED exact_kth_smallest probe over the census — histogram
+    # map-combined scan — |keys| rows, persisted), then every boundary
+    # is a WEIGHTED exact_ranks_smallest rank over the census — histogram
     # refinement with the census counts as weights, ≤3 map-combined
-    # passes per boundary, driver state = a bucket histogram. No
+    # passes shared by all boundaries, driver state = a bucket histogram
+    # per distinct window. No
     # cumulative window: an UNPARTITIONED running sum over the key
     # census would be a single task holding every distinct key (the
     # spearman lesson — the census here GROWS with the data, unlike

@@ -2873,20 +2873,22 @@ def q_stats_chi2(spark, sf):
 def q_agg_quantile_histogram(spark, sf):
     # EXACT median and p90 of a 100 TB-sized numeric column with NO
     # global sort and NO value buffering: iterative histogram refinement
-    # (operators/validate.exact_kth_smallest) — each round one
-    # map-combined ≤1024-cell bucket census, ⌈log₁₀₂₄(range)⌉ ≈ 3 full
-    # scans per quantile for a 32-bit integer domain, driver state one
-    # census. Contrast the exact alternatives that DON'T scale: Spark's
-    # `percentile` buffers every value in the aggregation state, and a
-    # sort-based rank select shuffles the entire fact. The decimal
-    # column pre-scales to integer cents, so ranks and the recovered
-    # value are exact in both engines (the oracle ranks by OFFSET).
+    # (operators/validate.exact_ranks_smallest) — each round one
+    # map-combined ≤1024-cell bucket census serving both ranks,
+    # ⌈log₁₀₂₄(range)⌉ ≈ 3 full scans for a 32-bit integer domain,
+    # driver state one census per distinct window. Contrast the exact
+    # alternatives that DON'T scale: Spark's `percentile` buffers every
+    # value in the aggregation state, and a sort-based rank select
+    # shuffles the entire fact. The decimal column pre-scales to integer
+    # cents, so ranks and the recovered value are exact in both engines
+    # (the oracle ranks by OFFSET).
     #
     # Scale: rounds are sequential but each is an embarrassingly
-    # parallel scan; the between-filter prunes with column min/max
-    # statistics as the range narrows (later rounds read a shrinking
-    # row-group subset under parquet zone maps).
-    from mongo_to_parquet_spark.operators.validate import exact_kth_smallest
+    # parallel scan. The window filter is on the derived cents column,
+    # so it does not push into the parquet scan (only
+    # IsNotNull(l_extendedprice) does): every round reads every row
+    # group.
+    from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     li = T(spark, sf, "lineitem")
     v = li.filter(F.col("l_extendedprice").isNotNull()).select(
@@ -2894,8 +2896,8 @@ def q_agg_quantile_histogram(spark, sf):
     )
     n = v.count()
     k50, k90 = (n + 1) // 2, (n * 9 + 9) // 10
-    med = exact_kth_smallest(v, "c", k50)
-    p90 = exact_kth_smallest(v, "c", k90)
+    ranks = exact_ranks_smallest(v, "c", [k50, k90])
+    med, p90 = ranks[k50], ranks[k90]
     return spark.createDataFrame(
         [(n, k50, k90, med, p90)],
         "n bigint, k50 bigint, k90 bigint, median_cents bigint, p90_cents bigint",

@@ -3639,9 +3639,10 @@ def q_pack_curriculum(spark, sf):
     # curriculum-ordered training run. The interesting engine problem is
     # the EXACT quartile cuts WITHOUT a global sort: ntile() would funnel
     # the corpus through one window task, so the three cut ranks come from
-    # operators/validate.exact_kth_smallest (iterative histogram
+    # operators/validate.exact_ranks_smallest (iterative histogram
     # refinement over the ×10⁴ fixed-point NLL: ≤3 map-combined census
-    # passes per cut, driver state = a bucket histogram) and bucket
+    # passes shared by all three cuts, driver state = a bucket histogram
+    # per distinct window) and bucket
     # assignment is a stateless comparison against 3 broadcast scalars.
     # Mean NLL per bucket is DECIMAL-exact (sum of 4dp fixed-point, one
     # double division) so cross-engine summation order cannot move it.
@@ -3654,10 +3655,9 @@ def q_pack_curriculum(spark, sf):
         .persist()  # the rank probe rounds + the final bucket pass; caller clears
     )
     n = scored.count()
-    # all three quartile ranks in SHARED refinement passes (the
-    # q_partition_bounds multi-rank prober; per-rank results identical
-    # to the one-rank probe, pinned in tests) — was 3 sequential probes,
-    # each paying its own min/max pass + ~3 refinement scans (round-12)
+    # all three quartile ranks in SHARED refinement passes — 3
+    # sequential probes would each pay their own min/max pass + ~3
+    # refinement scans
     targets = [(i * n + 3) // 4 for i in (1, 2, 3)]
     ranks = exact_ranks_smallest(scored, "nll_i", targets)
     cuts = [ranks[t] for t in targets]

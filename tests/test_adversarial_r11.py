@@ -138,7 +138,8 @@ def test_quality_classifier_learns_and_separates(spark, sf_dir):
     }
     d = load_table(spark, sf_dir, "documents")
     labels = {
-        r["doc_id"]: r["y"] for r in clf.doc_labels(d).collect()
+        r["doc_id"]: r["y"]
+        for r in clf.doc_dense(d).select("doc_id", "y").collect()
     }
     held = [i for i in labels if i % 4 == 0]
     base = max(
@@ -168,11 +169,8 @@ def test_quality_classifier_fixed_point_determinism(spark, tmp_path):
     os.makedirs(d)
     _docs(d, texts)
     docs = spark.read.parquet(f"{d}/documents.parquet")
-    feats, labels = clf.doc_features(docs), clf.doc_labels(docs)
-    w1 = clf.train_logreg(feats, labels)
-    w2 = clf.train_logreg(
-        clf.doc_features(docs.repartition(7)), clf.doc_labels(docs)
-    )
+    w1 = clf.train_logreg_dense(clf.doc_dense(docs))
+    w2 = clf.train_logreg_dense(clf.doc_dense(docs.repartition(7)))
     assert w1 == w2 and len(w1) == clf.N_W
     assert all(isinstance(w, int) for w in w1)
 

@@ -1302,6 +1302,11 @@ def test_kcore_peel_fixpoint_and_fixed_rounds(spark):
 
     core = {r["node"]: r["degree"] for r in dedup.kcore_peel(df, k=2).collect()}
     assert core == {1: 3, 2: 3, 3: 3, 4: 3}  # exactly the clique
+    # the fixpoint needs 3 peels plus 1 confirming round
+    import pytest as _pytest
+
+    with _pytest.raises(RuntimeError, match="no fixpoint"):
+        dedup.kcore_peel(df, k=2, max_iter=2)
 
     one = {r["node"]: r["degree"] for r in dedup.kcore_peel(df, k=2, rounds=1).collect()}
     assert set(one) == {1, 2, 3, 4, 5, 6}  # only 7 peeled so far
@@ -1412,10 +1417,11 @@ def test_exact_kth_smallest_matches_sort(spark):
     """Histogram-refinement rank selection must equal the sorted answer
     for arbitrary ranks, duplicate-heavy data, negatives, tight ranges
     (all-equal → width-1 immediately) and tiny bucket counts (forces
-    many refinement rounds)."""
+    many refinement rounds) — one rank per call and all ranks in one
+    call."""
     import random
 
-    from mongo_to_parquet_spark.operators.validate import exact_kth_smallest
+    from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     rng = random.Random(11)
     cases = [
@@ -1427,14 +1433,17 @@ def test_exact_kth_smallest_matches_sort(spark):
     for vals in cases:
         df = spark.createDataFrame([(v,) for v in vals], "c long")
         ordered = sorted(vals)
-        for k in {1, len(vals) // 2 + 1, len(vals)}:
-            assert exact_kth_smallest(df, "c", k, buckets=8) == ordered[k - 1]
+        ks = sorted({1, len(vals) // 2 + 1, len(vals)})
+        for k in ks:
+            assert exact_ranks_smallest(df, "c", [k], buckets=8)[k] == ordered[k - 1]
+        want = {k: ordered[k - 1] for k in ks}
+        assert exact_ranks_smallest(df, "c", ks, buckets=8) == want
     # out-of-range ranks refuse loudly
     df = spark.createDataFrame([(1,)], "c long")
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        exact_kth_smallest(df, "c", 2)
+        exact_ranks_smallest(df, "c", [2])
 
 
 def test_exact_kth_smallest_excludes_nulls(spark):
@@ -1442,36 +1451,38 @@ def test_exact_kth_smallest_excludes_nulls(spark):
     them), so they must not be counted in n either: rank-k is over the
     NON-NULL multiset, and a rank past it fails the up-front range check
     instead of dying mid-refinement (round-7 advice). Same contract for
-    the multi-rank variant and for weighted probes."""
+    one rank per call, all ranks in one call and weighted probes."""
     import pytest as _pytest
 
-    from mongo_to_parquet_spark.operators.validate import (
-        exact_kth_smallest,
-        exact_ranks_smallest,
-    )
+    from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     vals = [10, None, 3, None, 7, 5, None]
     df = spark.createDataFrame([(v,) for v in vals], "c long")
     nn = sorted(v for v in vals if v is not None)  # [3, 5, 7, 10]
     for k, want in enumerate(nn, start=1):
-        assert exact_kth_smallest(df, "c", k, buckets=4) == want
+        assert exact_ranks_smallest(df, "c", [k], buckets=4)[k] == want
+    assert exact_ranks_smallest(df, "c", [1, 2, 3, 4], buckets=4) == {
+        1: 3, 2: 5, 3: 7, 4: 10,
+    }
     # rank 5 exists only if NULLs were (wrongly) counted
     with _pytest.raises(ValueError):
-        exact_kth_smallest(df, "c", len(nn) + 1, buckets=4)
-    assert exact_ranks_smallest(df, "c", [1, 4], buckets=4) == {1: 3, 4: 10}
+        exact_ranks_smallest(df, "c", [len(nn) + 1], buckets=4)
     with _pytest.raises(ValueError):
-        exact_ranks_smallest(df, "c", [5], buckets=4)
+        exact_ranks_smallest(df, "c", [1, 5], buckets=4)
     # weighted: NULL-value rows contribute nothing even with a weight
     wdf = spark.createDataFrame(
         [(3, 2), (None, 100), (7, 1)], "v long, w long"
     )
-    assert exact_kth_smallest(wdf, "v", 3, buckets=4, weight_col="w") == 7
+    assert exact_ranks_smallest(wdf, "v", [3], buckets=4, weight_col="w")[3] == 7
+    assert exact_ranks_smallest(
+        wdf, "v", [1, 2, 3], buckets=4, weight_col="w"
+    ) == {1: 3, 2: 3, 3: 7}
     with _pytest.raises(ValueError):
-        exact_kth_smallest(wdf, "v", 4, buckets=4, weight_col="w")
+        exact_ranks_smallest(wdf, "v", [4], buckets=4, weight_col="w")
     # all-NULL column: loud range failure, not a census assertion
     ndf = spark.createDataFrame([(None,), (None,)], "c long")
     with _pytest.raises(ValueError):
-        exact_kth_smallest(ndf, "c", 1, buckets=4)
+        exact_ranks_smallest(ndf, "c", [1], buckets=4)
 
 
 def test_exact_kth_smallest_beyond_double_precision(spark):
@@ -1479,13 +1490,15 @@ def test_exact_kth_smallest_beyond_double_precision(spark):
     boundaries in a > 2^53 range silently mis-bucket through double
     division (v/width rounds across the boundary), corrupting the census
     against the driver's exact integer range arithmetic."""
-    from mongo_to_parquet_spark.operators.validate import exact_kth_smallest
+    from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     base = 1 << 60
     vals = [0, base - 1, base, base + 1, (1 << 62) + 3, (1 << 62) + 4]
     df = spark.createDataFrame([(v,) for v in vals], "c long")
-    for k, want in enumerate(sorted(vals), start=1):
-        assert exact_kth_smallest(df, "c", k, buckets=4) == want
+    want = dict(enumerate(sorted(vals), start=1))
+    for k in want:
+        assert exact_ranks_smallest(df, "c", [k], buckets=4)[k] == want[k]
+    assert exact_ranks_smallest(df, "c", list(want), buckets=4) == want
 
 
 # -------------------------------------------------- incremental minhash ----
@@ -1974,36 +1987,41 @@ def test_exact_kth_smallest_weighted_equals_expanded(spark):
     over the physically expanded multiset, duplicates and all."""
     import random
 
-    from mongo_to_parquet_spark.operators.validate import exact_kth_smallest
+    from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     rng = random.Random(7)
     census = [(rng.randint(-100, 100), rng.randint(1, 9)) for _ in range(60)]
     cdf = spark.createDataFrame(census, "v long, w long")
     expanded = sorted(v for v, w in census for _ in range(w))
-    for k in {1, 17, len(expanded) // 2, len(expanded)}:
-        got = exact_kth_smallest(cdf, "v", k, buckets=8, weight_col="w")
+    ks = sorted({1, 17, len(expanded) // 2, len(expanded)})
+    for k in ks:
+        got = exact_ranks_smallest(cdf, "v", [k], buckets=8, weight_col="w")[k]
         assert got == expanded[k - 1]
+    got = exact_ranks_smallest(cdf, "v", ks, buckets=8, weight_col="w")
+    assert got == {k: expanded[k - 1] for k in ks}
 
 
-def test_exact_ranks_smallest_matches_single_probes(spark):
-    """The shared-round multi-rank probe must return, rank for rank,
-    exactly what the one-rank probe returns — duplicates, weights,
-    negatives, rank collisions and all."""
+def test_exact_ranks_smallest_matches_expanded_sort(spark):
+    """One multi-rank call must return, rank for rank, the expanded
+    multiset's sorted answer: ranks that share a window through every
+    round (k and k+1 inside one duplicate run), ranks whose windows
+    split in round 1 (the two extremes), a repeated rank, negatives and
+    weights."""
     import random
 
-    from mongo_to_parquet_spark.operators.validate import (
-        exact_kth_smallest,
-        exact_ranks_smallest,
-    )
+    from mongo_to_parquet_spark.operators.validate import exact_ranks_smallest
 
     rng = random.Random(23)
     census = [(rng.randint(-500, 500), rng.randint(1, 5)) for _ in range(80)]
+    census.append((17, 9))  # a duplicate run of at least 9 ranks
     cdf = spark.createDataFrame(census, "v long, w long")
-    n = sum(w for _, w in census)
-    ks = [1, 2, n // 4, n // 2, n // 2, 3 * n // 4, n]  # incl. a duplicate
+    expanded = sorted(v for v, w in census for _ in range(w))
+    n = len(expanded)
+    k17 = expanded.index(17) + 1
+    ks = [1, 2, k17, k17 + 1, n // 4, n // 2, n // 2, 3 * n // 4, n]
     multi = exact_ranks_smallest(cdf, "v", ks, buckets=8, weight_col="w")
-    for k in set(ks):
-        assert multi[k] == exact_kth_smallest(cdf, "v", k, buckets=8, weight_col="w")
+    assert multi == {k: expanded[k - 1] for k in ks}
+    assert multi[k17] == multi[k17 + 1] == 17
 
 
 def test_mrr_matches_naive_python(spark, sf_dir):

@@ -2,20 +2,22 @@
 
 Several declared keys are thin tails over a shared builder in
 queries/retrieval.py, queries/llm.py, queries/curation.py,
-queries/lakehouse.py, operators/dedup.py, operators/similarity.py or
-operators/ranks.py (the BM25 scorer, the in-memory IVF×PQ route, the
-labelled eval top-k, the winnowing fingerprints, the bitext margin, the
-md5 MinHash bands and exact-Jaccard verify, the 48-bit md5 hash, the md5
-hyperplane signature, the DSIR featurization and scoring, the unigram
-piece count and apply tail, the two-slice MV refresh, the vector-search
-steps: the probe batch, the single-probe and per-probe top-k tails, the
-IVF cell pick, the SQ8 quantizer and the PQ split and argmin, and the
-curation and statistics steps: the basket→ordered-pair generator, the
-edge-degree table, the mixture quota, the SCD-2 segmentation and the
-DECIMAL(38,0) moment sums). An edit to a builder moves every key that
-calls it, so each of those keys that no other tier-1 test compares with
-its DuckDB oracle is checked here, with the same comparison
-tools/parity.py applies.
+queries/lakehouse.py, operators/dedup.py, operators/similarity.py,
+operators/ranks.py or operators/validate.py (the BM25 scorer, the
+in-memory IVF×PQ route, the labelled eval top-k, the winnowing
+fingerprints, the bitext margin, the md5 MinHash bands and
+exact-Jaccard verify, the 48-bit md5 hash, the md5 hyperplane
+signature, the DSIR featurization and scoring, the unigram piece count
+and apply tail, the two-slice MV refresh, the vector-search steps: the
+probe batch, the single-probe and per-probe top-k tails, the IVF cell
+pick, the SQ8 quantizer and the PQ split and argmin, the curation and
+statistics steps: the basket→ordered-pair generator, the edge-degree
+table, the mixture quota, the SCD-2 segmentation and the DECIMAL(38,0)
+moment sums, and the two convergence loops: the histogram-refinement
+exact ranks and the edge-set fixpoint). An edit to a builder moves
+every key that calls it, so each of those keys that no other tier-1
+test compares with its DuckDB oracle is checked here, with the same
+comparison tools/parity.py applies.
 """
 
 from __future__ import annotations
@@ -97,6 +99,11 @@ BUILDER_KEYS = (
     # ranks._moment_sums
     "q_stats_regression",
     "q_stats_spearman",
+    # validate.exact_ranks_smallest
+    "q_agg_quantile_histogram",
+    "q_partition_bounds",
+    # dedup._edge_fixpoint
+    "q_graph_cc_chain",
 )
 
 

@@ -35,6 +35,10 @@ SCOPED_KEYS = (
     "q_quality_train",
     "q_dedup_fuzzy",
     "q_dedup_ngram",
+    "q_dedup_clusters",
+    "q_dedup_keep_best",
+    "q_graph_cc_chain",
+    "q_agg_quantile_histogram",
 )
 
 

@@ -13,10 +13,13 @@ optimization notes say so.
 declared key into plans/$PLANS_ROUND/all_<tag>/<key>.txt with the
 build-order counters normalized (expression ids ``#N``, ``plan_id=N``,
 lambda variable counters ``lambda x_N``, RDD ids ``RDD[N]``, common
-subexpression names ``_common_expr_N``) and the checkout root replaced
-by ``<root>``, and writes ``oracle.sha256``, one ``<sha256>  <key>``
-line per oracle SQL string, beside the plans. Run it with the same
-SPARK_GRAFT_SF_DIR in the parent and in the changed checkout; then
+subexpression names ``_common_expr_N``, and RDD call sites ``at
+<file>:<line>`` as ``at <callsite>``, since a checkpoint scan's call
+site depends on the session's history, not on the plan) and the
+checkout root replaced by ``<root>``, and writes ``oracle.sha256``,
+one ``<sha256>  <key>`` line per oracle SQL string, beside the plans.
+Run it with the same SPARK_GRAFT_SF_DIR in the parent and in the
+changed checkout; then
 ``diff -r <parent>/plans/<round>/all_<tag> <change>/plans/<round>/all_<tag>``
 is the whole check. Keys named after ``all`` are re-dumped into the
 same directory. Three keys can differ between two fresh runs of the
@@ -50,6 +53,7 @@ _COUNTERS = (
     (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    (re.compile(r" at [^\s,]+:\d+"), " at <callsite>"),
 )
 
 
